@@ -5074,8 +5074,8 @@ object Export {
       try pruneLines(lines, pruneConjuncts, physPrune)._1
       catch { case t: Throwable => dml.release(); throw t }
     if (scanLines.isEmpty) { dml.release(); return latest }
-    val files = scanLines.map(pathOf).toIndexedSeq
     try {
+    val files = scanLines.map(pathOf).toIndexedSeq
     // decode by PHYSICAL name, surface the metadata position columns
     // BEFORE projecting back to logical names (the predicate is on
     // logical columns; metadata resolves only on the scan output)

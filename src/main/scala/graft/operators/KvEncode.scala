@@ -16,37 +16,47 @@ import graft.sources.MysqlTable
   * key and a canonical value serialization, so pipeline-side and sink-side
   * re-scans agree (SURVEY §7 risk register).
   *
-  * Representation: key = "t{tableId}_r{rowId}" utf8 bytes; value =
-  * to_json(struct(cols)) utf8 bytes (stable field order = declared order).
+  * Representation: key = "t{tableId}_r{rowId}" utf8 bytes; value = the
+  * [[kvValue]] serialization of the row (declared column order).
   * Index KVs: key = "t{tableId}_i{n}_" + join(indexCols) bytes, value = the
   * row handle. All expressions codegen'd — the KV view is a projection, the
   * checksum a partial-aggregable XOR (never a shuffle of the data itself).
   */
 object KvEncode {
 
-  /** Data-KV columns (`_kv_key`, `_kv_val`) appended to `df`.
-    * Value = canonical field-separated serialization (declared column
-    * order,  separators, N for NULL) — deterministic and ~5×
-    * cheaper than JSON on the per-row hot path; self-consistency is all
-    * the checksum requires (SURVEY §7 risk register). */
+  /** Field separator of the KV value and of the index-KV key. */
+  private val Sep = "\u0001"
+
+  /** The canonical data-KV value: declared column order, [[Sep]]-separated,
+    * `\u0002N` for NULL — deterministic and ~5× cheaper than JSON on the
+    * per-row hot path; self-consistency is all the checksum requires
+    * (SURVEY §7 risk register). Every checksum path builds it here, so the
+    * pipeline-side triples and a re-scan of the written rows agree. */
+  private def kvValue(cols: Seq[String]): Column =
+    encode(concat_ws(Sep,
+      cols.map(c => coalesce(col(c).cast("string"), lit("\u0002N"))): _*), "UTF-8")
+
+  /** Index-KV key `t{tid}_i{n}_` + the [[Sep]]-joined index columns. */
+  private def indexKey(tid: Column, n: Int, indexCols: Seq[String]): Column =
+    encode(concat(lit("t"), tid.cast("string"), lit(s"_i${n}_"),
+      concat_ws(Sep, indexCols.map(c => col(c).cast("string")): _*)), "UTF-8")
+
+  /** Data-KV key `t{tid}_r{rowId}`. */
+  private def dataKey(tid: Column, rowIdCol: String): Column =
+    encode(concat(lit("t"), tid.cast("string"), lit("_r"),
+      col(rowIdCol).cast("string")), "UTF-8")
+
+  /** Data-KV columns (`_kv_key`, `_kv_val`) appended to `df`. */
   def dataKv(df: DataFrame, tableId: Long, rowIdCol: String,
-             valueCols: Seq[String]): DataFrame = {
-    val key = concat(lit(s"t${tableId}_r"), col(rowIdCol).cast("string"))
-    val value = concat_ws("",
-      valueCols.map(c => coalesce(col(c).cast("string"), lit("N"))): _*)
-    df.withColumn("_kv_key", encode(key, "UTF-8"))
-      .withColumn("_kv_val", encode(value, "UTF-8"))
-  }
+             valueCols: Seq[String]): DataFrame =
+    df.withColumn("_kv_key", dataKey(lit(tableId), rowIdCol))
+      .withColumn("_kv_val", kvValue(valueCols))
 
   /** Index-KV pairs for one index (n = index ordinal). */
   def indexKv(df: DataFrame, tableId: Long, n: Int, indexCols: Seq[String],
-              rowIdCol: String): DataFrame = {
-    val key = concat(lit(s"t${tableId}_i${n}_"),
-      concat_ws("", indexCols.map(c => col(c).cast("string")): _*))
-    df.select(
-      encode(key, "UTF-8").as("_kv_key"),
+              rowIdCol: String): DataFrame =
+    df.select(indexKey(lit(tableId), n, indexCols).as("_kv_key"),
       encode(col(rowIdCol).cast("string"), "UTF-8").as("_kv_val"))
-  }
 
   /** Names of the per-row helper columns `withObserveCols` appends. */
   def observeHelperCols(table: MysqlTable): Seq[String] =
@@ -61,18 +71,20 @@ object KvEncode {
     * of ingest wall time). Computing the per-row values here keeps them in
     * whole-stage codegen; the observe aggregates then only fold longs. */
   def withObserveCols(df: DataFrame, table: MysqlTable, tableId: Long,
-                      rowIdCol: String): DataFrame = {
-    val cols = table.columns.map(_.name)
-    val dk = encode(concat(lit(s"t${tableId}_r"), col(rowIdCol).cast("string")), "UTF-8")
-    val dv = encode(concat_ws("",
-      cols.map(c => coalesce(col(c).cast("string"), lit("N"))): _*), "UTF-8")
+                      rowIdCol: String): DataFrame =
+    withHelperCols(df, table, lit(tableId), rowIdCol)
+
+  /** [[withObserveCols]] with the table id taken from the column `tid`. */
+  private def withHelperCols(df: DataFrame, table: MysqlTable, tid: Column,
+      rowIdCol: String): DataFrame = {
+    val dk = dataKey(tid, rowIdCol)
+    val dv = kvValue(table.columns.map(_.name))
     val base = df
       .withColumn("_g_dcrc", graft.functions.Crc64Expr.crc64(concat(dk, dv)))
       .withColumn("_g_dlen", (length(dk) + length(dv)).cast("long"))
     if (table.primaryKey.isEmpty) base
     else {
-      val ik = encode(concat(lit(s"t${tableId}_i0_"),
-        concat_ws("", table.primaryKey.map(c => col(c).cast("string")): _*)), "UTF-8")
+      val ik = indexKey(tid, 0, table.primaryKey)
       val iv = encode(col(rowIdCol).cast("string"), "UTF-8")
       base
         .withColumn("_g_icrc", graft.functions.Crc64Expr.crc64(concat(ik, iv)))
@@ -89,7 +101,10 @@ object KvEncode {
     * data_checksum/_bytes/_kvs and, when a primary key exists,
     * index_checksum/_bytes/_kvs. */
   def observeMetrics(table: MysqlTable, tableId: Long,
-                     rowIdCol: String): Seq[Column] = {
+                     rowIdCol: String): Seq[Column] = checksumAggs(table)
+
+  /** The aggregates over the helper columns behind [[observeMetrics]]. */
+  private def checksumAggs(table: MysqlTable): Seq[Column] = {
     val data = Seq(
       count(lit(1)).as("rows"),
       coalesce(call_function("bit_xor", col("_g_dcrc")), lit(0L)).as("data_checksum"),
@@ -106,46 +121,17 @@ object KvEncode {
     * checksum triple + row count + max row-id when a batch of same-schema
     * small tables was written as one partitioned job. `tidCol` supplies
     * each row's table id as a column (vs the literal in
-    * [[withObserveCols]]) — the key strings are byte-identical to the
-    * single-table forms (`t{tid}_r{rowId}` / `t{tid}_i0_…`), so the
-    * per-table `verify` CLI re-scan reproduces the same triples. Returns
-    * one row per `groupCol` value: (_g_grp, rows, data_checksum,
-    * data_bytes, data_kvs[, index_checksum, index_bytes, index_kvs],
-    * max_row_id). */
+    * [[withObserveCols]]) — keys and values are built by the same
+    * functions as the single-table forms, so the per-table `verify` CLI
+    * re-scan reproduces the same triples. Returns one row per `groupCol`
+    * value: (_g_grp, rows, data_checksum, data_bytes, data_kvs[,
+    * index_checksum, index_bytes, index_kvs], max_row_id). */
   def groupedChecksum(df: DataFrame, table: MysqlTable, tidCol: Column,
       rowIdCol: String, groupCol: Column): DataFrame = {
-    val cols = table.columns.map(_.name)
-    val dk = encode(concat(lit("t"), tidCol.cast("string"), lit("_r"),
-      col(rowIdCol).cast("string")), "UTF-8")
-    // "" separator = the literal control char the single-table
-    // forms above use (easy to lose in a copy — it renders invisibly)
-    val dv = encode(concat_ws("",
-      cols.map(c => coalesce(col(c).cast("string"), lit("N"))): _*), "UTF-8")
-    val base = df
-      .withColumn("_g_dcrc", graft.functions.Crc64Expr.crc64(concat(dk, dv)))
-      .withColumn("_g_dlen", (length(dk) + length(dv)).cast("long"))
-    val helped =
-      if (table.primaryKey.isEmpty) base
-      else {
-        val ik = encode(concat(lit("t"), tidCol.cast("string"), lit("_i0_"),
-          concat_ws("",
-            table.primaryKey.map(c => col(c).cast("string")): _*)), "UTF-8")
-        val iv = encode(col(rowIdCol).cast("string"), "UTF-8")
-        base
-          .withColumn("_g_icrc", graft.functions.Crc64Expr.crc64(concat(ik, iv)))
-          .withColumn("_g_ilen", (length(ik) + length(iv)).cast("long"))
-      }
-    val aggs = Seq(
-      count(lit(1)).as("rows"),
-      coalesce(call_function("bit_xor", col("_g_dcrc")), lit(0L)).as("data_checksum"),
-      coalesce(sum(col("_g_dlen")), lit(0L)).as("data_bytes"),
-      count(lit(1)).as("data_kvs")) ++
-      (if (table.primaryKey.isEmpty) Nil else Seq(
-        coalesce(call_function("bit_xor", col("_g_icrc")), lit(0L)).as("index_checksum"),
-        coalesce(sum(col("_g_ilen")), lit(0L)).as("index_bytes"),
-        count(lit(1)).as("index_kvs"))) :+
+    val aggs = checksumAggs(table) :+
       max(col(rowIdCol).cast("long")).as("max_row_id")
-    helped.groupBy(groupCol.as("_g_grp")).agg(aggs.head, aggs.tail: _*)
+    withHelperCols(df, table, tidCol, rowIdCol)
+      .groupBy(groupCol.as("_g_grp")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** A1+A2: one row per KV class with (checksum, total_bytes, total_kvs) —

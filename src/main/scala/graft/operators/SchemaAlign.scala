@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.OwnMethod
 import graft.sources.{MysqlColumn, MysqlTable}
 
 /** SQL_MODE strictness: STRICT rejects bad values (raise_error), LENIENT
@@ -325,12 +326,11 @@ object SchemaAlign {
     * `mc`'s type: bytes for binary/string targets (MySQL: a hex literal in
     * string context IS the byte string), numeric reading for numeric targets
     * (`0x10` = 16, reference ParseHexStr — parser.go:474-486). Odd-length
-    * `0xABC` gets a leading 0 like MySQL. */
+    * `0xABC` gets a leading 0 like MySQL — `unhex` itself pads odd input. */
   private def hexDecode(src: Column, mc: MysqlColumn, mode: SqlMode): Column = {
-    val even = when(length(src) % 2 === 1, concat(lit("0"), src)).otherwise(src)
     mc.sparkType match {
-      case BinaryType => unhex(even)
-      case StringType => unhex(even).cast(StringType)
+      case BinaryType => unhex(src)
+      case StringType => unhex(src).cast(StringType)
       // parser-tagged hex bodies are clean [0-9a-f]+ — a direct try_cast of
       // the base-10 reading keeps this branch small (the full lenient
       // castTo tree here would triple every column's codegen size)
@@ -344,11 +344,8 @@ object SchemaAlign {
     val nonEmpty = when(src === "", lit("0")).otherwise(src)
     mc.sparkType match {
       case BinaryType | StringType =>
-        val hexStr = conv(nonEmpty, 2, 16)
-        val even = when(length(hexStr) % 2 === 1, concat(lit("0"), hexStr))
-          .otherwise(hexStr)
-        if (mc.sparkType == BinaryType) unhex(even)
-        else unhex(even).cast(StringType)
+        val bytes = unhex(conv(nonEmpty, 2, 16)) // odd hex length padded
+        if (mc.sparkType == BinaryType) bytes else bytes.cast(StringType)
       case t => conv(nonEmpty, 2, 10).try_cast(t) // clean [01]+ body
     }
   }
@@ -392,13 +389,25 @@ object SchemaAlign {
     * the carried statement column list (reference realigns per statement,
     * restore.go:1356-1406) — a dump whose INSERTs carry different column
     * lists (shard-merged tables, mixed explicit/implicit INSERTs) aligns
-    * correctly instead of inheriting one file's permutation.
+    * correctly instead of inheriting one file's permutation. Columns absent
+    * from a row's list get the declared default.
     *
-    * Cost model: rows with no column list, or one equal to table order
-    * (the mydumper default), take a positional fast path — pure
-    * `element_at(vals, const)`, same plan as `fromArray`. Only rows with a
-    * genuinely permuted list pay the O(ncols) `array_position` probe per
-    * column. Columns absent from a row's list get the declared default. */
+    * Plan shape: the per-row position probe runs once per row in stacked
+    * projections below the casts, and each column's cast tree references
+    * only the probed attributes:
+    *   1. the lower-cased statement list;
+    *   2. each table column's 1-based value position (null = absent) — a
+    *      constant for rows with no list or one equal to table order (the
+    *      mydumper default), an `array_position` only for genuinely
+    *      permuted lists — plus the explicit `_tidb_rowid` value;
+    *   3. each column's value and kind tag;
+    *   4. the cast trees.
+    * Each cast tree references its value several times, so the optimizer
+    * keeps the levels apart instead of inlining the probe into every
+    * reference, and no level holds a lambda, so all four fuse into one
+    * whole-stage-codegen stage. Each per-column expression is an
+    * [[OwnMethod]]: inlined, the 15 casts of a lineitem-wide table make a
+    * method too large for the JIT, and the stage runs interpreted. */
   def fromArrayPerStatement(df: DataFrame, valsCol: Column, stmtColsCol: Column,
                 table: MysqlTable, mode: SqlMode, jobTsMicros: Long = 0L,
                 keep: Seq[Column] = Nil,
@@ -406,24 +415,46 @@ object SchemaAlign {
                 valueCharset: String = "UTF-8",
                 emitExplicitRowId: Boolean = false): DataFrame = {
     import graft.sources.SqlDumpSource.Kind
-    val tableOrderLower = array(table.columns.map(c => lit(c.name.toLowerCase)): _*)
-    val colsLower = transform(stmtColsCol, c => lower(c))
-    val positional = stmtColsCol.isNull || (colsLower === tableOrderLower)
+    // internal attribute names: a prefix no input or table column starts with
+    val taken = (df.columns ++ table.columns.map(_.name)).map(_.toLowerCase)
+    val p = Iterator.iterate("_align_")("_" + _)
+      .find(q => !taken.exists(_.startsWith(q))).get
+    def a(name: String): Column = col(s"$p$name")
+    // lower-cased without a lambda (a higher-order function would keep its
+    // projection out of whole-stage codegen): MySQL identifiers cannot
+    // contain U+0000, so it is a safe join/split separator
+    val sep = "\u0000"
+    val joined = lower(array_join(stmtColsCol, sep))
+    val lowered = df.select(col("*"), split(joined, sep).as(s"${p}cols"),
+      (stmtColsCol.isNull ||
+        joined === lit(table.columns.map(_.name.toLowerCase).mkString(sep)))
+        .as(s"${p}positional"))
+    def position(name: String): Column = {
+      val pos = array_position(a("cols"), lit(name))
+      when(pos > 0, pos.cast(IntegerType))
+    }
+    // only an EXPLICIT statement column list can carry _tidb_rowid (the
+    // positional default order never includes the pseudo-column); a null
+    // list or an absent name gives a null position → null rowid
+    val rowIdProbe =
+      if (!emitExplicitRowId) Nil
+      else Seq(OwnMethod(try_element_at(valsCol, position(TidbRowId))
+        .cast(LongType)).as(s"${p}rowid"))
+    val indexed = lowered.select(col("*") +: (table.columns.zipWithIndex.map {
+      case (mc, ti) => OwnMethod(when(a("positional"), lit(ti + 1))
+        .otherwise(position(mc.name.toLowerCase))).as(s"${p}i$ti")
+    } ++ rowIdProbe): _*)
+    val probed = indexed.select(col("*") +: table.columns.indices.flatMap { ti =>
+      val idx = a(s"i$ti")
+      OwnMethod(try_element_at(valsCol, idx)).as(s"${p}v$ti") +:
+        kindsCol.toSeq.map(kc => OwnMethod(
+          coalesce(try_element_at(kc, idx), lit(Kind.Null))).as(s"${p}k$ti"))
+    }: _*)
     val projected = table.columns.zipWithIndex.map { case (mc, ti) =>
-      val pos = when(positional, lit((ti + 1).toLong))
-        .otherwise(array_position(colsLower, lit(mc.name.toLowerCase)))
-      // null index (not a when-wrapper around the lookup) for absent
-      // columns: try_element_at(_, null) is null, so `src` stays ONE
-      // unconditional expression — the lenient cast tree references it
-      // ~6 times, and conditional branches are excluded from codegen
-      // subexpression elimination, so a when-wrapped src re-evaluated the
-      // whole position probe per reference (measured 2× on the align
-      // stage of the ingest bench)
-      val idx = when(pos > 0, pos).cast(IntegerType)
-      val src = try_element_at(valsCol, idx)
+      val src = a(s"v$ti")
       val casted = kindsCol match {
-        case Some(kc) =>
-          val kind = coalesce(try_element_at(kc, idx), lit(Kind.Null))
+        case Some(_) =>
+          val kind = a(s"k$ti")
           when(kind === Kind.Hex, hexDecode(src, mc, mode))
             .when(kind === Kind.Bit, bitDecode(src, mc, mode))
             .otherwise(strCast(src, mc, mode, valueCharset))
@@ -434,21 +465,12 @@ object SchemaAlign {
           coalesce(casted, defaultExpr(mc, jobTsMicros))
         else casted
       // column absent from this statement's list → declared default
-      when(pos > 0, withNullFix)
-        .otherwise(defaultExpr(mc, jobTsMicros))
+      OwnMethod(when(a(s"i$ti").isNotNull, withNullFix)
+        .otherwise(defaultExpr(mc, jobTsMicros)))
         .as(mc.name)
     }
     val rowIdCol =
-      if (!emitExplicitRowId) Nil
-      else {
-        // only an EXPLICIT statement column list can carry _tidb_rowid
-        // (the positional default order never includes the pseudo-column);
-        // array_position → 0 when absent → null index → null rowid
-        val rpos = when(stmtColsCol.isNull, lit(0L))
-          .otherwise(array_position(colsLower, lit(TidbRowId)))
-        Seq(try_element_at(valsCol, when(rpos > 0, rpos).cast(IntegerType))
-          .cast(LongType).as("_explicit_rowid"))
-      }
-    df.select(keep ++ projected ++ rowIdCol: _*)
+      if (!emitExplicitRowId) Nil else Seq(a("rowid").as("_explicit_rowid"))
+    probed.select(keep ++ projected ++ rowIdCol: _*)
   }
 }

@@ -237,16 +237,19 @@ object SqlDumpSource {
             DumpChunk(path, 0L, len, 0L)
           else DumpChunk(path, 0L, Long.MaxValue, 0L)
         }
-        // floor at ~4 files per slice: parquet-writer init (~15 ms each in
-        // the downstream partitioned write) is the real per-file cost, so
-        // full serialization into one slice re-serializes what task
-        // parallelism was buying; 4/slice keeps a 4× task-count reduction
-        // while spreading writer inits across the pool
+        // slice count: at least one per core (every downstream job over
+        // this lineage — parse, cast, checksum, write — runs one task per
+        // slice, so fewer slices than cores idles the rest of the pool),
+        // and at least one per ~4 files (parquet-writer init, ~15 ms per
+        // file in the downstream write, spreads across the pool while many
+        // tiny shards still get a 4× task-count reduction); never more
+        // than one per chunk
         val total = sizes.map(_._2).sum
         val byBytes = math.ceil(
           total.toDouble / math.max(1L, minChunkBytes)).toInt
-        (cs, math.max(1, math.min(cs.size,
-          math.max(byBytes, math.ceil(cs.size / 4.0).toInt))))
+        val floor = Seq(byBytes, math.ceil(cs.size / 4.0).toInt,
+          spark.sparkContext.defaultParallelism).max
+        (cs, math.max(1, math.min(cs.size, floor)))
       } else {
         val cs = spark.sparkContext
           .parallelize(sorted, math.max(1, sorted.size))

@@ -64,16 +64,17 @@ class SchemaAlignSpec extends SparkSpec {
     assert(r.getInt(1) === 9)         // b came first
   }
 
+  private val binTable = MysqlDdl.parseCreateTable(
+    """CREATE TABLE `bt` (
+      |  `raw` varbinary(16) DEFAULT NULL,
+      |  `txt` varchar(16) DEFAULT NULL,
+      |  `n` int(11) DEFAULT NULL,
+      |  `bits` bigint(20) DEFAULT NULL
+      |)""".stripMargin)
+
   test("hex/bit literal kinds decode to bytes / numeric values") {
     import spark.implicits._
     import graft.sources.SqlDumpSource.Kind
-    val binTable = MysqlDdl.parseCreateTable(
-      """CREATE TABLE `bt` (
-        |  `raw` varbinary(16) DEFAULT NULL,
-        |  `txt` varchar(16) DEFAULT NULL,
-        |  `n` int(11) DEFAULT NULL,
-        |  `bits` bigint(20) DEFAULT NULL
-        |)""".stripMargin)
     // 0x4142='AB', odd-length 0xABC → 0x0ABC, 0x10=16 numeric, b'101'=5
     val df = Seq(
       (Seq("4142", "414243", "10", "101"),
@@ -110,6 +111,62 @@ class SchemaAlignSpec extends SparkSpec {
       out(1).getDecimal(3) === new java.math.BigDecimal("3.50"))
     assert(out(2).getByte(0) === 4.toByte && out(2).getInt(1) === 7 &&
       out(2).getString(2) === "dflt" && out(2).isNullAt(3))
+
+    // with kinds: hex/bit values follow their column through permuted and
+    // partial lists, and a permuted list naming `_tidb_rowid` routes its
+    // value to the explicit row id
+    import graft.sources.SqlDumpSource.Kind
+    val kdf = Seq(
+      (Seq("101", "10", "4f4b", "abc"), Some(Seq("bits", "n", "txt", "raw")),
+        Seq(Kind.Bit, Kind.Hex, Kind.Hex, Kind.Hex)),
+      (Seq("414243", "11"), Some(Seq("txt", "bits")), Seq(Kind.Hex, Kind.Bit)),
+      (Seq("7", "42", "4142"), Some(Seq("n", "_tidb_rowid", "raw")),
+        Seq(Kind.Number, Kind.Number, Kind.Hex)),
+      (Seq("4142", "4f4b", "10", "1"), None,
+        Seq(Kind.Hex, Kind.Hex, Kind.Hex, Kind.Bit)),
+      (Seq("x", "y", "3", "4"), Some(Seq("RAW", "Txt", "n", "bits")),
+        Seq(Kind.Str, Kind.Str, Kind.Number, Kind.Number)),
+      (Seq("1000001", "101"), Some(Seq("txt", "raw")), Seq(Kind.Bit, Kind.Bit)))
+      .toDF("vals", "stmt_cols", "kinds")
+    val k = SchemaAlign.fromArrayPerStatement(kdf, col("vals"),
+      col("stmt_cols"), binTable, SqlMode.Lenient,
+      keep = Seq(col("vals").getItem(0).as("first")),
+      kindsCol = Some(col("kinds")), emitExplicitRowId = true)
+    assert(k.columns.toSeq === Seq("first", "raw", "txt", "n", "bits",
+      "_explicit_rowid"))
+    def bytes(r: org.apache.spark.sql.Row) = r.getAs[Array[Byte]](1).toSeq
+    val ko = k.collect()
+    // permuted: b'101' = 5, 0x10 = 16, 0x4f4b = 'OK', odd 0xabc = 0x0abc
+    assert(bytes(ko(0)) === Seq[Byte](0x0a, 0xbc.toByte) &&
+      ko(0).getString(2) === "OK" && ko(0).getInt(3) === 16 &&
+      ko(0).getLong(4) === 5L && ko(0).isNullAt(5))
+    // partial: absent columns take their NULL defaults
+    assert(ko(1).isNullAt(1) && ko(1).getString(2) === "ABC" &&
+      ko(1).isNullAt(3) && ko(1).getLong(4) === 3L && ko(1).isNullAt(5))
+    // permuted with `_tidb_rowid`: not a table column, only the row id
+    assert(bytes(ko(2)) === Seq[Byte](0x41, 0x42) && ko(2).isNullAt(2) &&
+      ko(2).getInt(3) === 7 && ko(2).isNullAt(4) && ko(2).getLong(5) === 42L)
+    // no list: positional
+    assert(bytes(ko(3)) === Seq[Byte](0x41, 0x42) &&
+      ko(3).getString(2) === "OK" && ko(3).getInt(3) === 16 &&
+      ko(3).getLong(4) === 1L && ko(3).isNullAt(5))
+    // table order in another case: positional, plain values
+    assert(bytes(ko(4)) === Seq[Byte]('x'.toByte) &&
+      ko(4).getString(2) === "y" && ko(4).getInt(3) === 3 &&
+      ko(4).getLong(4) === 4L && ko(4).isNullAt(5))
+    // bit literals into string/binary columns: b'1000001' = 'A', b'101' = 0x05
+    assert(bytes(ko(5)) === Seq[Byte](5) && ko(5).getString(2) === "A" &&
+      ko(5).isNullAt(3) && ko(5).isNullAt(4))
+    assert(ko.map(_.getString(0)).toSeq ===
+      Seq("101", "414243", "7", "4142", "x", "1000001"))
+    // an input column named like an internal probe attribute is kept as is
+    val clash = SchemaAlign.fromArrayPerStatement(
+      kdf.withColumn("_align_v0", lit("mine")), col("vals"), col("stmt_cols"),
+      binTable, SqlMode.Lenient, keep = Seq(col("_align_v0")),
+      kindsCol = Some(col("kinds"))).collect()
+    assert(clash.map(_.getString(0)).distinct.toSeq === Seq("mine"))
+    assert(clash.map(_.getString(2)).toSeq ===
+      ko.map(_.getString(2)).toSeq)
   }
 
   test("lenient: >28-digit numeric prefix clamps instead of ANSI-raising") {

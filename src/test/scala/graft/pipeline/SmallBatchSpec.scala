@@ -13,21 +13,26 @@ class SmallBatchSpec extends SparkSpec {
   private def freshOut(): String =
     java.nio.file.Files.createTempDirectory("graft-batch").toString
 
-  /** n same-schema tables: auto-inc pk `id`, payload `v`; every table has
-    * one full-tuple row and one default-filled row (id synthesized). */
+  /** The batch schema: auto-inc pk `id`, payload `v`, nullable `n`. */
+  private def ddl(name: String): String =
+    s"""CREATE TABLE `$name` (
+       |  `id` bigint(20) NOT NULL AUTO_INCREMENT,
+       |  `v` varchar(32) NOT NULL,
+       |  `n` varchar(8) DEFAULT NULL,
+       |  PRIMARY KEY (`id`)
+       |)""".stripMargin
+
+  /** n same-schema tables; every table has one full-tuple row with an
+    * explicit NULL and one default-filled row (id synthesized, `n` NULL
+    * by default) — NULLs make the checksum's NULL encoding observable. */
   private def writeDump(n: Int): File = {
     val src = java.nio.file.Files.createTempDirectory("graft-batch-src").toFile
     for (i <- 0 until n) {
       java.nio.file.Files.writeString(
-        new File(src, f"bd.t$i%02d-schema.sql").toPath,
-        s"""CREATE TABLE `t$i` (
-           |  `id` bigint(20) NOT NULL AUTO_INCREMENT,
-           |  `v` varchar(32) NOT NULL,
-           |  PRIMARY KEY (`id`)
-           |)""".stripMargin)
+        new File(src, f"bd.t$i%02d-schema.sql").toPath, ddl(s"t$i"))
       java.nio.file.Files.writeString(
         new File(src, f"bd.t$i%02d.0000.sql").toPath,
-        s"INSERT INTO `t$i` VALUES (${i * 10 + 1},'row-$i-a');\n" +
+        s"INSERT INTO `t$i` VALUES (${i * 10 + 1},'row-$i-a',NULL);\n" +
           s"INSERT INTO `t$i` (`v`) VALUES ('row-$i-b');\n")
     }
     src
@@ -111,12 +116,7 @@ class SmallBatchSpec extends SparkSpec {
     // only): the batch write leaves no partition for it → deferred, and
     // the single path must land the empty-but-readable table layout
     java.nio.file.Files.writeString(
-      new File(src, "bd.t99-schema.sql").toPath,
-      """CREATE TABLE `t99` (
-        |  `id` bigint(20) NOT NULL AUTO_INCREMENT,
-        |  `v` varchar(32) NOT NULL,
-        |  PRIMARY KEY (`id`)
-        |)""".stripMargin)
+      new File(src, "bd.t99-schema.sql").toPath, ddl("t99"))
     java.nio.file.Files.writeString(
       new File(src, "bd.t99.0000.sql").toPath,
       "-- nothing but a comment\n")

@@ -340,6 +340,71 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"unexpected shuffle in align chain:\n$p")
   }
 
+  test("per-statement align: the row probe is hoisted below small, " +
+      "JIT-compilable codegen'd casts") {
+    // the 15-column lineitem shape of the ingest benchmark; each column's
+    // lenient cast tree references its value several times, so the probe
+    // (statement-list lookup per column) must be an attribute there, not
+    // an inlined subtree (~900 nodes per column when it was)
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.functions.col
+    val table = graft.sources.MysqlDdl.parseCreateTable(
+      """CREATE TABLE `lineitem` (
+        |  `l_orderkey` bigint(20) NOT NULL,
+        |  `l_linenumber` int(11) NOT NULL,
+        |  `l_partkey` bigint(20) NOT NULL,
+        |  `l_suppkey` int(11) NOT NULL,
+        |  `l_quantity` decimal(15,2) NOT NULL,
+        |  `l_extendedprice` decimal(15,2) NOT NULL,
+        |  `l_discount` decimal(15,2) NOT NULL,
+        |  `l_tax` decimal(15,2) NOT NULL,
+        |  `l_returnflag` char(1) NOT NULL,
+        |  `l_linestatus` char(1) NOT NULL,
+        |  `l_shipdate` date NOT NULL,
+        |  `l_commitdate` date NOT NULL,
+        |  `l_shipinstruct` varchar(25) NOT NULL,
+        |  `l_shipmode` varchar(10) NOT NULL,
+        |  `l_comment` varchar(64) DEFAULT NULL,
+        |  PRIMARY KEY (`l_orderkey`,`l_linenumber`)
+        |)""".stripMargin)
+    val d = java.nio.file.Files.createTempDirectory("planspec-li").toFile
+    val f = new java.io.File(d, "bench.lineitem.00000.sql")
+    java.nio.file.Files.writeString(f.toPath, "INSERT INTO `lineitem` VALUES " +
+      "(1,1,2,3,4.00,5.00,0.01,0.02,'A','F','1995-01-01','1995-02-01'," +
+      "'NONE','AIR','x y');\n")
+    val raw = graft.sources.SqlDumpSource.readChunkedSized(spark,
+      Seq((f.getAbsolutePath, f.length)))
+    val aligned = graft.operators.SchemaAlign.fromArrayPerStatement(raw,
+      col("vals"), col("stmt_cols"), table, graft.operators.SqlMode.Lenient,
+      keep = Seq(col("src_file").as("_src_file"), col("row_idx").as("_row_idx")),
+      kindsCol = Some(col("kinds")), emitExplicitRowId = true)
+    val n = table.columns.size
+    val sizes = aligned.queryExecution.analyzed.collect {
+      case p: Project => p.projectList.map(_.collect { case e => e }.size).sum
+    }
+    // the first collected Project is the top one: the cast projection
+    assert(sizes.head < 60 * n, s"cast projection ${sizes.head} nodes for $n columns")
+    assert(sizes.sum < 100 * n, s"align projections ${sizes.mkString("+")} nodes")
+    val names = table.columns.map(_.name).toSet
+    val exec = aligned.queryExecution.executedPlan
+    val stages = exec.collect { case w: WholeStageCodegenExec => w }
+    val fused = stages.flatMap(_.child.collect { case p: ProjectExec => p })
+    assert(fused.exists(p => names.subsetOf(p.output.map(_.name).toSet)),
+      s"cast projection outside whole-stage codegen:\n$exec")
+    // and every generated method stays JIT-compilable (HotSpot leaves
+    // methods over 8,000 bytecode bytes to the interpreter)
+    for (w <- stages) {
+      val (_, code) = w.doCodeGen()
+      val (_, stats) = org.apache.spark.sql.catalyst.expressions.codegen
+        .CodeGenerator.compile(code)
+      assert(stats.maxMethodCodeSize < 8000,
+        s"stage ${w.codegenStageId}: a ${stats.maxMethodCodeSize}-byte method")
+    }
+    assert(aligned.collect().map(_.getDecimal(6)).toSeq ===
+      Seq(new java.math.BigDecimal("4.00")))
+  }
+
   test("txt_redact: pure scan — no exchange, regexes inside one codegen stage") {
     val p = plan(Curation.txt_redact(spark, sf))
     assert(!p.contains("Exchange"), s"redaction must be a narrow map:\n$p")

@@ -90,6 +90,30 @@ class SqlDumpSourceSpec extends SparkSpec {
     assert(chunks.map(_.baseRow) === chunks.map(_.baseRow).sorted)
   }
 
+  test("all-small chunked read: a slice per core, ~4 tiny files per slice") {
+    val tmp = java.nio.file.Files.createTempDirectory("sqlslices").toFile
+    def shards(n: Int): Seq[(String, Long)] = (0 until n).map { i =>
+      val f = new java.io.File(tmp, f"d.t$n%03d.$i%05d.sql")
+      java.nio.file.Files.writeString(f.toPath,
+        s"INSERT INTO t VALUES ($i,'x'),(${i + n},'y');\n")
+      (f.getAbsolutePath, f.length)
+    }
+    val cores = spark.sparkContext.defaultParallelism
+    // a few files: every core gets a slice (4-per-slice packing alone
+    // would leave ceil(6/4) = 2 tasks)
+    val few = shards(6)
+    val fewDf = SqlDumpSource.readChunkedSized(spark, few)
+    val fewParts = fewDf.rdd.getNumPartitions
+    assert(fewParts >= math.min(few.size, cores) && fewParts <= few.size,
+      s"$fewParts slices for ${few.size} files on $cores cores")
+    assert(fewDf.count() === 2 * few.size)
+    // far more files than cores: still ~4 files per slice
+    val many = shards(math.max(64, 16 * cores))
+    val manyDf = SqlDumpSource.readChunkedSized(spark, many)
+    assert(manyDf.rdd.getNumPartitions === math.ceil(many.size / 4.0).toInt)
+    assert(manyDf.count() === 2 * many.size)
+  }
+
   test("GB18030 dump file with charset=auto decodes Chinese text") {
     val tmp = java.nio.file.Files.createTempDirectory("sqlgbk").toFile
     val f = new java.io.File(tmp, "d.cn.sql")
