@@ -170,7 +170,7 @@ private[graft] case class ApplyLakeDeletionVectors(
       val fcol = fresh("__dv_file")
       val pcol = fresh("__dv_pos")
       val mcol = fresh("__dv_md")
-      val dv = spark.read.parquet(idx.dvDirs: _*)
+      val dv = graft.operators.Export.readDvs(spark, idx.dvDirs)
         .select(col(graft.operators.Export.DvFileCol).as(fcol),
           col(graft.operators.Export.DvPosCol).as(pcol))
       // reference the (hidden) metadata attribute directly by id —

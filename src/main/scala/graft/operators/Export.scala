@@ -238,6 +238,7 @@ object Export {
   // exactly-once batch id); readers skip them.
 
   import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
   /** Hadoop conf of the active session (the one whose fs.* settings the
     * deployment configured), falling back to a default Configuration so
@@ -1190,18 +1191,15 @@ object Export {
   def snapshotAddedEntries(outDir: String, version: Int)
       : Seq[ManifestEntry] = {
     val (fs, root) = fsRoot(outDir)
-    def entry(l: String) =
-      ManifestEntry(pathOf(l), partitionOf(l), statsOf(l),
-        dvOf(l), lenOf(l), zoneOf(l))
     val cur = dataLines(readManifestRaw(fs, root, version))
     manifestVersions(fs, root).filter(_ < version).lastOption match {
-      case None => cur.map(entry)
+      case None => cur.map(entryOfLine)
       case Some(prev) =>
         val before = dataLines(readManifestRaw(fs, root, prev))
           .map(l => fs.makeQualified(new Path(pathOf(l))).toString).toSet
         cur.filterNot(l =>
             before(fs.makeQualified(new Path(pathOf(l))).toString))
-          .map(entry)
+          .map(entryOfLine)
     }
   }
 
@@ -1225,9 +1223,7 @@ object Export {
   def snapshotManifestEntries(outDir: String, version: Int)
       : Seq[ManifestEntry] = {
     val (fs, root) = fsRoot(outDir)
-    dataLines(readManifestRaw(fs, root, version)).map(l =>
-      ManifestEntry(pathOf(l), partitionOf(l), statsOf(l),
-        dvOf(l), lenOf(l), zoneOf(l)))
+    dataLines(readManifestRaw(fs, root, version)).map(entryOfLine)
   }
 
   /** [[replaceSnapshot]] with the hive-style partitioned epoch layout
@@ -2245,45 +2241,61 @@ object Export {
   def readSnapshot(spark: SparkSession, outDir: String,
       version: Int): DataFrame = {
     val (fs, root) = fsRoot(outDir)
-    val files = dataLines(readManifestRaw(fs, root, version))
-      .map(pathOf).toIndexedSeq
-    readFilesAs(spark, fs, root, version, files)
+    readFilesAs(spark, fs, root, version,
+      dataLines(readManifestRaw(fs, root, version)))
   }
 
-  /** Plan `files` under `version`'s COMMITTED schema: the manifest —
-    * not the union of file footers — is the schema authority, so a
-    * schema-evolved version reads older epochs' files with the evolved
-    * schema (absent columns null-filled by the parquet reader) and NO
-    * mergeSchema footer sweep is ever paid at planning time — at 100 TB
-    * that sweep is a full listing-plus-footer pass per query. Pre-header
-    * manifests (legacy) fall back to footer inference. */
+  /** Plan the files of `lines` (data lines of `version`) under
+    * `version`'s COMMITTED schema: the manifest — not the union of file
+    * footers — is the schema authority, so a schema-evolved version
+    * reads older epochs' files with the evolved schema (absent columns
+    * null-filled by the parquet reader) and NO mergeSchema footer sweep
+    * is ever paid at planning time — at 100 TB that sweep is a full
+    * listing-plus-footer pass per query. The scan is planned from the
+    * lines themselves ([[graft.sources.GraftLakeBatch.scan]]).
+    * Pre-header manifests (legacy) fall back to footer inference. */
   private def readFilesAs(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, files: Seq[String]): DataFrame =
-    if (files.isEmpty) emptyWithCommittedSchema(spark, fs, root, version)
+      root: Path, version: Int, lines: Seq[String]): DataFrame =
+    if (lines.isEmpty) emptyWithCommittedSchema(spark, fs, root, version)
     else {
-      val stOpt = snapshotMetaOf(fs, root, version).get("schema")
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      // decode by PHYSICAL name (== logical on never-renamed tables)
-      val scan = stOpt match {
-        case Some(st) => spark.read
-          .schema(org.apache.spark.sql.types.StructType(
-            st.fields.map(f => f.copy(name = physicalOf(f)))))
-          .parquet(files: _*)
-        case None => spark.read.parquet(files: _*)
-      }
+      val meta = snapshotMetaOf(fs, root, version)
+      val entries = lines.map(entryOfLine)
+      val st = committedSchema(spark, meta, entries)
       // DVs subtract on (_metadata.file_path, row_index) BEFORE the
       // logical-name projection - metadata columns resolve on the scan
-      val withDv = applyDeletionVectors(spark, fs, root, version, files,
-        scan)
-      stOpt match {
-        case Some(st)
-            if st.fields.exists(_.metadata.contains(PhysicalKey)) =>
-          withDv.select(st.fields.toSeq.map(f =>
-            col(physicalOf(f)).as(f.name, f.metadata)): _*)
-        case _ => withDv
-      }
+      val withDv = applyDeletionVectors(spark, entries,
+        scanCommitted(spark, root, meta, entries, st))
+      if (st.fields.exists(_.metadata.contains(PhysicalKey)))
+        withDv.select(st.fields.toSeq.map(f =>
+          col(physicalOf(f)).as(f.name, f.metadata)): _*)
+      else withDv
     }
+
+  /** The version's committed schema from its `#schema=` header; a
+    * pre-header (legacy) manifest infers it from the files' footers. */
+  private def committedSchema(spark: SparkSession,
+      meta: Map[String, String], entries: => Seq[ManifestEntry])
+      : StructType =
+    meta.get("schema").fold(
+      spark.read.parquet(entries.map(_.path): _*).schema)(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[StructType])
+
+  /** `entries` decoded by PHYSICAL column name under `st` (the names the
+    * bytes were written with); metadata columns resolve on the result. */
+  private def scanCommitted(spark: SparkSession, root: Path,
+      meta: Map[String, String], entries: Seq[ManifestEntry],
+      st: StructType, options: Map[String, String] = Map.empty)
+      : DataFrame =
+    graft.sources.GraftLakeBatch.scan(spark, root.toString, entries,
+      StructType(st.fields.map(f => f.copy(name = physicalOf(f)))),
+      meta.get("committed_at").fold(0L)(_.toLong), options)
+
+  /** Scan options for reads whose result is RECORDED in the manifest:
+    * a missing or corrupt file fails the read whatever the session's
+    * ignore settings, instead of silently counting as empty. */
+  private val FailFastScan = Map(
+    "ignoreMissingFiles" -> "false", "ignoreCorruptFiles" -> "false")
 
   /** DV sidecar schema: one row per deleted position. `__file` is the
     * `_metadata.file_path` string as Spark reports it — probe and store
@@ -2291,6 +2303,14 @@ object Export {
     * normalization. */
   private[graft] val DvFileCol = "__file"
   private[graft] val DvPosCol = "__pos"
+  private[graft] val DvSchema: StructType = StructType(Seq(
+    StructField(DvFileCol, StringType), StructField(DvPosCol, LongType)))
+
+  /** The one sidecar reader: deletion-vector dirs read under
+    * [[DvSchema]], so no read starts a footer-inference job. */
+  private[graft] def readDvs(spark: SparkSession,
+      dirs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema).parquet(dirs: _*)
 
   /** `dv=<dir-uri>:<count>` — the line's file has `count` deleted row
     * positions recorded in the parquet DV dir at `dir-uri` (absolute, so
@@ -2309,30 +2329,87 @@ object Export {
     * [[readFilesAs]] makes EVERY reader MoR-correct automatically —
     * time travel, pruned/point/box/partitioned reads, compaction
     * (which thereby materializes DVs), CDC diffs, clones. Tables with
-    * no `dv=` tags pay nothing: the planning-side tag scan short-circuits
+    * no `dv=` tags pay nothing: the planned lines' tags short-circuit
     * to the bare scan. At 100 TB the DV side is positions-only (tiny
     * next to the data); AQE broadcasts it when small and falls back to a
     * shuffled anti-join on a mass delete. */
-  private def applyDeletionVectors(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, files: Seq[String],
-      base: DataFrame): DataFrame = {
-    val planned = files
-      .map(f => fs.makeQualified(new Path(f)).toString).toSet
-    val dvDirs = dataLines(readManifestRaw(fs, root, version))
-      .filter(l => planned(fs.makeQualified(new Path(pathOf(l))).toString))
-      .flatMap(dvOf).map(_._1).distinct
+  private def applyDeletionVectors(spark: SparkSession,
+      entries: Seq[ManifestEntry], base: DataFrame): DataFrame = {
+    val dvDirs = entries.flatMap(_.dv).map(_._1).distinct
     if (dvDirs.isEmpty) base
     else {
       val fcol = freshName("__dv_file", base.columns.toSeq)
       val pcol = freshName("__dv_pos", base.columns.toSeq)
-      val dv = spark.read.parquet(dvDirs: _*)
-        .select(col(DvFileCol).as(fcol), col(DvPosCol).as(pcol))
       base.select(col("*"),
           col("_metadata.file_path").as(fcol),
           col("_metadata.row_index").as(pcol))
-        .join(dv, Seq(fcol, pcol), "left_anti")
+        .join(readDvs(spark, dvDirs)
+            .select(col(DvFileCol).as(fcol), col(DvPosCol).as(pcol)),
+          Seq(fcol, pcol), "left_anti")
         .drop(fcol, pcol)
     }
+  }
+
+  /** The merge-on-read paths' candidate scan: `lines` decoded by
+    * physical name, projected to `st`'s logical names, plus each row's
+    * provenance `(_metadata.file_path, _metadata.row_index)` as
+    * `fcol`/`pcol` — the pair a DV sidecar records. With `subtractDvs`
+    * the lines' existing DV positions are subtracted first. */
+  private def scanWithPositions(spark: SparkSession, root: Path,
+      meta: Map[String, String], lines: Seq[String], st: StructType,
+      fcol: String, pcol: String, subtractDvs: Boolean): DataFrame = {
+    val entries = lines.map(entryOfLine)
+    val withPos = scanCommitted(spark, root, meta, entries, st)
+      .select(st.fields.toSeq.map(f => col(physicalOf(f)).as(f.name)) ++
+        Seq(col("_metadata.file_path").as(fcol),
+          col("_metadata.row_index").as(pcol)): _*)
+    val dvDirs = entries.flatMap(_.dv).map(_._1).distinct
+    if (!subtractDvs || dvDirs.isEmpty) withPos
+    else withPos.join(readDvs(spark, dvDirs)
+        .select(col(DvFileCol).as(fcol), col(DvPosCol).as(pcol)),
+      Seq(fcol, pcol), "left_anti")
+  }
+
+  /** Write `positions` ([[DvSchema]] rows; duplicates collapse) as a
+    * fresh sidecar dir of `version`. Returns the dir and its per-file
+    * position counts, read back from the written bytes (bounded: one
+    * row per file) and keyed by qualified file path. */
+  private def writeDvSidecar(spark: SparkSession, fs: FileSystem,
+      root: Path, version: Int,
+      positions: DataFrame): (Path, Map[String, Long]) = {
+    val dvDir = new Path(root,
+      s"dv=$version-${java.util.UUID.randomUUID.toString.take(8)}")
+    positions.distinct().write.parquet(dvDir.toString)
+    val counts = readDvs(spark, Seq(dvDir.toString))
+      .groupBy(DvFileCol).count().collect()
+      .map(r => fs.makeQualified(new Path(r.getString(0))).toString ->
+        r.getLong(1)).toMap
+    (dvDir, counts)
+  }
+
+  /** `line` re-pointed at the sidecar `dvUri`: its old `dv=` tag
+    * dropped, a new one added when `counts` holds its file. */
+  private def retagDv(fs: FileSystem, line: String, dvUri: String,
+      counts: Map[String, Long]): String = {
+    val kept = line.split('\t').filterNot(_.startsWith("dv="))
+      .mkString("\t")
+    counts.get(fs.makeQualified(new Path(pathOf(line))).toString)
+      .fold(kept)(n => s"$kept\tdv=$dvUri:$n")
+  }
+
+  /** The positions `lines`' sidecars hold for `lines`' OWN files — what
+    * carries when exactly these lines re-point at a new sidecar. A line
+    * outside `lines` sharing an old sidecar dir keeps its `dv=` tag
+    * verbatim, so its positions must not migrate. None without DVs. */
+  private def carriedDvs(spark: SparkSession, fs: FileSystem,
+      lines: Seq[String]): Option[DataFrame] = {
+    val dirs = lines.flatMap(dvOf).map(_._1).distinct
+    if (dirs.isEmpty) None
+    else Some(readDvs(spark, dirs).join(
+      spark.createDataset(lines.map(l =>
+          fs.makeQualified(new Path(pathOf(l))).toString))(
+        org.apache.spark.sql.Encoders.STRING).toDF(DvFileCol),
+      Seq(DvFileCol), "left_semi"))
   }
 
   /** [[appendSnapshot]] with the epoch CLUSTERED on an integral key and
@@ -2498,11 +2575,11 @@ object Export {
       case Some((alo, ahi, blo, bhi)) =>
         ahi >= aLo && alo <= aHi && bhi >= bLo && blo <= bHi
       case None => true
-    }).map(pathOf)
+    })
     val files =
       if (chosen.nonEmpty) chosen
-      else lines.map(pathOf).sorted.take(1)
-    readFilesAs(spark, fs, root, version, files.toIndexedSeq)
+      else lines.sortBy(pathOf).take(1)
+    readFilesAs(spark, fs, root, version, files)
       .filter(col(colA).between(aLo, aHi) && col(colB).between(bLo, bHi))
   }
 
@@ -3154,11 +3231,11 @@ object Export {
       case Some((k, hex)) if k == keyPhys =>
         bloomMightContain(hex, positions)
       case _ => true
-    }).map(pathOf)
+    })
     val files =
       if (chosen.nonEmpty) chosen
-      else lines.map(pathOf).sorted.take(1)
-    readFilesAs(spark, fs, root, version, files.toIndexedSeq)
+      else lines.sortBy(pathOf).take(1)
+    readFilesAs(spark, fs, root, version, files)
       .filter(col(keyCol) === value)
   }
 
@@ -3321,11 +3398,11 @@ object Export {
         case None => true
       } }
       partOk && zoneOk
-    }.map(pathOf)
+    }
     val files =
       if (chosen.nonEmpty) chosen
-      else lines.map(pathOf).sorted.take(1)
-    val base = readFilesAs(spark, fs, root, version, files.toIndexedSeq)
+      else lines.sortBy(pathOf).take(1)
+    val base = readFilesAs(spark, fs, root, version, files)
     val exact = partFilters.map { case (c, v) =>
         col(c).cast("string") === v }.toSeq ++
       zone.map { case (k, lo, hi) => col(k).between(lo, hi) }
@@ -3534,8 +3611,7 @@ object Export {
       .map(r => partitionCols.indices.map(i => r.getString(i)): Seq[String])
       .toSet
     val hit = lines.filter(l => touched(partTuple(l, physCols)))
-    val base = readFilesAs(spark, fs, root, latest,
-      hit.map(pathOf).toIndexedSeq)
+    val base = readFilesAs(spark, fs, root, latest, hit)
     val merged = resolve(base, updates)
     overwritePartitionsFrom(spark, merged, outDir, latest, partitionCols,
       nFiles, zoneKey,
@@ -3582,8 +3658,7 @@ object Export {
       .toSet
     if (touched.isEmpty) return latest // empty key batch: no-op
     val hit = lines.filter(l => touched(partTuple(l, physCols)))
-    val base = readFilesAs(spark, fs, root, latest,
-      hit.map(pathOf).toIndexedSeq)
+    val base = readFilesAs(spark, fs, root, latest, hit)
     val remaining = base.join(keys, keyCols.toSeq, "left_anti")
     overwritePartitionsFrom(spark, remaining, outDir, latest,
       partitionCols, nFiles, None,
@@ -3607,7 +3682,7 @@ object Export {
         .getOrElse(c))
     requirePartitioned(lines, physCols, "readSnapshotPartitionTuples")
     val hit = lines.filter(l => tuples(partTuple(l, physCols)))
-    readFilesAs(spark, fs, root, version, hit.map(pathOf).toIndexedSeq)
+    readFilesAs(spark, fs, root, version, hit)
   }
 
   /** Commit `df` as the COMPLETE new content of exactly the partitions
@@ -3671,8 +3746,7 @@ object Export {
       })
       case None => (lines, Seq.empty[String])
     }
-    val base = readFilesAs(spark, fs, root, latest,
-      hit.map(pathOf).toIndexedSeq)
+    val base = readFilesAs(spark, fs, root, latest, hit)
     val result = transform(base)
     val version = latest + 1
     // nFiles=0 (default) preserves the rewritten slice's file count,
@@ -3744,15 +3818,8 @@ object Export {
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression] }
     }
     val conjuncts = envConjuncts ++ resConjuncts
-    def entryOf(l: String) = ManifestEntry(pathOf(l), partitionOf(l),
-      statsOf(l), dvOf(l), lenOf(l), zoneOf(l))
-    val hit = lines.filter { l =>
-      val e = entryOf(l)
-      conjuncts.forall(c =>
-        !graft.sources.GraftLakeBatch.excludes(c, e, physOf))
-    }
     val rows = readFilesAs(spark, fs, root, version,
-      hit.map(pathOf).toIndexedSeq)
+      pruneLines(lines, conjuncts, physOf)._1)
     residual.fold(rows)(rows.filter)
       .select(keyCols.map(col): _*).distinct()
   }
@@ -3922,11 +3989,6 @@ object Export {
         f
       }
     val physCols = picked.map(physicalOf)
-    val files = lines.map(pathOf)
-    // read by PHYSICAL names with the head schema pinned, so files
-    // predating an added column read it as NULL instead of failing
-    val physSchema = org.apache.spark.sql.types.StructType(
-      st.fields.map(f => f.copy(name = physicalOf(f))))
     val aggs = count(lit(1)).as("__n") +: picked.zipWithIndex.flatMap {
       case (f, i) =>
         val pc = physicalOf(f)
@@ -3938,12 +4000,12 @@ object Export {
     // (advisor r17): with a session-level ignoreMissingFiles/
     // ignoreCorruptFiles, a skipped file would silently land at n=0
     // and turn metadata-only count()/min/max WRONG instead of loud —
-    // the options pin the scan to fail-fast regardless of session conf
+    // the options pin the scan to fail-fast regardless of session conf.
+    // Read by PHYSICAL names with the head schema pinned, so files
+    // predating an added column read it as NULL instead of failing
     val byFile: Map[String, (Long, Seq[Option[(Long, Long)]])] =
-      spark.read.schema(physSchema)
-        .option("ignoreMissingFiles", "false")
-        .option("ignoreCorruptFiles", "false")
-        .parquet(files: _*)
+      scanCommitted(spark, root, snapshotMetaOf(fs, root, latest),
+          lines.map(entryOfLine), st, FailFastScan)
         .groupBy(col("_metadata.file_path").as("__file"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -4079,9 +4141,6 @@ object Export {
     require(untagged.forall(l => dvOf(l).isEmpty),
       s"RETAG under $outDir: untagged lines carry deletion vectors - " +
         "compact first (it materializes the DVs)")
-    val files = untagged.map(pathOf)
-    val physSchema = org.apache.spark.sql.types.StructType(
-      st.fields.map(f => f.copy(name = physicalOf(f))))
     val aggs = count(lit(1)).as("__n") +:
       physCols.zipWithIndex.flatMap { case (pc, i) => Seq(
         countDistinct(colQ(pc)).as(s"__d_$i"),
@@ -4091,10 +4150,9 @@ object Export {
         max(colQ(pc).isNull.cast("int")).as(s"__null_$i"))
       }
     // missing/corrupt files must FAIL, never stamp a guessed spec
-    val byFile = spark.read.schema(physSchema)
-      .option("ignoreMissingFiles", "false")
-      .option("ignoreCorruptFiles", "false")
-      .parquet(files: _*)
+    val byFile = scanCommitted(spark, root,
+        snapshotMetaOf(fs, root, latest), untagged.map(entryOfLine), st,
+        FailFastScan)
       .groupBy(col("_metadata.file_path").as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -4152,8 +4210,7 @@ object Export {
     val fresh =
       if (spanning.isEmpty) Seq.empty[String]
       else writePartitionedEpoch(spark, fs, root, version,
-        readFilesAs(spark, fs, root, latest,
-          spanning.map(pathOf).toIndexedSeq),
+        readFilesAs(spark, fs, root, latest, spanning.toSeq),
         cols, nFiles = 1, zoneKey = None)
     commitManifest(fs, root, version,
       internalMeta(fs, root,
@@ -4218,8 +4275,7 @@ object Export {
       case Some((lo, hi)) => hi >= bmin && lo <= bmax
       case None => true // zoneless: must merge, can't prove exclusion
     })
-    val base = readFilesAs(spark, fs, root, latest,
-      hit.map(pathOf).toIndexedSeq)
+    val base = readFilesAs(spark, fs, root, latest, hit)
     val merged = Merge.upsertLatest(base, updates, keyCols, orderCols)
     val version = latest + 1
     val fresh = writeClusteredEpoch(spark, fs, root, version, merged,
@@ -4386,12 +4442,12 @@ object Export {
           case Some((slo, shi)) => shi >= lo && slo <= hi
           case None => true
         } }
-    }.map(pathOf)
+    }
     val files =
       if (chosen.nonEmpty) chosen
-      else lines.map(pathOf).sorted.take(1)
+      else lines.sortBy(pathOf).take(1)
     preds.foldLeft(
-        readFilesAs(spark, fs, root, version, files.toIndexedSeq)) {
+        readFilesAs(spark, fs, root, version, files)) {
       case (d, (c, (lo, hi))) => d.filter(col(c).between(lo, hi))
     }
   }
@@ -4442,14 +4498,14 @@ object Export {
     val chosen = lines.filter(l => zoneOf(l) match {
       case Some((zlo, zhi)) => zhi >= lo && zlo <= hi
       case None => true
-    }).map(pathOf)
+    })
     // empty overlap: keep one file so the schema survives; the exact
     // predicate then yields the correct empty result. A version with
     // zero data files reads back typed-empty via its #schema= header.
     val files =
       if (chosen.nonEmpty) chosen
-      else lines.map(pathOf).sorted.take(1)
-    readFilesAs(spark, fs, root, version, files.toIndexedSeq)
+      else lines.sortBy(pathOf).take(1)
+    readFilesAs(spark, fs, root, version, files)
       .filter(col(keyCol).between(lo, hi))
   }
 
@@ -4748,8 +4804,8 @@ object Export {
       // would drop NULL rows too (filter discards NULL), silently purging
       // every row with a NULL in the predicate's columns.
       val keep = !coalesce(pcond, lit(false))
-      val rows = readFilesAs(spark, fs, root, latest,
-        hit.map(pathOf).toIndexedSeq).alias(DmlOuterAlias).filter(keep)
+      val rows = readFilesAs(spark, fs, root, latest, hit)
+        .alias(DmlOuterAlias).filter(keep)
       val partCols = snapshotPartitionColumns(outDir, latest)
       val fresh =
         if (partCols.nonEmpty)
@@ -4862,8 +4918,8 @@ object Export {
       if (hit.isEmpty) return latest // every file provably misses: no-op
       val version = latest + 1
       // DV-aware, physical-decoded, logical-projected — the standard funnel
-      val rows = readFilesAs(spark, fs, root, latest,
-        hit.map(pathOf).toIndexedSeq).alias(DmlOuterAlias)
+      val rows = readFilesAs(spark, fs, root, latest, hit)
+        .alias(DmlOuterAlias)
       val hitCond = coalesce(pcond, lit(false))
       val setMap = sets.toMap
       val updated = rows.select(st.fields.toSeq.map { f =>
@@ -4914,7 +4970,10 @@ object Export {
     val (fs, root) = fsRoot(outDir)
     val lines = dataLines(readManifestRaw(fs, root, latest))
     if (lines.isEmpty) return latest
-    val st = snapshotSchema(outDir, latest).getOrElse(
+    val headMeta = snapshotMetaOf(fs, root, latest)
+    val st = headMeta.get("schema").map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[StructType]).getOrElse(
       throw new IllegalStateException(s"version $latest under $root " +
         "has no #schema= header (pre-header legacy manifest) - recommit"))
     sets.foreach { case (n, _) =>
@@ -4935,27 +4994,12 @@ object Export {
       val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
       val candidate = pruneLines(lines, conjuncts, physOf)._1
       if (candidate.isEmpty) return latest
-      val candFiles = candidate.map(pathOf).toIndexedSeq
       val cols = st.fieldNames.toSeq
       val fcol = freshName("__upd_file", cols)
       val pcol = freshName("__upd_pos", cols)
-      // candidate scan with provenance, existing DVs subtracted (the
-      // deleteWhereMoR funnel: physical decode, metadata BEFORE the
-      // logical projection)
-      val scan = spark.read
-        .schema(org.apache.spark.sql.types.StructType(
-          st.fields.map(f => f.copy(name = physicalOf(f)))))
-        .parquet(candFiles: _*)
-      val withPos = scan.select(st.fields.toSeq.map(f =>
-          col(physicalOf(f)).as(f.name)) ++
-        Seq(col("_metadata.file_path").as(fcol),
-          col("_metadata.row_index").as(pcol)): _*)
-      val oldDvDirs = candidate.flatMap(dvOf).map(_._1).distinct
-      val live =
-        if (oldDvDirs.isEmpty) withPos
-        else withPos.join(spark.read.parquet(oldDvDirs: _*)
-            .select(col(DvFileCol).as(fcol), col(DvPosCol).as(pcol)),
-          Seq(fcol, pcol), "left_anti")
+      // candidate scan with provenance, existing DVs subtracted
+      val live = scanWithPositions(spark, root, headMeta, candidate, st,
+        fcol, pcol, subtractDvs = true)
       val matched = live.alias(DmlOuterAlias)
         .filter(coalesce(pcond, lit(false))).persist()
       matchedOpt = Some(matched)
@@ -4965,38 +5009,13 @@ object Export {
       // carried positions, exactly the deleteWhereMoR consolidation
       val toDv = matched.select(col(fcol).as(DvFileCol),
         col(pcol).as(DvPosCol))
-      // carried positions restricted to the CANDIDATE files (whose
-      // lines re-point at the new sidecar); a non-candidate line
-      // sharing an old sidecar dir keeps its dv= tag verbatim below,
-      // so its positions must NOT migrate (the upsertSnapshotMoR
-      // discipline)
-      val carried =
-        if (oldDvDirs.isEmpty) toDv.limit(0)
-        else spark.read.parquet(oldDvDirs: _*)
-          .select(col(DvFileCol), col(DvPosCol))
-          .join(spark.createDataset(candFiles.map(f =>
-              fs.makeQualified(new Path(f)).toString))(
-              org.apache.spark.sql.Encoders.STRING).toDF(DvFileCol),
-            Seq(DvFileCol), "left_semi")
-      val dvDir = new Path(root,
-        s"dv=$version-${java.util.UUID.randomUUID.toString.take(8)}")
-      toDv.unionByName(carried).distinct().write.parquet(dvDir.toString)
-      val counts: Map[String, Long] =
-        spark.read.parquet(dvDir.toString).groupBy(DvFileCol).count()
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
+        carriedDvs(spark, fs, candidate).fold(toDv)(toDv.unionByName))
       val dvUri = fs.makeQualified(dvDir).toString
-      val byLine: Map[String, Long] = counts.map { case (f, n) =>
-        fs.makeQualified(new Path(f)).toString -> n }
       val candSet = candidate.toSet
-      val retagged = lines.map { l =>
-        if (!candSet(l)) l // untouched line: dv tag (if any) carries
-        else {
-          val kept = l.split('\t').filterNot(_.startsWith("dv="))
-            .mkString("\t")
-          byLine.get(fs.makeQualified(new Path(pathOf(l))).toString)
-            .fold(kept)(n => s"$kept\tdv=$dvUri:$n")
-        }
-      }
+      // untouched lines: dv tag (if any) carries
+      val retagged = lines.map(l =>
+        if (candSet(l)) retagDv(fs, l, dvUri, counts) else l)
       // (b) append the UPDATED copies as a fresh epoch
       val setMap = sets.toMap
       val updated = matched.select(st.fields.toSeq.map { f =>
@@ -5056,93 +5075,47 @@ object Export {
     val (fs, root) = fsRoot(outDir)
     val lines = dataLines(readManifestRaw(fs, root, latest))
     if (lines.isEmpty) return latest
-    val stOpt = snapshotMetaOf(fs, root, latest).get("schema")
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val headMeta = snapshotMetaOf(fs, root, latest)
+    val st = committedSchema(spark, headMeta, lines.map(entryOfLine))
     // manifest-tag pruning of the MATCH scan (r16): a file the
     // predicate's conjuncts — subquery conjuncts expanded — provably
     // exclude cannot hold a deletable row, so its bytes are never read
     // (its existing dv= tags still carry through the manifest line)
-    val physPrune: Map[String, String] = stOpt
-      .map(_.fields.map(f => f.name -> physicalOf(f)).toMap)
-      .getOrElse(Map.empty)
+    val physPrune: Map[String, String] =
+      st.fields.map(f => f.name -> physicalOf(f)).toMap
     val dml = dmlPlan(spark, cond, canExpand = anyPruningTags(lines))
-    val (pcond, pruneConjuncts) = (dml.cond, dml.conjuncts)
-    // the prune step runs under the same release discipline as the
-    // commit block (r18 advisor): a throw here must not leak the pins
-    val scanLines =
-      try pruneLines(lines, pruneConjuncts, physPrune)._1
-      catch { case t: Throwable => dml.release(); throw t }
-    if (scanLines.isEmpty) { dml.release(); return latest }
     try {
-    val files = scanLines.map(pathOf).toIndexedSeq
-    // decode by PHYSICAL name, surface the metadata position columns
-    // BEFORE projecting back to logical names (the predicate is on
-    // logical columns; metadata resolves only on the scan output)
-    val logicalCols = stOpt.map(_.fieldNames.toSeq).getOrElse(Seq.empty)
-    val fcol = freshName("__dvp_file", logicalCols)
-    val pcol = freshName("__dvp_pos", logicalCols)
-    val base = stOpt match {
-      case Some(st) =>
-        val scan = spark.read
-          .schema(org.apache.spark.sql.types.StructType(
-            st.fields.map(f => f.copy(name = physicalOf(f)))))
-          .parquet(files: _*)
-        if (st.fields.exists(_.metadata.contains(PhysicalKey)))
-          scan.select(st.fields.toSeq.map(f =>
-              col(physicalOf(f)).as(f.name)) ++
-            Seq(col("_metadata.file_path").as(fcol),
-              col("_metadata.row_index").as(pcol)): _*)
-        else scan.select(col("*"),
-          col("_metadata.file_path").as(fcol),
-          col("_metadata.row_index").as(pcol))
-      case None => spark.read.parquet(files: _*)
-        .select(col("*"),
-          col("_metadata.file_path").as(fcol),
-          col("_metadata.row_index").as(pcol))
-    }
-    // evaluated on PHYSICAL rows: a position already in a DV that
-    // matches again just re-unions (idempotent), and the distinct keeps
-    // the recorded counts exact
-    val hit = base.alias(DmlOuterAlias)
-      .filter(coalesce(pcond, lit(false)))
-      .select(col(fcol).as(DvFileCol), col(pcol).as(DvPosCol))
-    val oldDirs = lines.flatMap(dvOf).map(_._1).distinct
-    val prevTotal = lines.flatMap(dvOf).map(_._2).sum
-    val carried =
-      if (oldDirs.isEmpty) hit.limit(0)
-      else spark.read.parquet(oldDirs: _*)
-        .select(col(DvFileCol), col(DvPosCol))
-    val version = latest + 1
-    val dvDir = new Path(root,
-      s"dv=$version-${java.util.UUID.randomUUID.toString.take(8)}")
-    hit.unionByName(carried).distinct().write.parquet(dvDir.toString)
-    // counts read back from the written bytes (bounded: one row/file)
-    val counts: Map[String, Long] =
-      spark.read.parquet(dvDir.toString).groupBy(DvFileCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (counts.values.sum == prevTotal) {
-      // nothing new matched: don't churn the log; the orphaned sidecar
-      // is reclaimed by the next vacuum like any losing commit's files
-      fs.delete(dvDir, true)
-      return latest
-    }
-    val dvUri = fs.makeQualified(dvDir).toString
-    val byLine: Map[String, Long] = counts.map { case (f, n) =>
-      fs.makeQualified(new Path(f)).toString -> n }
-    val newLines = lines.map { l =>
-      val kept = l.split('\t').filterNot(_.startsWith("dv=")).mkString("\t")
-      byLine.get(fs.makeQualified(new Path(pathOf(l))).toString)
-        .fold(kept)(n => s"$kept\tdv=$dvUri:$n")
-    }
-    commitRewriteThenAppends(fs, root, latest, lines, newLines,
-      Map(
-        "mor_deleted_from" -> latest.toString,
-        "dv_positions" -> counts.values.sum.toString),
-      stOpt.map(_.json).getOrElse(
-        org.apache.spark.sql.types.StructType(base.schema.fields
-          .filterNot(f => f.name == fcol || f.name == pcol)).json),
-      op = "delete")
+      val scanLines = pruneLines(lines, dml.conjuncts, physPrune)._1
+      if (scanLines.isEmpty) return latest
+      val fcol = freshName("__dvp_file", st.fieldNames.toSeq)
+      val pcol = freshName("__dvp_pos", st.fieldNames.toSeq)
+      // evaluated on PHYSICAL rows: a position already in a DV that
+      // matches again just re-unions (idempotent), and the distinct keeps
+      // the recorded counts exact
+      val hit = scanWithPositions(spark, root, headMeta, scanLines, st,
+          fcol, pcol, subtractDvs = false)
+        .alias(DmlOuterAlias)
+        .filter(coalesce(dml.cond, lit(false)))
+        .select(col(fcol).as(DvFileCol), col(pcol).as(DvPosCol))
+      val oldDirs = lines.flatMap(dvOf).map(_._1).distinct
+      val prevTotal = lines.flatMap(dvOf).map(_._2).sum
+      val version = latest + 1
+      val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
+        if (oldDirs.isEmpty) hit
+        else hit.unionByName(readDvs(spark, oldDirs)))
+      if (counts.values.sum == prevTotal) {
+        // nothing new matched: don't churn the log; the orphaned sidecar
+        // is reclaimed by the next vacuum like any losing commit's files
+        fs.delete(dvDir, true)
+        return latest
+      }
+      val dvUri = fs.makeQualified(dvDir).toString
+      commitRewriteThenAppends(fs, root, latest, lines,
+        lines.map(retagDv(fs, _, dvUri, counts)),
+        Map(
+          "mor_deleted_from" -> latest.toString,
+          "dv_positions" -> counts.values.sum.toString),
+        st.json, op = "delete")
     } finally dml.release()
   }
 
@@ -5190,7 +5163,8 @@ object Export {
     require(latest > 0, s"nothing to upsert into under $outDir")
     val (fs, root) = fsRoot(outDir)
     val lines = dataLines(readManifestRaw(fs, root, latest))
-    val schemaJson = snapshotMetaOf(fs, root, latest).getOrElse("schema",
+    val headMeta = snapshotMetaOf(fs, root, latest)
+    val schemaJson = headMeta.getOrElse("schema",
       throw new IllegalStateException(s"version $latest under $root " +
         "has no #schema= header (pre-header legacy manifest) - recommit"))
     val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
@@ -5259,32 +5233,18 @@ object Export {
         }
       case None => (lines, Seq.empty[String])
     }
-    val candFiles = candidate.map(pathOf).toIndexedSeq
-
     val fcol = freshName("__mor_file", cols)
     val pcol = freshName("__mor_pos", cols)
     val prefC = freshName("__mor_pref", cols)
     val rnC = freshName("__mor_rn", cols)
 
     // matched base rows with their (file, pos), existing DVs subtracted,
-    // projected to logical names (mirrors the deleteWhereMoR scan)
-    val oldDvDirs = candidate.flatMap(dvOf).map(_._1).distinct
+    // projected to logical names
     val matchedBase: Option[DataFrame] =
-      if (candFiles.isEmpty) None
+      if (candidate.isEmpty) None
       else {
-        val scan = spark.read
-          .schema(org.apache.spark.sql.types.StructType(
-            st.fields.map(f => f.copy(name = physicalOf(f)))))
-          .parquet(candFiles: _*)
-        val withPos = scan.select(st.fields.toSeq.map(f =>
-            col(physicalOf(f)).as(f.name)) ++
-          Seq(col("_metadata.file_path").as(fcol),
-            col("_metadata.row_index").as(pcol)): _*)
-        val live =
-          if (oldDvDirs.isEmpty) withPos
-          else withPos.join(spark.read.parquet(oldDvDirs: _*)
-              .select(col(DvFileCol).as(fcol), col(DvPosCol).as(pcol)),
-            Seq(fcol, pcol), "left_anti")
+        val live = scanWithPositions(spark, root, headMeta, candidate, st,
+          fcol, pcol, subtractDvs = true)
         val ukeys = u.select(keyCols.map(col): _*).distinct()
         Some(live.as("b").join(ukeys.as("k"),
           keyCols.map(kc => col(s"b.$kc") <=> col(s"k.$kc"))
@@ -5334,31 +5294,10 @@ object Export {
       val (retagged, dvTotal) =
         if (!anyBeaten) (candidate, candidate.flatMap(dvOf).map(_._2).sum)
         else {
-          val dvDir = new Path(root,
-            s"dv=$version-${java.util.UUID.randomUUID.toString.take(8)}")
-          val carried =
-            if (oldDvDirs.isEmpty) toDv.limit(0)
-            else spark.read.parquet(oldDvDirs: _*)
-              .select(col(DvFileCol), col(DvPosCol))
-              .join(spark.createDataset(candFiles.map(f =>
-                  fs.makeQualified(new Path(f)).toString))(
-                  org.apache.spark.sql.Encoders.STRING).toDF(DvFileCol),
-                Seq(DvFileCol), "left_semi")
-          toDv.unionByName(carried).distinct()
-            .write.parquet(dvDir.toString)
-          // counts read back from the written bytes (bounded: 1 row/file)
-          val counts: Map[String, Long] =
-            spark.read.parquet(dvDir.toString).groupBy(DvFileCol).count()
-              .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+          val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
+            carriedDvs(spark, fs, candidate).fold(toDv)(toDv.unionByName))
           val dvUri = fs.makeQualified(dvDir).toString
-          val byLine: Map[String, Long] = counts.map { case (f, n) =>
-            fs.makeQualified(new Path(f)).toString -> n }
-          (candidate.map { l =>
-            val kept = l.split('\t').filterNot(_.startsWith("dv="))
-              .mkString("\t")
-            byLine.get(fs.makeQualified(new Path(pathOf(l))).toString)
-              .fold(kept)(n => s"$kept\tdv=$dvUri:$n")
-          }, counts.values.sum)
+          (candidate.map(retagDv(fs, _, dvUri, counts)), counts.values.sum)
         }
 
       // insert epoch (zoned when clustered, so the NEXT batch prunes)
@@ -5491,8 +5430,7 @@ object Export {
     }
     if (hit.isEmpty) return latest
     val version = latest + 1
-    val rows = readFilesAs(spark, fs, root, latest,
-      hit.map(pathOf).toIndexedSeq)
+    val rows = readFilesAs(spark, fs, root, latest, hit)
     val fresh = writePartitionedEpoch(spark, fs, root, version, rows,
       partitionCols, nFiles, zoneKey)
     val schemaJson = snapshotMetaOf(fs, root, latest).getOrElse("schema",

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, EqualNullSafe, EqualTo, Expression, ExprId, GetStructField}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, Between, Cast, EqualNullSafe, EqualTo, Expression, ExprId, GetStructField, GreaterThanOrEqual, LessThanOrEqual}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, DeleteFromTable, InsertAction, LogicalPlan, MergeIntoTable, OverwriteByExpression, OverwritePartitionsDynamic, Project, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.COMMAND
@@ -124,7 +124,7 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
     * exprId-bound to the dead relation and a per-row scalar has no
     * sound join rewrite here — MERGE INTO is the front door). */
   private def unresolve(e: Expression): Expression = {
-    val d = decorrelateExists(e)
+    val d = decorrelateExists(expandBetween(e))
     val r =
       if (org.apache.spark.sql.catalyst.expressions.SubqueryExpression
           .hasCorrelatedSubquery(d)) rebindCorrelated(d, e)
@@ -132,6 +132,22 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
     r.transform {
       case a: AttributeReference => UnresolvedAttribute.quoted(a.name)
     }
+  }
+
+  /** `x BETWEEN lo AND hi` as `x >= lo AND x <= hi`. Spark's `Between`
+    * carries its analyzed replacement (a `With` binding `x` once), and
+    * rebuilding that `With` over unresolved attributes asks them for a
+    * data type and throws — so the name rebind below must never see
+    * one. Evaluating `x` twice is only sound when it is deterministic;
+    * a nondeterministic input is refused loudly. */
+  private def expandBetween(e: Expression): Expression = e.transform {
+    case b: Between if b.input.deterministic =>
+      And(GreaterThanOrEqual(b.input, b.lower),
+        LessThanOrEqual(b.input, b.upper))
+    case b: Between =>
+      throw new UnsupportedOperationException(
+        s"BETWEEN over a nondeterministic input is not supported in " +
+          s"lake DML (got $e) - compute the input once in a subquery")
   }
 
   /** GENERAL correlated-subquery support for lake DML (r17, judge

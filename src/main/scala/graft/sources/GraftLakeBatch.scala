@@ -3,11 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
-import org.apache.spark.sql.{SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SQLContext, SparkSession}
 
 import graft.operators.Export
 
@@ -109,6 +109,26 @@ object GraftLakeBatch {
     // dataFilters tag-prune path — identical results, no DPP.
     HadoopFsRelation(index, index.partitionSchema, schema, None, fmt,
       params)(spark)
+  }
+
+  /** The one scan of committed lake files: `entries` — manifest lines
+    * the caller already holds — planned through a raw
+    * [[GraftLakeFileIndex]] and decoded under `dataSchema` by column
+    * name. Statuses come from the lines' `len=` tags, so neither a
+    * listing job nor a footer pass runs, however many files are planned
+    * (`spark.read.parquet(paths)` lists them: one task per path above
+    * Spark's 32-path parallel-discovery threshold). Deletion vectors
+    * are the caller's to subtract. `options` are the parquet source's
+    * (`ignoreMissingFiles`, ...), as `spark.read.option` takes them. */
+  private[graft] def scan(spark: SparkSession, table: String,
+      entries: Seq[Export.ManifestEntry], dataSchema: StructType,
+      commitMs: Long, options: Map[String, String] = Map.empty)
+      : DataFrame = {
+    val index = new GraftLakeFileIndex(spark, table, entries, commitMs,
+      dataSchema, rawFiles = true)
+    GraftPlanBridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
+      new StructType(), dataSchema, None, new ParquetFileFormat(),
+      options)(spark)))
   }
 
   // ---- shared manifest-tag pruning kernel (batch FileIndex + the
@@ -234,23 +254,37 @@ object GraftLakeBatch {
 }
 
 /** Manifest-driven [[FileIndex]]: `listFiles` plans exactly the
-  * version's manifest files minus those a pushed literal conjunct
+  * given manifest entries minus those a pushed literal conjunct
   * provably excludes via the manifest's `p=`/`s=` tags. File statuses
-  * are resolved ONCE at construction with one `listStatus` per distinct
-  * parent (epoch) directory — bounded by the manifest's directory
-  * count, never the table root. */
+  * are resolved ONCE at construction from the entries' `len=` tags;
+  * legacy lines without one cost one `listStatus` per distinct parent
+  * (epoch) directory — bounded by the manifest's directory count,
+  * never the table root.
+  *
+  * `rawFiles` is the lake's own scans (DML candidates, time travel,
+  * streams): every column is read from the files and the caller
+  * subtracts deletion vectors itself, so no partition column is
+  * surfaced and no sidecar is advertised to the extension's rewrite. */
 final class GraftLakeFileIndex(spark: SparkSession, table: String,
-    version: Int, schema: StructType) extends FileIndex {
+    entries: Seq[Export.ManifestEntry], commitMs: Long, schema: StructType,
+    rawFiles: Boolean) extends FileIndex {
 
-  private val entries = Export.snapshotManifestEntries(table, version)
+  /** The catalog/format read of `table` at `version`. */
+  def this(spark: SparkSession, table: String, version: Int,
+      schema: StructType) =
+    this(spark, table, Export.snapshotManifestEntries(table, version),
+      try Export.snapshotTimestamp(table, version)
+      catch { case _: IllegalStateException => 0L }, // pre-timestamp
+      schema, rawFiles = false)
 
   private val (fs, root) = Export.fsRoot(table)
 
-  /** Deletion-vector sidecar dirs referenced by this version's lines —
+  /** Deletion-vector sidecar dirs referenced by the planned lines —
     * non-empty means a raw scan of the planned files would re-emit
     * MoR-deleted rows, and the extension's resolution rule must wrap
     * the relation in the `(file_path, row_index)` anti-join. */
-  val dvDirs: Seq[String] = entries.flatMap(_.dv).map(_._1).distinct
+  val dvDirs: Seq[String] =
+    if (rawFiles) Nil else entries.flatMap(_.dv).map(_._1).distinct
 
   // logical name -> the physical name the tags are keyed by, so a
   // renamed column's pushed filters keep pruning files (the p=/s=/b=
@@ -265,8 +299,6 @@ final class GraftLakeFileIndex(spark: SparkSession, table: String,
     // commit timestamp stands in for per-file mtime (files are
     // immutable and committed together). Legacy lines without the tag
     // fall back to one listStatus per distinct parent (epoch) dir.
-    val commitMs = try Export.snapshotTimestamp(table, version)
-      catch { case _: IllegalStateException => 0L }
     val (tagged, legacy) = entries.partition(_.len.isDefined)
     val fromManifest = tagged.map { e =>
       e -> new FileStatus(e.len.get, false, 1, 128L * 1024 * 1024,
@@ -319,7 +351,7 @@ final class GraftLakeFileIndex(spark: SparkSession, table: String,
     * disables surfacing for the whole version — readers then serve the
     * column from the data files exactly as before. */
   private val surfaced: Seq[org.apache.spark.sql.types.StructField] = {
-    if (entries.isEmpty) Nil
+    if (rawFiles || entries.isEmpty) Nil
     else {
       val common = entries.iterator.map(_.partition.keySet)
         .reduce(_ intersect _)

@@ -409,14 +409,25 @@ final class GraftLakeSource(spark: SparkSession,
     * the manifest's `p=`/`s=` tags (physical-name-translated; identity
     * on never-renamed tables). Package-visible so the spec can assert
     * on exactly what a batch plans. */
-  private[sources] def plannedAddedFiles(v: Long): Seq[String] = {
+  private[sources] def plannedAddedEntries(v: Long)
+      : Seq[Export.ManifestEntry] = {
     val physOf: Map[String, String] = dataSchema.fields
       .map(f => f.name -> Export.physicalOf(f)).toMap
     Export.snapshotAddedEntries(path, v.toInt)
       .filter(e => pruneConjuncts.forall(c =>
         !GraftLakeBatch.excludes(c, e, physOf)))
-      .map(_.path)
   }
+
+  /** `entries` decoded by PHYSICAL column name (a renamed table's bytes
+    * keep their original names), planned from the manifest lines —
+    * mirrors Export.readFilesAs. Callers project back to logical. The
+    * files span versions and no stream row carries their mtime, so none
+    * is stamped. */
+  private def scanPhysical(entries: Seq[Export.ManifestEntry]): DataFrame =
+    GraftLakeBatch.scan(spark, path, entries,
+      StructType(dataSchema.fields.map(f =>
+        f.copy(name = Export.physicalOf(f)))),
+      commitMs = 0L)
 
   /** Appends-only batch: the union of the versions' ADDED files read
     * under the pinned stream schema — one parquet scan, planned from
@@ -437,8 +448,8 @@ final class GraftLakeSource(spark: SparkSession,
       alignDataToPinned(Export.readSnapshot(spark, path, v.toInt)))
     val files = versions.filterNot(bootDv.contains).flatMap { v =>
       Export.snapshotOperation(path, v.toInt) match {
-        case _ if bootVersion.contains(v) => plannedAddedFiles(v)
-        case Some("append") | None => plannedAddedFiles(v)
+        case _ if bootVersion.contains(v) => plannedAddedEntries(v)
+        case Some("append") | None => plannedAddedEntries(v)
         // metadata-only commits (column rename/drop) carry the head's
         // exact data lines: no rows appear or vanish, the stream keeps
         // its pinned schema and just flows past them. A MoR delete also
@@ -448,8 +459,8 @@ final class GraftLakeSource(spark: SparkSession,
         // files and the pinned read schema's shape are all unchanged
         case Some("rename") | Some("drop") | Some("default") |
             Some("constraint") =>
-          Seq.empty[String]
-        case Some(_) if skipChange => Seq.empty[String]
+          Seq.empty[Export.ManifestEntry]
+        case Some(_) if skipChange => Seq.empty[Export.ManifestEntry]
         case Some(op) => throw new IllegalStateException(
           s"version $v of $path is a '$op' commit; a graftlake stream " +
             "serves appends only. Set skipChangeCommits=true to skip " +
@@ -461,12 +472,7 @@ final class GraftLakeSource(spark: SparkSession,
     val scanned =
       if (files.isEmpty) None
       else {
-        // decode by PHYSICAL column name (a renamed table's bytes keep
-        // their original names), then project back to the pinned logical
-        // schema - mirrors Export.readFilesAs
-        val phys = StructType(dataSchema.fields.map(f =>
-          f.copy(name = Export.physicalOf(f))))
-        val scan = spark.read.schema(phys).parquet(files: _*)
+        val scan = scanPhysical(files)
         Some(
           if (dataSchema.fields.exists(f => Export.physicalOf(f) != f.name))
             scan.select(dataSchema.fields.toSeq.map(f =>
@@ -525,17 +531,16 @@ final class GraftLakeSource(spark: SparkSession,
     val survivors = Export.snapshotVersions(path)
     val (appendVs, diffVs) = cdfGroups(versions, survivors)
     val appendPart: Option[DataFrame] = {
-      val fileVer: Seq[(String, Long)] = appendVs.flatMap(v =>
-        Export.snapshotAddedEntries(path, v.toInt).map(e => (e.path, v)))
+      val fileVer: Seq[(Export.ManifestEntry, Long)] =
+        appendVs.flatMap(v =>
+          Export.snapshotAddedEntries(path, v.toInt).map(e => (e, v)))
       if (fileVer.isEmpty) None
       else {
-        val phys = StructType(dataSchema.fields.map(f =>
-          f.copy(name = Export.physicalOf(f))))
-        val scan = spark.read.schema(phys)
-          .parquet(fileVer.map(_._1): _*)
+        val scan = scanPhysical(fileVer.map(_._1))
         val fcol = Export.freshName("__cdf_file",
-          phys.fieldNames.toSeq ++ Seq(ChangeCol, CommitVersionCol))
-        val fv = spark.createDataset(fileVer)(
+          scan.columns.toSeq ++ Seq(ChangeCol, CommitVersionCol))
+        val fv = spark.createDataset(fileVer.map { case (e, v) =>
+            (e.path, v) })(
             org.apache.spark.sql.Encoders.tuple(
               org.apache.spark.sql.Encoders.STRING,
               org.apache.spark.sql.Encoders.scalaLong))

@@ -1304,4 +1304,33 @@ class GraftLakeDmlSpec extends SparkSpec {
       e.getMessage.contains("more than once"), e.getMessage)
     assert(Export.latestSnapshotVersion(dir) === v0)
   }
+
+  test("BETWEEN in DML predicates and assignments: CoW and MoR UPDATE and DELETE leave the same head as the >= AND <= spelling") {
+    val wh = warehouse
+    val mor = " TBLPROPERTIES ('graft.update.mode' = 'mor', " +
+      "'graft.delete.mode' = 'mor')"
+    def run(t: String, props: String, between: Boolean): Seq[(Long, Long)] = {
+      def in(lo: Int, hi: Int): String =
+        if (between) s"k BETWEEN $lo AND $hi" else s"k >= $lo AND k <= $hi"
+      spark.sql(s"CREATE TABLE gld.ns.$t (k BIGINT, v BIGINT)$props")
+      spark.sql(s"INSERT INTO gld.ns.$t SELECT id, id FROM range(20)")
+      spark.sql(s"UPDATE gld.ns.$t SET v = CASE WHEN ${in(4, 5)} THEN 0 " +
+        s"ELSE v + 100 END WHERE ${in(3, 7)}")
+      spark.sql(s"DELETE FROM gld.ns.$t WHERE ${in(10, 12)}")
+      spark.sql(s"SELECT k, v FROM gld.ns.$t ORDER BY k").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    }
+    val cow = run("bw_cow_b", "", between = true)
+    assert(cow === run("bw_cow_r", "", between = false))
+    assert(cow === (0L until 20L).filterNot(k => k >= 10 && k <= 12)
+      .map(k => k -> (if (k == 4 || k == 5) 0L
+        else if (k >= 3 && k <= 7) k + 100 else k)))
+    val morRows = run("bw_mor_b", mor, between = true)
+    assert(morRows === run("bw_mor_r", mor, between = false))
+    assert(morRows === cow)
+    val morDir = s"$wh/ns/bw_mor_b"
+    assert(Export.snapshotHasDeletionVectors(morDir,
+      Export.latestSnapshotVersion(morDir)),
+      "the MoR table must take the deletion-vector paths")
+  }
 }

@@ -434,7 +434,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       Map("path" -> table.getAbsolutePath, "where" -> "m = 1"))
     // planning proof: every planned file is an m=1 partition file, and
     // strictly fewer files are planned than the manifests list
-    val planned = Seq(1L, 2L).flatMap(src.plannedAddedFiles)
+    val planned = Seq(1L, 2L).flatMap(src.plannedAddedEntries).map(_.path)
     assert(planned.nonEmpty)
     assert(planned.forall(_.contains("_p_m=1")),
       s"planned non-matching files: " +
@@ -452,7 +452,7 @@ class GraftLakeSourceSpec extends SparkSpec {
       statted.getAbsolutePath, statCols = Seq("id"), nFiles = 5)
     val src2 = new GraftLakeSource(spark.sqlContext.sparkSession,
       Map("path" -> statted.getAbsolutePath, "where" -> "id >= 90"))
-    val planned2 = src2.plannedAddedFiles(1L)
+    val planned2 = src2.plannedAddedEntries(1L)
     assert(planned2.nonEmpty && planned2.length < 5)
     val got2 = drain(spark.readStream.format("graftlake")
         .option("where", "id >= 90").load(statted.getAbsolutePath),
