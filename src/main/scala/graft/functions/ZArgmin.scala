@@ -95,10 +95,10 @@ object ZOps {
     * `conv(substring(md5(concat('t_p_', i)), 1, 1), 16, 10) % 2 = 0`.
     * The first hex digit is the high nibble of digest byte 0. */
   private val signTables =
-    new java.util.concurrent.ConcurrentHashMap[Int, Array[Byte]]()
+    new java.util.concurrent.ConcurrentHashMap[Long, Array[Byte]]()
 
   private def signs(t: Int, p: Int, n: Int): Array[Byte] = {
-    val key = t * 64 + p
+    val key = (t.toLong << 32) | p
     val cur = signTables.get(key)
     if (cur != null && cur.length >= n) cur
     else signTables.synchronized {
@@ -212,6 +212,10 @@ case class PqCodesZExpr(child: Expression, cb: Array[Long], m: Int,
   * see [[ZOps.lshBucketsZ]]. Non-nullable (degenerate → bucket 0). */
 case class LshBucketsZExpr(child: Expression, tables: Int, planes: Int)
     extends UnaryExpression {
+  // a bucket is a Long bitmask over the planes: `1L << p` wraps at 64
+  if (planes < 1 || planes > 63) throw new IllegalArgumentException(
+    s"lsh_buckets_z planes must be in 1..63 (one bit each of a BIGINT " +
+      s"bucket), got $planes")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 

@@ -543,11 +543,18 @@ object Dedup {
     * is adaptive (contains an exchange) is never probed — under AQE,
     * executing toRdd just to READ a partition count would materialize
     * the upstream stages eagerly and the real job would re-run them. */
-  private def spreadIfNarrow(df: DataFrame, key: Column): DataFrame = {
+  private[operators] def spreadIfNarrow(df: DataFrame,
+      key: Column): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    val minBytesPerPart = df.sparkSession.conf
-      .get("spark.graft.spread.minBytesPerPartition", (32L << 20).toString)
-      .toLong
+    val minKey = "spark.graft.spread.minBytesPerPartition"
+    val minRaw = df.sparkSession.conf.get(minKey, (32L << 20).toString)
+    val minBytesPerPart = minRaw.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$minKey must be a byte count (a whole number), got '$minRaw'"))
+    // a size at or above spark.sql.defaultSizeInBytes is the planner's
+    // "unknown" (an RDD-backed frame, say), not a measurement
+    val unknownBytes = BigInt(org.apache.spark.sql.internal.SQLConf.get
+      .defaultSizeInBytes)
     val probed =
       try {
         df.queryExecution.executedPlan match {
@@ -561,6 +568,7 @@ object Dedup {
       } catch { case scala.util.control.NonFatal(_) => None }
     probed match {
       case Some((parts, bytes)) if parts < sc.defaultParallelism &&
+          bytes < unknownBytes &&
           bytes >= BigInt(math.max(parts, 1)) * minBytesPerPart =>
         df.repartition(sc.defaultParallelism, key)
       case _ => df

@@ -384,6 +384,92 @@ object Export {
   private def manifestPath(root: Path, version: Int): Path =
     new Path(root, s"_v$version.manifest")
 
+  /** A column name based on `base` guaranteed absent from `cols`. */
+  private[graft] def freshName(base: String, cols: Seq[String]): String =
+    Iterator.from(0)
+      .map(i => if (i == 0) base else s"$base$i")
+      .find(n => !cols.contains(n)).get
+
+  // ---------------------------------------------------- manifest codec
+  //
+  // A manifest is `#key=value` header lines (the commit's metadata, see
+  // [[internalMeta]]) and one data line per file: `<path>` plus optional
+  // tab-separated tags:
+  //   legacy positional  `<path>\t<key_min>\t<key_max>`   (cluster zone)
+  //   `len=<bytes>`                  file length (r12+ epoch writers)
+  //   `z=<lo>:<hi>`                  cluster zone
+  //   `z2=<alo>:<ahi>:<blo>:<bhi>`   2-D z-order zone
+  //   `p=<col>=<val>/<col>=<val>`    partition spec
+  //   `s=<col>:<lo>:<hi>`            per-column range, one per column
+  //   `b=<col>:<hex>`                bloom filter, one per column
+  //   `n=<rows>`                     row count
+  //   `dv=<dir-uri>:<count>`         deletion vector
+  // Zones, specs and stats are the Iceberg/Delta column-stats idea carried
+  // INSIDE the snapshot manifest, so time travel and file pruning come
+  // from the same commit. Lines are carried verbatim across commits, and
+  // a line without a given tag is always read (pruning is an
+  // accelerator, never a correctness gate). This section is the only
+  // code that knows the grammar: [[readManifest]] parses a version ONCE
+  // into a [[Manifest]], and [[withTags]]/[[withoutTags]] edit a line.
+
+  /** One data line, decoded: `partition` and `stats` are PHYSICAL-keyed
+    * exactly as the manifest carries them (translate lookups through the
+    * committed schema), `dv` is the deletion-vector sidecar
+    * `(dir-uri, count)` whose positions the file's rows lose, `zone` /
+    * `zone2` the positional cluster / z-order key ranges, `bloom` the
+    * `(column, hex)` filter, `rows` the row count. `line` is the raw
+    * line: a commit carrying the file writes it back byte for byte. */
+  final case class ManifestEntry(path: String,
+      partition: Map[String, String], stats: Map[String, (Long, Long)],
+      dv: Option[(String, Long)], len: Option[Long],
+      zone: Option[(Long, Long)], zone2: Option[(Long, Long, Long, Long)],
+      bloom: Option[(String, String)], rows: Option[Long], line: String) {
+    def hasDv: Boolean = dv.nonEmpty
+    /** False only when the zone provably misses `[lo, hi]`. */
+    def zoneOverlaps(lo: Long, hi: Long): Boolean =
+      zone.forall { case (zlo, zhi) => zhi >= lo && zlo <= hi }
+  }
+
+  /** One committed version's manifest, parsed once ([[readManifest]]):
+    * its `#key=value` headers and its data lines. Every header and tag
+    * reader takes its fields from here. */
+  final case class Manifest(version: Int, meta: Map[String, String],
+      entries: Seq[ManifestEntry]) {
+    /** The data lines, verbatim. */
+    def lines: Seq[String] = entries.map(_.line)
+    def op: Option[String] = meta.get("op")
+    def committedAt: Option[Long] = meta.get("committed_at").map(_.toLong)
+    lazy val schemaOpt: Option[StructType] = meta.get("schema").map(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j).asInstanceOf[StructType])
+    /** The committed `#schema=` header; a pre-header manifest refuses. */
+    def schema: StructType = schemaOpt.getOrElse(throw noSchema)
+    def schemaJson: String = meta.getOrElse("schema", throw noSchema)
+    private def noSchema = new IllegalStateException(s"version $version " +
+      "has no #schema= header (pre-header legacy manifest) - recommit")
+    /** Logical → physical name of every committed column. */
+    lazy val physOf: Map[String, String] = schemaOpt.fold(
+      Map.empty[String, String])(
+      _.fields.map(f => f.name -> physicalOf(f)).toMap)
+    /** Physical name of logical column `c` (identity when unknown): tag
+      * lookups translate through this, so a renamed column keeps
+      * pruning under whatever it is called now. */
+    def physicalIn(c: String): String = physOf.getOrElse(c, c)
+    /** Logical → physical of the mapped columns (empty = never renamed). */
+    def mapping: Map[String, String] =
+      schemaOpt.fold(Map.empty[String, String])(
+        _.fields.iterator.filter(_.metadata.contains(PhysicalKey))
+          .map(f => f.name -> f.metadata.getString(PhysicalKey)).toMap)
+    /** Physical names retired by [[dropSnapshotColumn]] (`#retired=`). */
+    def retired: Set[String] =
+      meta.get("retired").fold(Set.empty[String])(
+        _.split(',').filter(_.nonEmpty).toSet)
+    /** True when any entry carries a tag the DML excludes kernel prunes
+      * with — the guard that keeps subquery expansion off tagless
+      * (pre-ANALYZE) tables. */
+    def prunable: Boolean =
+      entries.exists(e => e.partition.nonEmpty || e.stats.nonEmpty)
+  }
+
   private def readManifestRaw(fs: FileSystem, root: Path,
       version: Int): Seq[String] = {
     val in = fs.open(manifestPath(root, version))
@@ -392,57 +478,146 @@ object Export {
     finally in.close()
   }
 
-  // A data line is `<path>` plus optional tab-separated stat fields:
-  //   legacy positional  `<path>\t<key_min>\t<key_max>`   (cluster zone)
-  //   tagged             `z=<lo>:<hi>`                    (cluster zone)
-  //   tagged             `p=<col>=<val>/<col>=<val>`      (partition spec)
-  //   tagged             `dv=<dir-uri>:<count>`           (deletion vector)
-  // The zone is per-file min/max of the table's cluster key and the
-  // partition spec is the file's hive-style partition values — the
-  // Iceberg/Delta column-stats idea carried INSIDE the snapshot manifest
-  // so time travel and file pruning come from the same commit. Lines are
-  // carried verbatim across appends; readers that don't prune just take
-  // the path field, and a line without a given stat is always read
-  // (pruning is an accelerator, never a correctness gate).
-  private def dataLines(lines: Seq[String]): Seq[String] =
-    lines.filterNot(_.startsWith("#"))
+  /** `_v<version>.manifest` of the table at `root`: one open, one parse. */
+  private[graft] def readManifest(fs: FileSystem, root: Path,
+      version: Int): Manifest =
+    parseManifest(version, readManifestRaw(fs, root, version))
 
-  private def pathOf(line: String): String = line.split('\t').head
+  /** [[readManifest]] by table directory — planning-side, no session. */
+  private[graft] def readManifest(outDir: String, version: Int): Manifest = {
+    val (fs, root) = fsRoot(outDir)
+    readManifest(fs, root, version)
+  }
 
-  /** The file's recorded byte length (`len=` tag, written by every
-    * r12+ epoch writer from the commit-time listing) — lets a batch
-    * scan planner build its FileStatus set from the manifest alone.
-    * Absent on legacy lines; consumers fall back to a stat. */
-  private def lenOf(line: String): Option[Long] =
-    line.split('\t').collectFirst { case f if f.startsWith("len=") =>
-      f.drop(4).toLong }
+  private[graft] def parseManifest(version: Int,
+      lines: Seq[String]): Manifest = {
+    val (headers, data) = lines.partition(_.startsWith("#"))
+    Manifest(version,
+      headers.map(_.drop(1).split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap,
+      data.map(parseEntry))
+  }
 
-  /** A column name based on `base` guaranteed absent from `cols`. */
-  private[graft] def freshName(base: String, cols: Seq[String]): String =
-    Iterator.from(0)
-      .map(i => if (i == 0) base else s"$base$i")
-      .find(n => !cols.contains(n)).get
+  /** The committed text of a manifest: sorted headers, then `lines`. */
+  private[graft] def renderManifest(meta: Map[String, String],
+      lines: Seq[String]): String =
+    (meta.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" } ++ lines)
+      .mkString("\n")
 
-  private def zoneOf(line: String): Option[(Long, Long)] = {
-    val fields = line.split('\t')
-    fields.collectFirst { case f if f.startsWith("z=") =>
-      val Array(lo, hi) = f.drop(2).split(':'); (lo.toLong, hi.toLong)
-    }.orElse(fields match {
-      // legacy positional zone (pre-tagged manifests, carried verbatim)
-      case Array(_, lo, hi) if !lo.contains('=') && !hi.contains('=') =>
-        Some((lo.toLong, hi.toLong))
+  /** A data-line field as its `(family, value)` tag; None for a legacy
+    * positional zone bound. */
+  private def tagOf(field: String): Option[(String, String)] = {
+    val eq = field.indexOf('=')
+    if (eq <= 0) None else Some(field.take(eq) -> field.drop(eq + 1))
+  }
+
+  private[graft] def parseEntry(line: String): ManifestEntry = {
+    val fields = line.split('\t').toSeq
+    val tags = fields.tail.flatMap(tagOf)
+    def one(name: String): Option[String] =
+      tags.collectFirst { case (`name`, v) => v }
+    def longs(v: String): Seq[Long] = v.split(':').toSeq.map(_.toLong)
+    ManifestEntry(fields.head,
+      partition = one("p").fold(Map.empty[String, String])(
+        _.split('/').filter(_.nonEmpty).map { kv =>
+          val Array(k, v) = kv.split("=", 2); k -> v }.toMap),
+      stats = tags.collect { case t @ ("s", v) =>
+        val c = tagId(t)._2.get
+        val Seq(lo, hi) = longs(v.drop(c.length + 1))
+        c -> ((lo, hi))
+      }.toMap,
+      // the count follows the LAST ':' because the URI itself has one
+      dv = one("dv").map { v =>
+        val cut = v.lastIndexOf(':'); (v.take(cut), v.drop(cut + 1).toLong) },
+      len = one("len").map(_.toLong),
+      zone = one("z").map(longs).map { case Seq(lo, hi) => (lo, hi) }
+        .orElse(fields match {
+          // legacy positional zone (pre-tagged manifests)
+          case Seq(_, lo, hi) if !lo.contains('=') && !hi.contains('=') =>
+            Some((lo.toLong, hi.toLong))
+          case _ => None
+        }),
+      zone2 = one("z2").map(longs).map { case Seq(a, b, c, d) => (a, b, c, d) },
+      bloom = one("b").map { v =>
+        val k = tagId("b" -> v)._2.get; (k, v.drop(k.length + 1)) },
+      rows = one("n").map(_.toLong),
+      line = line)
+  }
+
+  /** Tag constructors — the value grammar of each family. */
+  private[graft] object Tag {
+    def len(n: Long): (String, String) = "len" -> n.toString
+    def zone(lo: Long, hi: Long): (String, String) = "z" -> s"$lo:$hi"
+    def zone2(alo: Long, ahi: Long, blo: Long, bhi: Long): (String, String) =
+      "z2" -> s"$alo:$ahi:$blo:$bhi"
+    def partition(spec: Seq[(String, String)]): (String, String) =
+      "p" -> spec.map { case (k, v) => s"$k=$v" }.mkString("/")
+    def stat(key: String, lo: Long, hi: Long): (String, String) =
+      "s" -> s"$key:$lo:$hi"
+    def bloom(key: String, hex: String): (String, String) = "b" -> s"$key:$hex"
+    def rows(n: Long): (String, String) = "n" -> n.toString
+    def dv(uri: String, count: Long): (String, String) = "dv" -> s"$uri:$count"
+  }
+
+  /** A tag's identity: its family, plus the column for the per-column
+    * `s`/`b` families (a line holds one of those per column). The
+    * column is everything before the value's last two (`s`) or last one
+    * (`b`) `:`, so a column name may itself contain one. */
+  private def tagId(tag: (String, String)): (String, Option[String]) = {
+    val (family, v) = tag
+    family -> (family match {
+      case "s" => Some(v.take(v.lastIndexOf(':', v.lastIndexOf(':') - 1)))
+      case "b" => Some(v.take(v.lastIndexOf(':')))
       case _ => None
     })
   }
 
-  /** The file's partition spec, empty for an unpartitioned line (which a
-    * partition-pruned read must always plan — it can't prove exclusion). */
-  private def partitionOf(line: String): Map[String, String] =
-    line.split('\t').collectFirst { case f if f.startsWith("p=") =>
-      f.drop(2).split('/').filter(_.nonEmpty).map { kv =>
-        val Array(k, v) = kv.split("=", 2); k -> v
-      }.toMap
-    }.getOrElse(Map.empty)
+  /** `line` without the tags `drop` selects by identity
+    * (family, column). */
+  private[graft] def withoutTags(line: String)(
+      drop: ((String, Option[String])) => Boolean): String = {
+    val fields = line.split('\t').toSeq
+    val kept = fields.tail.filterNot(tagOf(_).exists(t => drop(tagId(t))))
+    (fields.head +: kept).mkString("\t")
+  }
+
+  /** `line` with `tags` ([[Tag]]) appended, replacing any tag of the
+    * same identity. */
+  private[graft] def withTags(line: String, tags: (String, String)*): String =
+    if (tags.isEmpty) line
+    else {
+      val ids = tags.map(tagId).toSet
+      (withoutTags(line)(ids) +: tags.map { case (k, v) => s"$k=$v" })
+        .mkString("\t")
+    }
+
+  /** The head: the newest committed version, parsed — `known` itself
+    * when the head has not moved since it was read (committed manifests
+    * never change), else a fresh read. None for an empty table. */
+  private def headOf(fs: FileSystem, root: Path,
+      known: Option[Manifest] = None): Option[Manifest] =
+    manifestVersions(fs, root).lastOption.map(v =>
+      known.filter(_.version == v).getOrElse(readManifest(fs, root, v)))
+
+  /** [[headOf]], refusing a table with no committed version. */
+  private def requireHead(fs: FileSystem, root: Path,
+      outDir: String): Manifest =
+    headOf(fs, root).getOrElse(throw new IllegalArgumentException(
+      s"no committed versions under $outDir"))
+
+  private def qualify(fs: FileSystem, path: String): String =
+    fs.makeQualified(new Path(path)).toString
+
+  /** The newest value of header `key` at or below `head`: the exactly-
+    * once `#batch=` watermark and the `#props=` map ride maintenance
+    * commits only, so older versions are consulted while the head lacks
+    * the key. */
+  private def newestHeader(fs: FileSystem, root: Path,
+      head: Manifest, key: String): Option[String] =
+    head.meta.get(key).orElse(manifestVersions(fs, root).reverseIterator
+      .filter(_ < head.version)
+      .map(v => readManifest(fs, root, v).meta.get(key))
+      .collectFirst { case Some(x) => x })
 
   /** Commit `_v<version>.manifest` atomically: write a temp file, then
     * rename into place. The rename is the commit point — a reader either
@@ -832,9 +1007,7 @@ object Export {
     val tmp = new Path(root,
       s"_tmp._v$version.manifest.${java.util.UUID.randomUUID}")
     val out = fs.create(tmp, false)
-    try out.write(
-      (meta.toSeq.sortBy(_._1).map { case (k, v) => s"#$k=$v" } ++ files)
-        .mkString("\n").getBytes("UTF-8"))
+    try out.write(renderManifest(meta, files).getBytes("UTF-8"))
     finally out.close()
     // publish fence: a breakable-lease guard re-verifies ownership as
     // close to the publish as a separate registry allows (r18; no-op
@@ -878,24 +1051,45 @@ object Export {
     * already-committed files before the manifest-rename guard ever ran.
     * A losing/crashed attempt just orphans its unreferenced dir, which
     * the next vacuum reclaims. */
-  private def writeEpoch(fs: FileSystem, root: Path, version: Int,
-      df0: DataFrame): (Path, Seq[String]) = {
+  private def writeEpoch(fs: FileSystem, root: Path, head: Option[Manifest],
+      df0: DataFrame): (Seq[String], StructType) = {
     // bytes always land under PHYSICAL column names (no-op on tables
     // that never renamed/dropped - see the column-mapping section);
     // generated columns materialize, then CHECK constraints assert
-    // per-row, all inside the same projection (one head-meta read)
-    val df = toPhysicalDf(fs, root, writeProjection(fs, root, df0))
-    val epochDir = new Path(root,
-      s"epoch=$version-${java.util.UUID.randomUUID.toString.take(8)}")
+    // per-row, all inside the same projection, all from `head`
+    val df = toPhysicalDf(head, writeProjection(fs, root, head, df0))
+    val epochDir = new Path(root, s"epoch=${head.fold(0)(_.version) + 1}-" +
+      java.util.UUID.randomUUID.toString.take(8))
     df.write.mode("overwrite").parquet(epochDir.toString)
     // lines carry the file LENGTH (`len=` tag) from the very listing the
     // commit already paid — so batch planning can build its scan from
     // the manifest alone, zero per-epoch listings at read time
-    (epochDir, fs.listStatus(epochDir).toSeq
+    (fs.listStatus(epochDir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => s"${st.getPath.toString}\tlen=${st.getLen}")
-      .sorted)
+      .map(st => withTags(st.getPath.toString, Tag.len(st.getLen)))
+      .sorted, df.schema)
   }
+
+  /** `fresh` epoch lines, each tagged from its own file's bytes read
+    * back: `aggs` grouped per file (`__file`) over a scan planned from
+    * the lines' `len=` tags — no listing job, no footer inference —
+    * under `written`, the schema the epoch writer wrote. A file with no
+    * rows forms no group and gets `empty`. */
+  private def tagReadBack(spark: SparkSession, fs: FileSystem, root: Path,
+      fresh: Seq[String], written: StructType, aggs: Seq[Column],
+      empty: Seq[(String, String)] = Nil)(
+      tags: org.apache.spark.sql.Row => Seq[(String, String)]): Seq[String] =
+    if (fresh.isEmpty) fresh
+    else {
+      val entries = fresh.map(parseEntry)
+      val byFile = graft.sources.GraftLakeBatch.scan(spark, root.toString,
+          entries, written, 0L)
+        .groupBy(col("_metadata.file_path").as("__file"))
+        .agg(aggs.head, aggs.tail: _*).collect()
+        .map(r => qualify(fs, r.getAs[String]("__file")) -> tags(r)).toMap
+      entries.map(e => withTags(e.line,
+        byFile.getOrElse(qualify(fs, e.path), empty): _*))
+    }
 
   /** Append-only snapshot log — the Delta/Iceberg core mechanism in its
     * minimal honest form: data files are IMMUTABLE (each append writes a
@@ -916,9 +1110,9 @@ object Export {
     // the epoch dir's version label is the TENTATIVE version (cosmetic —
     // the uuid suffix is what guarantees uniqueness); a retried commit
     // may land the same files at a later version number
-    val (_, fresh) = writeEpoch(fs, root,
-      manifestVersions(fs, root).lastOption.getOrElse(0) + 1, df)
-    commitAppend(fs, root, meta, df.schema.json, fresh)
+    val head = headOf(fs, root)
+    commitAppend(fs, root, head, meta, df.schema.json,
+      writeEpoch(fs, root, head, df)._1)
   }
 
   /** Commit version 1 of a brand-new EMPTY table: the schema header
@@ -961,7 +1155,7 @@ object Export {
     require(manifestVersions(fs, root).isEmpty,
       s"$outDir already has committed versions")
     commitManifest(fs, root, 1,
-      internalMeta(fs, root, meta, schema.json, op = "append"), Nil)
+      internalMeta(root, None, meta, schema.json, op = "append"), Nil)
     1
   }
 
@@ -1033,12 +1227,8 @@ object Export {
   def widenSnapshotColumn(outDir: String, column: String,
       to: org.apache.spark.sql.types.DataType): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     val f = st.fields.find(_.name == column).getOrElse(
       throw new IllegalArgumentException(s"no column '$column' in " +
         s"${st.fieldNames.mkString(", ")}"))
@@ -1048,12 +1238,8 @@ object Export {
         "narrowing or retyping needs a rewrite")
     val widened = org.apache.spark.sql.types.StructType(st.fields.map(
       x => if (x.name == column) x.copy(dataType = to) else x))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-        widened.json, op = "widen"),
-      dataLines(readManifestRaw(fs, root, head)))
-    version
+    commitMetadata(fs, root, head, Map.empty, widened.json, "widen",
+      head.lines)
   }
 
   /** [[appendSnapshot]] under SCHEMA EVOLUTION (the `mergeSchema` write
@@ -1070,16 +1256,11 @@ object Export {
       asInsertSurface {
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val prev = manifestVersions(fs, root).lastOption
-    val schema = prev.flatMap(v => snapshotMetaOf(fs, root, v)
-        .get("schema"))
-      .map(j => unionSchema(
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType],
-        df.schema))
-      .getOrElse(df.schema)
-    val (_, fresh) = writeEpoch(fs, root, prev.getOrElse(0) + 1, df)
-    commitAppend(fs, root, meta, schema.json, fresh)
+    val head = headOf(fs, root)
+    val schema = head.flatMap(_.schemaOpt)
+      .fold(df.schema)(unionSchema(_, df.schema))
+    commitAppend(fs, root, head, meta, schema.json,
+      writeEpoch(fs, root, head, df)._1)
   }
 
   /** Commit a FULL-REPLACE snapshot: like [[appendSnapshot]] the epoch's
@@ -1093,10 +1274,12 @@ object Export {
       meta: Map[String, String] = Map.empty): Int = {
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val version = manifestVersions(fs, root).lastOption.getOrElse(0) + 1
-    val (_, fresh) = writeEpoch(fs, root, version, df)
+    val head = headOf(fs, root)
+    val version = head.fold(0)(_.version) + 1
+    val fresh = writeEpoch(fs, root, head, df)._1
     commitManifest(fs, root, version,
-      internalMeta(fs, root, meta, df.schema.json, op = "replace"), fresh)
+      internalMeta(root, head, meta, df.schema.json, op = "replace"),
+      fresh)
     version
   }
 
@@ -1112,21 +1295,12 @@ object Export {
     * Returns the new version. */
   def truncateSnapshot(outDir: String): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val schemaJson = snapshotMetaOf(fs, root, head).getOrElse("schema",
-      throw new IllegalStateException(s"version $head under $outDir " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
-    val partCols = declaredPartitionColumns(outDir)
+    val head = requireHead(fs, root, outDir)
+    val partCols = declaredLayout(fs, root, head)
     val meta =
       if (partCols.isEmpty) Map.empty[String, String]
       else Map("partition_cols" -> partCols.mkString(","))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, meta), schemaJson,
-        op = "replace"), Nil)
-    version
+    commitMetadata(fs, root, head, meta, head.schemaJson, "replace", Nil)
   }
 
   /** Latest committed snapshot version, or 0 if none. */
@@ -1143,10 +1317,8 @@ object Export {
 
   /** The data-file paths a version's manifest references — planning-side
     * metadata (the ops/CLI surface reads this without a Spark session). */
-  def snapshotFiles(outDir: String, version: Int): Seq[String] = {
-    val (fs, root) = fsRoot(outDir)
-    dataLines(readManifestRaw(fs, root, version)).map(pathOf)
-  }
+  def snapshotFiles(outDir: String, version: Int): Seq[String] =
+    readManifest(outDir, version).entries.map(_.path)
 
   /** Committed `#schema=` header of a version as a StructType (None for
     * a pre-header legacy manifest) — planning-side, no Spark session.
@@ -1154,22 +1326,16 @@ object Export {
     * source ([[graft.sources.GraftLakeDataSource]]) pins its stream
     * schema to this at stream start, the Delta-source discipline. */
   def snapshotSchema(outDir: String, version: Int)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, root) = fsRoot(outDir)
-    snapshotMetaOf(fs, root, version).get("schema").map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    readManifest(outDir, version).schemaOpt
 
   /** Engine-stamped commit kind of a version (`append` / `replace` /
     * `compact` / `delete` / `overwrite` / `restore` / `clone`); None for
     * a pre-`#op=` legacy manifest. Planning-side. The streaming source
     * classifies commits with this: only `append` versions are servable
     * as stream rows — everything else is a change/maintenance commit. */
-  def snapshotOperation(outDir: String, version: Int): Option[String] = {
-    val (fs, root) = fsRoot(outDir)
-    snapshotMetaOf(fs, root, version).get("op")
-  }
+  def snapshotOperation(outDir: String, version: Int): Option[String] =
+    readManifest(outDir, version).op
 
   /** Data files ADDED at exactly `version`, relative to the previous
     * SURVIVING version (retention may have vacuumed the literal v-1; the
@@ -1189,42 +1355,28 @@ object Export {
     * drop non-matching files at PLANNING time (manifest tags), not just
     * at scan time (pushed predicates). */
   def snapshotAddedEntries(outDir: String, version: Int)
-      : Seq[ManifestEntry] = {
-    val (fs, root) = fsRoot(outDir)
-    val cur = dataLines(readManifestRaw(fs, root, version))
-    manifestVersions(fs, root).filter(_ < version).lastOption match {
-      case None => cur.map(entryOfLine)
-      case Some(prev) =>
-        val before = dataLines(readManifestRaw(fs, root, prev))
-          .map(l => fs.makeQualified(new Path(pathOf(l))).toString).toSet
-        cur.filterNot(l =>
-            before(fs.makeQualified(new Path(pathOf(l))).toString))
-          .map(entryOfLine)
-    }
-  }
+      : Seq[ManifestEntry] =
+    addedEntries(outDir, readManifest(outDir, version))
 
-  /** Planning-side view of one manifest data line — the pruning tags a
-    * scan planner consumes without touching the data: `partition` and
-    * `stats` are PHYSICAL-keyed exactly as the manifest carries them
-    * (translate lookups through the committed schema), `dv` carries the
-    * line's deletion-vector sidecar `(dir-uri, count)` when its rows
-    * need the anti-join, `zone` the positional cluster-key range when
-    * the file was written clustered. */
-  final case class ManifestEntry(path: String,
-      partition: Map[String, String], stats: Map[String, (Long, Long)],
-      dv: Option[(String, Long)], len: Option[Long],
-      zone: Option[(Long, Long)] = None) {
-    def hasDv: Boolean = dv.nonEmpty
+  /** [[snapshotAddedEntries]] of the already-read manifest `m`. */
+  private[graft] def addedEntries(outDir: String,
+      m: Manifest): Seq[ManifestEntry] = {
+    val (fs, root) = fsRoot(outDir)
+    manifestVersions(fs, root).filter(_ < m.version).lastOption match {
+      case None => m.entries
+      case Some(prev) =>
+        val before = readManifest(fs, root, prev).entries
+          .map(e => qualify(fs, e.path)).toSet
+        m.entries.filterNot(e => before(qualify(fs, e.path)))
+    }
   }
 
   /** The manifest data lines of `version` as [[ManifestEntry]]s — one
     * manifest read, no Spark session, no data-dir listing. This is the
     * batch format's planning source ([[graft.sources.GraftLakeFileIndex]]). */
   def snapshotManifestEntries(outDir: String, version: Int)
-      : Seq[ManifestEntry] = {
-    val (fs, root) = fsRoot(outDir)
-    dataLines(readManifestRaw(fs, root, version)).map(entryOfLine)
-  }
+      : Seq[ManifestEntry] =
+    readManifest(outDir, version).entries
 
   /** [[replaceSnapshot]] with the hive-style partitioned epoch layout
     * ([[appendSnapshotPartitioned]]'s write shape): the new version is a
@@ -1238,11 +1390,13 @@ object Export {
       meta: Map[String, String] = Map.empty): Int = {
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val version = manifestVersions(fs, root).lastOption.getOrElse(0) + 1
-    val lines = writePartitionedEpoch(spark, fs, root, version, df,
+    val head = headOf(fs, root)
+    val version = head.fold(0)(_.version) + 1
+    val lines = writePartitionedEpoch(spark, fs, root, head, df,
       partitionCols, nFiles, zoneKey)
     commitManifest(fs, root, version,
-      internalMeta(fs, root, meta, df.schema.json, op = "replace"), lines)
+      internalMeta(root, head, meta, df.schema.json, op = "replace"),
+      lines)
     version
   }
 
@@ -1258,13 +1412,14 @@ object Export {
   def rewriteSnapshotPaths(outDir: String, oldPrefix: String,
       newPrefix: String): Unit = {
     val (fs, root) = fsRoot(outDir)
+    def moved(x: String) = x.replace(oldPrefix + "/", newPrefix + "/")
     manifestVersions(fs, root).foreach { v =>
-      val rewritten = readManifestRaw(fs, root, v)
-        .map(_.replace(oldPrefix + "/", newPrefix + "/"))
+      val m = readManifest(fs, root, v)
       val tmp = new Path(root,
         s"_tmp._v$v.rewrite.${java.util.UUID.randomUUID.toString.take(8)}")
       val out = fs.create(tmp, false)
-      try out.write(rewritten.mkString("\n").getBytes("UTF-8"))
+      try out.write(renderManifest(m.meta.map { case (k, x) => k -> moved(x) },
+        m.lines.map(moved)).getBytes("UTF-8"))
       finally out.close()
       val dest = manifestPath(root, v)
       fs.delete(dest, false)
@@ -1279,11 +1434,8 @@ object Export {
     * the batch format's fast path must route DV-bearing versions through
     * the DV-aware read funnel (a raw file scan would re-emit deleted
     * rows). */
-  def snapshotHasDeletionVectors(outDir: String, version: Int): Boolean = {
-    val (fs, root) = fsRoot(outDir)
-    dataLines(readManifestRaw(fs, root, version)).exists(l =>
-      dvOf(l).nonEmpty)
-  }
+  def snapshotHasDeletionVectors(outDir: String, version: Int): Boolean =
+    readManifest(outDir, version).entries.exists(_.hasDv)
 
   /** LOGICAL partition columns of a version, recovered from its
     * manifest's `p=` specs (which are PHYSICAL-keyed and carry EVERY
@@ -1291,13 +1443,13 @@ object Export {
     * full partition key set, whatever subset a caller happened to filter
     * on. Empty for an unpartitioned table. */
   def snapshotPartitionColumns(outDir: String, version: Int)
-      : Seq[String] = {
-    val (fs, root) = fsRoot(outDir)
-    val phys = dataLines(readManifestRaw(fs, root, version))
-      .flatMap(l => partitionOf(l).keys).distinct
-    val st = snapshotSchema(outDir, version)
-    phys.map(p => st.flatMap(_.fields.find(f => physicalOf(f) == p))
-      .map(_.name).getOrElse(p))
+      : Seq[String] =
+    partitionColumnsOf(readManifest(outDir, version))
+
+  private def partitionColumnsOf(m: Manifest): Seq[String] = {
+    val logical = m.physOf.map(_.swap)
+    m.entries.flatMap(_.partition.keys).distinct
+      .map(p => logical.getOrElse(p, p))
   }
 
   /** The table's DECLARED partition layout even BEFORE the first
@@ -1310,18 +1462,23 @@ object Export {
     * empty table has no lines to betray its layout. A vacuumed-away v1
     * reads as undeclared (data lines then carry the truth). */
   def declaredPartitionColumns(outDir: String): Seq[String] = {
-    val head = latestSnapshotVersion(outDir)
-    val fromSpecs =
-      if (head > 0) snapshotPartitionColumns(outDir, head) else Seq.empty
-    def metaOf(v: Int): Option[Seq[String]] =
-      (try snapshotMeta(outDir, v).get("partition_cols")
-        catch { case scala.util.control.NonFatal(_) => None })
-        .map(_.split(',').toSeq.filter(_.nonEmpty))
+    val (fs, root) = fsRoot(outDir)
+    headOf(fs, root).fold(Seq.empty[String])(declaredLayout(fs, root, _))
+  }
+
+  private def declaredLayout(fs: FileSystem, root: Path,
+      head: Manifest): Seq[String] = {
+    def metaOf(m: Manifest): Option[Seq[String]] =
+      m.meta.get("partition_cols").map(_.split(',').toSeq.filter(_.nonEmpty))
+    val fromSpecs = partitionColumnsOf(head)
     if (fromSpecs.nonEmpty) fromSpecs
     // head meta covers a zero-line head that is NOT v1 (TRUNCATE of a
     // partitioned table re-stamps the layout it read); v1 meta covers
     // the freshly created catalog table before its first insert
-    else metaOf(head).orElse(if (head == 1) None else metaOf(1))
+    else metaOf(head).orElse(
+      if (head.version == 1) None
+      else try metaOf(readManifest(fs, root, 1))
+      catch { case scala.util.control.NonFatal(_) => None })
       .getOrElse(Seq.empty)
   }
 
@@ -1358,36 +1515,16 @@ object Export {
       new org.apache.spark.sql.types.MetadataBuilder()
         .withMetadata(f.metadata).putString(PhysicalKey, phys).build())
 
-  /** logical→physical of the HEAD's committed schema (empty = never
-    * renamed — the fast path). */
-  private def headMapping(fs: FileSystem, root: Path)
-      : Map[String, String] =
-    manifestVersions(fs, root).lastOption
-      .flatMap(v => snapshotMetaOf(fs, root, v).get("schema"))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.iterator
-        .filter(_.metadata.contains(PhysicalKey))
-        .map(f => f.name -> f.metadata.getString(PhysicalKey)).toMap)
-      .getOrElse(Map.empty)
-
-  /** Physical names retired by [[dropSnapshotColumn]], carried forward
-    * on every commit as the `#retired=` header. */
-  private def headRetired(fs: FileSystem, root: Path): Set[String] =
-    manifestVersions(fs, root).lastOption
-      .flatMap(v => snapshotMetaOf(fs, root, v).get("retired"))
-      .map(_.split(',').filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-
   /** Non-identity physical names for `names` in a NEW commit: the
     * head's mapping for known logical names; a fresh salted name when
     * the logical name collides with a retired or live physical (else
     * old bytes under that name would resurface); identity otherwise.
     * Deterministic from the head state — no version in the salt, so a
     * retried commit resolves identically. */
-  private def resolvePhysical(fs: FileSystem, root: Path,
+  private def resolvePhysical(head: Option[Manifest],
       names: Seq[String]): Map[String, String] = {
-    val mapping = headMapping(fs, root)
-    val retired = headRetired(fs, root)
+    val mapping = head.fold(Map.empty[String, String])(_.mapping)
+    val retired = head.fold(Set.empty[String])(_.retired)
     if (mapping.isEmpty && retired.isEmpty) Map.empty
     else {
       val live = mapping.values.toSet
@@ -1411,43 +1548,33 @@ object Export {
     * would apply: a field's own `graft.physical` metadata (present when
     * the frame came off a mapped read) is authoritative; everything
     * else resolves against the head. */
-  private def physicalRenames(fs: FileSystem, root: Path,
+  private def physicalRenames(head: Option[Manifest],
       df: DataFrame): Map[String, String] = {
     val own = df.schema.fields.iterator
       .filter(_.metadata.contains(PhysicalKey))
       .map(f => f.name -> f.metadata.getString(PhysicalKey)).toMap
-    val resolved = resolvePhysical(fs, root,
+    val resolved = resolvePhysical(head,
       df.columns.toSeq.filterNot(own.contains))
     (own ++ resolved).filter { case (l, p) => l != p }
   }
 
   /** Rename `df`'s columns to their physical names before an epoch
     * write. No mapping anywhere → `df` unchanged. */
-  private def toPhysicalDf(fs: FileSystem, root: Path,
+  private def toPhysicalDf(head: Option[Manifest],
       df: DataFrame): DataFrame = {
-    val m = physicalRenames(fs, root, df)
+    val m = physicalRenames(head, df)
     if (m.isEmpty) df
     else df.select(df.columns.toSeq.map(c =>
       col(c).as(m.getOrElse(c, c))): _*)
   }
 
-  /** Physical name of a LOGICAL column in a version's committed schema
-    * (identity when unmapped or unknown). Tag LOOKUPS translate through
-    * this: `s=`/`b=` tags are written under physical names — which
-    * every pre-mapping tag already equals — so a renamed column's
-    * pruning keeps working under whatever the column is called now. */
-  private def physicalIn(outDir: String, version: Int,
-      c: String): String =
-    snapshotSchema(outDir, version)
-      .flatMap(_.fields.find(_.name == c)).map(physicalOf).getOrElse(c)
-
   /** Stamp the commit schema's fields with the physical names the epoch
     * writer used ([[toPhysicalDf]] — same resolution, same head). */
-  private def mapSchema(fs: FileSystem, root: Path,
+  private def mapSchema(head: Option[Manifest],
       schemaJson: String): String = {
     val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val m = resolvePhysical(fs, root,
+    val m = resolvePhysical(head,
       st.fields.filterNot(_.metadata.contains(PhysicalKey))
         .map(_.name).toSeq)
     if (m.isEmpty) schemaJson
@@ -1457,16 +1584,15 @@ object Export {
   }
 
   /** Every manifest tag family is PHYSICAL-keyed and every lookup
-    * translates ([[physicalIn]]), so RENAMING a statted, bloomed, zoned
-    * or even partitioned column is safe. DROPPING a partition column is
-    * not: the layout itself needs the column (future partitioned
-    * commits could not supply it, and the consistently-partitioned
-    * precondition of partition-scoped DML would break) — refused. */
-  private def requireUntagged(lines: Seq[String], c: String,
+    * translates ([[Manifest.physicalIn]]), so RENAMING a statted,
+    * bloomed, zoned or even partitioned column is safe. DROPPING a
+    * partition column is not: the layout itself needs the column
+    * (future partitioned commits could not supply it, and the
+    * consistently-partitioned precondition of partition-scoped DML
+    * would break) — refused. */
+  private def requireUntagged(m: Manifest, c: String,
       verb: String): Unit = {
-    val tagged = lines.exists(_.split('\t').exists(f =>
-      f.startsWith("p=") &&
-        f.drop(2).split('/').exists(_.startsWith(s"$c="))))
+    val tagged = m.entries.exists(_.partition.contains(c))
     require(!tagged, s"column '$c' is a partition column of this " +
       s"table's layout; $verb would break the layout - compact into an " +
       "unpartitioned or re-keyed table first")
@@ -1487,19 +1613,15 @@ object Export {
       to: String): Int = {
     require(from != to, "rename to the same name is a no-op")
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     val f = st.fields.find(_.name == from).getOrElse(
       throw new IllegalArgumentException(s"no column '$from' in " +
         s"${st.fieldNames.mkString(", ")}"))
     require(!st.fieldNames.contains(to),
       s"'$to' already exists as a logical column")
     locally {
-      val pinned = checksReferencing(fs, root, from)
+      val pinned = checksReferencing(head, from)
       require(pinned.isEmpty,
         s"cannot RENAME '$from': ${pinned.mkString(", ")} reference " +
           "it by name - drop the constraint / generated column first")
@@ -1515,18 +1637,14 @@ object Export {
     require(!st.fields.map(physicalOf).contains(to),
       s"'$to' is a live column's PHYSICAL name - old bytes under it " +
         "would alias the renamed column")
-    require(!headRetired(fs, root).contains(to),
+    require(!head.retired.contains(to),
       s"'$to' was retired by a dropped column - its old bytes would " +
         "resurface under the renamed column")
-    val lines = dataLines(readManifestRaw(fs, root, head))
     val renamed = org.apache.spark.sql.types.StructType(st.fields.map(
       x => if (x.name == from) withPhysical(x.copy(name = to),
         physicalOf(f)) else x))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-        renamed.json, op = "rename"), lines)
-    version
+    commitMetadata(fs, root, head, Map.empty, renamed.json, "rename",
+      head.lines)
   }
 
   /** DROP COLUMN with no data rewrite: one maintenance commit carrying
@@ -1539,33 +1657,24 @@ object Export {
     * deleted rows. Returns the new version. */
   def dropSnapshotColumn(outDir: String, name: String): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     val f = st.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no column '$name' in " +
         s"${st.fieldNames.mkString(", ")}"))
     require(st.fields.length > 1, "cannot drop a table's last column")
     locally {
-      val pinned = checksReferencing(fs, root, name)
+      val pinned = checksReferencing(head, name)
       require(pinned.isEmpty,
         s"cannot DROP COLUMN '$name': ${pinned.mkString(", ")} " +
           "reference it by name - drop the constraint / generated " +
           "column first")
     }
-    val lines = dataLines(readManifestRaw(fs, root, head))
-    requireUntagged(lines, physicalOf(f), "drop")
+    requireUntagged(head, physicalOf(f), "drop")
     val remaining = org.apache.spark.sql.types.StructType(
       st.fields.filterNot(_.name == name))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-        remaining.json, op = "drop",
-        extraRetired = Set(physicalOf(f))), lines)
-    version
+    commitMetadata(fs, root, head, Map.empty, remaining.json, "drop",
+      head.lines, extraRetired = Set(physicalOf(f)))
   }
 
   /** ADD COLUMN with no data rewrite: one maintenance commit carrying
@@ -1579,23 +1688,15 @@ object Export {
   def addSnapshotColumn(outDir: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     require(!st.fieldNames.contains(name),
       s"'$name' already exists as a logical column")
     val extended = org.apache.spark.sql.types.StructType(st.fields :+
       org.apache.spark.sql.types.StructField(name, dataType,
         nullable = true))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-        extended.json, op = "add"),
-      dataLines(readManifestRaw(fs, root, head)))
-    version
+    commitMetadata(fs, root, head, Map.empty, extended.json, "add",
+      head.lines)
   }
 
   /** `ALTER TABLE ... DROP PARTITION (col=val, ...)` — drop EVERY data
@@ -1612,43 +1713,28 @@ object Export {
       spec: Map[String, String]): Int = {
     require(spec.nonEmpty, "DROP PARTITION needs a (col=val) spec")
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head)
-    val schemaJson = snapshotMetaOf(fs, root, head).getOrElse("schema",
-      throw new IllegalStateException(s"version $head under $outDir " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
+    val head = requireHead(fs, root, outDir)
+    val schemaJson = head.schemaJson
     // p= specs are PHYSICAL-keyed
-    val physSpec = spec.map { case (k, v) =>
-      st.flatMap(_.fields.find(_.name == k)).map(physicalOf)
-        .getOrElse(k) -> v
-    }
-    val lines = dataLines(readManifestRaw(fs, root, head))
-    val (hit, rest) = lines.partition { l =>
-      val p = partitionOf(l)
-      physSpec.forall { case (k, v) => p.get(k).contains(v) }
-    }
+    val physSpec = spec.map { case (k, v) => head.physicalIn(k) -> v }
+    val (hit, rest) = head.entries.partition(e =>
+      physSpec.forall { case (k, v) => e.partition.get(k).contains(v) })
     require(hit.nonEmpty,
       s"no partition matching ${spec.map { case (k, v) => s"$k=$v" }
         .mkString(", ")} under $outDir")
     // dropping the LAST partition leaves zero lines: re-stamp the
     // declared layout (the TRUNCATE discipline) so the next INSERT
     // lands partitioned instead of poisoning partition-scoped DML
-    val layout = declaredPartitionColumns(outDir)
+    val layout = declaredLayout(fs, root, head)
     val layoutMeta =
       if (rest.isEmpty && layout.nonEmpty)
         Map("partition_cols" -> layout.mkString(","))
       else Map.empty[String, String]
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, layoutMeta ++ Map(
+    commitMetadata(fs, root, head, layoutMeta ++ Map(
         "dropped_partition" -> physSpec.toSeq.sorted
           .map { case (k, v) => s"$k=$v" }.mkString("/"),
-        "dropped_files" -> hit.size.toString)),
-        schemaJson, op = "delete"),
-      rest)
-    version
+        "dropped_files" -> hit.size.toString),
+      schemaJson, "delete", rest.map(_.line))
   }
 
   /** METADATA-ONLY schema evolution to `unionSchema(head, next)` — the
@@ -1662,25 +1748,15 @@ object Export {
   def evolveSnapshotSchema(outDir: String,
       next: org.apache.spark.sql.types.StructType): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     val union = unionSchema(st, next)
     val changed = union.fields.length != st.fields.length ||
       union.fields.zip(st.fields).exists { case (u, o) =>
         u.name != o.name || u.dataType != o.dataType }
-    if (!changed) head
-    else {
-      val version = head + 1
-      commitManifest(fs, root, version,
-        internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-          union.json, op = "add"),
-        dataLines(readManifestRaw(fs, root, head)))
-      version
-    }
+    if (!changed) head.version
+    else commitMetadata(fs, root, head, Map.empty, union.json, "add",
+      head.lines)
   }
 
   /** DESCRIBE DETAIL (the Delta shape): ONE row summarizing the head —
@@ -1694,8 +1770,10 @@ object Export {
   def snapshotDetail(spark: SparkSession, outDir: String): DataFrame = {
     val v = latestSnapshotVersion(outDir)
     require(v > 0, s"no committed versions under $outDir")
-    val entries = snapshotManifestEntries(outDir, v)
-    val st = snapshotSchema(outDir, v)
+    val (fs, root) = fsRoot(outDir)
+    val m = readManifest(fs, root, v)
+    val entries = m.entries
+    val st = m.schemaOpt
     val genKey = org.apache.spark.sql.catalyst.util.GeneratedColumn
       .GENERATION_EXPRESSION_METADATA_KEY
     val generated = st.map(_.fields.collect {
@@ -1705,31 +1783,29 @@ object Export {
     // `idc_` header — next id = start + consumed*step), the
     // operational answer to "where is the sequence?"
     val IC = org.apache.spark.sql.catalyst.util.IdentityColumn
-    val (fs, root) = fsRoot(outDir)
-    val headMeta = snapshotMetaOf(fs, root, v)
     val identity = st.map(_.fields.collect {
       case f if f.metadata.contains(IC.IDENTITY_INFO_START) =>
-        val consumed = headMeta.get("idc_" +
+        val consumed = m.meta.get("idc_" +
             java.net.URLEncoder.encode(f.name, "UTF-8"))
           .map(_.toLong).getOrElse(0L)
         val next = f.metadata.getLong(IC.IDENTITY_INFO_START) +
           consumed * f.metadata.getLong(IC.IDENTITY_INFO_STEP)
         s"${f.name}(next=$next)"
     }.toSeq).getOrElse(Seq.empty)
-    val props = snapshotProperties(outDir)
-    val checks = snapshotChecks(outDir)
+    val props = propertiesOf(fs, root, m)
+    val checks = storedChecks(m.meta)
     import spark.implicits._
     Seq((
       "graftlake",
       outDir,
       v.toLong,
-      snapshotTimestamp(outDir, v),
-      snapshotOperation(outDir, v).getOrElse(""),
+      timestampOf(m),
+      m.op.getOrElse(""),
       entries.size.toLong,
       entries.flatMap(_.len).sum,
       entries.count(_.hasDv).toLong,
       entries.count(_.zone.nonEmpty).toLong,
-      snapshotPartitionColumns(outDir, v).mkString(","),
+      partitionColumnsOf(m).mkString(","),
       props.getOrElse("graft.cluster.key", ""),
       st.map(_.fields.length.toLong).getOrElse(0L),
       generated.mkString(","),
@@ -1759,12 +1835,8 @@ object Export {
   def setSnapshotColumnDefault(outDir: String, column: String,
       default: Option[String]): Int = {
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val st = snapshotSchema(outDir, head).getOrElse(
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
+    val head = requireHead(fs, root, outDir)
+    val st = head.schema
     val idx = st.fieldNames.indexOf(column)
     require(idx >= 0, s"no column '$column' in " +
       s"${st.fieldNames.mkString(", ")}")
@@ -1782,12 +1854,8 @@ object Export {
     }
     val updated = org.apache.spark.sql.types.StructType(
       st.fields.updated(idx, f.copy(metadata = mb.build())))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, Map.empty),
-        updated.json, op = "default"),
-      dataLines(readManifestRaw(fs, root, head)))
-    version
+    commitMetadata(fs, root, head, Map.empty, updated.json, "default",
+      head.lines)
   }
 
   /** One row per committed version: (version, n_files, caller meta) —
@@ -1798,11 +1866,8 @@ object Export {
       : Seq[(Int, Int, Map[String, String])] = {
     val (fs, root) = fsRoot(outDir)
     manifestVersions(fs, root).map { v =>
-      val lines = readManifestRaw(fs, root, v)
-      val meta = lines.filter(_.startsWith("#"))
-        .map(_.drop(1).split("=", 2))
-        .collect { case Array(k, x) => k -> x }.toMap - "schema"
-      (v, dataLines(lines).size, meta)
+      val m = readManifest(fs, root, v)
+      (v, m.entries.size, m.meta - "schema")
     }
   }
 
@@ -1824,18 +1889,8 @@ object Export {
     * CALLER's metadata; the engine's reserved headers (written on every
     * commit, see [[internalMeta]]) are internal bookkeeping and filtered
     * out ([[snapshotTimestamp]] exposes `committed_at` typed). */
-  def snapshotMeta(outDir: String, version: Int): Map[String, String] = {
-    val (fs, root) = fsRoot(outDir)
-    snapshotMetaOf(fs, root, version) -- ReservedMeta
-  }
-
-  private def snapshotMetaOf(fs: FileSystem, root: Path,
-      version: Int): Map[String, String] =
-    readManifestRaw(fs, root, version)
-      .filter(_.startsWith("#"))
-      .map(_.drop(1).split("=", 2))
-      .collect { case Array(k, v) => k -> v }
-      .toMap
+  def snapshotMeta(outDir: String, version: Int): Map[String, String] =
+    readManifest(outDir, version).meta -- ReservedMeta
 
   /** Headers the ENGINE writes on every commit; caller meta can't use
     * them. `schema` (single-line StructType JSON) makes a zero-data-file
@@ -1847,15 +1902,15 @@ object Export {
     * skew between committers. */
   private val ReservedMeta = Set("schema", "committed_at", "op", "retired")
 
-  private def internalMeta(fs: FileSystem, root: Path,
+  /** The headers of a commit on top of `head` (the newest committed
+    * version, None for a table's first commit). */
+  private def internalMeta(root: Path, head: Option[Manifest],
       meta: Map[String, String], schemaJson: String,
       op: String, extraRetired: Set[String] = Set.empty)
       : Map[String, String] = {
     ReservedMeta.foreach(k =>
       require(!meta.contains(k), s"'$k' is a reserved meta key"))
-    val headMeta: Map[String, String] =
-      manifestVersions(fs, root).lastOption
-        .map(v => snapshotMetaOf(fs, root, v)).getOrElse(Map.empty)
+    val headMeta = head.fold(Map.empty[String, String])(_.meta)
     val prevTs = headMeta.get("committed_at")
       .map(_.toLong).getOrElse(Long.MinValue)
     // METADATA-CARRY LAW (r14): a DATA commit never silently drops a
@@ -1906,9 +1961,9 @@ object Export {
     // column-mapping bookkeeping rides the same headers: the schema is
     // stamped with the physical names the epoch writer used, and the
     // retired-physical set survives every commit (like #batch=)
-    val retired = headRetired(fs, root) ++ extraRetired
+    val retired = head.fold(Set.empty[String])(_.retired) ++ extraRetired
     val base = meta ++ checksCarried ++ idCarried +
-      ("schema" -> mapSchema(fs, root, carried)) +
+      ("schema" -> mapSchema(head, carried)) +
       ("op" -> op) +
       ("committed_at" ->
         math.max(System.currentTimeMillis(), prevTs + 1).toString)
@@ -1983,13 +2038,13 @@ object Export {
 
   /** Commit wall-clock of a version (epoch millis) — monotone across
     * versions by construction (see [[internalMeta]]). */
-  def snapshotTimestamp(outDir: String, version: Int): Long = {
-    val (fs, root) = fsRoot(outDir)
-    snapshotMetaOf(fs, root, version).get("committed_at").map(_.toLong)
-      .getOrElse(throw new IllegalStateException(
-        s"version $version under $root has no #committed_at= header " +
-          "(pre-timestamp commit?)"))
-  }
+  def snapshotTimestamp(outDir: String, version: Int): Long =
+    timestampOf(readManifest(outDir, version))
+
+  private def timestampOf(m: Manifest): Long =
+    m.committedAt.getOrElse(throw new IllegalStateException(
+      s"version ${m.version} has no #committed_at= header " +
+        "(pre-timestamp commit?)"))
 
   /** `TIMESTAMP AS OF` resolution (the Delta semantics): the NEWEST
     * version whose commit timestamp is <= `tsMillis`. Throws if the
@@ -1998,8 +2053,7 @@ object Export {
   def resolveAsOfTimestamp(outDir: String, tsMillis: Long): Int = {
     val (fs, root) = fsRoot(outDir)
     manifestVersions(fs, root).reverseIterator.find(v =>
-        snapshotMetaOf(fs, root, v).get("committed_at")
-          .exists(_.toLong <= tsMillis))
+        readManifest(fs, root, v).committedAt.exists(_ <= tsMillis))
       .getOrElse(throw new IllegalArgumentException(
         s"no version of $root committed at or before $tsMillis " +
           "(before the table's first commit, or a pre-timestamp log)"))
@@ -2026,20 +2080,20 @@ object Export {
   @volatile private[graft] var appendRaceInjector
       : Option[(Path, Int) => Unit] = None
 
+  /** `known` is the head the epoch was written against: reused while
+    * the head has not moved, so an uncontended append reads it once. */
   private def commitAppend(fs: FileSystem, root: Path,
-      meta: Map[String, String], schemaJson: String,
-      fresh: Seq[String]): Int = {
+      known: Option[Manifest], meta: Map[String, String],
+      schemaJson: String, fresh: Seq[String]): Int = {
     var attempt = 0
     while (attempt <= MaxAppendRetries) {
-      val prev = manifestVersions(fs, root).lastOption
-      val version = prev.getOrElse(0) + 1
-      val carried = prev
-        .map(v => dataLines(readManifestRaw(fs, root, v))).getOrElse(Nil)
+      val head = headOf(fs, root, known)
+      val version = head.fold(0)(_.version) + 1
       appendRaceInjector.foreach(_(root, version))
       try {
         commitManifest(fs, root, version,
-          internalMeta(fs, root, meta, schemaJson, op = "append"),
-          carried ++ fresh)
+          internalMeta(root, head, meta, schemaJson, op = "append"),
+          head.fold(Seq.empty[String])(_.lines) ++ fresh)
         return version
       } catch {
         case e: IllegalStateException =>
@@ -2058,10 +2112,8 @@ object Export {
     * version carrying the header holds the highest applied id. */
   def lastAppliedBatch(outDir: String): Long = {
     val (fs, root) = fsRoot(outDir)
-    manifestVersions(fs, root).reverseIterator
-      .map(v => snapshotMetaOf(fs, root, v).get("batch"))
-      .collectFirst { case Some(b) => b.toLong }
-      .getOrElse(-1L)
+    headOf(fs, root).flatMap(newestHeader(fs, root, _, "batch"))
+      .fold(-1L)(_.toLong)
   }
 
   /** Carry the newest `#batch=` header forward into a MAINTENANCE
@@ -2071,7 +2123,7 @@ object Export {
     * to -1, and a replayed micro-batch would double-merge. With it, the
     * newest version always carries the watermark, so no retention policy
     * can erase it. */
-  private def carryBatch(fs: FileSystem, root: Path,
+  private def carryBatch(fs: FileSystem, root: Path, head: Manifest,
       meta: Map[String, String]): Map[String, String] =
     // a caller-stamped batch id is FRESHER than anything in the log (the
     // guard admits only increasing ids) — carrying the old header over
@@ -2079,21 +2131,20 @@ object Export {
     // (the streaming MERGE sink's failure mode, spec'd in the CDC apply
     // replay-storm case)
     if (meta.contains("batch")) meta
-    else manifestVersions(fs, root).reverseIterator
-      .map(v => snapshotMetaOf(fs, root, v).get("batch"))
-      .collectFirst { case Some(b) => b }
+    else newestHeader(fs, root, head, "batch")
       .fold(meta)(b => meta + ("batch" -> b))
 
-  private def emptyWithCommittedSchema(spark: SparkSession,
-      fs: FileSystem, root: Path, version: Int): DataFrame = {
-    val schemaJson = snapshotMetaOf(fs, root, version).getOrElse("schema",
-      throw new IllegalStateException(
-        s"version $version under $root has no data files and no " +
-          "#schema= header (pre-schema-header commit?)"))
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  /** Commit `lines` as version head+1 under `schemaJson`: the shape of
+    * every metadata-only and maintenance commit computed from `head`
+    * (the newest `#batch=` carries). Returns the new version. */
+  private def commitMetadata(fs: FileSystem, root: Path, head: Manifest,
+      meta: Map[String, String], schemaJson: String, op: String,
+      lines: Seq[String], extraRetired: Set[String] = Set.empty): Int = {
+    val version = head.version + 1
+    commitManifest(fs, root, version,
+      internalMeta(root, Some(head), carryBatch(fs, root, head, meta),
+        schemaJson, op, extraRetired), lines)
+    version
   }
 
   /** Default retention horizon for UNREFERENCED data files (and stale
@@ -2172,14 +2223,13 @@ object Export {
     // normalize through makeQualified so manifests written with any
     // equivalent path spelling still protect their files
     val survivors = versions.takeRight(keep)
-      .map(v => dataLines(readManifestRaw(fs, root, v)))
-    val live: Set[String] = survivors.flatten
-      .map(l => fs.makeQualified(new Path(pathOf(l))).toString).toSet
+      .flatMap(v => readManifest(fs, root, v).entries)
+    val live: Set[String] = survivors.map(e => qualify(fs, e.path)).toSet
     // deletion-vector sidecar dirs are referenced at DIR granularity
     // (the `dv=` tag names the dir; a read loads the whole dir) — a dir
     // any surviving manifest points at is kept wholesale
-    val liveDv: Set[String] = survivors.flatten.flatMap(dvOf)
-      .map(d => fs.makeQualified(new Path(d._1)).toString).toSet
+    val liveDv: Set[String] =
+      survivors.flatMap(_.dv).map(d => qualify(fs, d._1)).toSet
     val cutoffMs = System.currentTimeMillis() - horizonMs
     // crashed commits leave `_tmp._v*` files (the rename never
     // happened); reclaim only STALE ones — a fresh temp file may be a
@@ -2241,12 +2291,12 @@ object Export {
   def readSnapshot(spark: SparkSession, outDir: String,
       version: Int): DataFrame = {
     val (fs, root) = fsRoot(outDir)
-    readFilesAs(spark, fs, root, version,
-      dataLines(readManifestRaw(fs, root, version)))
+    val m = readManifest(fs, root, version)
+    readFilesAs(spark, root, m, m.entries)
   }
 
-  /** Plan the files of `lines` (data lines of `version`) under
-    * `version`'s COMMITTED schema: the manifest — not the union of file
+  /** Plan `entries` (data lines of `m`) under `m`'s COMMITTED schema:
+    * the manifest — not the union of file
     * footers — is the schema authority, so a schema-evolved version
     * reads older epochs' files with the evolved schema (absent columns
     * null-filled by the parquet reader) and NO mergeSchema footer sweep
@@ -2254,17 +2304,16 @@ object Export {
     * listing-plus-footer pass per query. The scan is planned from the
     * lines themselves ([[graft.sources.GraftLakeBatch.scan]]).
     * Pre-header manifests (legacy) fall back to footer inference. */
-  private def readFilesAs(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, lines: Seq[String]): DataFrame =
-    if (lines.isEmpty) emptyWithCommittedSchema(spark, fs, root, version)
+  private def readFilesAs(spark: SparkSession, root: Path, m: Manifest,
+      entries: Seq[ManifestEntry]): DataFrame =
+    if (entries.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
     else {
-      val meta = snapshotMetaOf(fs, root, version)
-      val entries = lines.map(entryOfLine)
-      val st = committedSchema(spark, meta, entries)
+      val st = committedSchema(spark, m, entries)
       // DVs subtract on (_metadata.file_path, row_index) BEFORE the
       // logical-name projection - metadata columns resolve on the scan
       val withDv = applyDeletionVectors(spark, entries,
-        scanCommitted(spark, root, meta, entries, st))
+        scanCommitted(spark, root, m, entries, st))
       if (st.fields.exists(_.metadata.contains(PhysicalKey)))
         withDv.select(st.fields.toSeq.map(f =>
           col(physicalOf(f)).as(f.name, f.metadata)): _*)
@@ -2273,23 +2322,18 @@ object Export {
 
   /** The version's committed schema from its `#schema=` header; a
     * pre-header (legacy) manifest infers it from the files' footers. */
-  private def committedSchema(spark: SparkSession,
-      meta: Map[String, String], entries: => Seq[ManifestEntry])
-      : StructType =
-    meta.get("schema").fold(
-      spark.read.parquet(entries.map(_.path): _*).schema)(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
+  private def committedSchema(spark: SparkSession, m: Manifest,
+      entries: Seq[ManifestEntry]): StructType =
+    m.schemaOpt.getOrElse(spark.read.parquet(entries.map(_.path): _*).schema)
 
   /** `entries` decoded by PHYSICAL column name under `st` (the names the
     * bytes were written with); metadata columns resolve on the result. */
-  private def scanCommitted(spark: SparkSession, root: Path,
-      meta: Map[String, String], entries: Seq[ManifestEntry],
-      st: StructType, options: Map[String, String] = Map.empty)
-      : DataFrame =
+  private def scanCommitted(spark: SparkSession, root: Path, m: Manifest,
+      entries: Seq[ManifestEntry], st: StructType,
+      options: Map[String, String] = Map.empty): DataFrame =
     graft.sources.GraftLakeBatch.scan(spark, root.toString, entries,
       StructType(st.fields.map(f => f.copy(name = physicalOf(f)))),
-      meta.get("committed_at").fold(0L)(_.toLong), options)
+      m.committedAt.getOrElse(0L), options)
 
   /** Scan options for reads whose result is RECORDED in the manifest:
     * a missing or corrupt file fails the read whatever the session's
@@ -2311,17 +2355,6 @@ object Export {
   private[graft] def readDvs(spark: SparkSession,
       dirs: Seq[String]): DataFrame =
     spark.read.schema(DvSchema).parquet(dirs: _*)
-
-  /** `dv=<dir-uri>:<count>` — the line's file has `count` deleted row
-    * positions recorded in the parquet DV dir at `dir-uri` (absolute, so
-    * shallow clones resolve it against the SOURCE table, same as data
-    * lines). `count` is after the LAST ':' because the URI itself
-    * contains one. */
-  private def dvOf(line: String): Option[(String, Long)] =
-    line.split('\t').collectFirst { case f if f.startsWith("dv=") =>
-      val cut = f.lastIndexOf(':')
-      (f.substring(3, cut), f.substring(cut + 1).toLong)
-    }
 
   /** Merge-on-read: subtract every planned file's deletion-vector
     * positions (committed by [[deleteWhereMoR]]) behind ONE left-anti
@@ -2350,16 +2383,15 @@ object Export {
     }
   }
 
-  /** The merge-on-read paths' candidate scan: `lines` decoded by
+  /** The merge-on-read paths' candidate scan: `entries` decoded by
     * physical name, projected to `st`'s logical names, plus each row's
     * provenance `(_metadata.file_path, _metadata.row_index)` as
     * `fcol`/`pcol` — the pair a DV sidecar records. With `subtractDvs`
-    * the lines' existing DV positions are subtracted first. */
+    * the entries' existing DV positions are subtracted first. */
   private def scanWithPositions(spark: SparkSession, root: Path,
-      meta: Map[String, String], lines: Seq[String], st: StructType,
+      m: Manifest, entries: Seq[ManifestEntry], st: StructType,
       fcol: String, pcol: String, subtractDvs: Boolean): DataFrame = {
-    val entries = lines.map(entryOfLine)
-    val withPos = scanCommitted(spark, root, meta, entries, st)
+    val withPos = scanCommitted(spark, root, m, entries, st)
       .select(st.fields.toSeq.map(f => col(physicalOf(f)).as(f.name)) ++
         Seq(col("_metadata.file_path").as(fcol),
           col("_metadata.row_index").as(pcol)): _*)
@@ -2387,27 +2419,25 @@ object Export {
     (dvDir, counts)
   }
 
-  /** `line` re-pointed at the sidecar `dvUri`: its old `dv=` tag
-    * dropped, a new one added when `counts` holds its file. */
-  private def retagDv(fs: FileSystem, line: String, dvUri: String,
-      counts: Map[String, Long]): String = {
-    val kept = line.split('\t').filterNot(_.startsWith("dv="))
-      .mkString("\t")
-    counts.get(fs.makeQualified(new Path(pathOf(line))).toString)
-      .fold(kept)(n => s"$kept\tdv=$dvUri:$n")
-  }
+  /** `e`'s line re-pointed at the sidecar `dvUri`: its old deletion
+    * vector dropped, a new one added when `counts` holds its file. */
+  private def retagDv(fs: FileSystem, e: ManifestEntry, dvUri: String,
+      counts: Map[String, Long]): String =
+    counts.get(qualify(fs, e.path)).fold(
+      withoutTags(e.line)(_._1 == "dv"))(n =>
+      withTags(e.line, Tag.dv(dvUri, n)))
 
-  /** The positions `lines`' sidecars hold for `lines`' OWN files — what
+  /** The positions `entries`' sidecars hold for their OWN files — what
     * carries when exactly these lines re-point at a new sidecar. A line
-    * outside `lines` sharing an old sidecar dir keeps its `dv=` tag
-    * verbatim, so its positions must not migrate. None without DVs. */
+    * outside `entries` sharing an old sidecar dir keeps its deletion
+    * vector verbatim, so its positions must not migrate. None without
+    * DVs. */
   private def carriedDvs(spark: SparkSession, fs: FileSystem,
-      lines: Seq[String]): Option[DataFrame] = {
-    val dirs = lines.flatMap(dvOf).map(_._1).distinct
+      entries: Seq[ManifestEntry]): Option[DataFrame] = {
+    val dirs = entries.flatMap(_.dv).map(_._1).distinct
     if (dirs.isEmpty) None
     else Some(readDvs(spark, dirs).join(
-      spark.createDataset(lines.map(l =>
-          fs.makeQualified(new Path(pathOf(l))).toString))(
+      spark.createDataset(entries.map(e => qualify(fs, e.path)))(
         org.apache.spark.sql.Encoders.STRING).toDF(DvFileCol),
       Seq(DvFileCol), "left_semi"))
   }
@@ -2426,52 +2456,40 @@ object Export {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val freshLines = writeClusteredEpoch(spark, fs, root,
-      manifestVersions(fs, root).lastOption.getOrElse(0) + 1, df,
-      keyCol, nFiles)
-    commitAppend(fs, root, meta, df.schema.json, freshLines)
+    val head = headOf(fs, root)
+    commitAppend(fs, root, head, meta, df.schema.json,
+      writeClusteredEpoch(spark, fs, root, head, df, keyCol, nFiles))
   }
 
   /** Range-sort `df` on `keyCol` into `nFiles` files under
     * `epoch=<version>` and return one zoned manifest data line per
     * written file (read-back min/max, so the zone certifies the bytes). */
   private def writeClusteredEpoch(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, df: DataFrame, keyCol: String,
+      root: Path, head: Option[Manifest], df: DataFrame, keyCol: String,
       nFiles: Int): Seq[String] = {
     // zones are POSITIONAL (no name in the tag); only the readback over
     // the written (physical-named) bytes needs the key translated
-    val keyPhys = physicalRenames(fs, root, df).getOrElse(keyCol, keyCol)
-    val (epochDir, fresh) = writeEpoch(fs, root, version,
+    val keyPhys = physicalRenames(head, df).getOrElse(keyCol, keyCol)
+    val (fresh, written) = writeEpoch(fs, root, head,
       df.repartitionByRange(nFiles, col(keyCol))
         .sortWithinPartitions(keyCol))
     val keyDt = df.schema(keyCol).dataType
-    val zones: Map[String, (Long, Long, Long, Long)] =
-      spark.read.parquet(epochDir.toString)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(min(col(keyPhys)).cast("long").as("lo"),
-          max(col(keyPhys)).cast("long").as("hi"),
-          min(statLong(col(keyPhys), keyDt)).as("slo"),
-          max(statLong(col(keyPhys), keyDt)).as("shi"))
-        .collect()
-        .map(r => fs.makeQualified(new Path(r.getString(0))).toString ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-        .toMap
-    fresh.map { f =>
-      // tagged z= form (not the legacy positional triple): the base
-      // line already carries the len= tag, and tagged fields compose.
-      // The SAME range also rides as a NAMED s= stat (physical-keyed,
-      // like every stat tag) so planners that don't know the cluster
-      // key - the batch format's FileIndex, readSnapshotRange - prune
-      // clustered files too; z= stays the positional zone the clustered
-      // merge/read paths consume (its cast-long encoding pairs with the
-      // merge envelope's own cast), while the s= stat takes the TYPED
-      // encoding/key (micros under #us for an event-time key) so a
-      // pushed `ts >= TIMESTAMP'...'` range prunes the landing table
-      zones.get(fs.makeQualified(new Path(pathOf(f))).toString) match {
-        case Some((lo, hi, slo, shi)) =>
-          s"$f\tz=$lo:$hi\ts=${statKeyOf(keyPhys, keyDt)}:$slo:$shi"
-        case None => f // a file with zero rows carries no zone
-      }
+    // the zone rides as z= (its cast-long encoding pairs with the merge
+    // envelope's own cast, for the clustered merge/read paths) AND as a
+    // NAMED s= stat (physical-keyed, like every stat tag) so planners
+    // that don't know the cluster key - the batch format's FileIndex,
+    // readSnapshotRange - prune clustered files too; the stat takes the
+    // TYPED encoding/key (micros under #us for an event-time key) so a
+    // pushed `ts >= TIMESTAMP'...'` range prunes the landing table. A
+    // file with zero rows carries neither.
+    tagReadBack(spark, fs, root, fresh, written, Seq(
+        min(col(keyPhys)).cast("long").as("lo"),
+        max(col(keyPhys)).cast("long").as("hi"),
+        min(statLong(col(keyPhys), keyDt)).as("slo"),
+        max(statLong(col(keyPhys), keyDt)).as("shi"))) { r =>
+      Seq(Tag.zone(r.getAs[Long]("lo"), r.getAs[Long]("hi")),
+        Tag.stat(statKeyOf(keyPhys, keyDt), r.getAs[Long]("slo"),
+          r.getAs[Long]("shi")))
     }
   }
 
@@ -2488,10 +2506,9 @@ object Export {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val fresh = writeZorderedEpoch(spark, fs, root,
-      manifestVersions(fs, root).lastOption.getOrElse(0) + 1, df,
-      colA, colB, nFiles)
-    commitAppend(fs, root, meta, df.schema.json, fresh)
+    val head = headOf(fs, root)
+    commitAppend(fs, root, head, meta, df.schema.json,
+      writeZorderedEpoch(spark, fs, root, head, df, colA, colB, nFiles))
   }
 
   /** `OPTIMIZE ... ZORDER BY (a, b)` in one commit: rewrite the latest
@@ -2505,62 +2522,44 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to compact under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val version = latest + 1
-    val rows = readSnapshot(spark, outDir, latest)
-    val lines = writeZorderedEpoch(spark, fs, root, version, rows,
-      colA, colB, nFiles)
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map("compacted_from" -> latest.toString)),
-        rows.schema.json, op = "compact"), lines)
-    version
+    val head = readManifest(fs, root, latest)
+    val rows = readFilesAs(spark, root, head, head.entries)
+    commitMetadata(fs, root, head, Map("compacted_from" -> latest.toString),
+      rows.schema.json, "compact",
+      writeZorderedEpoch(spark, fs, root, Some(head), rows, colA, colB,
+        nFiles))
   }
 
   private def writeZorderedEpoch(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, df: DataFrame, colA: String,
+      root: Path, head: Option[Manifest], df: DataFrame, colA: String,
       colB: String, nFiles: Int): Seq[String] = {
     // z2= zones are positional; only the post-write readback needs the
     // keys translated to the written physical names
-    val pm = physicalRenames(fs, root, df)
+    val pm = physicalRenames(head, df)
     val (physA, physB) = (pm.getOrElse(colA, colA), pm.getOrElse(colB, colB))
     val z = freshName("_z", df.columns.toSeq)
-    val (epochDir, fresh) = writeEpoch(fs, root, version,
+    val (fresh, written) = writeEpoch(fs, root, head,
       df.withColumn(z,
           morton(col(colA).cast("long"), col(colB).cast("long")))
         .repartitionByRange(nFiles, col(z))
         .sortWithinPartitions(z)
         .drop(z))
-    val zones: Map[String, (Long, Long, Long, Long)] =
-      spark.read.parquet(epochDir.toString)
-        .groupBy(col("_metadata.file_path").as("file"))
-        .agg(min(col(physA)).cast("long").as("alo"),
-          max(col(physA)).cast("long").as("ahi"),
-          min(col(physB)).cast("long").as("blo"),
-          max(col(physB)).cast("long").as("bhi"))
-        .collect()
-        .map(r => fs.makeQualified(new Path(r.getString(0))).toString ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))))
-        .toMap
-    fresh.map { f =>
-      // both keys' ranges ALSO ride as NAMED s= stats (physical-keyed)
-      // so planners that don't know the z-order keys - the batch
-      // format's FileIndex, readSnapshotRange - prune these files too;
-      // z2= stays the positional 2-D zone readSnapshotBox consumes
-      zones.get(fs.makeQualified(new Path(pathOf(f))).toString) match {
-        case Some((alo, ahi, blo, bhi)) =>
-          s"$f\tz2=$alo:$ahi:$blo:$bhi" +
-            s"\ts=$physA:$alo:$ahi\ts=$physB:$blo:$bhi"
-        case None => f // a zero-row file carries no zone
-      }
+    // both keys' ranges ALSO ride as NAMED s= stats (physical-keyed)
+    // so planners that don't know the z-order keys - the batch
+    // format's FileIndex, readSnapshotRange - prune these files too;
+    // z2= stays the positional 2-D zone readSnapshotBox consumes. A
+    // zero-row file carries no zone.
+    tagReadBack(spark, fs, root, fresh, written, Seq(
+        min(col(physA)).cast("long").as("alo"),
+        max(col(physA)).cast("long").as("ahi"),
+        min(col(physB)).cast("long").as("blo"),
+        max(col(physB)).cast("long").as("bhi"))) { r =>
+      val Seq(alo, ahi, blo, bhi) =
+        Seq("alo", "ahi", "blo", "bhi").map(r.getAs[Long])
+      Seq(Tag.zone2(alo, ahi, blo, bhi), Tag.stat(physA, alo, ahi),
+        Tag.stat(physB, blo, bhi))
     }
   }
-
-  private def zone2Of(line: String)
-      : Option[(Long, Long, Long, Long)] =
-    line.split('\t').collectFirst { case f if f.startsWith("z2=") =>
-      val Array(alo, ahi, blo, bhi) = f.drop(3).split(':')
-      (alo.toLong, ahi.toLong, blo.toLong, bhi.toLong)
-    }
 
   /** Box-pruned read of a snapshot version: plan only files whose 2-D
     * zone intersects the query box (lines without a `z2=` zone always
@@ -2569,18 +2568,24 @@ object Export {
   def readSnapshotBox(spark: SparkSession, outDir: String, version: Int,
       colA: String, colB: String, aLo: Long, aHi: Long,
       bLo: Long, bHi: Long): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val chosen = lines.filter(l => zone2Of(l) match {
-      case Some((alo, ahi, blo, bhi)) =>
+    readPruned(spark, outDir, version)(_ => _.zone2.forall {
+      case (alo, ahi, blo, bhi) =>
         ahi >= aLo && alo <= aHi && bhi >= bLo && blo <= bHi
-      case None => true
-    })
-    val files =
-      if (chosen.nonEmpty) chosen
-      else lines.sortBy(pathOf).take(1)
-    readFilesAs(spark, fs, root, version, files)
-      .filter(col(colA).between(aLo, aHi) && col(colB).between(bLo, bHi))
+    }).filter(col(colA).between(aLo, aHi) && col(colB).between(bLo, bHi))
+  }
+
+  /** The shared half of the tag-pruned readers: `version`'s entries that
+    * `keep` (given the parsed manifest) admits — or, when none survives,
+    * one file, so the schema survives and the caller's exact predicate
+    * yields the correct empty result (a version with zero data files
+    * reads back typed-empty via its #schema= header). */
+  private def readPruned(spark: SparkSession, outDir: String,
+      version: Int)(keep: Manifest => ManifestEntry => Boolean): DataFrame = {
+    val (fs, root) = fsRoot(outDir)
+    val m = readManifest(fs, root, version)
+    val chosen = m.entries.filter(keep(m))
+    readFilesAs(spark, root, m,
+      if (chosen.nonEmpty) chosen else m.entries.sortBy(_.path).take(1))
   }
 
   /** The table's ACTIVE CHECK constraints at the HEAD — O(1):
@@ -2590,13 +2595,8 @@ object Export {
     * ever — the write path must not pay O(versions) per commit. */
   def snapshotChecks(outDir: String): Map[String, String] = {
     val (fs, root) = fsRoot(outDir)
-    storedChecks(headMetaOf(fs, root))
+    headOf(fs, root).fold(Map.empty[String, String])(m => storedChecks(m.meta))
   }
-
-  private def headMetaOf(fs: FileSystem,
-      root: Path): Map[String, String] =
-    manifestVersions(fs, root).lastOption
-      .map(v => snapshotMetaOf(fs, root, v)).getOrElse(Map.empty)
 
   private def storedChecks(
       headMeta: Map[String, String]): Map[String, String] =
@@ -2605,26 +2605,19 @@ object Export {
         k.drop("check_".length) -> sql
     }
 
-  /** The shared WRITE PROJECTION of the epoch writers — ONE head-meta
-    * read covers both halves: generated columns materialize
+  /** The shared WRITE PROJECTION of the epoch writers, from the
+    * `head` they write against: generated columns materialize
     * ([[materializeGenerated]]), then CHECK constraints assert per row
     * ([[enforceChecks]]). Zero cost (and zero extra plan nodes) while
     * the table has neither. */
   private def writeProjection(fs: FileSystem, root: Path,
-      df: DataFrame): DataFrame = {
-    val headMeta = headMetaOf(fs, root)
-    if (headMeta.isEmpty) df
-    else {
-      val headFields = headMeta.get("schema")
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-          .fields.toSeq)
-        .getOrElse(Seq.empty)
-      enforceChecks(storedChecks(headMeta), headFields,
+      head: Option[Manifest], df: DataFrame): DataFrame =
+    head.fold(df) { h =>
+      val headFields = h.schemaOpt.fold(Seq.empty[StructField])(_.fields.toSeq)
+      enforceChecks(storedChecks(h.meta), headFields,
         materializeGenerated(headFields,
           materializeIdentity(fs, root, headFields, df)))
     }
-  }
 
   // ------------------------------------------------------------------
   // IDENTITY COLUMNS (`GENERATED ALWAYS / BY DEFAULT AS IDENTITY`) —
@@ -2698,7 +2691,8 @@ object Export {
             Some(txt.toLong)
           } catch { case scala.util.control.NonFatal(_) => None }
         }.foldLeft(0L)(math.max)
-    val fromHeader = headMetaOf(fs, root).get(s"idc_$colEnc")
+    // a FRESH head read, after the listing: never a head read earlier
+    val fromHeader = headOf(fs, root).flatMap(_.meta.get(s"idc_$colEnc"))
       .map(_.toLong).getOrElse(0L)
     math.max(fromClaims, fromHeader)
   }
@@ -2726,7 +2720,7 @@ object Export {
       // content complete before the name appears; a loser re-reads the
       // (now higher) watermark and claims the next range
       if (publishExclusive(fs, tmp, dest)) {
-        val floor = headMetaOf(fs, root).get(s"idc_$colEnc")
+        val floor = headOf(fs, root).flatMap(_.meta.get(s"idc_$colEnc"))
           .map(_.toLong).getOrElse(0L)
         if (floor > 0L) fs.listStatus(dir).toSeq
           .filter { st =>
@@ -3020,19 +3014,15 @@ object Export {
     * generated column pins its dependencies for the table's life).
     * Word-boundary match: a constraint on `value` does not pin a
     * column `val`. */
-  private def checksReferencing(fs: FileSystem, root: Path,
+  private def checksReferencing(head: Manifest,
       column: String): Seq[String] = {
-    val fromChecks = storedChecks(headMetaOf(fs, root)).collect {
+    val fromChecks = storedChecks(head.meta).collect {
       case (n, sql) if referencesColumn(sql, column) =>
         s"CHECK $n"
     }.toSeq
     val genKey = org.apache.spark.sql.catalyst.util.GeneratedColumn
       .GENERATION_EXPRESSION_METADATA_KEY
-    val fromGen = manifestVersions(fs, root).lastOption
-      .flatMap(v => snapshotMetaOf(fs, root, v).get("schema"))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fields.toSeq)
-      .getOrElse(Seq.empty)
+    val fromGen = head.schemaOpt.fold(Seq.empty[StructField])(_.fields.toSeq)
       .collect {
         case f if f.name != column && f.metadata.contains(genKey) &&
             referencesColumn(f.metadata.getString(genKey), column) =>
@@ -3055,14 +3045,15 @@ object Export {
       name: String, sql: Option[String]): Int = {
     require(!name.contains('=') && !name.contains("\n") &&
       name.nonEmpty, s"constraint name must be line-safe: '$name'")
+    val v = latestSnapshotVersion(outDir)
+    require(v > 0, s"no committed versions under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val head = latestSnapshotVersion(outDir)
-    require(head > 0, s"no committed versions under $outDir")
-    val stored = storedChecks(headMetaOf(fs, root))
+    val head = readManifest(fs, root, v)
+    val stored = storedChecks(head.meta)
     sql.foreach { s =>
       require(!stored.contains(name),
         s"constraint '$name' already exists (${stored(name)})")
-      val violating = readSnapshot(spark, outDir, head)
+      val violating = readFilesAs(spark, root, head, head.entries)
         .filter(!coalesce(expr(s), lit(true))).limit(1).count()
       require(violating == 0L,
         s"cannot ADD CONSTRAINT '$name' CHECK ($s): existing rows " +
@@ -3075,15 +3066,8 @@ object Export {
     }
     val headers = active.map { case (n, s) => s"check_$n" -> s } ++
       (if (sql.isEmpty) Map(s"check_$name" -> "") else Map.empty)
-    val schemaJson = snapshotMetaOf(fs, root, head).getOrElse("schema",
-      throw new IllegalStateException(s"version $head of $outDir has " +
-        "no #schema= header (pre-header manifest) - recommit first"))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root, carryBatch(fs, root, headers), schemaJson,
-        op = "constraint"),
-      dataLines(readManifestRaw(fs, root, head)))
-    version
+    commitMetadata(fs, root, head, headers, head.schemaJson, "constraint",
+      head.lines)
   }
 
   /** Commit-time CHECK constraints (the Delta table-constraint shape):
@@ -3104,12 +3088,10 @@ object Export {
       meta: Map[String, String] = Map.empty): Int = asInsertSurface {
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val prev = manifestVersions(fs, root).lastOption
-    // inherited from the NEWEST version carrying any constraint — not
-    // latest-only, or a maintenance commit (compact/restore carries no
-    // check_* headers) would silently drop the table's constraints, the
-    // same erasure mode lastAppliedBatch guards against for #batch=
-    val inherited: Map[String, String] = storedChecks(headMetaOf(fs, root))
+    val head = headOf(fs, root)
+    // inherited from the head: every commit re-stamps the active set
+    val inherited: Map[String, String] =
+      head.fold(Map.empty[String, String])(h => storedChecks(h.meta))
     val active = inherited ++ constraints
     if (active.nonEmpty) {
       val names = active.keys.toSeq.sorted
@@ -3130,8 +3112,8 @@ object Export {
           violated.map { case (n, c) =>
             s"$n (${active(n)}): $c row(s)" }.mkString("; "))
     }
-    val (_, fresh) = writeEpoch(fs, root, prev.getOrElse(0) + 1, df)
-    commitAppend(fs, root,
+    val fresh = writeEpoch(fs, root, head, df)._1
+    commitAppend(fs, root, head,
       meta ++ active.map { case (n, sql) =>
         require(!n.contains('=') && !n.contains("\n"),
           s"constraint name must be line-safe: $n")
@@ -3160,37 +3142,25 @@ object Export {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
+    val head = headOf(fs, root)
     // b= tags are PHYSICAL-keyed (lookups translate, see physicalIn)
-    val keyPhys = physicalRenames(fs, root, df).getOrElse(keyCol, keyCol)
-    val version = manifestVersions(fs, root).lastOption.getOrElse(0) + 1
-    val (epochDir, fresh) = writeEpoch(fs, root, version,
-      df.repartition(nFiles))
-    // distinct (file, bit) pairs — bounded by nFiles × BloomBits
-    // key hashed as BIGINT so the probe's lit(value: Long) hashes
-    // identically whatever integral width the column stores
-    val posCols = (1 to BloomHashes).map(i =>
+    val keyPhys = physicalRenames(head, df).getOrElse(keyCol, keyCol)
+    val (fresh, written) = writeEpoch(fs, root, head, df.repartition(nFiles))
+    // per file, each hash's set of bit positions — bounded by
+    // BloomHashes × BloomBits values, never the rows; key hashed as
+    // BIGINT so the probe's lit(value: Long) hashes identically whatever
+    // integral width the column stores
+    val posSets = (1 to BloomHashes).map(i => collect_set(
       pmod(xxhash64(col(keyPhys).cast("long"), lit(i)),
-        lit(BloomBits.toLong)))
-    val bits = spark.read.parquet(epochDir.toString)
-      .select(col("_metadata.file_path").as("file"),
-        explode(array(posCols: _*)).as("pos"))
-      .distinct().collect()
-      .groupBy(r => fs.makeQualified(new Path(r.getString(0))).toString)
-      .map { case (f, rows) =>
-        val words = new Array[Long](BloomBits / 64)
-        rows.foreach { r =>
-          val p = r.getLong(1).toInt
-          words(p / 64) |= (1L << (p % 64))
-        }
-        f -> words.map(w => f"$w%016x").mkString
-      }
-    val lines = fresh.map { f =>
-      bits.get(fs.makeQualified(new Path(pathOf(f))).toString) match {
-        case Some(hex) => s"$f\tb=$keyPhys:$hex"
-        case None => f // a zero-row file carries no filter
-      }
-    }
-    commitAppend(fs, root, meta, df.schema.json, lines)
+        lit(BloomBits.toLong))).as(s"pos$i"))
+    val lines = tagReadBack(spark, fs, root, fresh, written, posSets) { r =>
+      val words = new Array[Long](BloomBits / 64)
+      (1 to BloomHashes).flatMap(i =>
+        r.getAs[scala.collection.Seq[Long]](s"pos$i"))
+        .foreach(p => words(p.toInt / 64) |= (1L << (p.toInt % 64)))
+      Seq(Tag.bloom(keyPhys, words.map(w => f"$w%016x").mkString))
+    } // a zero-row file carries no filter
+    commitAppend(fs, root, head, meta, df.schema.json, lines)
   }
 
   /** Bloom geometry: 1024 bits × 5 hashes ≈ 1% false-positive rate at
@@ -3198,11 +3168,6 @@ object Export {
     * not exact membership. One `b=` tag is 256 hex chars. */
   val BloomBits: Int = 1024
   val BloomHashes: Int = 5
-
-  private def bloomOf(line: String): Option[(String, String)] =
-    line.split('\t').collectFirst { case f if f.startsWith("b=") =>
-      val Array(k, hex) = f.drop(2).split(":", 2); (k, hex)
-    }
 
   private def bloomMightContain(hex: String, positions: Seq[Long]): Boolean =
     positions.forall { p =>
@@ -3220,23 +3185,15 @@ object Export {
     * to drift). */
   def readSnapshotPoint(spark: SparkSession, outDir: String,
       version: Int, keyCol: String, value: Long): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
     val positions = spark.range(1).select(
         (1 to BloomHashes).map(i =>
           pmod(xxhash64(lit(value), lit(i)), lit(BloomBits.toLong))): _*)
       .collect().head.toSeq.map(_.asInstanceOf[Long])
-    val keyPhys = physicalIn(outDir, version, keyCol)
-    val chosen = lines.filter(l => bloomOf(l) match {
-      case Some((k, hex)) if k == keyPhys =>
+    readPruned(spark, outDir, version)(m => _.bloom match {
+      case Some((k, hex)) if k == m.physicalIn(keyCol) =>
         bloomMightContain(hex, positions)
       case _ => true
-    })
-    val files =
-      if (chosen.nonEmpty) chosen
-      else lines.sortBy(pathOf).take(1)
-    readFilesAs(spark, fs, root, version, files)
-      .filter(col(keyCol) === value)
+    }).filter(col(keyCol) === value)
   }
 
   /** Hive-style PARTITIONED append — the default shape of a production
@@ -3265,10 +3222,10 @@ object Export {
       meta: Map[String, String] = Map.empty): Int = asInsertSurface {
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
-    val version = manifestVersions(fs, root).lastOption.getOrElse(0) + 1
-    val lines = writePartitionedEpoch(spark, fs, root, version, df,
-      partitionCols, nFiles, zoneKey)
-    commitAppend(fs, root, meta, df.schema.json, lines)
+    val head = headOf(fs, root)
+    commitAppend(fs, root, head, meta, df.schema.json,
+      writePartitionedEpoch(spark, fs, root, head, df, partitionCols,
+        nFiles, zoneKey))
   }
 
   /** Write one partition-laid-out epoch and return its manifest data
@@ -3276,7 +3233,7 @@ object Export {
     * every partitioned commit (append / overwrite / partition-scoped
     * compaction / merge). */
   private def writePartitionedEpoch(spark: SparkSession, fs: FileSystem,
-      root: Path, version: Int, df0: DataFrame,
+      root: Path, head: Option[Manifest], df0: DataFrame,
       partitionCols: Seq[String], nFiles: Int,
       zoneKey: Option[String]): Seq[String] = {
     require(partitionCols.nonEmpty, "need at least one partition column")
@@ -3284,82 +3241,61 @@ object Export {
     // generated columns + CHECK constraints here too - the partitioned
     // twin of writeEpoch's write-projection work (clustered epochs
     // funnel through writeEpoch itself)
-    val df = writeProjection(fs, root, df0)
+    val df = writeProjection(fs, root, head, df0)
     // p= specs are PHYSICAL-keyed like the s=/b= tags: the readback
     // below runs on the written (physical-named) bytes and every spec
     // consumer translates its column names
-    val pm = physicalRenames(fs, root, df)
+    val pm = physicalRenames(head, df)
     def phys(c: String): String = pm.getOrElse(c, c)
-    val epochDir = new Path(root,
-      s"epoch=$version-${java.util.UUID.randomUUID.toString.take(8)}")
+    val epochDir = new Path(root, s"epoch=${head.fold(0)(_.version) + 1}-" +
+      java.util.UUID.randomUUID.toString.take(8))
     val arrangeCols = (partitionCols ++ zoneKey).map(col)
     val arranged =
       df.repartitionByRange(nFiles, arrangeCols: _*)
         .sortWithinPartitions(arrangeCols: _*)
     val shadows = partitionCols.map(c =>
       c -> freshName(s"_p_$c", df.columns.toSeq))
-    val withShadow = shadows.foldLeft(arranged) { case (d, (c, s)) =>
-      d.withColumn(s, col(c)) }
-    toPhysicalDf(fs, root, withShadow).write.mode("overwrite")
+    val withShadow = toPhysicalDf(head,
+      shadows.foldLeft(arranged) { case (d, (c, s)) =>
+        d.withColumn(s, col(c)) })
+    withShadow.write.mode("overwrite")
       .partitionBy(shadows.map(_._2): _*).parquet(epochDir.toString)
-    val statuses = listParquetFiles(fs, epochDir)
-      .sortBy(_.getPath.toString)
-    val lens: Map[String, Long] = statuses
-      .map(st => st.getPath.toString -> st.getLen).toMap
-    val files = statuses.map(_.getPath.toString)
-    val lines =
-      if (files.isEmpty) Nil
-      else {
-        // per-file stats from the bytes READ BACK (partition values are
-        // real columns in the files; each file is single-valued in them
-        // by construction of the partitioned write)
-        val aggs =
-          partitionCols.map(c =>
-            first(col(phys(c)).cast("string")).as(s"__p_$c")) ++
-          zoneKey.toSeq.flatMap(k => Seq(
-            min(col(phys(k))).cast("long").as("__z_lo"),
-            max(col(phys(k))).cast("long").as("__z_hi"),
-            min(statLong(col(phys(k)), df.schema(k).dataType))
-              .as("__zs_lo"),
-            max(statLong(col(phys(k)), df.schema(k).dataType))
-              .as("__zs_hi")))
-        val stats = spark.read.parquet(files: _*)
-          .groupBy(col("_metadata.file_path").as("file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            val spec = partitionCols.map { c =>
-              val v = r.getAs[String](s"__p_$c")
-              require(v != null && !v.exists(ch =>
-                  ch == '\t' || ch == '/' || ch == '=' ||
-                    ch == '\n' || ch == '\r'),
-                s"partition value for '$c' must be non-null and " +
-                  s"line-safe, got: $v")
-              s"${phys(c)}=$v"
-            }.mkString("/")
-            // the zone ALSO rides as a NAMED s= stat (the clustered
-            // writer's convention): planners that don't know the zone
-            // key — the batch FileIndex, DML predicate pruning —
-            // range-prune zoned partitioned files through the
-            // standard stats kernel
-            val zone = zoneKey.map { k =>
-              val lo = r.getAs[Long]("__z_lo")
-              val hi = r.getAs[Long]("__z_hi")
-              // z= keeps the cast-long pair its merge consumers use;
-              // the named s= takes the TYPED encoding/key (statLong)
-              s"\tz=$lo:$hi\ts=${statKeyOf(phys(k),
-                df.schema(k).dataType)}:${r.getAs[Long]("__zs_lo")}:" +
-                s"${r.getAs[Long]("__zs_hi")}"
-            }.getOrElse("")
-            fs.makeQualified(new Path(r.getAs[String]("file"))).toString ->
-              (s"\tp=$spec" + zone)
-          }.toMap
-        files.map { f =>
-          val key = fs.makeQualified(new Path(f)).toString
-          s"$key\tlen=${lens(f)}" + stats.getOrElse(key, "")
-        }
+    val fresh = listParquetFiles(fs, epochDir).sortBy(_.getPath.toString)
+      .map(st => withTags(qualify(fs, st.getPath.toString), Tag.len(st.getLen)))
+    // per-file stats from the bytes READ BACK (partition values are
+    // real columns in the files; each file is single-valued in them
+    // by construction of the partitioned write)
+    val aggs =
+      partitionCols.map(c =>
+        first(col(phys(c)).cast("string")).as(s"__p_$c")) ++
+      zoneKey.toSeq.flatMap(k => Seq(
+        min(col(phys(k))).cast("long").as("__z_lo"),
+        max(col(phys(k))).cast("long").as("__z_hi"),
+        min(statLong(col(phys(k)), df.schema(k).dataType)).as("__zs_lo"),
+        max(statLong(col(phys(k)), df.schema(k).dataType)).as("__zs_hi")))
+    val written = StructType(
+      withShadow.schema.filterNot(f => shadows.exists(_._2 == f.name)))
+    tagReadBack(spark, fs, root, fresh, written, aggs) { r =>
+      val spec = partitionCols.map { c =>
+        val v = r.getAs[String](s"__p_$c")
+        require(v != null && !v.exists(ch =>
+            ch == '\t' || ch == '/' || ch == '=' ||
+              ch == '\n' || ch == '\r'),
+          s"partition value for '$c' must be non-null and " +
+            s"line-safe, got: $v")
+        phys(c) -> v
       }
-    lines
+      // the zone ALSO rides as a NAMED s= stat (the clustered writer's
+      // convention): planners that don't know the zone key — the batch
+      // FileIndex, DML predicate pruning — range-prune zoned
+      // partitioned files through the standard stats kernel. z= keeps
+      // the cast-long pair its merge consumers use; the named s= takes
+      // the TYPED encoding/key (statLong)
+      Tag.partition(spec) +: zoneKey.toSeq.flatMap(k => Seq(
+        Tag.zone(r.getAs[Long]("__z_lo"), r.getAs[Long]("__z_hi")),
+        Tag.stat(statKeyOf(phys(k), df.schema(k).dataType),
+          r.getAs[Long]("__zs_lo"), r.getAs[Long]("__zs_hi"))))
+    }
   }
 
   // recursion over plain listStatus, NOT fs.listFiles: the latter
@@ -3387,22 +3323,10 @@ object Export {
   def readSnapshotPartitioned(spark: SparkSession, outDir: String,
       version: Int, partFilters: Map[String, String],
       zone: Option[(String, Long, Long)] = None): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val chosen = lines.filter { l =>
-      val spec = partitionOf(l)
-      val partOk = partFilters.forall { case (c, v) =>
-        spec.get(physicalIn(outDir, version, c)).forall(_ == v) }
-      val zoneOk = zone.forall { case (_, lo, hi) => zoneOf(l) match {
-        case Some((zlo, zhi)) => zhi >= lo && zlo <= hi
-        case None => true
-      } }
-      partOk && zoneOk
-    }
-    val files =
-      if (chosen.nonEmpty) chosen
-      else lines.sortBy(pathOf).take(1)
-    val base = readFilesAs(spark, fs, root, version, files)
+    val base = readPruned(spark, outDir, version)(m => e =>
+      partFilters.forall { case (c, v) =>
+        e.partition.get(m.physicalIn(c)).forall(_ == v) } &&
+      zone.forall { case (_, lo, hi) => e.zoneOverlaps(lo, hi) })
     val exact = partFilters.map { case (c, v) =>
         col(c).cast("string") === v }.toSeq ++
       zone.map { case (k, lo, hi) => col(k).between(lo, hi) }
@@ -3415,22 +3339,19 @@ object Export {
     * "matching" lines around it would silently duplicate or lose rows.
     * Mixed tables (plain appends into a partitioned log) must be
     * overwritten/merged as whole tables instead. */
-  private def requirePartitioned(lines: Seq[String],
+  private def requirePartitioned(entries: Seq[ManifestEntry],
       partitionCols: Seq[String], what: String): Unit =
-    lines.foreach { l =>
-      val spec = partitionOf(l)
-      val missing = partitionCols.filterNot(spec.contains)
+    entries.foreach { e =>
+      val missing = partitionCols.filterNot(e.partition.contains)
       require(missing.isEmpty,
         s"$what needs a consistently partitioned table: " +
-          s"${pathOf(l)} carries no partition value for " +
+          s"${e.path} carries no partition value for " +
           s"${missing.mkString(", ")} (was it appended unpartitioned?)")
     }
 
-  private def partTuple(line: String,
-      partitionCols: Seq[String]): Seq[String] = {
-    val spec = partitionOf(line)
-    partitionCols.map(spec)
-  }
+  private def partTuple(e: ManifestEntry,
+      partitionCols: Seq[String]): Seq[String] =
+    partitionCols.map(e.partition)
 
   /** Dynamic partition overwrite — Delta's `replaceWhere` in its
     * dynamic form / Hive's `INSERT OVERWRITE ... PARTITION`: commit a
@@ -3447,17 +3368,18 @@ object Export {
   def overwritePartitions(spark: SparkSession, df: DataFrame,
       outDir: String, partitionCols: Seq[String], nFiles: Int = 1,
       zoneKey: Option[String] = None,
-      meta: Map[String, String] = Map.empty): Int =
-    overwritePartitionsFrom(spark, df, outDir,
-      latestSnapshotVersion(outDir), partitionCols, nFiles, zoneKey,
-      meta)
+      meta: Map[String, String] = Map.empty): Int = {
+    val (fs, root) = fsRoot(outDir)
+    overwritePartitionsFrom(spark, df, outDir, headOf(fs, root),
+      partitionCols, nFiles, zoneKey, meta)
+  }
 
   /** [[overwritePartitions]] pinned to an explicit base version — the
     * shared commit half of overwrite and partition-scoped MERGE (whose
     * rewrite was computed FROM that base, so committing over any other
     * head would lose the racing commit's rows). */
   private def overwritePartitionsFrom(spark: SparkSession, df: DataFrame,
-      outDir: String, baseVersion: Int, partitionCols: Seq[String],
+      outDir: String, base: Option[Manifest], partitionCols: Seq[String],
       nFiles: Int, zoneKey: Option[String],
       meta: Map[String, String],
       replaceTuples: Option[Set[Seq[String]]] = None): Int = {
@@ -3465,9 +3387,9 @@ object Export {
     fs.mkdirs(root)
     // spec matching runs on the PHYSICAL partition-column names the
     // p= specs carry (identity on never-renamed tables)
-    val pm = physicalRenames(fs, root, df)
+    val pm = physicalRenames(base, df)
     val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    val fresh = writePartitionedEpoch(spark, fs, root, baseVersion + 1,
+    val fresh = writePartitionedEpoch(spark, fs, root, base,
       df, partitionCols, nFiles, zoneKey)
     // the replace set defaults to the partitions the fresh epoch
     // wrote; a row-level rewrite passes it EXPLICITLY: a partition the
@@ -3478,16 +3400,14 @@ object Export {
     // (the general merge's insert leg landing in an untouched
     // partition)
     val freshTuples: Set[Seq[String]] = replaceTuples.getOrElse(
-      fresh.map(l => partTuple(l, physCols)).toSet)
+      fresh.map(l => partTuple(parseEntry(l), physCols)).toSet)
+    def replaced(e: ManifestEntry) = freshTuples(partTuple(e, physCols))
     // the base state of OUR partitions, pinned at plan time: the
     // disjointness certificate every retry re-checks against the head
-    val baseTouched: Set[String] =
-      if (baseVersion == 0) Set.empty
-      else {
-        val lines = dataLines(readManifestRaw(fs, root, baseVersion))
-        requirePartitioned(lines, physCols, "overwritePartitions")
-        lines.filter(l => freshTuples(partTuple(l, physCols))).toSet
-      }
+    val baseTouched: Set[String] = base.fold(Set.empty[String]) { b =>
+      requirePartitioned(b.entries, physCols, "overwritePartitions")
+      b.entries.filter(replaced).map(_.line).toSet
+    }
     // OPTIMISTIC RETRY against commuting winners (r12 verdict #3): the
     // rewrite replaced exactly the partitions in `freshTuples`, so it
     // commutes with any interleaved commit that (a) kept the table
@@ -3498,43 +3418,36 @@ object Export {
     // and still replaces ours. A winner that DID touch our partitions
     // raises the typed conflict: replaying our rewrite would silently
     // drop its rows — the one outcome a lake must never allow.
+    val stamped = meta + ("overwrote_partitions" -> freshTuples.size.toString)
     var attempt = 0
     while (attempt <= MaxAppendRetries) {
-      val head = manifestVersions(fs, root).lastOption.getOrElse(0)
-      val (carried, schema) =
-        if (head == 0) (Seq.empty[String], df.schema)
-        else {
-          val lines = dataLines(readManifestRaw(fs, root, head))
-          if (head != baseVersion) {
-            val consistent = lines.forall(l =>
-              physCols.forall(partitionOf(l).contains))
+      val head = headOf(fs, root, base)
+      val (carried, schema) = head match {
+        case None => (Seq.empty[String], df.schema)
+        case Some(h) =>
+          if (!base.exists(_.version == h.version)) {
+            val consistent = h.entries.forall(e =>
+              physCols.forall(e.partition.contains))
             val headTouched =
-              if (consistent)
-                lines.filter(l => freshTuples(partTuple(l, physCols))).toSet
+              if (consistent) h.entries.filter(replaced).map(_.line).toSet
               else Set.empty[String]
             if (!consistent || headTouched != baseTouched)
               throw new ConcurrentCommitException(
-                s"concurrent commit(s) up to _v$head under $root " +
+                s"concurrent commit(s) up to _v${h.version} under $root " +
                   "touched the partition(s) this rewrite replaces " +
                   "(or broke the partition layout) - committing would " +
                   "drop the winner's rows; re-plan against the new " +
-                  "head", head)
+                  "head", h.version)
           }
-          val prevSchema = snapshotMetaOf(fs, root, head)
-            .get("schema")
-            .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .getOrElse(df.schema)
-          (lines.filterNot(l => freshTuples(partTuple(l, physCols))),
-            unionSchema(prevSchema, df.schema))
-        }
-      val version = head + 1
+          (h.entries.filterNot(replaced).map(_.line),
+            unionSchema(h.schemaOpt.getOrElse(df.schema), df.schema))
+      }
+      val version = head.fold(0)(_.version) + 1
       rewriteRaceInjector.foreach(_(root, version))
       try {
         commitManifest(fs, root, version,
-          internalMeta(fs, root,
-            carryBatch(fs, root,
-              meta + ("overwrote_partitions" -> freshTuples.size.toString)),
+          internalMeta(root, head,
+            head.fold(stamped)(carryBatch(fs, root, _, stamped)),
             schema.json, op = "overwrite"),
           carried ++ fresh)
         return version
@@ -3601,19 +3514,18 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to merge into under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val pm = physicalRenames(fs, root, updates)
+    val m = readManifest(fs, root, latest)
+    val pm = physicalRenames(Some(m), updates)
     val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    requirePartitioned(lines, physCols, "mergeSnapshotPartitioned")
+    requirePartitioned(m.entries, physCols, "mergeSnapshotPartitioned")
     val touched: Set[Seq[String]] = updates
       .select(partitionCols.map(c => col(c).cast("string")): _*)
       .distinct().collect()
       .map(r => partitionCols.indices.map(i => r.getString(i)): Seq[String])
       .toSet
-    val hit = lines.filter(l => touched(partTuple(l, physCols)))
-    val base = readFilesAs(spark, fs, root, latest, hit)
-    val merged = resolve(base, updates)
-    overwritePartitionsFrom(spark, merged, outDir, latest, partitionCols,
+    val hit = m.entries.filter(e => touched(partTuple(e, physCols)))
+    val merged = resolve(readFilesAs(spark, root, m, hit), updates)
+    overwritePartitionsFrom(spark, merged, outDir, Some(m), partitionCols,
       nFiles, zoneKey,
       meta + ("merged_partitions" -> touched.size.toString))
   }
@@ -3647,20 +3559,20 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to delete from under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val pm = physicalRenames(fs, root, keys)
+    val m = readManifest(fs, root, latest)
+    val pm = physicalRenames(Some(m), keys)
     val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    requirePartitioned(lines, physCols, "deleteSnapshotPartitioned")
+    requirePartitioned(m.entries, physCols, "deleteSnapshotPartitioned")
     val touched: Set[Seq[String]] = keys
       .select(partitionCols.map(c => col(c).cast("string")): _*)
       .distinct().collect()
       .map(r => partitionCols.indices.map(i => r.getString(i)): Seq[String])
       .toSet
     if (touched.isEmpty) return latest // empty key batch: no-op
-    val hit = lines.filter(l => touched(partTuple(l, physCols)))
-    val base = readFilesAs(spark, fs, root, latest, hit)
-    val remaining = base.join(keys, keyCols.toSeq, "left_anti")
-    overwritePartitionsFrom(spark, remaining, outDir, latest,
+    val hit = m.entries.filter(e => touched(partTuple(e, physCols)))
+    val remaining = readFilesAs(spark, root, m, hit)
+      .join(keys, keyCols.toSeq, "left_anti")
+    overwritePartitionsFrom(spark, remaining, outDir, Some(m),
       partitionCols, nFiles, None,
       meta + ("deleted_partitions" -> touched.size.toString),
       replaceTuples = Some(touched))
@@ -3675,14 +3587,11 @@ object Export {
       version: Int, partitionCols: Seq[String],
       tuples: Set[Seq[String]]): DataFrame = {
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val st = snapshotSchema(outDir, version)
-    val physCols = partitionCols.map(c =>
-      st.flatMap(_.fields.find(_.name == c)).map(physicalOf)
-        .getOrElse(c))
-    requirePartitioned(lines, physCols, "readSnapshotPartitionTuples")
-    val hit = lines.filter(l => tuples(partTuple(l, physCols)))
-    readFilesAs(spark, fs, root, version, hit)
+    val m = readManifest(fs, root, version)
+    val physCols = partitionCols.map(m.physicalIn)
+    requirePartitioned(m.entries, physCols, "readSnapshotPartitionTuples")
+    readFilesAs(spark, root, m,
+      m.entries.filter(e => tuples(partTuple(e, physCols))))
   }
 
   /** Commit `df` as the COMPLETE new content of exactly the partitions
@@ -3696,10 +3605,11 @@ object Export {
   def replaceSnapshotPartitionsScoped(spark: SparkSession,
       df: DataFrame, outDir: String, partitionCols: Seq[String],
       touched: Set[Seq[String]], nFiles: Int = 1,
-      meta: Map[String, String] = Map.empty): Int =
-    overwritePartitionsFrom(spark, df, outDir,
-      latestSnapshotVersion(outDir), partitionCols, nFiles, None,
-      meta, replaceTuples = Some(touched))
+      meta: Map[String, String] = Map.empty): Int = {
+    val (fs, root) = fsRoot(outDir)
+    overwritePartitionsFrom(spark, df, outDir, headOf(fs, root),
+      partitionCols, nFiles, None, meta, replaceTuples = Some(touched))
+  }
 
   /** `(rows, envelope)` of a batch on `key`, cast to the zone domain
     * (long): the envelope is `None` when it cannot be PROVEN — null
@@ -3738,27 +3648,21 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to rewrite under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val (hit, rest) = envelope match {
-      case Some((lo, hi)) => lines.partition(l => zoneOf(l) match {
-        case Some((zlo, zhi)) => zhi >= lo && zlo <= hi
-        case None => true // zoneless: must rewrite, can't prove exclusion
-      })
-      case None => (lines, Seq.empty[String])
-    }
-    val base = readFilesAs(spark, fs, root, latest, hit)
-    val result = transform(base)
-    val version = latest + 1
+    val m = readManifest(fs, root, latest)
+    // zoneless lines must rewrite: exclusion can't be proven
+    val (hit, rest) = envelope.fold((m.entries, Seq.empty[ManifestEntry])) {
+      case (lo, hi) => m.entries.partition(_.zoneOverlaps(lo, hi)) }
+    val result = transform(readFilesAs(spark, root, m, hit))
     // nFiles=0 (default) preserves the rewritten slice's file count,
     // so the zoned layout's granularity — what pruning lives on —
     // never collapses through a merge
-    val fresh = writeClusteredEpoch(spark, fs, root, version, result,
+    val fresh = writeClusteredEpoch(spark, fs, root, Some(m), result,
       clusterKey, if (nFiles > 0) nFiles else math.max(1, hit.size))
     // row-level rewrite commit discipline: retry over interleaved
     // APPENDS (their lines are disjoint from everything this rewrite
     // consumed and carry verbatim — rewrite-first serialization); any
     // interleaved non-append raises the typed conflict
-    commitRewriteThenAppends(fs, root, latest, lines, rest ++ fresh,
+    commitRewriteThenAppends(fs, root, m, rest.map(_.line) ++ fresh,
       meta + ("rewritten_files" -> hit.size.toString),
       result.schema.json, op = "overwrite")
   }
@@ -3783,11 +3687,7 @@ object Export {
       residual: Option[Column] = None): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val st = snapshotSchema(outDir, version)
-    val physOf: Map[String, String] = st
-      .map(_.fields.map(f => f.name -> physicalOf(f)).toMap)
-      .getOrElse(Map.empty)
+    val m = readManifest(fs, root, version)
     // one driver-side agg over the (small) batch: per key column its
     // long-cast envelope; a null min (empty batch, all-null keys, or a
     // type whose cast nulls) yields no conjunct for that column
@@ -3818,8 +3718,8 @@ object Export {
         Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression] }
     }
     val conjuncts = envConjuncts ++ resConjuncts
-    val rows = readFilesAs(spark, fs, root, version,
-      pruneLines(lines, conjuncts, physOf)._1)
+    val rows = readFilesAs(spark, root, m,
+      pruneEntries(m, conjuncts)._1)
     residual.fold(rows)(rows.filter)
       .select(keyCols.map(col): _*).distinct()
   }
@@ -3830,14 +3730,10 @@ object Export {
     * keys don't cover the layout but whose ON residuals do. */
   def snapshotPartitionTuples(outDir: String, version: Int,
       partitionCols: Seq[String]): Set[Seq[String]] = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val st = snapshotSchema(outDir, version)
-    val physCols = partitionCols.map(c =>
-      st.flatMap(_.fields.find(_.name == c)).map(physicalOf)
-        .getOrElse(c))
-    requirePartitioned(lines, physCols, "snapshotPartitionTuples")
-    lines.map(l => partTuple(l, physCols)).toSet
+    val m = readManifest(outDir, version)
+    val physCols = partitionCols.map(m.physicalIn)
+    requirePartitioned(m.entries, physCols, "snapshotPartitionTuples")
+    m.entries.map(partTuple(_, physCols)).toSet
   }
 
   // ------------------------------------------------------------------
@@ -3871,11 +3767,13 @@ object Export {
     * `props` header (empty if none ever committed). */
   def snapshotProperties(outDir: String): Map[String, String] = {
     val (fs, root) = fsRoot(outDir)
-    manifestVersions(fs, root).reverseIterator
-      .map(v => snapshotMetaOf(fs, root, v).get("props"))
-      .collectFirst { case Some(p) => decodeProps(p) }
-      .getOrElse(Map.empty)
+    headOf(fs, root).fold(Map.empty[String, String])(propertiesOf(fs, root, _))
   }
+
+  private def propertiesOf(fs: FileSystem, root: Path,
+      head: Manifest): Map[String, String] =
+    newestHeader(fs, root, head, "props").fold(Map.empty[String, String])(
+      decodeProps)
 
   /** SET/UNSET table properties in one metadata-only commit. Returns
     * the new version (or the current one when nothing changes). */
@@ -3883,22 +3781,12 @@ object Export {
       unset: Seq[String] = Nil): Int = {
     set.keys.foreach(k => require(k.nonEmpty, "empty property key"))
     val (fs, root) = fsRoot(outDir)
-    val head = manifestVersions(fs, root).lastOption.getOrElse(
-      throw new IllegalArgumentException(
-        s"no committed versions under $outDir"))
-    val current = snapshotProperties(outDir)
+    val head = requireHead(fs, root, outDir)
+    val current = propertiesOf(fs, root, head)
     val next = (current ++ set) -- unset
-    if (next == current) return head
-    val schemaJson = snapshotMetaOf(fs, root, head).getOrElse("schema",
-      throw new IllegalStateException(s"version $head under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
-    val lines = dataLines(readManifestRaw(fs, root, head))
-    val version = head + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map("props" -> encodeProps(next))),
-        schemaJson, op = "rename"), lines)
-    version
+    if (next == current) head.version
+    else commitMetadata(fs, root, head, Map("props" -> encodeProps(next)),
+      head.schemaJson, "rename", head.lines)
   }
 
   /** STATS BACKFILL (r16) — ANALYZE's lake shape: compute per-file
@@ -3967,15 +3855,14 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to analyze under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    if (lines.isEmpty) return latest
-    require(lines.forall(l => dvOf(l).isEmpty),
+    val m = readManifest(fs, root, latest)
+    val entries = m.entries
+    if (entries.isEmpty) return latest
+    require(!entries.exists(_.hasDv),
       s"version $latest under $outDir carries deletion vectors - " +
         "their positions would overstate the n= rowcounts; run " +
         "compaction first (it materializes the DVs)")
-    val st = snapshotSchema(outDir, latest).getOrElse(
-      throw new IllegalStateException(s"version $latest under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
+    val st = m.schema
     val picked: Seq[org.apache.spark.sql.types.StructField] =
       if (cols.isEmpty) st.fields.toSeq.filter(f => statable(f.dataType))
       else cols.map { c =>
@@ -4004,8 +3891,7 @@ object Export {
     // Read by PHYSICAL names with the head schema pinned, so files
     // predating an added column read it as NULL instead of failing
     val byFile: Map[String, (Long, Seq[Option[(Long, Long)]])] =
-      scanCommitted(spark, root, snapshotMetaOf(fs, root, latest),
-          lines.map(entryOfLine), st, FailFastScan)
+      scanCommitted(spark, root, m, entries, st, FailFastScan)
         .groupBy(col("_metadata.file_path").as("__file"))
         .agg(aggs.head, aggs.tail: _*)
         .collect()
@@ -4015,7 +3901,7 @@ object Export {
             else Some((r.getAs[Long](s"__lo_$i"),
               r.getAs[Long](s"__hi_$i")))
           }
-          fs.makeQualified(new Path(r.getAs[String]("__file"))).toString ->
+          qualify(fs, r.getAs[String]("__file")) ->
             ((r.getAs[Long]("__n"), ranges))
         }.toMap
     // path-keying INVARIANT: every read-back group must key a manifest
@@ -4024,9 +3910,7 @@ object Export {
     // otherwise stamp n=0 everywhere and turn metadata-only counts
     // WRONG, not just unpruned; refuse loudly instead)
     locally {
-      val lineKeys = lines.map(l =>
-        fs.makeQualified(new Path(pathOf(l))).toString).toSet
-      val strays = byFile.keySet -- lineKeys
+      val strays = byFile.keySet -- entries.map(e => qualify(fs, e.path))
       require(strays.isEmpty,
         s"ANALYZE under $outDir: ${strays.size} read-back file " +
           s"path(s) match no manifest line (e.g. ${strays.head}) - " +
@@ -4038,43 +3922,36 @@ object Export {
     // columns it held a pre-r17 seconds-encoded range — stale hygiene)
     val analyzedSet = picked.zip(physCols).flatMap { case (f, pc) =>
       Seq(pc, statKeyOf(pc, f.dataType)) }.toSet
-    val stamped = lines.map { l =>
-      val parts = l.split('\t').toSeq
+    val stamped = entries.map { e =>
       // strip the tags this pass recomputes; everything else carries
-      val kept = parts.head +: parts.tail.filterNot { t =>
-        t.startsWith("n=") ||
-          (t.startsWith("s=") &&
-            analyzedSet.contains(t.drop(2).takeWhile(_ != ':')))
+      val kept = withoutTags(e.line) {
+        case (family, column) => family == "n" ||
+          family == "s" && column.exists(analyzedSet)
       }
-      val key = fs.makeQualified(new Path(parts.head)).toString
-      val fresh = byFile.get(key) match {
+      val fresh = byFile.get(qualify(fs, e.path)) match {
         case None =>
           // a read-back group can be ABSENT only for a zero-row file:
           // the scan above pins ignoreMissingFiles/ignoreCorruptFiles
           // false, so a skipped file already failed loudly — this
           // probe keeps the invariant even if that pinning is ever
           // bypassed (advisor r17: n=0 must never paper over absence)
-          require(fs.exists(new Path(parts.head)),
-            s"ANALYZE under $outDir: ${parts.head} produced no " +
+          require(fs.exists(new Path(e.path)),
+            s"ANALYZE under $outDir: ${e.path} produced no " +
               "read-back group and does not exist - refusing to " +
               "stamp n=0 over a missing file")
-          "\tn=0"
+          Seq(Tag.rows(0))
         case Some((n, ranges)) =>
-          s"\tn=$n" + picked.zip(physCols).zip(ranges).collect {
+          Tag.rows(n) +: picked.zip(physCols).zip(ranges).collect {
             case ((f, pc), Some((lo, hi))) =>
-              s"\ts=${statKeyOf(pc, f.dataType)}:$lo:$hi"
-          }.mkString
+              Tag.stat(statKeyOf(pc, f.dataType), lo, hi)
+          }
       }
-      kept.mkString("\t") + fresh
+      withTags(kept, fresh: _*)
     }
-    val version = latest + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map(
-          "analyzed_columns" -> picked.map(_.name).mkString(","),
-          "analyzed_files" -> lines.size.toString)),
-        st.json, op = "rename"), stamped)
-    version
+    commitMetadata(fs, root, m, Map(
+        "analyzed_columns" -> picked.map(_.name).mkString(","),
+        "analyzed_files" -> entries.size.toString),
+      st.json, "rename", stamped)
   }
 
   /** PARTITION-TAG BACKFILL (r17, judge item #6) — restore `p=` specs
@@ -4102,16 +3979,14 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to retag under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
+    val m = readManifest(fs, root, latest)
     val cols =
       if (partitionCols.nonEmpty) partitionCols
-      else declaredPartitionColumns(outDir)
+      else declaredLayout(fs, root, m)
     require(cols.nonEmpty,
       s"RETAG under $outDir: the table has no declared or tagged " +
         "partition layout - pass the partition columns explicitly")
-    val st = snapshotSchema(outDir, latest).getOrElse(
-      throw new IllegalStateException(s"version $latest under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
+    val st = m.schema
     val fields = cols.map(c => st.fields.find(_.name == c).getOrElse(
       throw new IllegalArgumentException(
         s"RETAG: unknown column '$c' (table has " +
@@ -4123,7 +3998,7 @@ object Export {
     // columns derive from the head's p= keys) — a re-partition is
     // OPTIMIZE's job, not a tag backfill's
     locally {
-      val existing = lines.map(partitionOf(_).keySet)
+      val existing = m.entries.map(_.partition.keySet)
         .filter(_.nonEmpty).distinct
       existing.foreach(ks => require(ks == physCols.toSet ||
           ks.subsetOf(physCols.toSet),
@@ -4135,10 +4010,10 @@ object Export {
     }
     // "tagged" = the spec covers every layout column; partial subsets
     // (a layout-widening backfill) re-derive like untagged lines
-    val (tagged, untagged) = lines.partition(l =>
-      physCols.forall(partitionOf(l).contains))
+    val (tagged, untagged) = m.entries.partition(e =>
+      physCols.forall(e.partition.contains))
     if (untagged.isEmpty) return latest
-    require(untagged.forall(l => dvOf(l).isEmpty),
+    require(!untagged.exists(_.hasDv),
       s"RETAG under $outDir: untagged lines carry deletion vectors - " +
         "compact first (it materializes the DVs)")
     val aggs = count(lit(1)).as("__n") +:
@@ -4150,43 +4025,37 @@ object Export {
         max(colQ(pc).isNull.cast("int")).as(s"__null_$i"))
       }
     // missing/corrupt files must FAIL, never stamp a guessed spec
-    val byFile = scanCommitted(spark, root,
-        snapshotMetaOf(fs, root, latest), untagged.map(entryOfLine), st,
-        FailFastScan)
+    val byFile = scanCommitted(spark, root, m, untagged, st, FailFastScan)
       .groupBy(col("_metadata.file_path").as("__file"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-      .map(r => fs.makeQualified(new Path(r.getAs[String]("__file")))
-        .toString -> r)
+      .map(r => qualify(fs, r.getAs[String]("__file")) -> r)
       .toMap
     // path-keying invariant (the ANALYZE guard): a read-back group
     // that keys no manifest line means the store's path form differs;
     // stamping by those keys would tag the wrong lines
     locally {
-      val lineKeys = untagged.map(l =>
-        fs.makeQualified(new Path(pathOf(l))).toString).toSet
-      val strays = byFile.keySet -- lineKeys
+      val strays = byFile.keySet -- untagged.map(e => qualify(fs, e.path))
       require(strays.isEmpty,
         s"RETAG under $outDir: ${strays.size} read-back file path(s) " +
           s"match no manifest line (e.g. ${strays.head}) - refusing " +
           "to stamp specs that could land on the wrong lines")
     }
     val stamped = scala.collection.mutable.ArrayBuffer.empty[String]
-    val spanning = scala.collection.mutable.ArrayBuffer.empty[String]
-    untagged.foreach { l =>
-      val key = fs.makeQualified(new Path(pathOf(l))).toString
-      byFile.get(key) match {
+    val spanning = scala.collection.mutable.ArrayBuffer.empty[ManifestEntry]
+    untagged.foreach { e =>
+      byFile.get(qualify(fs, e.path)) match {
         case None =>
           // no read-back group = a zero-row file: its line carries no
           // rows, so dropping it loses nothing — but absence of the
           // FILE is a broken table, refuse loudly
-          require(fs.exists(new Path(pathOf(l))),
-            s"RETAG under $outDir: ${pathOf(l)} produced no read-back " +
+          require(fs.exists(new Path(e.path)),
+            s"RETAG under $outDir: ${e.path} produced no read-back " +
               "group and does not exist - refusing")
         case Some(r) =>
           require(physCols.indices.forall(i =>
               r.getAs[Int](s"__null_$i") == 0),
-            s"RETAG under $outDir: ${pathOf(l)} holds NULL values in " +
+            s"RETAG under $outDir: ${e.path} holds NULL values in " +
               "a layout column - the spec grammar is non-null; " +
               "repair the rows first")
           if (physCols.indices.forall(i =>
@@ -4197,29 +4066,22 @@ object Export {
                   ch == '\t' || ch == '/' || ch == '=' ||
                     ch == '\n' || ch == '\r'),
                 s"partition value for '$pc' must be line-safe, got: $v")
-              s"$pc=$v"
-            }.mkString("/")
-            val parts = l.split('\t').toSeq
-            stamped += (parts.head +:
-              parts.tail.filterNot(_.startsWith("p=")))
-              .mkString("\t") + s"\tp=$spec"
-          } else spanning += l
+              pc -> v
+            }
+            stamped += withTags(e.line, Tag.partition(spec))
+          } else spanning += e
       }
     }
-    val version = latest + 1
     val fresh =
       if (spanning.isEmpty) Seq.empty[String]
-      else writePartitionedEpoch(spark, fs, root, version,
-        readFilesAs(spark, fs, root, latest, spanning.toSeq),
+      else writePartitionedEpoch(spark, fs, root, Some(m),
+        readFilesAs(spark, root, m, spanning.toSeq),
         cols, nFiles = 1, zoneKey = None)
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map(
-          "retagged_files" -> stamped.size.toString,
-          "relaid_files" -> spanning.size.toString)),
-        st.json, op = if (spanning.isEmpty) "rename" else "compact"),
-      tagged ++ stamped ++ fresh)
-    version
+    commitMetadata(fs, root, m, Map(
+        "retagged_files" -> stamped.size.toString,
+        "relaid_files" -> spanning.size.toString),
+      st.json, if (spanning.isEmpty) "rename" else "compact",
+      tagged.map(_.line) ++ stamped ++ fresh)
   }
 
   /** ZONE-PRUNED MERGE — the partition-scoped merge generalized to
@@ -4257,7 +4119,7 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to merge into under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
+    val m = readManifest(fs, root, latest)
     val env = updates.agg(
         min(col(clusterKey)).cast("long"),
         max(col(clusterKey)).cast("long"),
@@ -4271,23 +4133,15 @@ object Export {
     val (bmin, bmax) =
       if (noEnvelope) (Long.MinValue, Long.MaxValue)
       else (env.getLong(0), env.getLong(1))
-    val (hit, rest) = lines.partition(l => zoneOf(l) match {
-      case Some((lo, hi)) => hi >= bmin && lo <= bmax
-      case None => true // zoneless: must merge, can't prove exclusion
-    })
-    val base = readFilesAs(spark, fs, root, latest, hit)
-    val merged = Merge.upsertLatest(base, updates, keyCols, orderCols)
-    val version = latest + 1
-    val fresh = writeClusteredEpoch(spark, fs, root, version, merged,
+    // zoneless lines must merge: exclusion can't be proven
+    val (hit, rest) = m.entries.partition(_.zoneOverlaps(bmin, bmax))
+    val merged = Merge.upsertLatest(readFilesAs(spark, root, m, hit),
+      updates, keyCols, orderCols)
+    val fresh = writeClusteredEpoch(spark, fs, root, Some(m), merged,
       clusterKey, nFiles)
-    val schemaJson = snapshotMetaOf(fs, root, latest).getOrElse("schema",
-      merged.schema.json)
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root,
-          meta + ("merged_files" -> hit.size.toString)),
-        schemaJson, op = "overwrite"), rest ++ fresh)
-    version
+    commitMetadata(fs, root, m, meta + ("merged_files" -> hit.size.toString),
+      m.meta.getOrElse("schema", merged.schema.json), "overwrite",
+      rest.map(_.line) ++ fresh)
   }
 
   /** RESTORE TABLE TO VERSION (the Delta `RESTORE` shape): commit a NEW
@@ -4304,17 +4158,10 @@ object Export {
     require(versions.contains(toVersion),
       s"version $toVersion not present under $root " +
         s"(have: ${versions.mkString(", ")} — vacuumed?)")
-    val latest = versions.last
-    val lines = dataLines(readManifestRaw(fs, root, toVersion))
-    val schemaJson = snapshotMetaOf(fs, root, toVersion)
-      .getOrElse("schema", throw new IllegalStateException(
-        s"version $toVersion under $root has no #schema= header"))
-    val version = latest + 1
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map("restored_from" -> toVersion.toString)),
-        schemaJson, op = "restore"), lines)
-    version
+    val target = readManifest(fs, root, toVersion)
+    commitMetadata(fs, root, readManifest(fs, root, versions.last),
+      Map("restored_from" -> toVersion.toString), target.schemaJson,
+      "restore", target.lines)
   }
 
   /** Append with PER-COLUMN min/max stats on the manifest lines
@@ -4336,13 +4183,13 @@ object Export {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
     val (fs, root) = fsRoot(outDir)
     fs.mkdirs(root)
+    val head = headOf(fs, root)
     // tags are PHYSICAL-keyed: the readback below runs on the written
     // (physical-named) bytes and the tag lookups translate the query
-    val pm = physicalRenames(fs, root, df)
+    val pm = physicalRenames(head, df)
     def phys(c: String): String = pm.getOrElse(c, c)
     val key = clusterBy.getOrElse(statCols.head)
-    val (epochDir, fresh) = writeEpoch(fs, root,
-      manifestVersions(fs, root).lastOption.getOrElse(0) + 1,
+    val (fresh, written) = writeEpoch(fs, root, head,
       df.repartitionByRange(nFiles, col(key)).sortWithinPartitions(key))
     val aggs = count(lit(1)).as("__n") +: statCols.flatMap { c =>
       val dt = df.schema(c).dataType
@@ -4350,28 +4197,15 @@ object Export {
         min(statLong(col(phys(c)), dt)).as(s"__lo_$c"),
         max(statLong(col(phys(c)), dt)).as(s"__hi_$c"))
     }
-    val stats: Map[String, String] = spark.read.parquet(epochDir.toString)
-      .groupBy(col("_metadata.file_path").as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val tags = s"\tn=${r.getAs[Long]("__n")}" + statCols.map { c =>
-          s"\ts=${statKeyOf(phys(c), df.schema(c).dataType)}:" +
-            s"${r.getAs[Long](s"__lo_$c")}:${r.getAs[Long](s"__hi_$c")}"
-        }.mkString
-        fs.makeQualified(new Path(r.getAs[String]("file"))).toString -> tags
-      }.toMap
-    val lines = fresh.map { f =>
-      val k = fs.makeQualified(new Path(pathOf(f))).toString
-      // a zero-row file has no read-back group: row count 0, no stats
-      f + stats.getOrElse(k, "\tn=0")
+    // a zero-row file has no read-back group: row count 0, no stats
+    val lines = tagReadBack(spark, fs, root, fresh, written, aggs,
+        empty = Seq(Tag.rows(0))) { r =>
+      Tag.rows(r.getAs[Long]("__n")) +: statCols.map(c =>
+        Tag.stat(statKeyOf(phys(c), df.schema(c).dataType),
+          r.getAs[Long](s"__lo_$c"), r.getAs[Long](s"__hi_$c")))
     }
-    commitAppend(fs, root, meta, df.schema.json, lines)
+    commitAppend(fs, root, head, meta, df.schema.json, lines)
   }
-
-  private def nOf(line: String): Option[Long] =
-    line.split('\t').collectFirst { case f if f.startsWith("n=") =>
-      f.drop(2).toLong }
 
   /** METADATA-ONLY `count(*)` of a snapshot version — answered from the
     * manifest alone (the Delta/Iceberg metadata-only-query shape: a
@@ -4382,11 +4216,9 @@ object Export {
     * tags SUBTRACT: the recorded position count is exact (distinct at
     * write), so a MoR-deleted version still counts metadata-only. */
   def metadataCount(outDir: String, version: Int): Option[Long] = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val ns = lines.map(nOf)
-    if (ns.exists(_.isEmpty)) None
-    else Some(ns.flatten.sum - lines.flatMap(dvOf).map(_._2).sum)
+    val entries = readManifest(outDir, version).entries
+    if (entries.exists(_.rows.isEmpty)) None
+    else Some(entries.flatMap(_.rows).sum - entries.flatMap(_.dv).map(_._2).sum)
   }
 
   /** METADATA-ONLY `(min, max)` of an integral column, from the
@@ -4400,30 +4232,21 @@ object Export {
     * min-of-empty is NULL, not a number. */
   def metadataRange(outDir: String, version: Int,
       column: String): Option[(Long, Long)] = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-      .filterNot(l => nOf(l).contains(0L))
-    if (lines.isEmpty || lines.exists(l => dvOf(l).nonEmpty)) None
+    val m = readManifest(outDir, version)
+    val entries = m.entries.filterNot(_.rows.contains(0L))
+    if (entries.isEmpty || entries.exists(_.hasDv)) None
     else {
       // the stat key is TYPED (timestamp ranges live under `#us`,
       // epoch micros): resolve the column's committed type so an
       // event-time column answers min/max metadata-only too
-      val key = snapshotSchema(outDir, version)
-        .flatMap(_.fields.find(_.name == column))
+      val key = m.schemaOpt.flatMap(_.fields.find(_.name == column))
         .map(f => statKeyOf(physicalOf(f), f.dataType))
-        .getOrElse(physicalIn(outDir, version, column))
-      val ranges = lines.map(l => statsOf(l).get(key))
+        .getOrElse(column)
+      val ranges = entries.map(_.stats.get(key))
       if (ranges.exists(_.isEmpty)) None
       else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
     }
   }
-
-  private def statsOf(line: String): Map[String, (Long, Long)] =
-    line.split('\t').collect { case f if f.startsWith("s=") =>
-      f.drop(2).split(':') match {
-        case Array(c, lo, hi) => c -> ((lo.toLong, hi.toLong))
-      }
-    }.toMap
 
   /** Range read pruned by the per-column stats: plan only files whose
     * recorded [lo, hi] overlaps EVERY predicate's range (a file lacking
@@ -4433,21 +4256,10 @@ object Export {
   def readSnapshotRange(spark: SparkSession, outDir: String,
       version: Int, preds: Map[String, (Long, Long)]): DataFrame = {
     require(preds.nonEmpty, "need at least one range predicate")
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val chosen = lines.filter { l =>
-      val st = statsOf(l)
-      preds.forall { case (c, (lo, hi)) =>
-        st.get(physicalIn(outDir, version, c)) match {
-          case Some((slo, shi)) => shi >= lo && slo <= hi
-          case None => true
-        } }
-    }
-    val files =
-      if (chosen.nonEmpty) chosen
-      else lines.sortBy(pathOf).take(1)
-    preds.foldLeft(
-        readFilesAs(spark, fs, root, version, files)) {
+    preds.foldLeft(readPruned(spark, outDir, version)(m => e =>
+        preds.forall { case (c, (lo, hi)) =>
+          e.stats.get(m.physicalIn(c)).forall { case (slo, shi) =>
+            shi >= lo && slo <= hi } })) {
       case (d, (c, (lo, hi))) => d.filter(col(c).between(lo, hi))
     }
   }
@@ -4471,18 +4283,15 @@ object Export {
             else manifestVersions(sfs, sroot).lastOption.getOrElse(
               throw new IllegalArgumentException(
                 s"nothing to clone under $srcDir"))
-    val lines = dataLines(readManifestRaw(sfs, sroot, v))
-    val schemaJson = snapshotMetaOf(sfs, sroot, v).getOrElse("schema",
-      throw new IllegalStateException(
-        s"version $v under $sroot has no #schema= header"))
+    val src = readManifest(sfs, sroot, v)
     val (dfs, droot) = fsRoot(dstDir)
     require(manifestVersions(dfs, droot).isEmpty,
       s"clone target $dstDir already has a snapshot log")
     dfs.mkdirs(droot)
     commitManifest(dfs, droot, 1,
-      internalMeta(dfs, droot,
-        Map("cloned_from" -> s"$srcDir@v$v"), schemaJson, op = "clone"),
-      lines)
+      internalMeta(droot, None,
+        Map("cloned_from" -> s"$srcDir@v$v"), src.schemaJson, op = "clone"),
+      src.lines)
     1
   }
 
@@ -4492,22 +4301,9 @@ object Export {
     * surviving files still skip non-matching row groups. Same contract
     * as the layout zone maps: over-wide zones cost reads, never rows. */
   def readSnapshotPruned(spark: SparkSession, outDir: String,
-      version: Int, keyCol: String, lo: Long, hi: Long): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, version))
-    val chosen = lines.filter(l => zoneOf(l) match {
-      case Some((zlo, zhi)) => zhi >= lo && zlo <= hi
-      case None => true
-    })
-    // empty overlap: keep one file so the schema survives; the exact
-    // predicate then yields the correct empty result. A version with
-    // zero data files reads back typed-empty via its #schema= header.
-    val files =
-      if (chosen.nonEmpty) chosen
-      else lines.sortBy(pathOf).take(1)
-    readFilesAs(spark, fs, root, version, files)
+      version: Int, keyCol: String, lo: Long, hi: Long): DataFrame =
+    readPruned(spark, outDir, version)(_ => _.zoneOverlaps(lo, hi))
       .filter(col(keyCol).between(lo, hi))
-  }
 
   /** Compaction (the Delta `OPTIMIZE` shape): rewrite the LATEST
     * version's rows into `nFiles` fresh files and commit them as a new
@@ -4526,12 +4322,11 @@ object Export {
     require(nFiles >= 1, s"nFiles must be positive, got $nFiles")
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to compact under $outDir")
-    val rows = readSnapshot(spark, outDir, latest).coalesce(nFiles)
     val (fs, root) = fsRoot(outDir)
-    val baseLines = dataLines(readManifestRaw(fs, root, latest))
-    val (_, fresh) = writeEpoch(fs, root, latest + 1, rows)
-    commitCompactionFrom(fs, root, latest, baseLines, fresh,
-      rows.schema.json)
+    val base = readManifest(fs, root, latest)
+    val rows = readFilesAs(spark, root, base, base.entries).coalesce(nFiles)
+    commitCompactionFrom(fs, root, base,
+      writeEpoch(fs, root, Some(base), rows)._1, rows.schema.json)
   }
 
   /** Commit half of the whole-table compactions, with OPTIMISTIC RETRY
@@ -4547,38 +4342,39 @@ object Export {
     * re-derivation never renumbers silently: every attempt re-checks
     * the full interleaved window from the pinned base. */
   private def commitCompactionFrom(fs: FileSystem, root: Path,
-      baseVersion: Int, baseLines: Seq[String], fresh: Seq[String],
-      fallbackSchema: String): Int = {
-    val basePaths = baseLines.map(l =>
-      fs.makeQualified(new Path(pathOf(l))).toString).toSet
+      base: Manifest, fresh: Seq[String], fallbackSchema: String): Int = {
+    val basePaths = base.entries.map(e => qualify(fs, e.path)).toSet
+    commitOverAppends(fs, root, base, "compaction (it may have " +
+        "rewritten rows the compaction carried)") { head =>
+      val carried = head.entries.filterNot(e => basePaths(qualify(fs, e.path)))
+      commitMetadata(fs, root, head,
+        Map("compacted_from" -> base.version.toString),
+        head.meta.getOrElse("schema", fallbackSchema), "compact",
+        carried.map(_.line) ++ fresh)
+    }
+  }
+
+  /** The retry loop shared by commits computed FROM `base` that commute
+    * with interleaved APPENDS only: each attempt takes the current head
+    * (`base` itself while no commit interleaved), refuses any
+    * interleaved non-append with the typed conflict (`what` names the
+    * loser), and lets `commit` publish on top of it. */
+  private def commitOverAppends(fs: FileSystem, root: Path, base: Manifest,
+      what: String)(commit: Manifest => Int): Int = {
     var attempt = 0
     while (attempt <= MaxAppendRetries) {
-      val head = manifestVersions(fs, root).last
-      ((baseVersion + 1) to head).foreach { v =>
-        val op = snapshotMetaOf(fs, root, v).get("op")
+      val head = headOf(fs, root, Some(base)).get
+      ((base.version + 1) to head.version).foreach { v =>
+        val op = (if (v == head.version) head else readManifest(fs, root, v)).op
         if (!op.contains("append"))
           throw new ConcurrentCommitException(
-            s"concurrent '${op.getOrElse("?")}' commit _v$v under " +
-              s"$root does not commute with this compaction (it may " +
-              "have rewritten rows the compaction carried) - re-plan " +
-              "against the new head", v)
+            s"concurrent '${op.getOrElse("?")}' commit _v$v under $root " +
+              s"does not commute with this $what - re-plan against the " +
+              "new head", v)
       }
-      val carried =
-        if (head == baseVersion) Seq.empty[String]
-        else dataLines(readManifestRaw(fs, root, head)).filterNot(l =>
-          basePaths(fs.makeQualified(new Path(pathOf(l))).toString))
-      val schemaJson = snapshotMetaOf(fs, root, head)
-        .getOrElse("schema", fallbackSchema)
-      val version = head + 1
-      rewriteRaceInjector.foreach(_(root, version))
-      try {
-        commitManifest(fs, root, version,
-          internalMeta(fs, root,
-            carryBatch(fs, root,
-              Map("compacted_from" -> baseVersion.toString)),
-            schemaJson, op = "compact"), carried ++ fresh)
-        return version
-      } catch {
+      rewriteRaceInjector.foreach(_(root, head.version + 1))
+      try return commit(head)
+      catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt > MaxAppendRetries) throw e
@@ -4743,29 +4539,13 @@ object Export {
     } catch { case scala.util.control.NonFatal(_) =>
       DmlPlanned(cond, Seq.empty, Seq.empty) }
 
-  /** One manifest data line decoded to its [[ManifestEntry]] — the
-    * single decode point the DML pruning paths share. */
-  private def entryOfLine(l: String): ManifestEntry =
-    ManifestEntry(pathOf(l), partitionOf(l), statsOf(l), dvOf(l),
-      lenOf(l), zoneOf(l))
-
-  /** True when any line carries a tag the excludes kernel can prune
-    * with — the guard that keeps subquery expansion off tagless
-    * (pre-ANALYZE) tables. */
-  private def anyPruningTags(lines: Seq[String]): Boolean =
-    lines.exists(l => l.split('\t').exists(t =>
-      t.startsWith("s=") || t.startsWith("p=")))
-
-  /** Split `lines` into (possibly-matching, provably-excluded) under
-    * `conjuncts` — the shared half of every DML prune. */
-  private def pruneLines(lines: Seq[String],
-      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      physOf: Map[String, String]): (Seq[String], Seq[String]) =
-    lines.partition { l =>
-      val e = entryOfLine(l)
-      conjuncts.forall(c =>
-        !graft.sources.GraftLakeBatch.excludes(c, e, physOf))
-    }
+  /** Split `m`'s entries into (possibly-matching, provably-excluded)
+    * under `conjuncts` — the shared half of every DML prune. */
+  private def pruneEntries(m: Manifest,
+      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : (Seq[ManifestEntry], Seq[ManifestEntry]) =
+    m.entries.partition(e => conjuncts.forall(c =>
+      !graft.sources.GraftLakeBatch.excludes(c, e, m.physOf)))
 
   /** Copy-on-write DELETE — the third leg of the lake DML triad
     * (append = INSERT, [[Merge.upsert]] through [[replaceSnapshot]] =
@@ -4788,39 +4568,41 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to delete under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    if (lines.isEmpty) return latest
-    val stOpt = snapshotSchema(outDir, latest)
-    val physOf: Map[String, String] = stOpt
-      .map(_.fields.map(f => f.name -> physicalOf(f)).toMap)
-      .getOrElse(Map.empty)
-    val dml = dmlPlan(spark, cond, canExpand = anyPruningTags(lines))
+    val m = readManifest(fs, root, latest)
+    if (m.entries.isEmpty) return latest
+    val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
       val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val (hit, rest) = pruneLines(lines, conjuncts, physOf)
+      val (hit, rest) = pruneEntries(m, conjuncts)
       if (hit.isEmpty) return latest // every file provably misses: no-op
       // SQL DELETE semantics: remove rows where the predicate is TRUE —
       // a NULL-evaluating predicate KEEPS the row. A plain filter(!cond)
       // would drop NULL rows too (filter discards NULL), silently purging
       // every row with a NULL in the predicate's columns.
       val keep = !coalesce(pcond, lit(false))
-      val rows = readFilesAs(spark, fs, root, latest, hit)
+      val rows = readFilesAs(spark, root, m, hit)
         .alias(DmlOuterAlias).filter(keep)
-      val partCols = snapshotPartitionColumns(outDir, latest)
-      val fresh =
-        if (partCols.nonEmpty)
-          writePartitionedEpoch(spark, fs, root, latest + 1, rows,
-            partCols, math.max(1, hit.size), None)
-        else writeEpoch(fs, root, latest + 1, rows)._2
       // retries over interleaved APPENDS (delete-first serialization:
       // their rows were never visible to the predicate); anything else
       // raises the typed conflict
-      commitRewriteThenAppends(fs, root, latest, lines, rest ++ fresh,
+      commitRewriteThenAppends(fs, root, m,
+        rest.map(_.line) ++ writeRewrite(spark, fs, root, m, rows, hit.size),
         Map("deleted_from" -> latest.toString,
           "deleted_files" -> hit.size.toString),
-        stOpt.map(_.json).getOrElse(rows.schema.json),
-        op = "delete")
+        m.schemaOpt.fold(rows.schema.json)(_.json), op = "delete")
     } finally dml.release()
+  }
+
+  /** The fresh files of a row-level rewrite of `m`: re-laid-out with
+    * fresh p= specs on a partitioned table (a rewrite must not leave it
+    * inconsistently partitioned), one plain epoch otherwise. */
+  private def writeRewrite(spark: SparkSession, fs: FileSystem, root: Path,
+      m: Manifest, rows: DataFrame, nFiles: Int): Seq[String] = {
+    val partCols = partitionColumnsOf(m)
+    if (partCols.nonEmpty)
+      writePartitionedEpoch(spark, fs, root, Some(m), rows, partCols,
+        math.max(1, nFiles), None)
+    else writeEpoch(fs, root, Some(m), rows)._1
   }
 
   /** Commit a ROW-LEVEL rewrite (delete/update/merge — CoW or MoR)
@@ -4837,42 +4619,17 @@ object Export {
     * version's data lines; the committed schema follows the head
     * (appends may have evolved it — union semantics). */
   private def commitRewriteThenAppends(fs: FileSystem, root: Path,
-      baseVersion: Int, baseLines: Seq[String], computed: Seq[String],
-      meta: Map[String, String], fallbackSchema: String,
-      op: String): Int = {
-    val baseSet = baseLines.toSet
-    var attempt = 0
-    while (attempt <= MaxAppendRetries) {
-      val head = manifestVersions(fs, root).last
-      ((baseVersion + 1) to head).foreach { v =>
-        val headOp = snapshotMetaOf(fs, root, v).get("op")
-        if (!headOp.contains("append"))
-          throw new ConcurrentCommitException(
-            s"concurrent '${headOp.getOrElse("?")}' commit _v$v under " +
-              s"$root does not commute with this $op (both rewrote " +
-              "overlapping rows) - re-plan against the new head", v)
-      }
-      val appended =
-        if (head == baseVersion) Seq.empty[String]
-        else dataLines(readManifestRaw(fs, root, head))
-          .filterNot(baseSet)
-      val schemaJson = snapshotMetaOf(fs, root, head)
-        .getOrElse("schema", fallbackSchema)
-      val version = head + 1
-      rewriteRaceInjector.foreach(_(root, version))
-      try {
-        commitManifest(fs, root, version,
-          internalMeta(fs, root, carryBatch(fs, root, meta),
-            schemaJson, op = op), computed ++ appended)
-        return version
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > MaxAppendRetries) throw e
-      }
+      base: Manifest, computed: Seq[String], meta: Map[String, String],
+      fallbackSchema: String, op: String): Int = {
+    val baseSet = base.lines.toSet
+    commitOverAppends(fs, root, base,
+        s"$op (both rewrote overlapping rows)") { head =>
+      commitMetadata(fs, root, head, meta,
+        head.meta.getOrElse("schema", fallbackSchema), op,
+        computed ++ head.lines.filterNot(baseSet))
     }
-    throw new IllegalStateException("unreachable")
   }
+
 
   /** Copy-on-write UPDATE — the `UPDATE t SET c = expr WHERE pred` leg
     * of the DML triad, FILE-SCOPED: every latest-version row matching
@@ -4897,10 +4654,8 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to update under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val st = snapshotSchema(outDir, latest).getOrElse(
-      throw new IllegalStateException(s"version $latest under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
+    val m = readManifest(fs, root, latest)
+    val st = m.schema
     sets.foreach { case (n, _) =>
       require(st.fieldNames.contains(n),
         s"UPDATE assigns unknown column '$n' (table has " +
@@ -4909,17 +4664,13 @@ object Export {
     // file pruning through the predicate's conjuncts and the manifest
     // p=/s= tags — the same planning kernel the batch scan uses; a
     // non-analyzable predicate simply prunes nothing
-    val physOf: Map[String, String] =
-      st.fields.map(f => f.name -> physicalOf(f)).toMap
-    val dml = dmlPlan(spark, cond, canExpand = anyPruningTags(lines))
+    val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
       val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val (hit, rest) = pruneLines(lines, conjuncts, physOf)
+      val (hit, rest) = pruneEntries(m, conjuncts)
       if (hit.isEmpty) return latest // every file provably misses: no-op
-      val version = latest + 1
       // DV-aware, physical-decoded, logical-projected — the standard funnel
-      val rows = readFilesAs(spark, fs, root, latest, hit)
-        .alias(DmlOuterAlias)
+      val rows = readFilesAs(spark, root, m, hit).alias(DmlOuterAlias)
       val hitCond = coalesce(pcond, lit(false))
       val setMap = sets.toMap
       val updated = rows.select(st.fields.toSeq.map { f =>
@@ -4931,15 +4682,8 @@ object Export {
           case None => colQ(f.name)
         }
       }: _*)
-      val partCols = snapshotPartitionColumns(outDir, latest)
-      val fresh =
-        if (partCols.nonEmpty)
-          // re-laid-out with fresh p= specs: the rewrite must not leave a
-          // partitioned table inconsistently partitioned
-          writePartitionedEpoch(spark, fs, root, version, updated,
-            partCols, math.max(1, hit.size), None)
-        else writeEpoch(fs, root, version, updated)._2
-      commitRewriteThenAppends(fs, root, latest, lines, rest ++ fresh,
+      commitRewriteThenAppends(fs, root, m, rest.map(_.line) ++
+          writeRewrite(spark, fs, root, m, updated, hit.size),
         meta ++ Map(
           "updated_from" -> latest.toString,
           "updated_files" -> hit.size.toString),
@@ -4968,14 +4712,9 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to update under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    if (lines.isEmpty) return latest
-    val headMeta = snapshotMetaOf(fs, root, latest)
-    val st = headMeta.get("schema").map(j =>
-        org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType]).getOrElse(
-      throw new IllegalStateException(s"version $latest under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
+    val m = readManifest(fs, root, latest)
+    if (m.entries.isEmpty) return latest
+    val st = m.schema
     sets.foreach { case (n, _) =>
       require(st.fieldNames.contains(n),
         s"UPDATE assigns unknown column '$n' (table has " +
@@ -4983,22 +4722,20 @@ object Export {
     refuseIdentityAssignment(st, sets.map(_._1), "UPDATE")
     // manifest-tag pruning, same kernel as the CoW path: excluded
     // files are never read
-    val physOf: Map[String, String] =
-      st.fields.map(f => f.name -> physicalOf(f)).toMap
-    val dml = dmlPlan(spark, cond, canExpand = anyPruningTags(lines))
+    val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     // release() also covers the prune + candidate-scan construction
     // (r18 advisor): an exception between the plan pin and the commit
     // block must not leak the checkpointed subquery blocks until RDD GC
     var matchedOpt: Option[DataFrame] = None
     try {
       val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val candidate = pruneLines(lines, conjuncts, physOf)._1
+      val candidate = pruneEntries(m, conjuncts)._1
       if (candidate.isEmpty) return latest
       val cols = st.fieldNames.toSeq
       val fcol = freshName("__upd_file", cols)
       val pcol = freshName("__upd_pos", cols)
       // candidate scan with provenance, existing DVs subtracted
-      val live = scanWithPositions(spark, root, headMeta, candidate, st,
+      val live = scanWithPositions(spark, root, m, candidate, st,
         fcol, pcol, subtractDvs = true)
       val matched = live.alias(DmlOuterAlias)
         .filter(coalesce(pcond, lit(false))).persist()
@@ -5014,8 +4751,8 @@ object Export {
       val dvUri = fs.makeQualified(dvDir).toString
       val candSet = candidate.toSet
       // untouched lines: dv tag (if any) carries
-      val retagged = lines.map(l =>
-        if (candSet(l)) retagDv(fs, l, dvUri, counts) else l)
+      val retagged = m.entries.map(e =>
+        if (candSet(e)) retagDv(fs, e, dvUri, counts) else e.line)
       // (b) append the UPDATED copies as a fresh epoch
       val setMap = sets.toMap
       val updated = matched.select(st.fields.toSeq.map { f =>
@@ -5031,14 +4768,8 @@ object Export {
       // merge/overwrite/compact FOREVER (the upsertSnapshotMoR guard's
       // bug class, closed on this path by writing fresh p= specs — the
       // CoW [[updateWhere]] discipline)
-      val partCols = snapshotPartitionColumns(outDir, latest)
-      val insertLines =
-        if (partCols.nonEmpty)
-          writePartitionedEpoch(spark, fs, root, version, updated,
-            partCols, 1, None)
-        else writeEpoch(fs, root, version, updated)._2
-      commitRewriteThenAppends(fs, root, latest, lines,
-        retagged ++ insertLines,
+      commitRewriteThenAppends(fs, root, m,
+        retagged ++ writeRewrite(spark, fs, root, m, updated, 1),
         meta ++ Map(
           "mor_updated_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
@@ -5073,32 +4804,29 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to delete under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    if (lines.isEmpty) return latest
-    val headMeta = snapshotMetaOf(fs, root, latest)
-    val st = committedSchema(spark, headMeta, lines.map(entryOfLine))
+    val m = readManifest(fs, root, latest)
+    if (m.entries.isEmpty) return latest
+    val st = committedSchema(spark, m, m.entries)
     // manifest-tag pruning of the MATCH scan (r16): a file the
     // predicate's conjuncts — subquery conjuncts expanded — provably
     // exclude cannot hold a deletable row, so its bytes are never read
     // (its existing dv= tags still carry through the manifest line)
-    val physPrune: Map[String, String] =
-      st.fields.map(f => f.name -> physicalOf(f)).toMap
-    val dml = dmlPlan(spark, cond, canExpand = anyPruningTags(lines))
+    val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
-      val scanLines = pruneLines(lines, dml.conjuncts, physPrune)._1
+      val scanLines = pruneEntries(m, dml.conjuncts)._1
       if (scanLines.isEmpty) return latest
       val fcol = freshName("__dvp_file", st.fieldNames.toSeq)
       val pcol = freshName("__dvp_pos", st.fieldNames.toSeq)
       // evaluated on PHYSICAL rows: a position already in a DV that
       // matches again just re-unions (idempotent), and the distinct keeps
       // the recorded counts exact
-      val hit = scanWithPositions(spark, root, headMeta, scanLines, st,
+      val hit = scanWithPositions(spark, root, m, scanLines, st,
           fcol, pcol, subtractDvs = false)
         .alias(DmlOuterAlias)
         .filter(coalesce(dml.cond, lit(false)))
         .select(col(fcol).as(DvFileCol), col(pcol).as(DvPosCol))
-      val oldDirs = lines.flatMap(dvOf).map(_._1).distinct
-      val prevTotal = lines.flatMap(dvOf).map(_._2).sum
+      val oldDirs = m.entries.flatMap(_.dv).map(_._1).distinct
+      val prevTotal = m.entries.flatMap(_.dv).map(_._2).sum
       val version = latest + 1
       val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
         if (oldDirs.isEmpty) hit
@@ -5110,8 +4838,8 @@ object Export {
         return latest
       }
       val dvUri = fs.makeQualified(dvDir).toString
-      commitRewriteThenAppends(fs, root, latest, lines,
-        lines.map(retagDv(fs, _, dvUri, counts)),
+      commitRewriteThenAppends(fs, root, m,
+        m.entries.map(retagDv(fs, _, dvUri, counts)),
         Map(
           "mor_deleted_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
@@ -5162,13 +4890,8 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to upsert into under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val headMeta = snapshotMetaOf(fs, root, latest)
-    val schemaJson = headMeta.getOrElse("schema",
-      throw new IllegalStateException(s"version $latest under $root " +
-        "has no #schema= header (pre-header legacy manifest) - recommit"))
-    val st = org.apache.spark.sql.types.DataType.fromJson(schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val m = readManifest(fs, root, latest)
+    val st = m.schema
     val cols = st.fieldNames.toSeq
     require(updates.columns.toSeq.sorted == cols.sorted,
       s"schema mismatch: table ${cols.sorted} vs updates " +
@@ -5182,8 +4905,7 @@ object Export {
     // fresh `CREATE TABLE ... PARTITIONED BY` commits zero lines, so a
     // lines-only guard passes vacuously and the MoR merge as the
     // table's FIRST write would commit the poisoning spec-less epoch
-    require(lines.forall(l => partitionOf(l).isEmpty) &&
-        declaredPartitionColumns(outDir).isEmpty,
+    require(declaredLayout(fs, root, m).isEmpty,
       s"upsertSnapshotMoR into $outDir: the table is hive-partitioned " +
         "(by its data lines or its declared layout) and the MoR " +
         "insert epoch would carry no partition specs, breaking every " +
@@ -5221,17 +4943,11 @@ object Export {
         val env = u.agg(min(col(k)).cast("long"),
           max(col(k)).cast("long"), count(lit(1)), count(col(k)))
           .collect().head
-        if (env.getLong(2) == 0L) (Seq.empty[String], lines) // empty batch
+        if (env.getLong(2) == 0L) (Nil, m.entries) // empty batch
         else if (env.isNullAt(0) || env.getLong(3) < env.getLong(2))
-          (lines, Seq.empty[String]) // null keys: can't prove exclusion
-        else {
-          val (bmin, bmax) = (env.getLong(0), env.getLong(1))
-          lines.partition(l => zoneOf(l) match {
-            case Some((lo, hi)) => hi >= bmin && lo <= bmax
-            case None => true
-          })
-        }
-      case None => (lines, Seq.empty[String])
+          (m.entries, Nil) // null keys: can't prove exclusion
+        else m.entries.partition(_.zoneOverlaps(env.getLong(0), env.getLong(1)))
+      case None => (m.entries, Nil)
     }
     val fcol = freshName("__mor_file", cols)
     val pcol = freshName("__mor_pos", cols)
@@ -5243,7 +4959,7 @@ object Export {
     val matchedBase: Option[DataFrame] =
       if (candidate.isEmpty) None
       else {
-        val live = scanWithPositions(spark, root, headMeta, candidate, st,
+        val live = scanWithPositions(spark, root, m, candidate, st,
           fcol, pcol, subtractDvs = true)
         val ukeys = u.select(keyCols.map(col): _*).distinct()
         Some(live.as("b").join(ukeys.as("k"),
@@ -5292,7 +5008,8 @@ object Export {
       // untouched lines keep their old dirs). Pure-insert batches skip
       // the sidecar entirely.
       val (retagged, dvTotal) =
-        if (!anyBeaten) (candidate, candidate.flatMap(dvOf).map(_._2).sum)
+        if (!anyBeaten)
+          (candidate.map(_.line), candidate.flatMap(_.dv).map(_._2).sum)
         else {
           val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
             carriedDvs(spark, fs, candidate).fold(toDv)(toDv.unionByName))
@@ -5305,18 +5022,18 @@ object Export {
         if (!anyInsert) Seq.empty
         else clusterKey match {
           case Some(k) =>
-            writeClusteredEpoch(spark, fs, root, version, toInsert, k,
+            writeClusteredEpoch(spark, fs, root, Some(m), toInsert, k,
               nFiles)
           case None =>
-            writeEpoch(fs, root, version, toInsert.coalesce(nFiles))._2
+            writeEpoch(fs, root, Some(m), toInsert.coalesce(nFiles))._1
         }
 
-      commitRewriteThenAppends(fs, root, latest, lines,
-        untouched ++ retagged ++ insertLines,
+      commitRewriteThenAppends(fs, root, m,
+        untouched.map(_.line) ++ retagged ++ insertLines,
         meta ++ Map(
           "mor_upserted_into" -> latest.toString,
           "dv_positions" -> dvTotal.toString),
-        schemaJson, op = "merge")
+        m.schemaJson, op = "merge")
     } finally ranked.unpersist()
   }
 
@@ -5334,16 +5051,15 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to compact under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val baseLines = dataLines(readManifestRaw(fs, root, latest))
-    val rows = readSnapshot(spark, outDir, latest)
-    val fresh = writeClusteredEpoch(spark, fs, root, latest + 1,
+    val base = readManifest(fs, root, latest)
+    val rows = readFilesAs(spark, root, base, base.entries)
+    val fresh = writeClusteredEpoch(spark, fs, root, Some(base),
       rows, keyCol, nFiles)
     // same commute-with-appends retry as the plain compaction: a
     // carried append's lines are unzoned, so pruning degrades
     // gracefully there (zoneless lines always scan) until the next
     // clustered compaction re-sorts them
-    commitCompactionFrom(fs, root, latest, baseLines, fresh,
-      rows.schema.json)
+    commitCompactionFrom(fs, root, base, fresh, rows.schema.json)
   }
 
   /** True when a `p=` spec value can SATISFY `<op> lim` — the scope
@@ -5417,31 +5133,24 @@ object Export {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to compact under $outDir")
     val (fs, root) = fsRoot(outDir)
-    val lines = dataLines(readManifestRaw(fs, root, latest))
-    val physCols = partitionCols.map(physicalIn(outDir, latest, _))
-    requirePartitioned(lines, physCols, "compactSnapshotPartition")
-    val (hit, rest) = lines.partition { l =>
-      val spec = partitionOf(l)
-      partFilters.forall { case (c, v) =>
-        spec(physicalIn(outDir, latest, c)) == v } &&
-      partRanges.forall { case (c, op, lim) =>
-        rangeInScope(spark, spec(physicalIn(outDir, latest, c)),
-          op, lim) }
+    val m = readManifest(fs, root, latest)
+    requirePartitioned(m.entries, partitionCols.map(m.physicalIn),
+      "compactSnapshotPartition")
+    val (hit, rest) = m.entries.partition { e =>
+      def spec(c: String) = e.partition(m.physicalIn(c))
+      partFilters.forall { case (c, v) => spec(c) == v } &&
+        partRanges.forall { case (c, op, lim) =>
+          rangeInScope(spark, spec(c), op, lim) }
     }
     if (hit.isEmpty) return latest
-    val version = latest + 1
-    val rows = readFilesAs(spark, fs, root, latest, hit)
-    val fresh = writePartitionedEpoch(spark, fs, root, version, rows,
+    val rows = readFilesAs(spark, root, m, hit)
+    val fresh = writePartitionedEpoch(spark, fs, root, Some(m), rows,
       partitionCols, nFiles, zoneKey)
-    val schemaJson = snapshotMetaOf(fs, root, latest).getOrElse("schema",
-      rows.schema.json)
-    commitManifest(fs, root, version,
-      internalMeta(fs, root,
-        carryBatch(fs, root, Map(
-          "compacted_from" -> latest.toString,
-          "compacted_files" -> hit.size.toString)),
-        schemaJson, op = "compact"), rest ++ fresh)
-    version
+    commitMetadata(fs, root, m, Map(
+        "compacted_from" -> latest.toString,
+        "compacted_files" -> hit.size.toString),
+      m.meta.getOrElse("schema", rows.schema.json), "compact",
+      rest.map(_.line) ++ fresh)
   }
 
   /** Change-data-feed between two committed versions: every row of

@@ -78,10 +78,9 @@ object GraftLakeBatch {
       params: Map[String, String]): BaseRelation = {
     val version = resolveVersion(params, path)
     require(version >= 1, s"$path has no committed versions")
-    val schema = Export.snapshotSchema(path, version).getOrElse(
-      throw new IllegalStateException(s"version $version of $path has " +
-        "no #schema= header (pre-header legacy manifest) - recommit"))
-    val index = new GraftLakeFileIndex(spark, path, version, schema)
+    val m = Export.readManifest(path, version)
+    val schema = m.schema
+    val index = new GraftLakeFileIndex(spark, path, m, schema)
     if (index.dvDirs.nonEmpty)
       require(spark.sessionState.analyzer.extendedResolutionRules
           .exists(_.ruleName.contains("LakeDeletionVectors")),
@@ -269,13 +268,17 @@ final class GraftLakeFileIndex(spark: SparkSession, table: String,
     entries: Seq[Export.ManifestEntry], commitMs: Long, schema: StructType,
     rawFiles: Boolean) extends FileIndex {
 
+  /** The catalog/format read of the manifest `m` of `table`; a
+    * pre-timestamp commit stamps no mtime. */
+  def this(spark: SparkSession, table: String, m: Export.Manifest,
+      schema: StructType) =
+    this(spark, table, m.entries, m.committedAt.getOrElse(0L), schema,
+      rawFiles = false)
+
   /** The catalog/format read of `table` at `version`. */
   def this(spark: SparkSession, table: String, version: Int,
       schema: StructType) =
-    this(spark, table, Export.snapshotManifestEntries(table, version),
-      try Export.snapshotTimestamp(table, version)
-      catch { case _: IllegalStateException => 0L }, // pre-timestamp
-      schema, rawFiles = false)
+    this(spark, table, Export.readManifest(table, version), schema)
 
   private val (fs, root) = Export.fsRoot(table)
 

@@ -410,10 +410,14 @@ final class GraftLakeSource(spark: SparkSession,
     * on never-renamed tables). Package-visible so the spec can assert
     * on exactly what a batch plans. */
   private[sources] def plannedAddedEntries(v: Long)
+      : Seq[Export.ManifestEntry] =
+    plannedAddedEntries(Export.readManifest(path, v.toInt))
+
+  private def plannedAddedEntries(m: Export.Manifest)
       : Seq[Export.ManifestEntry] = {
     val physOf: Map[String, String] = dataSchema.fields
       .map(f => f.name -> Export.physicalOf(f)).toMap
-    Export.snapshotAddedEntries(path, v.toInt)
+    Export.addedEntries(path, m)
       .filter(e => pruneConjuncts.forall(c =>
         !GraftLakeBatch.excludes(c, e, physOf)))
   }
@@ -442,14 +446,18 @@ final class GraftLakeSource(spark: SparkSession,
     // deleted rows. Export.readSnapshot applies the anti-join and the
     // physical→logical projection; align its (possibly older) schema to
     // the pinned stream schema by physical identity.
-    val bootDv = bootVersion.filter(v =>
-      Export.snapshotHasDeletionVectors(path, v.toInt))
+    // each version's manifest is read once: its op, its DV tags and
+    // its added files all come from it
+    val manifests =
+      versions.map(v => v -> Export.readManifest(path, v.toInt)).toMap
+    val bootDv = bootVersion.filter(v => manifests(v).entries.exists(_.hasDv))
     val bootFrame = bootDv.map(v =>
       alignDataToPinned(Export.readSnapshot(spark, path, v.toInt)))
     val files = versions.filterNot(bootDv.contains).flatMap { v =>
-      Export.snapshotOperation(path, v.toInt) match {
-        case _ if bootVersion.contains(v) => plannedAddedEntries(v)
-        case Some("append") | None => plannedAddedEntries(v)
+      val m = manifests(v)
+      m.op match {
+        case _ if bootVersion.contains(v) => plannedAddedEntries(m)
+        case Some("append") | None => plannedAddedEntries(m)
         // metadata-only commits (column rename/drop) carry the head's
         // exact data lines: no rows appear or vanish, the stream keeps
         // its pinned schema and just flows past them. A MoR delete also
@@ -529,11 +537,10 @@ final class GraftLakeSource(spark: SparkSession,
     // every version's diff — not once per version (O(V²) metadata reads
     // on a catch-up batch)
     val survivors = Export.snapshotVersions(path)
-    val (appendVs, diffVs) = cdfGroups(versions, survivors)
+    val (appendVs, diffVs) = cdfPlan(versions, survivors)
     val appendPart: Option[DataFrame] = {
       val fileVer: Seq[(Export.ManifestEntry, Long)] =
-        appendVs.flatMap(v =>
-          Export.snapshotAddedEntries(path, v.toInt).map(e => (e, v)))
+        appendVs.flatMap { case (v, added) => added.map(e => (e, v)) }
       if (fileVer.isEmpty) None
       else {
         val scan = scanPhysical(fileVer.map(_._1))
@@ -579,12 +586,27 @@ final class GraftLakeSource(spark: SparkSession,
     * "pure add" no longer holds (intervening rewrites fold into the
     * gap), so it keeps the exact diff path. */
   private[sources] def cdfGroups(versions: Seq[Long],
-      survivors: Seq[Int]): (Seq[Long], Seq[Long]) =
-    versions.partition { v =>
-      Export.snapshotOperation(path, v.toInt).contains("append") &&
-        survivors.filter(_ < v.toInt).lastOption.forall(_ == v.toInt - 1) &&
-        Export.snapshotAddedEntries(path, v.toInt).forall(!_.hasDv)
+      survivors: Seq[Int]): (Seq[Long], Seq[Long]) = {
+    val (shared, diff) = cdfPlan(versions, survivors)
+    (shared.map(_._1), diff)
+  }
+
+  /** [[cdfGroups]] with each shared version's added entries, taken from
+    * the one manifest read that classified the version. */
+  private def cdfPlan(versions: Seq[Long], survivors: Seq[Int])
+      : (Seq[(Long, Seq[Export.ManifestEntry])], Seq[Long]) = {
+    val planned = versions.map { v =>
+      val m = Export.readManifest(path, v.toInt)
+      val added =
+        if (m.op.contains("append") &&
+            survivors.filter(_ < v.toInt).lastOption.forall(_ == v.toInt - 1))
+          Some(Export.addedEntries(path, m)).filter(_.forall(!_.hasDv))
+        else None
+      v -> added
     }
+    (planned.collect { case (v, Some(added)) => (v, added) },
+      planned.collect { case (v, None) => v })
+  }
 
   /** Project a CDF part (data columns under ITS version's names + the
     * two tag columns) onto the pinned stream schema by physical column

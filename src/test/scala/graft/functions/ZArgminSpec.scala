@@ -104,4 +104,18 @@ class ZArgminSpec extends SparkSpec {
       (0 until 2).map(t => neo.getItem(t)),
       ZExpressions.legacyLshBucketCols(col("_q"), 2, 3))
   }
+
+  test("lsh_buckets_z refuses planes outside 1..63: a bucket is one BIGINT bitmask") {
+    val q = org.apache.spark.sql.catalyst.expressions.Literal.create(null,
+      ArrayType(LongType))
+    Seq(0, 64, 65).foreach { planes =>
+      val e = intercept[IllegalArgumentException](
+        LshBucketsZExpr(q, 2, planes))
+      assert(e.getMessage.contains("planes"), e.getMessage)
+    }
+    val row = adversarialFrame.select(ZExpressions.lshBucketsZ(col("_q"), 2, 63))
+      .collect()(2).getSeq[Long](0)
+    // 63 planes fill bits 0..62: every bucket is a non-negative BIGINT
+    assert(row.size === 2 && row.forall(_ >= 0L))
+  }
 }

@@ -20,6 +20,8 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
       : org.apache.hadoop.fs.FSDataInputStream = {
     CountingFs.openCalls.incrementAndGet()
+    if (f.getName.matches("_v\\d+\\.manifest"))
+      CountingFs.manifestOpens.incrementAndGet()
     super.open(f, bufferSize)
   }
   override def getFileStatus(f: org.apache.hadoop.fs.Path)
@@ -33,7 +35,12 @@ object CountingFs {
   val listStatusCalls = new java.util.concurrent.atomic.AtomicLong
   val openCalls = new java.util.concurrent.atomic.AtomicLong
   val statCalls = new java.util.concurrent.atomic.AtomicLong
-  def reset(): Unit = { listStatusCalls.set(0); openCalls.set(0); statCalls.set(0) }
+  /** Opens of committed `_v<N>.manifest` files alone. */
+  val manifestOpens = new java.util.concurrent.atomic.AtomicLong
+  def reset(): Unit = {
+    listStatusCalls.set(0); openCalls.set(0); statCalls.set(0)
+    manifestOpens.set(0)
+  }
 }
 
 class VersionHintSpec extends SparkSpec {
