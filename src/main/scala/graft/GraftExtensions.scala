@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Cast, EqualTo, Expression, ExpressionInfo, Literal, Subtract}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, MapType, StringType}
 import graft.functions.{Crc64Expr, GramHashes, LaneAgreement, LanesXxHash, MinhashSigs, MinhashSigsPacked, NfcNormalize, PackVec, PackedDot, PackedSketch, PqAdc, PqEncode, Simhash64}
+import graft.operators.Export.Layout
 
 /** §2.8 extension seam: graft's native Catalyst expressions as SQL
   * functions. Two entry points:
@@ -650,9 +651,8 @@ object GraftExtensions {
                 else graft.operators.Merge.upsert(base, updates, keys)
               // keep the declared layout: a partitioned table whose
               // layout exceeds the key set still commits partitioned
-              if (partCols.nonEmpty)
-                E.replaceSnapshotPartitioned(spark, merged, path, partCols)
-              else E.replaceSnapshot(spark, merged, path)
+              E.replaceSnapshot(spark, merged, path,
+                Layout.partitionedBy(partCols))
             }
           Seq(v.toLong)
         }
@@ -678,11 +678,11 @@ object GraftExtensions {
           val E = graft.operators.Export
           val v = layoutSpec match {
             case Some(spec) => spec.split(':') match {
-              case Array("cluster", k) =>
-                E.compactSnapshotClustered(spark, path, k.trim, nFiles)
+              case Array("cluster", k) => E.compactSnapshot(spark, path,
+                layout = Some(Layout.Clustered(k.trim, nFiles)))
               case Array("zorder", ab) => ab.split(',').map(_.trim) match {
-                case Array(a, b) =>
-                  E.compactSnapshotZordered(spark, path, a, b, nFiles)
+                case Array(a, b) => E.compactSnapshot(spark, path,
+                  layout = Some(Layout.Zordered(a, b, nFiles)))
                 case _ => throw new IllegalArgumentException(
                   s"zorder spec needs two columns, got: $spec")
               }
@@ -708,17 +708,9 @@ object GraftExtensions {
                 "layout spec is 'cluster:key', 'zorder:a,b' or " +
                   s"'partition:col=val[/col=val]', got: $spec")
             }
-            case None =>
-              // a declared cluster key makes the bare OPTIMIZE
-              // re-cluster by default (OPTIMIZE ≡ OPTIMIZE ... ORDER
-              // BY <graft.cluster.key>) — compacting a zoned table
-              // into an unzoned blob would silently erode every
-              // zone-scoped merge and pruned read behind it
-              E.snapshotProperties(path).get("graft.cluster.key") match {
-                case Some(k) =>
-                  E.compactSnapshotClustered(spark, path, k, nFiles)
-                case None => E.compactSnapshot(spark, path, nFiles)
-              }
+            // the bare OPTIMIZE keeps the table's declared layout
+            // (partitions, else its graft.cluster.key zones)
+            case None => E.compactSnapshot(spark, path, nFiles)
           }
           Seq(v.toLong, E.snapshotFiles(path, v).size.toLong)
         }

@@ -279,21 +279,20 @@ object Main {
           if (partCols.nonEmpty) partCols else partFilters.keys.toSeq,
           partFilters, nFiles)
       }
-      else o("zorder-by").headOption match {
-        case Some(keys) => keys.split(",").map(_.trim) match {
-          case Array(a, b) => graft.operators.Export
-            .compactSnapshotZordered(spark, dir, a, b, nFiles)
-          case _ =>
-            System.err.println("--zorder-by expects exactly two " +
-              s"comma-separated columns, got: $keys")
-            sys.exit(2)
-        }
-        case None => o("cluster-by").headOption match {
-          case Some(key) => graft.operators.Export
-            .compactSnapshotClustered(spark, dir, key, nFiles)
-          case None => graft.operators.Export
-            .compactSnapshot(spark, dir, nFiles)
-        }
+      else {
+        import graft.operators.Export.Layout
+        // without --zorder-by/--cluster-by the table keeps its declared
+        // layout (partitions, else its graft.cluster.key zones)
+        val layout = o("zorder-by").headOption.map(keys =>
+          keys.split(",").map(_.trim) match {
+            case Array(a, b) => Layout.Zordered(a, b, nFiles)
+            case _ =>
+              System.err.println("--zorder-by expects exactly two " +
+                s"comma-separated columns, got: $keys")
+              sys.exit(2)
+          }).orElse(o("cluster-by").headOption.map(
+            Layout.Clustered(_, nFiles)))
+        graft.operators.Export.compactSnapshot(spark, dir, nFiles, layout)
       }
     println(s"compacted $dir into version $v " +
       s"(${graft.operators.Export.snapshotFiles(dir, v).size} files)")

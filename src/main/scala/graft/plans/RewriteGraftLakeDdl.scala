@@ -269,14 +269,14 @@ final case class RewriteGraftLakeDdl(spark: SparkSession)
               E.compactSnapshotPartition(s, dir, partCols, filters, 1,
                 None, ranges)
             case (None, Seq(k)) =>
-              E.compactSnapshotClustered(s, dir, k, 1)
+              E.compactSnapshot(s, dir,
+                layout = Some(E.Layout.Clustered(k, 1)))
             case (None, Seq(a, b)) =>
-              E.compactSnapshotZordered(s, dir, a, b, 1)
-            case (None, Nil) =>
-              E.snapshotProperties(dir).get("graft.cluster.key") match {
-                case Some(k) => E.compactSnapshotClustered(s, dir, k, 1)
-                case None => E.compactSnapshot(s, dir, 1)
-              }
+              E.compactSnapshot(s, dir,
+                layout = Some(E.Layout.Zordered(a, b, 1)))
+            // the table's declared layout (partitions, else its
+            // graft.cluster.key zones)
+            case (None, Nil) => E.compactSnapshot(s, dir, 1)
             case (None, more) => throw new IllegalArgumentException(
               s"ZORDER BY takes one or two columns, got " +
                 more.mkString(", "))

@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, GraftPlanBridge}
 
 import graft.operators.{Export, Merge}
+import graft.operators.Export.Layout
 import graft.sources.GraftLakeTable
 
 /** Native `MERGE INTO` / `UPDATE` SQL on lake catalog tables — the
@@ -516,8 +517,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       val partCols = Export.declaredPartitionColumns(dir)
       condOpt match {
         case None =>
-          if (partCols.isEmpty) Export.replaceSnapshot(s, df, dir)
-          else Export.replaceSnapshotPartitioned(s, df, dir, partCols)
+          Export.replaceSnapshot(s, df, dir,
+            Layout.partitionedBy(partCols))
         case Some(cond) =>
           require(partCols.nonEmpty &&
             refNames.forall(partCols.contains),
@@ -721,9 +722,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       } else {
         val remaining = Export.readSnapshot(s, dir, latest)
           .join(sourceKeys, keys, "left_anti")
-        if (partCols.nonEmpty)
-          Export.replaceSnapshotPartitioned(s, remaining, dir, partCols)
-        else Export.replaceSnapshot(s, remaining, dir)
+        Export.replaceSnapshot(s, remaining, dir,
+          Layout.partitionedBy(partCols))
       }
       ()
     })
@@ -776,10 +776,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       val existing = Export.snapshotKeysOverlapping(s, dir, latest,
         keys, src.select(keys.map(col): _*))
       val fresh = src.join(existing, keys, "left_anti")
-      val partCols = Export.snapshotPartitionColumns(dir, latest)
-      if (partCols.nonEmpty)
-        Export.appendSnapshotPartitioned(s, fresh, dir, partCols)
-      else Export.appendSnapshot(s, fresh, dir)
+      Export.appendSnapshot(s, fresh, dir, Layout.partitionedBy(
+        Export.snapshotPartitionColumns(dir, latest)))
       ()
     })
   }
@@ -854,9 +852,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       } else {
         val merged = Merge.upsert(
           Export.readSnapshot(s, dir, latest), updates, keys)
-        if (partCols.nonEmpty)
-          Export.replaceSnapshotPartitioned(s, merged, dir, partCols)
-        else Export.replaceSnapshot(s, merged, dir)
+        Export.replaceSnapshot(s, merged, dir,
+          Layout.partitionedBy(partCols))
       }
       ()
     })
@@ -1133,9 +1130,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
               .select((keys ++ extraCols).map(col): _*).distinct()
           }
         val fresh = insertRows(existing)
-        if (partCols.nonEmpty)
-          Export.appendSnapshotPartitioned(s, fresh, dir, partCols)
-        else Export.appendSnapshot(s, fresh, dir)
+        Export.appendSnapshot(s, fresh, dir,
+          Layout.partitionedBy(partCols))
       } else {
         // SQL cardinality law: with matched clauses present, a
         // duplicate source merge key would update/delete one target
@@ -1274,7 +1270,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
             else if (insertActs.nonEmpty && !out.isEmpty)
               // no candidate partition holds a matchable row, but the
               // insert legs may still fire — append-only commit
-              Export.appendSnapshotPartitioned(s, out, dir, partCols)
+              Export.appendSnapshot(s, out, dir,
+                Layout.Partitioned(partCols))
             // else: nothing can change
           case None =>
           // ZONE-SCOPED general merge: an unpartitioned table kept
@@ -1302,10 +1299,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
             case None =>
               val result = resolveAgainst(
                 Export.readSnapshot(s, dir, latest))
-              if (partCols.nonEmpty)
-                Export.replaceSnapshotPartitioned(s, result, dir,
-                  partCols)
-              else Export.replaceSnapshot(s, result, dir)
+              Export.replaceSnapshot(s, result, dir,
+                Layout.partitionedBy(partCols))
           }
         }
       }

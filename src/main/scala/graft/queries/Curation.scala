@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Decontam, Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Export.Layout
 import graft.util.Tables
 
 /** LLM-data-pipeline queries over `documents` / `embeddings`: dedup family,
@@ -4358,7 +4359,7 @@ object Curation {
       |ORDER BY _change, doc_id""".stripMargin
 
   /** Zone-pruned TIME TRAVEL
-    * ([[graft.operators.Export.appendSnapshotClustered]] +
+    * ([[graft.operators.Export.Layout.Clustered]] +
     * [[graft.operators.Export.readSnapshotPruned]]): two clustered
     * epochs (evens then odds, 8 range-sorted files each) whose per-file
     * min/max zones ride the snapshot manifests themselves — the
@@ -4375,10 +4376,12 @@ object Curation {
     def deleteRec(f: java.io.File): Unit = graft.util.Dirs.deleteRec(f)
     deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotClustered(s,
-      docs.filter(col("doc_id") % 2 === 0), od, "doc_id", nFiles = 8)
-    val v2 = graft.operators.Export.appendSnapshotClustered(s,
-      docs.filter(col("doc_id") % 2 === 1), od, "doc_id", nFiles = 8)
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od,
+      Layout.Clustered("doc_id", nFiles = 8))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Clustered("doc_id", nFiles = 8))
     graft.operators.Export.readSnapshotPruned(s, od, v2, "doc_id",
         lo = 100L, hi = 300L)
       .groupBy("lang")
@@ -4621,7 +4624,7 @@ object Curation {
       |ORDER BY version""".stripMargin
 
   /** Hive-style PARTITIONED snapshot table
-    * ([[graft.operators.Export.appendSnapshotPartitioned]] +
+    * ([[graft.operators.Export.Layout.Partitioned]] +
     * [[graft.operators.Export.readSnapshotPartitioned]]): two epochs
     * appended partitioned by `lang`, manifest data lines carrying each
     * file's partition spec, then a partition-filtered read of the
@@ -4636,10 +4639,12 @@ object Curation {
       s"snappart_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s,
-      docs.filter(col("doc_id") % 2 === 0), od, Seq("lang"), nFiles = 4)
-    val v2 = graft.operators.Export.appendSnapshotPartitioned(s,
-      docs.filter(col("doc_id") % 2 === 1), od, Seq("lang"), nFiles = 4)
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
     graft.operators.Export.readSnapshotPartitioned(s, od, v2,
         Map("lang" -> "en"))
       .groupBy("source")
@@ -4657,7 +4662,7 @@ object Curation {
       |GROUP BY source ORDER BY source""".stripMargin
 
   /** Partition + zone pruning COMPOSED
-    * ([[graft.operators.Export.appendSnapshotPartitioned]] with
+    * ([[graft.operators.Export.Layout.Partitioned]] with
     * `zoneKey`): one epoch partitioned by `lang` AND range-clustered on
     * `doc_id` within partitions, each manifest line carrying BOTH the
     * partition spec and the file's doc_id zone — multi-dimension file
@@ -4671,8 +4676,8 @@ object Curation {
       s"snappz_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    val v1 = graft.operators.Export.appendSnapshotPartitioned(s, docs, od,
-      Seq("lang"), nFiles = 10, zoneKey = Some("doc_id"))
+    val v1 = graft.operators.Export.appendSnapshot(s, docs, od,
+      Layout.Partitioned(Seq("lang"), nFiles = 10, zoneKey = Some("doc_id")))
     graft.operators.Export.readSnapshotPartitioned(s, od, v1,
         Map("lang" -> "en"), zone = Some(("doc_id", 100L, 400L)))
       .agg(count(lit(1)).as("n_docs"),
@@ -4688,7 +4693,7 @@ object Curation {
       |WHERE lang = 'en' AND doc_id BETWEEN 100 AND 400""".stripMargin
 
   /** DML on a PARTITIONED snapshot table
-    * ([[graft.operators.Export.appendSnapshotPartitioned]] +
+    * ([[graft.operators.Export.Layout.Partitioned]] +
     * [[graft.operators.Export.deleteWhere]]): v1 = the corpus
     * partitioned by `lang`, v2 = CoW DELETE of every `zh` doc (a
     * partition-aligned purge — the "drop a tenant/date" request every
@@ -4703,8 +4708,8 @@ object Curation {
       s"snappd_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    val v1 = graft.operators.Export.appendSnapshotPartitioned(s, docs, od,
-      Seq("lang"), nFiles = 4)
+    val v1 = graft.operators.Export.appendSnapshot(s, docs, od,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
     val v2 = graft.operators.Export.deleteWhere(s, od,
       col("lang") === "zh")
     val zhBefore = graft.operators.Export.readSnapshotPartitioned(s, od,
@@ -4750,8 +4755,8 @@ object Curation {
       s"snaprw_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s, docs, od,
-      Seq("lang"), nFiles = 4)
+    graft.operators.Export.appendSnapshot(s, docs, od,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
     val reload = docs.filter(col("lang") === "en" && col("doc_id") % 2 === 0)
       .withColumn("n_chars", col("n_chars") + lit(1000L))
     val v2 = graft.operators.Export.overwritePartitions(s, reload, od,
@@ -4792,8 +4797,8 @@ object Curation {
       s"snapmp_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s, docs, od,
-      Seq("lang"), nFiles = 3)
+    graft.operators.Export.appendSnapshot(s, docs, od,
+      Layout.Partitioned(Seq("lang"), nFiles = 3))
     val updates = docs
       .filter(col("lang") === "en" && col("doc_id") % 7 === 0)
       .withColumn("n_chars", col("n_chars") * 2)
@@ -4923,14 +4928,14 @@ object Curation {
       s"snaprnp_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s,
+    graft.operators.Export.appendSnapshot(s,
       docs.filter(pmod(col("doc_id"), lit(2)) === 0), od,
-      partitionCols = Seq("lang"), nFiles = 1)
+      Layout.Partitioned(cols = Seq("lang"), nFiles = 1))
     graft.operators.Export.renameSnapshotColumn(od, "lang", "language")
-    val v3 = graft.operators.Export.appendSnapshotPartitioned(s,
+    val v3 = graft.operators.Export.appendSnapshot(s,
       docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         .withColumnRenamed("lang", "language"), od,
-      partitionCols = Seq("language"), nFiles = 1)
+      Layout.Partitioned(cols = Seq("language"), nFiles = 1))
     graft.operators.Export.readSnapshotPartitioned(s, od, v3,
         Map("language" -> "en"))
       .orderBy("doc_id")
@@ -4987,8 +4992,8 @@ object Curation {
       s"snapcp_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s, docs, od,
-      Seq("lang"), nFiles = 4)
+    graft.operators.Export.appendSnapshot(s, docs, od,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
     val vC = graft.operators.Export.compactSnapshotPartition(s, od,
       Seq("lang"), Map("lang" -> "en"), nFiles = 1)
     graft.operators.Export.readSnapshot(s, od, vC)
@@ -5006,7 +5011,7 @@ object Curation {
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
   /** Z-ORDERED snapshot commits
-    * ([[graft.operators.Export.appendSnapshotZordered]] — the snapshot-
+    * ([[graft.operators.Export.Layout.Zordered]] — the snapshot-
     * log form of `ZORDER BY (a, b)`): two epochs each range-clustered on
     * the Morton interleave of (doc_id, n_chars) with BOTH keys' per-file
     * min/max riding the manifests, then a box query answered through
@@ -5021,12 +5026,12 @@ object Curation {
       s"snapzo_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotZordered(s,
-      docs.filter(col("doc_id") % 2 === 0), od, "doc_id", "n_chars",
-      nFiles = 8)
-    val v2 = graft.operators.Export.appendSnapshotZordered(s,
-      docs.filter(col("doc_id") % 2 === 1), od, "doc_id", "n_chars",
-      nFiles = 8)
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od,
+      Layout.Zordered("doc_id", "n_chars", nFiles = 8))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Zordered("doc_id", "n_chars", nFiles = 8))
     graft.operators.Export.readSnapshotBox(s, od, v2,
         "doc_id", "n_chars", 50L, 220L, 100L, 260L)
       .agg(count(lit(1)).as("n_docs"),
@@ -5043,7 +5048,7 @@ object Curation {
       |  AND n_chars BETWEEN 100 AND 260""".stripMargin
 
   /** Bloom-filter manifest point lookups
-    * ([[graft.operators.Export.appendSnapshotBloomed]] /
+    * ([[graft.operators.Export.Layout.Bloomed]] /
     * [[graft.operators.Export.readSnapshotPoint]]): two epochs commit
     * with per-file `b=doc_id:` bloom tags, then three needle lookups are
     * answered planning only claimed files — the pruning shape range
@@ -5057,10 +5062,12 @@ object Curation {
       s"snapbl_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotBloomed(s,
-      docs.filter(col("doc_id") % 2 === 0), od, "doc_id", nFiles = 8)
-    val v2 = graft.operators.Export.appendSnapshotBloomed(s,
-      docs.filter(col("doc_id") % 2 === 1), od, "doc_id", nFiles = 8)
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od,
+      Layout.Bloomed("doc_id", nFiles = 8))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Bloomed("doc_id", nFiles = 8))
     Seq(5L, 123L, 321L)
       .map(id => graft.operators.Export.readSnapshotPoint(s, od, v2,
         "doc_id", id))
@@ -5198,12 +5205,12 @@ object Curation {
       s"snapmeta_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotStatted(s,
+    graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 0), od,
-      Seq("doc_id", "n_chars"), nFiles = 8)
-    val v2 = graft.operators.Export.appendSnapshotStatted(s,
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
+    val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
-      Seq("doc_id", "n_chars"), nFiles = 8)
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
     val v3 = graft.operators.Export.deleteWhereMoR(s, od,
       col("n_chars") < 150)
     def need[T](o: Option[T], what: String): T = o.getOrElse(
@@ -5235,7 +5242,7 @@ object Curation {
       |FROM documents""".stripMargin
 
   /** Per-column manifest stats
-    * ([[graft.operators.Export.appendSnapshotStatted]] /
+    * ([[graft.operators.Export.Layout.Statted]] /
     * [[graft.operators.Export.readSnapshotRange]]): two epochs commit
     * with min/max tags for BOTH doc_id and n_chars on every manifest
     * line, then a conjunctive range query is answered pruning on both
@@ -5249,12 +5256,12 @@ object Curation {
       s"snapst_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotStatted(s,
+    graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 0), od,
-      Seq("doc_id", "n_chars"), nFiles = 8)
-    val v2 = graft.operators.Export.appendSnapshotStatted(s,
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
+    val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
-      Seq("doc_id", "n_chars"), nFiles = 8)
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
     graft.operators.Export.readSnapshotRange(s, od, v2,
         Map("doc_id" -> ((60L, 240L)), "n_chars" -> ((120L, 300L))))
       .agg(count(lit(1)).as("n_docs"),
@@ -5340,10 +5347,11 @@ object Curation {
       s"snapevo_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotPartitioned(s,
-      docs.filter(col("doc_id") % 2 === 0), od, Seq("lang"))
-    val v2 = graft.operators.Export.appendSnapshotPartitioned(s,
-      docs.filter(col("doc_id") % 2 === 1), od, Seq("lang", "source"))
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od, Layout.Partitioned(Seq("lang")))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Partitioned(Seq("lang", "source")))
     def agg(tag: Int, filters: Map[String, String]) =
       graft.operators.Export.readSnapshotPartitioned(s, od, v2, filters)
         .agg(count(lit(1)).as("n_docs"),
@@ -5473,10 +5481,12 @@ object Curation {
       s"snapmc_${math.abs(dir.hashCode)}")
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
-    graft.operators.Export.appendSnapshotClustered(s,
-      docs.filter(col("doc_id") % 2 === 0), od, "doc_id", nFiles = 4)
-    val v2 = graft.operators.Export.appendSnapshotClustered(s,
-      docs.filter(col("doc_id") % 2 === 1), od, "doc_id", nFiles = 4)
+    graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 0), od,
+      Layout.Clustered("doc_id", nFiles = 4))
+    val v2 = graft.operators.Export.appendSnapshot(s,
+      docs.filter(col("doc_id") % 2 === 1), od,
+      Layout.Clustered("doc_id", nFiles = 4))
     val updates = docs
       .filter(col("doc_id") % 4 === 0 && col("doc_id") < 150)
       .withColumn("n_chars", col("n_chars") + 100L)
@@ -5887,8 +5897,9 @@ object Curation {
     // clustered on n_chars: its VALUE distribution (not the row count)
     // sets the file ranges, so the literal cutoff below prunes at every
     // scale factor
-    E.appendSnapshotStatted(s, docs, od, statCols = Seq("n_chars"),
-      nFiles = 5, clusterBy = Some("n_chars"))
+    E.appendSnapshot(s, docs, od,
+      Layout.Statted(cols = Seq("n_chars"), nFiles = 5,
+        clusterBy = Some("n_chars")))
     val loFiles = E.snapshotManifestEntries(od, 1)
       .filter(_.stats.get("n_chars").exists(_._2 < 400)).map(_.path).toSet
     require(loFiles.nonEmpty, "fixture produced no low-range files")
@@ -5930,7 +5941,7 @@ object Curation {
     graft.util.Dirs.deleteRec(out)
     val od = out.getAbsolutePath
     val E = graft.operators.Export
-    E.appendSnapshotPartitioned(s, docs, od, Seq("lang"))
+    E.appendSnapshot(s, docs, od, Layout.Partitioned(Seq("lang")))
     val v1Files = E.snapshotFiles(od, 1).toSet
     val v = s.sql(s"SELECT version FROM graft_update('$od', " +
       "'n_chars=n_chars + doc_id', 'doc_id % 4 = 1', 'mor')")
@@ -6833,7 +6844,8 @@ object Curation {
     val dirT = s"${wh.getAbsolutePath}/g/docs"
     val E = graft.operators.Export
     // OPTIMIZE ... ORDER BY: establish the zoned multi-file layout
-    E.compactSnapshotClustered(s, dirT, "doc_id", nFiles = 6)
+    E.compactSnapshot(s, dirT,
+      layout = Some(Layout.Clustered("doc_id", nFiles = 6)))
     val v0 = E.latestSnapshotVersion(dirT)
     val hiBefore = E.snapshotManifestEntries(dirT, v0)
       .filter(_.zone.exists(_._1 > 100L)).map(_.path).toSet
@@ -7083,7 +7095,8 @@ object Curation {
       "FROM q_sql_mdz_src")
     val dirT = s"${wh.getAbsolutePath}/g/docs"
     val E = graft.operators.Export
-    E.compactSnapshotClustered(s, dirT, "doc_id", nFiles = 6)
+    E.compactSnapshot(s, dirT,
+      layout = Some(Layout.Clustered("doc_id", nFiles = 6)))
     val v0 = E.latestSnapshotVersion(dirT)
     val hiBefore = E.snapshotManifestEntries(dirT, v0)
       .filter(_.zone.exists(_._1 > 200L)).map(_.path).toSet

@@ -18,6 +18,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.operators.Export
+import graft.operators.Export.Layout
 
 /** SQL CATALOG over graft lake tables — the last mile of the SQL story:
   * after
@@ -734,11 +735,8 @@ final class GraftLakeTable(catalogName: String, ident: Identifier,
   /** The table's declared partition layout: derived from the head's
     * committed `p=` specs once data exists, from the CREATE commit's
     * recorded `partition_cols` before the first insert. */
-  private def layoutCols: Seq[String] =
-    Export.declaredPartitionColumns(dir)
-
   override def partitioning(): Array[Transform] =
-    layoutCols.map(c =>
+    Export.declaredPartitionColumns(dir).map(c =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(c))
       .toArray
 
@@ -752,31 +750,20 @@ final class GraftLakeTable(catalogName: String, ident: Identifier,
             override def insert(data: org.apache.spark.sql.DataFrame,
                 legacyOverwrite: Boolean): Unit = {
               val spark = data.sparkSession
-              val parts = layoutCols
-              // a declared cluster key (`graft.cluster.key`) makes
-              // every INSERT land as a ZONED epoch — zone-scoped
-              // merges and pruned reads work from the first write,
-              // no OPTIMIZE ... ORDER BY bootstrap needed
-              val clusterKey =
-                if (parts.nonEmpty) None
-                else Export.snapshotProperties(dir)
-                  .get("graft.cluster.key")
-                  .filter(data.columns.contains)
-              if (overwrite || legacyOverwrite) {
-                if (parts.nonEmpty) Export.replaceSnapshotPartitioned(
-                  spark, data, dir, parts)
-                else Export.replaceSnapshot(spark, data, dir)
-              } else clusterKey match {
-                case Some(k) =>
-                  // keep the batch's own parallelism: one zoned file
-                  // per incoming partition, like the plain epoch write
-                  Export.appendSnapshotClustered(spark, data, dir, k,
-                    nFiles = math.max(1, data.rdd.getNumPartitions))
-                case None =>
-                  if (parts.nonEmpty) Export.appendSnapshotPartitioned(
-                    spark, data, dir, parts)
-                  else Export.appendSnapshot(spark, data, dir)
+              // every INSERT lands in the table's declared layout: a
+              // `graft.cluster.key` table gets a ZONED epoch, so
+              // zone-scoped merges and pruned reads work from the
+              // first write, no OPTIMIZE ... ORDER BY bootstrap needed
+              val layout = Export.declaredLayout(dir) match {
+                // keep the batch's own parallelism: one zoned file per
+                // incoming partition, like the plain epoch write
+                case Layout.Clustered(k, _) =>
+                  Layout.Clustered(k, math.max(1, data.rdd.getNumPartitions))
+                case l => l
               }
+              if (overwrite || legacyOverwrite)
+                Export.replaceSnapshot(spark, data, dir, layout)
+              else Export.appendSnapshot(spark, data, dir, layout)
             }
           }
       }

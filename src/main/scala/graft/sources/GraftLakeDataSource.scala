@@ -10,6 +10,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.operators.Export
+import graft.operators.Export.Layout
 
 /** STREAMING SOURCE over a graft snapshot table — the read half of the
   * lake's streaming story (the write half is the exactly-once
@@ -125,10 +126,9 @@ final class GraftLakeDataSource
   /** BATCH write: `df.write.format("graftlake")
     * .mode("append"|"overwrite").option("partitionBy", "c1,c2")
     * .save(dir)`. Modes map to commit kinds: append →
-    * [[Export.appendSnapshot]]/[[Export.appendSnapshotPartitioned]],
-    * overwrite → [[Export.replaceSnapshot]]/
-    * [[Export.replaceSnapshotPartitioned]] (a full-replace VERSION —
-    * time travel keeps the old states; never a file-level truncate).
+    * [[Export.appendSnapshot]], overwrite → [[Export.replaceSnapshot]]
+    * (a full-replace VERSION — time travel keeps the old states; never
+    * a file-level truncate), partitioned when `partitionBy` is set.
     * Partitioning rides an option because Spark's v1 save path does not
     * forward `.partitionBy` to a CreatableRelationProvider. */
   override def createRelation(ctx: SQLContext,
@@ -147,8 +147,11 @@ final class GraftLakeDataSource
     }
     // unpartitioned epochs keep the frame's natural parallelism unless
     // the caller sizes them; partitioned epochs range-shuffle anyway
-    val shaped = filesPerCommit.map(data.coalesce).getOrElse(data)
-    val nFiles = filesPerCommit.getOrElse(1)
+    val layout = Layout.partitionedBy(partCols,
+      filesPerCommit.getOrElse(1))
+    val shaped =
+      if (layout != Layout.Plain) data
+      else filesPerCommit.map(data.coalesce).getOrElse(data)
     val exists = Export.latestSnapshotVersion(path) >= 1
     mode match {
       case SaveMode.ErrorIfExists if exists =>
@@ -156,15 +159,9 @@ final class GraftLakeDataSource
           s"$path already has a snapshot log (mode=ErrorIfExists)")
       case SaveMode.Ignore if exists => ()
       case SaveMode.Overwrite =>
-        if (partCols.nonEmpty)
-          Export.replaceSnapshotPartitioned(spark, data, path, partCols,
-            nFiles)
-        else Export.replaceSnapshot(spark, shaped, path)
+        Export.replaceSnapshot(spark, shaped, path, layout)
       case _ => // Append, or first write under ErrorIfExists/Ignore
-        if (partCols.nonEmpty)
-          Export.appendSnapshotPartitioned(spark, data, path, partCols,
-            nFiles)
-        else Export.appendSnapshot(spark, shaped, path)
+        Export.appendSnapshot(spark, shaped, path, layout)
     }
     GraftLakeBatch.relation(spark, path,
       params.filterNot(_._1.equalsIgnoreCase("partitionBy")))

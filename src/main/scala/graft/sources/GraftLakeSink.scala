@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.{Export, Merge}
+import graft.operators.Export.Layout
 
 /** STREAMING SINK into a graft snapshot table — the write half of
   * `format("graftlake")`, so a lake-to-lake pipeline is pure format
@@ -21,9 +22,9 @@ import graft.operators.{Export, Merge}
   * behind the format so a plain `writeStream` is idempotent under the
   * engine's replay storms. Output modes map to the lake's commit kinds:
   *
-  *  - `Append` → one epoch per micro-batch ([[Export.appendSnapshot]];
-  *    with `.partitionBy(...)`, a hive-laid-out epoch via
-  *    [[Export.appendSnapshotPartitioned]]).
+  *  - `Append` → one epoch per micro-batch ([[Export.appendSnapshot]])
+  *    in the table's declared layout, or hive-laid-out by
+  *    `.partitionBy(...)`.
   *  - `Complete` → each batch is the full result; the commit REPLACES
   *    the table head ([[Export.replaceSnapshot]]) — the materialized-
   *    view sink, every refresh time-travel-readable.
@@ -109,9 +110,9 @@ final class GraftLakeSink(spark: SparkSession,
   private val autoVacuumHorizonMs = opt("autoVacuumHorizonMs")
     .map(_.toLong).getOrElse(Export.DefaultVacuumHorizonMs)
   require(autoCompactEvery.isEmpty || partitionCols.isEmpty,
-    "autoCompactEvery compacts the whole table and would flatten the " +
-      "partition layout - use lake-compact --partition maintenance " +
-      "for partitioned tables")
+    "autoCompactEvery rewrites the WHOLE table - use lake-compact " +
+      "--partition maintenance for partitioned tables, which rewrites " +
+      "only the partitions a stream erodes")
   private val mergeKeys = opt("mergeKeys").toSeq
     .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
   private val orderCols = opt("orderBy").toSeq
@@ -134,14 +135,25 @@ final class GraftLakeSink(spark: SparkSession,
     * answer where partitioning is too coarse. */
   private val clusterBy = opt("clusterBy").map(_.trim).filter(_.nonEmpty)
 
-  /** The table's DECLARED cluster key (`graft.cluster.key` property),
-    * resolved once at the first batch — Append-mode micro-batches land
-    * zoned on it without a per-query `.option("clusterBy", ...)`.
-    * Missing table / no property → plain epochs (the r13 behavior). */
-  private lazy val declaredClusterKey: Option[String] =
-    try graft.operators.Export.snapshotProperties(path)
-      .get("graft.cluster.key")
-    catch { case scala.util.control.NonFatal(_) => None }
+  /** The layout of every Append-mode micro-batch: the `.partitionBy`
+    * columns, else the table's DECLARED layout
+    * ([[Export.declaredLayout]] — its partitions, or zones on its
+    * `graft.cluster.key` without a per-query `.option("clusterBy",
+    * ...)`), resolved once at the first batch. Missing table → plain
+    * epochs. */
+  private lazy val appendLayout: Layout =
+    if (partitionCols.nonEmpty) Layout.Partitioned(partitionCols,
+      filesPerCommit)
+    else try Export.declaredLayout(path, filesPerCommit)
+    catch { case scala.util.control.NonFatal(_) => Layout.Plain }
+
+  /** Commit `rows` as one epoch laid out by `layout`; a plain epoch
+    * keeps `filesPerCommit` files. */
+  private def append(rows: DataFrame, layout: Layout,
+      meta: Map[String, String]): Int =
+    Export.appendSnapshot(spark,
+      if (layout == Layout.Plain) rows.coalesce(filesPerCommit) else rows,
+      path, layout, meta)
   clusterBy.foreach(k => require(mergeKeys.contains(k),
     s"clusterBy '$k' must be one of mergeKeys " +
       s"(${mergeKeys.mkString(",")}) - only then does a matched row's " +
@@ -199,7 +211,7 @@ final class GraftLakeSink(spark: SparkSession,
         isStreaming = false)
       val meta = Map("batch" -> batchId.toString)
       if (mode == OutputMode.Complete())
-        Export.replaceSnapshot(spark, batch, path, meta)
+        Export.replaceSnapshot(spark, batch, path, meta = meta)
       else if (mode == OutputMode.Update()) {
         if (partitionCols.nonEmpty)
           Export.mergeSnapshotPartitionedLatest(spark, path, batch,
@@ -215,14 +227,10 @@ final class GraftLakeSink(spark: SparkSession,
           else {
             // bootstrap: first batch resolves within itself; clustered
             // + zoned when a cluster key is declared, so batch 2 prunes
-            val resolved = Merge.upsertLatest(batch.limit(0), batch,
-              mergeKeys, orderCols)
-            clusterBy match {
-              case Some(k) => Export.appendSnapshotClustered(spark,
-                resolved, path, k, nFiles = filesPerCommit, meta = meta)
-              case None => Export.appendSnapshot(spark,
-                resolved.coalesce(filesPerCommit), path, meta = meta)
-            }
+            append(Merge.upsertLatest(batch.limit(0), batch, mergeKeys,
+                orderCols),
+              clusterBy.fold[Layout](Layout.Plain)(
+                Layout.Clustered(_, filesPerCommit)), meta)
           }
         } else clusterBy match {
           case Some(k) if Export.latestSnapshotVersion(path) > 0 =>
@@ -234,10 +242,8 @@ final class GraftLakeSink(spark: SparkSession,
           case Some(k) =>
             // bootstrap: first batch resolves within itself and lands
             // clustered + zoned so the next batch can prune
-            Export.appendSnapshotClustered(spark,
-              Merge.upsertLatest(batch.limit(0), batch, mergeKeys,
-                orderCols),
-              path, k, nFiles = filesPerCommit, meta = meta)
+            append(Merge.upsertLatest(batch.limit(0), batch, mergeKeys,
+              orderCols), Layout.Clustered(k, filesPerCommit), meta)
           case None =>
             val latest = Export.latestSnapshotVersion(path)
             val base =
@@ -246,25 +252,10 @@ final class GraftLakeSink(spark: SparkSession,
             Export.replaceSnapshot(spark,
               Merge.upsertLatest(base, batch, mergeKeys, orderCols)
                 .coalesce(filesPerCommit),
-              path, meta)
+              path, meta = meta)
         }
-      } else {
-        if (partitionCols.nonEmpty)
-          Export.appendSnapshotPartitioned(spark, batch, path,
-            partitionCols, nFiles = filesPerCommit, meta = meta)
-        else declaredClusterKey.filter(batch.columns.contains) match {
-          case Some(k) =>
-            // the table DECLARED a cluster key (graft.cluster.key):
-            // every appended micro-batch lands zoned on it, so
-            // zone-scoped merges and pruned reads hold through
-            // streaming ingestion — parity with INSERT INTO
-            Export.appendSnapshotClustered(spark, batch, path, k,
-              nFiles = filesPerCommit, meta = meta)
-          case None =>
-            Export.appendSnapshot(spark,
-              batch.coalesce(filesPerCommit), path, meta = meta)
-        }
-      }
+      } else append(batch, appendLayout, meta)
+      // a bare compaction keeps the table's declared layout
       autoCompactEvery.foreach { n =>
         val v = Export.latestSnapshotVersion(path)
         if (v % n == 0) Export.compactSnapshot(spark, path,

@@ -4,6 +4,7 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.operators.Export.Layout
 
 /** Structured-Streaming surface of the engine.
   *
@@ -784,11 +785,12 @@ object EventStream {
           // scan-back guard: see drainMatview
           val applied = graft.operators.Export.lastAppliedBatch(tableDir)
           if (batchId > applied) {
-            graft.operators.Export.appendSnapshotPartitioned(spark,
+            graft.operators.Export.appendSnapshot(spark,
               batch.select(col("user_id"),
                 graft.util.Tables.tsMicros(tsType).as("ts_us"),
                 col("event_type"), col("value")),
-              tableDir, Seq("event_type"), nFiles = 1,
+              tableDir,
+              Layout.Partitioned(Seq("event_type"), nFiles = 1),
               meta = Map("batch" -> batchId.toString))
           }
           ()
@@ -857,8 +859,9 @@ object EventStream {
               .select(col("event_type"), col("user_id"),
                 col("_m.ts_us").as("ts_us"), col("_m.value").as("value"))
             if (graft.operators.Export.latestSnapshotVersion(tableDir) == 0)
-              graft.operators.Export.appendSnapshotPartitioned(spark,
-                reduced, tableDir, Seq("event_type"), nFiles = 1,
+              graft.operators.Export.appendSnapshot(spark,
+                reduced, tableDir,
+                Layout.Partitioned(Seq("event_type"), nFiles = 1),
                 meta = Map("batch" -> batchId.toString))
             else
               graft.operators.Export.mergeSnapshotPartitionedLatest(spark,
@@ -926,8 +929,9 @@ object EventStream {
                 col("_m.ts_us").as("ts_us"), col("_m.value").as("value"),
                 col("_m.is_del").as("is_del"))
             if (graft.operators.Export.latestSnapshotVersion(tableDir) == 0)
-              graft.operators.Export.appendSnapshotPartitioned(spark,
-                reduced, tableDir, Seq("shard"), nFiles = 1,
+              graft.operators.Export.appendSnapshot(spark,
+                reduced, tableDir,
+                Layout.Partitioned(Seq("shard"), nFiles = 1),
                 meta = Map("batch" -> batchId.toString))
             else
               graft.operators.Export.mergeSnapshotPartitionedLatest(spark,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.SparkSpec
+import graft.operators.Export.Layout
 
 class GraftExtensionsSpec extends SparkSpec {
 
@@ -192,8 +193,8 @@ class GraftExtensionsSpec extends SparkSpec {
     val pdir = pout.getAbsolutePath
     val docs = graft.util.Tables.load(spark, "/root/testdata/sf0.001",
       "documents").select("doc_id", "lang", "n_chars")
-    val pv = graft.operators.Export.appendSnapshotPartitioned(spark,
-      docs, pdir, Seq("lang"), nFiles = 4)
+    val pv = graft.operators.Export.appendSnapshot(spark,
+      docs, pdir, Layout.Partitioned(Seq("lang"), nFiles = 4))
     val en = spark.sql(
       s"SELECT count(*) FROM graft_snapshot('$pdir', $pv, 'lang=en')")
       .collect().head.getLong(0)
@@ -243,9 +244,9 @@ class GraftExtensionsSpec extends SparkSpec {
     graft.util.Dirs.deleteRec(out)
     val dir = out.getAbsolutePath
     val E = graft.operators.Export
-    E.appendSnapshotStatted(spark,
+    E.appendSnapshot(spark,
       (0L until 400L).map(i => (i, i * 2)).toDF("id", "v"), dir,
-      statCols = Seq("id"), nFiles = 8)
+      Layout.Statted(cols = Seq("id"), nFiles = 8))
     val q = spark.sql(
       s"SELECT id FROM graft_snapshot('$dir') WHERE id BETWEEN 300 AND 340")
     assert(q.collect().map(_.getLong(0)).sorted.toSeq === (300L to 340L))
@@ -347,8 +348,9 @@ class GraftExtensionsSpec extends SparkSpec {
     val docs = (1L to 60L).map(i => (i, (i % 2).toString, i)).toDF(
       "k", "half", "v")
     (0 until 3).foreach { e =>
-      E.appendSnapshotPartitioned(spark,
-        docs.filter($"k" % 3 === e), pd, Seq("half"), nFiles = 2)
+      E.appendSnapshot(spark,
+        docs.filter($"k" % 3 === e), pd,
+        Layout.Partitioned(Seq("half"), nFiles = 2))
     }
     val beforeP = E.snapshotFiles(pd, 3)
     spark.sql(s"SELECT * FROM graft_optimize('$pd', 1, " +

@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Export.Layout
 
 /** Optimistic concurrency for non-append commits (r13 task #3): a
   * maintenance/rewrite commit losing its race RETRIES when the
@@ -53,6 +54,32 @@ class ConcurrentCommitSpec extends SparkSpec {
     } finally Export.rewriteRaceInjector = None
   }
 
+  test("z-ordered compaction racing a concurrent APPEND retries and commutes: the append lands at v3, the compaction at v4, the appended epoch carried") {
+    val dir = tmp("ccs-zcompact")
+    Export.appendSnapshot(spark, rows(0, 10), dir)
+    Export.appendSnapshot(spark, rows(10, 20), dir)
+    var injected = false
+    Export.rewriteRaceInjector = Some((_, _) =>
+      if (!injected) {
+        injected = true
+        Export.appendSnapshot(spark, rows(20, 25), dir)
+      })
+    try {
+      val v = Export.compactSnapshot(spark, dir,
+        layout = Some(Layout.Zordered("id", "m", 2)))
+      assert(injected, "race was never injected")
+      assert(v === 4)
+      assert(Export.snapshotOperation(dir, 3) === Some("append"))
+      assert(Export.snapshotOperation(dir, 4) === Some("compact"))
+      assert(ids(dir) === (0L until 25L))
+      val appended = Export.snapshotAddedFiles(dir, 3).toSet
+      assert(appended.subsetOf(Export.snapshotFiles(dir, 4).toSet))
+      // the compacted files carry their 2-D zones
+      assert(Export.snapshotManifestEntries(dir, 4)
+        .filterNot(e => appended(e.path)).forall(_.zone2.nonEmpty))
+    } finally Export.rewriteRaceInjector = None
+  }
+
   test("compaction racing a concurrent DELETE raises the typed conflict naming the winning version (a delete does not commute with a whole-table rewrite)") {
     val dir = tmp("ccs-compactdel")
     Export.appendSnapshot(spark, rows(0, 10), dir)
@@ -74,7 +101,7 @@ class ConcurrentCommitSpec extends SparkSpec {
 
   test("partition-scoped merges on DISJOINT partitions both succeed and settle to the serial result") {
     val dir = tmp("ccs-merge")
-    Export.appendSnapshotPartitioned(spark, rows(0, 12), dir, Seq("m"))
+    Export.appendSnapshot(spark, rows(0, 12), dir, Layout.Partitioned(Seq("m")))
     val base = Export.readSnapshot(spark, dir, 1)
     // merge A touches m=1 rows; the injected merge B touches m=2
     val updA = rows(0, 12).filter(col("m") === 1)
@@ -104,7 +131,7 @@ class ConcurrentCommitSpec extends SparkSpec {
 
   test("partition-scoped merges on the SAME partition conflict with the typed error; the winner's rows survive untouched") {
     val dir = tmp("ccs-mergeconflict")
-    Export.appendSnapshotPartitioned(spark, rows(0, 12), dir, Seq("m"))
+    Export.appendSnapshot(spark, rows(0, 12), dir, Layout.Partitioned(Seq("m")))
     val updA = rows(0, 12).filter(col("m") === 1)
       .withColumn("s", concat(lit("A"), col("s")))
     val updB = rows(0, 12).filter(col("m") === 1)
@@ -134,9 +161,9 @@ class ConcurrentCommitSpec extends SparkSpec {
   test("updateWhereMoR: matched rows DV'd + updated copies appended, zero files rewritten; pruned-out files keep their OLD dv tags (shared-sidecar carry)") {
     val dir = tmp("ccs-updmor")
     // one statted epoch of 2 files: ids 0..49 and 50..99 (s= tags prune)
-    Export.appendSnapshotStatted(spark,
+    Export.appendSnapshot(spark,
       (0L until 100L).map(i => (i, s"v$i")).toDF("id", "s"), dir,
-      statCols = Seq("id"), nFiles = 2, clusterBy = Some("id"))
+      Layout.Statted(cols = Seq("id"), nFiles = 2, clusterBy = Some("id")))
     // a MoR delete spanning BOTH files → one SHARED dv sidecar
     Export.deleteWhereMoR(spark, dir, col("id") % 10 === 0L)
     assert(Export.snapshotHasDeletionVectors(dir, 2))
@@ -244,8 +271,8 @@ class ConcurrentCommitSpec extends SparkSpec {
   test("zone-scoped rewrite commutes with a concurrent APPEND (retry carries the appended epoch); racing a delete conflicts typed") {
     // zone-scoped upsert racing an append: rewrite-first serialization
     val d1 = tmp("ccs-zoneapp")
-    Export.appendSnapshotClustered(spark, rows(0, 100), d1, "id",
-      nFiles = 5)
+    Export.appendSnapshot(spark, rows(0, 100), d1,
+      Layout.Clustered("id", nFiles = 5))
     var injected = false
     Export.rewriteRaceInjector = Some((_, _) =>
       if (!injected) { injected = true
@@ -265,8 +292,8 @@ class ConcurrentCommitSpec extends SparkSpec {
     } finally Export.rewriteRaceInjector = None
     // racing a non-append: typed conflict, the winner's state stands
     val d2 = tmp("ccs-zoneconflict")
-    Export.appendSnapshotClustered(spark, rows(0, 20), d2, "id",
-      nFiles = 2)
+    Export.appendSnapshot(spark, rows(0, 20), d2,
+      Layout.Clustered("id", nFiles = 2))
     injected = false
     Export.rewriteRaceInjector = Some((_, _) =>
       if (!injected) { injected = true
@@ -283,6 +310,25 @@ class ConcurrentCommitSpec extends SparkSpec {
     } finally Export.rewriteRaceInjector = None
   }
 
+
+  test("GENERATED ALWAYS identity refuses explicit ids on every append layout: nothing commits") {
+    import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType}
+    val dir = tmp("ccs-always")
+    Export.createEmptySnapshot(dir, StructType(Seq(
+      StructField("id", LongType, nullable = true, new MetadataBuilder()
+        .putLong("identity.start", 1L).putLong("identity.step", 1L)
+        .putBoolean("identity.allowExplicitInsert", false).build()),
+      StructField("v", LongType))))
+    val explicit = Seq((100L, 1L), (101L, 2L)).toDF("id", "v")
+    Seq(Layout.Plain, Layout.Clustered("v", 1),
+        Layout.Zordered("id", "v", 1), Layout.Statted(Seq("id"), 1))
+      .foreach { layout =>
+        intercept[Exception](Export.appendSnapshot(spark, explicit, dir,
+          layout))
+        assert(Export.latestSnapshotVersion(dir) === 1,
+          s"a $layout append committed explicit ALWAYS ids")
+      }
+  }
 
   test("racing appends on an IDENTITY table claim DISJOINT ordinal ranges (the _idclaim CAS): both land, ids dense and unique across writers") {
     import org.apache.spark.sql.types.{LongType, MetadataBuilder, StructField, StructType}

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.operators.Export.Layout
 
 /** DML file pruning (r16): CoW DELETE is manifest-pruned like UPDATE
   * (it used to rewrite the whole table), and SUBQUERY predicates —
@@ -26,7 +27,8 @@ class DmlPruningSpec extends SparkSpec {
     graft.util.Dirs.deleteRec(new java.io.File(out))
     val rows = (0L until n).map(i => (i, s"p_$i")).toDF("k", "s")
     // 5 k-range files with s= stats: k in [0,19], [20,39], ...
-    Export.appendSnapshotStatted(spark, rows, out, Seq("k"), nFiles = 5)
+    Export.appendSnapshot(spark, rows, out,
+      Layout.Statted(Seq("k"), nFiles = 5))
     out
   }
 
@@ -146,8 +148,8 @@ class DmlPruningSpec extends SparkSpec {
     // range files — the time-series shape
     val rows = spark.range(100).selectExpr("id AS k",
       "date_add(DATE'2024-01-01', CAST(id AS INT)) AS dt")
-    Export.appendSnapshotStatted(spark, rows, out, Seq("dt"), nFiles = 5,
-      clusterBy = Some("dt"))
+    Export.appendSnapshot(spark, rows, out,
+      Layout.Statted(Seq("dt"), nFiles = 5, clusterBy = Some("dt")))
     val before = filesOf(out)
     assert(before.size === 5)
     // a date-range DELETE rewrites only overlapping files
@@ -188,8 +190,8 @@ class DmlPruningSpec extends SparkSpec {
     // 100 rows over 100 consecutive hours, clustered into 5 range files
     val rows = spark.range(100).selectExpr("id AS k",
       "timestamp_micros(1704067200000000 + id * 3600000000) AS ts")
-    Export.appendSnapshotStatted(spark, rows, out, Seq("ts"), nFiles = 5,
-      clusterBy = Some("ts"))
+    Export.appendSnapshot(spark, rows, out,
+      Layout.Statted(Seq("ts"), nFiles = 5, clusterBy = Some("ts")))
     val before = filesOf(out)
     assert(before.size === 5)
     // delete everything before hour 20: only overlapping files rewrite
@@ -225,7 +227,7 @@ class DmlPruningSpec extends SparkSpec {
     val out3 = Files.createTempDirectory("dmlprune-ts3").toFile
       .getAbsolutePath
     graft.util.Dirs.deleteRec(new java.io.File(out3))
-    Export.appendSnapshotClustered(spark, rows, out3, "ts", 5)
+    Export.appendSnapshot(spark, rows, out3, Layout.Clustered("ts", 5))
     val before3 = filesOf(out3)
     assert(before3.size === 5)
     val v3 = Export.deleteWhere(spark, out3,
@@ -300,7 +302,8 @@ class DmlPruningSpec extends SparkSpec {
     graft.util.Dirs.deleteRec(new java.io.File(out))
     val rows = Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)))
       .toDF("k", "v")
-    Export.appendSnapshotStatted(spark, rows, out, Seq("v"), nFiles = 1)
+    Export.appendSnapshot(spark, rows, out,
+      Layout.Statted(Seq("v"), nFiles = 1))
     val v = Export.deleteWhere(spark, out, col("v") < 10)
     val left = Export.readSnapshot(spark, out, v)
       .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSet

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import graft.operators.Export.Layout
 
 /** Data-layout export operators: range-clustered zone-map layout with
   * manifest-driven file pruning, and bucketed layout for shuffle-free
@@ -263,10 +264,12 @@ class ExportLayoutSpec extends SparkSpec {
     }
     rm(new java.io.File(out))
     val ids = docs.select("doc_id", "n_chars")
-    val v1 = Export.appendSnapshotClustered(spark,
-      ids.filter(col("doc_id") % 2 === 0), out, "doc_id", nFiles = 8)
-    val v2 = Export.appendSnapshotClustered(spark,
-      ids.filter(col("doc_id") % 2 === 1), out, "doc_id", nFiles = 8)
+    val v1 = Export.appendSnapshot(spark,
+      ids.filter(col("doc_id") % 2 === 0), out,
+      Layout.Clustered("doc_id", nFiles = 8))
+    val v2 = Export.appendSnapshot(spark,
+      ids.filter(col("doc_id") % 2 === 1), out,
+      Layout.Clustered("doc_id", nFiles = 8))
     def manifestLines(v: Int) =
       java.nio.file.Files.readAllLines(
         new java.io.File(out, s"_v$v.manifest").toPath)
@@ -329,14 +332,17 @@ class ExportLayoutSpec extends SparkSpec {
     // epoch-at-a-time ingestion: each epoch internally clustered but the
     // TABLE's key ranges overlap across epochs — every file spans the
     // whole key domain as far as a range query on the union is concerned
-    val v1 = Export.appendSnapshotClustered(spark,
-      ids.filter(col("doc_id") % 2 === 0), out, "doc_id", nFiles = 4)
-    val v2 = Export.appendSnapshotClustered(spark,
-      ids.filter(col("doc_id") % 2 === 1), out, "doc_id", nFiles = 4)
+    val v1 = Export.appendSnapshot(spark,
+      ids.filter(col("doc_id") % 2 === 0), out,
+      Layout.Clustered("doc_id", nFiles = 4))
+    val v2 = Export.appendSnapshot(spark,
+      ids.filter(col("doc_id") % 2 === 1), out,
+      Layout.Clustered("doc_id", nFiles = 4))
     def rows(v: Int) = Export.readSnapshot(spark, out, v).collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val before = rows(v2)
-    val vc = Export.compactSnapshotClustered(spark, out, "doc_id", nFiles = 8)
+    val vc = Export.compactSnapshot(spark, out,
+      layout = Some(Layout.Clustered("doc_id", nFiles = 8)))
     assert(rows(vc) === before, "clustered compaction changed the rows")
     assert(Export.snapshotMeta(out, vc) === Map("compacted_from" -> v2.toString))
     // the compacted layout prunes: a narrow range touches few of the 8 files
@@ -578,6 +584,33 @@ class ExportLayoutSpec extends SparkSpec {
   private def rmDir(out: String): Unit =
     graft.util.Dirs.deleteRec(new java.io.File(out))
 
+  test("a bare compaction keeps the declared layout: a partitioned table stays partitioned, a graft.cluster.key table stays zoned") {
+    import spark.implicits._
+    def rows(lo: Int, hi: Int) =
+      (lo until hi).map(i => (i.toLong, i % 3)).toDF("id", "p")
+    val parts = tmp("declared_parts")
+    rmDir(parts)
+    Export.appendSnapshot(spark, rows(0, 6), parts,
+      Layout.Partitioned(Seq("p")))
+    Export.appendSnapshot(spark, rows(6, 12), parts,
+      Layout.Partitioned(Seq("p")))
+    val vp = Export.compactSnapshot(spark, parts, 1)
+    assert(Export.snapshotOperation(parts, vp) === Some("compact"))
+    assert(Export.snapshotPartitionColumns(parts, vp) === Seq("p"))
+    assert(Export.declaredPartitionColumns(parts) === Seq("p"))
+    assert(Export.readSnapshot(spark, parts, vp).count() === 12L)
+    val zoned = tmp("declared_zones")
+    rmDir(zoned)
+    Export.appendSnapshot(spark, rows(0, 10), zoned)
+    Export.appendSnapshot(spark, rows(10, 20), zoned)
+    Export.setSnapshotProperties(zoned, Map("graft.cluster.key" -> "id"))
+    val vz = Export.compactSnapshot(spark, zoned, 2)
+    val lines = Export.snapshotManifestEntries(zoned, vz)
+    assert(lines.nonEmpty && lines.forall(_.zone.nonEmpty),
+      s"bare compaction dropped the zones: ${lines.map(_.line)}")
+    assert(Export.readSnapshot(spark, zoned, vz).count() === 20L)
+  }
+
   test("committed_at: monotone across commits; TIMESTAMP AS OF resolves Delta-style") {
     val out = tmp("committs")
     rmDir(out)
@@ -630,11 +663,12 @@ class ExportLayoutSpec extends SparkSpec {
   test("partitioned snapshots: manifest-only partition elimination, composes with zones") {
     val out = tmp("partsnap")
     rmDir(out)
-    Export.appendSnapshotPartitioned(spark,
-      docs.filter(col("doc_id") % 2 === 0), out, Seq("lang"), nFiles = 4)
-    val v2 = Export.appendSnapshotPartitioned(spark,
-      docs.filter(col("doc_id") % 2 === 1), out, Seq("lang"), nFiles = 4,
-      zoneKey = Some("doc_id"))
+    Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 0), out,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
+    val v2 = Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 1), out,
+      Layout.Partitioned(Seq("lang"), nFiles = 4, zoneKey = Some("doc_id")))
     val all = Export.readSnapshot(spark, out, v2)
     val en = Export.readSnapshotPartitioned(spark, out, v2,
       Map("lang" -> "en"))
@@ -672,11 +706,12 @@ class ExportLayoutSpec extends SparkSpec {
     rmDir(out)
     val d = graft.util.Tables.load(spark, sf, "documents")
       .select("doc_id", "lang", "source", "n_chars")
-    Export.appendSnapshotPartitioned(spark,
-      d.filter(col("doc_id") % 2 === 0), out, Seq("lang"), nFiles = 2)
-    val v2 = Export.appendSnapshotPartitioned(spark,
-      d.filter(col("doc_id") % 2 === 1), out, Seq("lang", "source"),
-      nFiles = 2)
+    Export.appendSnapshot(spark,
+      d.filter(col("doc_id") % 2 === 0), out,
+      Layout.Partitioned(Seq("lang"), nFiles = 2))
+    val v2 = Export.appendSnapshot(spark,
+      d.filter(col("doc_id") % 2 === 1), out,
+      Layout.Partitioned(Seq("lang", "source"), nFiles = 2))
     val all = Export.readSnapshot(spark, out, v2)
     // a filter on the SHARED column prunes files of both eras
     val en = Export.readSnapshotPartitioned(spark, out, v2,
@@ -868,8 +903,8 @@ class ExportLayoutSpec extends SparkSpec {
   test("dynamic partition overwrite: present partitions swap, absent partitions' files carried verbatim") {
     val out = tmp("partoverwrite")
     rmDir(out)
-    val v1 = Export.appendSnapshotPartitioned(spark, docs, out,
-      Seq("lang"), nFiles = 4)
+    val v1 = Export.appendSnapshot(spark, docs, out,
+      Layout.Partitioned(Seq("lang"), nFiles = 4))
     val filesBefore = Export.snapshotFiles(out, v1)
     // nightly-reload: recompute the en partition (halve it), replace
     // exactly that partition
@@ -905,8 +940,8 @@ class ExportLayoutSpec extends SparkSpec {
   test("partition-scoped merge: only touched partitions rewritten; per-partition == global merge") {
     val out = tmp("partmerge")
     rmDir(out)
-    val v1 = Export.appendSnapshotPartitioned(spark, docs, out,
-      Seq("lang"), nFiles = 3)
+    val v1 = Export.appendSnapshot(spark, docs, out,
+      Layout.Partitioned(Seq("lang"), nFiles = 3))
     val filesBefore = Export.snapshotFiles(out, v1)
     // updates touch ONLY lang=en: change some rows, insert new keys
     val updates = docs.filter(col("lang") === "en" && col("doc_id") % 3 === 0)
@@ -939,13 +974,13 @@ class ExportLayoutSpec extends SparkSpec {
     rmDir(out)
     // erode one partition with several small appends (the streaming shape)
     val en = docs.filter(col("lang") === "en")
-    val v1 = Export.appendSnapshotPartitioned(spark, docs, out,
-      Seq("lang"), nFiles = 2)
+    val v1 = Export.appendSnapshot(spark, docs, out,
+      Layout.Partitioned(Seq("lang"), nFiles = 2))
     (0 until 3).foreach { k =>
-      Export.appendSnapshotPartitioned(spark,
+      Export.appendSnapshot(spark,
         en.filter(col("doc_id") % 3 === k)
           .withColumn("doc_id", col("doc_id") + lit(10000L * (k + 1))),
-        out, Seq("lang"), nFiles = 2)
+        out, Layout.Partitioned(Seq("lang"), nFiles = 2))
     }
     val vEroded = Export.latestSnapshotVersion(out)
     val before = Export.snapshotFiles(out, vEroded)
@@ -976,8 +1011,8 @@ class ExportLayoutSpec extends SparkSpec {
     val out = tmp("zonemerge")
     rmDir(out)
     val base = (1L to 400L).map(i => (i, i * 10, 0L)).toDF("k", "v", "seq")
-    val v1 = Export.appendSnapshotClustered(spark, base, out, "k",
-      nFiles = 8)
+    val v1 = Export.appendSnapshot(spark, base, out,
+      Layout.Clustered("k", nFiles = 8))
     val before = Export.snapshotFiles(out, v1)
     // a range-local CDC batch: updates keys 380..400, inserts 401..405,
     // one stale record that must lose
@@ -1028,8 +1063,8 @@ class ExportLayoutSpec extends SparkSpec {
     rmDir(out)
     val two = docs.withColumn("half",
       (col("doc_id") % 2).cast("string"))
-    val v1 = Export.appendSnapshotPartitioned(spark, two, out,
-      Seq("lang", "half"), nFiles = 2)
+    val v1 = Export.appendSnapshot(spark, two, out,
+      Layout.Partitioned(Seq("lang", "half"), nFiles = 2))
     // the helper recovers the FULL layout key set from the p= specs
     assert(Export.snapshotPartitionColumns(out, v1) ===
       Seq("lang", "half"))
@@ -1057,10 +1092,12 @@ class ExportLayoutSpec extends SparkSpec {
   test("z-ordered snapshots: box query prunes files on BOTH dims across epochs; OPTIMIZE ZORDER re-establishes") {
     val out = tmp("snapzorder")
     rmDir(out)
-    Export.appendSnapshotZordered(spark,
-      docs.filter(col("doc_id") % 2 === 0), out, "doc_id", "n_chars", 8)
-    val v2 = Export.appendSnapshotZordered(spark,
-      docs.filter(col("doc_id") % 2 === 1), out, "doc_id", "n_chars", 8)
+    Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 0), out,
+      Layout.Zordered("doc_id", "n_chars", 8))
+    val v2 = Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 1), out,
+      Layout.Zordered("doc_id", "n_chars", 8))
     val all = Export.readSnapshot(spark, out, v2)
     val box = Export.readSnapshotBox(spark, out, v2,
       "doc_id", "n_chars", 50L, 220L, 100L, 260L)
@@ -1079,8 +1116,8 @@ class ExportLayoutSpec extends SparkSpec {
     // OPTIMIZE ZORDER: one commit, rows identical, box pruning again —
     // asserted with a tight box (8 post-compaction files own coarse
     // zones; a third-of-the-space box may legitimately touch them all)
-    val vC = Export.compactSnapshotZordered(spark, out,
-      "doc_id", "n_chars", 8)
+    val vC = Export.compactSnapshot(spark, out,
+      layout = Some(Layout.Zordered("doc_id", "n_chars", 8)))
     val after = Export.readSnapshot(spark, out, vC)
     assert(after.count() === all.count())
     val tight = docs.filter(col("doc_id").between(50, 120) &&
@@ -1094,10 +1131,12 @@ class ExportLayoutSpec extends SparkSpec {
   test("bloom manifests: no false negatives for ANY present key, needles skip files, absent needle reads ~nothing") {
     val out = tmp("snapbloom")
     rmDir(out)
-    Export.appendSnapshotBloomed(spark,
-      docs.filter(col("doc_id") % 2 === 0), out, "doc_id", nFiles = 8)
-    val v2 = Export.appendSnapshotBloomed(spark,
-      docs.filter(col("doc_id") % 2 === 1), out, "doc_id", nFiles = 8)
+    Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 0), out,
+      Layout.Bloomed("doc_id", nFiles = 8))
+    val v2 = Export.appendSnapshot(spark,
+      docs.filter(col("doc_id") % 2 === 1), out,
+      Layout.Bloomed("doc_id", nFiles = 8))
     val all = Export.readSnapshot(spark, out, v2)
     val total = all.inputFiles.length
     // the no-false-negative LAW: every present key's lookup finds its row
@@ -1178,7 +1217,8 @@ class ExportLayoutSpec extends SparkSpec {
     import spark.implicits._
     val src = tmp("clonesrc"); val dst = tmp("clonedst")
     rmDir(src); rmDir(dst)
-    val v1 = Export.appendSnapshotClustered(spark, docs, src, "doc_id", 6)
+    val v1 = Export.appendSnapshot(spark, docs, src,
+      Layout.Clustered("doc_id", 6))
     assert(Export.cloneSnapshot(src, dst) === 1)
     // identical rows, and the clone's manifest lists the SOURCE's files
     // (no epoch dir was created under the clone — planning-side only)
@@ -1221,12 +1261,12 @@ class ExportLayoutSpec extends SparkSpec {
   test("per-column manifest stats: range read prunes on either column; unstatted lines always planned") {
     val out = tmp("snapstats")
     rmDir(out)
-    Export.appendSnapshotStatted(spark,
+    Export.appendSnapshot(spark,
       docs.filter(col("doc_id") % 2 === 0), out,
-      Seq("doc_id", "n_chars"), nFiles = 8)
-    val v2 = Export.appendSnapshotStatted(spark,
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
+    val v2 = Export.appendSnapshot(spark,
       docs.filter(col("doc_id") % 2 === 1), out,
-      Seq("doc_id", "n_chars"), nFiles = 8)
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
     val all = Export.readSnapshot(spark, out, v2)
     // clustered column: a narrow doc_id range skips files
     val byId = Export.readSnapshotRange(spark, out, v2,
@@ -1297,7 +1337,7 @@ class ExportLayoutSpec extends SparkSpec {
   test("merge-on-read delete: pruned reads apply DVs; vacuum keeps a referenced DV dir") {
     val out = tmp("snapmordv")
     rmDir(out)
-    Export.appendSnapshotClustered(spark, docs, out, "doc_id", 6)
+    Export.appendSnapshot(spark, docs, out, Layout.Clustered("doc_id", 6))
     val v2 = Export.deleteWhereMoR(spark, out, col("doc_id") % 5 === 0)
     val pr = Export.readSnapshotPruned(spark, out, v2, "doc_id", 0L, 100L)
     assert(pr.count() === docs.filter(col("doc_id").between(0, 100) &&
@@ -1337,12 +1377,12 @@ class ExportLayoutSpec extends SparkSpec {
   test("metadata-only aggregates: provable counts/ranges match real reads; honesty rules refuse the unprovable") {
     val out = tmp("snapmeta")
     rmDir(out)
-    Export.appendSnapshotStatted(spark,
+    Export.appendSnapshot(spark,
       docs.filter(col("doc_id") % 2 === 0), out,
-      Seq("doc_id", "n_chars"), nFiles = 4)
-    val v2 = Export.appendSnapshotStatted(spark,
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 4))
+    val v2 = Export.appendSnapshot(spark,
       docs.filter(col("doc_id") % 2 === 1), out,
-      Seq("doc_id", "n_chars"), nFiles = 4)
+      Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 4))
     // provable: count and both ranges equal the scanned truth
     assert(Export.metadataCount(out, v2) === Some(docs.count()))
     val Some((lo, hi)) = Export.metadataRange(out, v2, "doc_id")
@@ -1399,7 +1439,7 @@ class ExportLayoutSpec extends SparkSpec {
     val out = tmp("keysoverlap")
     graft.util.Dirs.deleteRec(new java.io.File(out))
     val base = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
-    Export.appendSnapshotClustered(spark, base, out, "k", nFiles = 10)
+    Export.appendSnapshot(spark, base, out, Layout.Clustered("k", nFiles = 10))
     val entries = Export.snapshotManifestEntries(out, 1)
     assert(entries.length === 10 && entries.forall(_.stats.contains("k")))
     // batch confined to [100, 199]: only the file(s) whose k-range
@@ -1432,7 +1472,7 @@ class ExportLayoutSpec extends SparkSpec {
     val out = tmp("keysresid")
     graft.util.Dirs.deleteRec(new java.io.File(out))
     val base = spark.range(0, 1000).selectExpr("id AS k", "id * 2 AS v")
-    Export.appendSnapshotClustered(spark, base, out, "k", nFiles = 10)
+    Export.appendSnapshot(spark, base, out, Layout.Clustered("k", nFiles = 10))
     val entries = Export.snapshotManifestEntries(out, 1)
     // the batch's envelope covers the WHOLE table — without the
     // residual every file would plan; with `k < 100` only the low

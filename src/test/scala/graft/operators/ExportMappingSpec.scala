@@ -6,6 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Export.Layout
 
 /** COLUMN MAPPING laws: RENAME/DROP COLUMN are single manifest commits
   * that never rewrite or alias data bytes — physical names are
@@ -79,8 +80,8 @@ class ExportMappingSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       Export.renameSnapshotColumn(t, "label", "m")) // m retired
     val t2 = tmp()
-    Export.appendSnapshotPartitioned(spark, rows(0, 4), t2,
-      partitionCols = Seq("m"), nFiles = 1)
+    Export.appendSnapshot(spark, rows(0, 4), t2,
+      Layout.Partitioned(cols = Seq("m"), nFiles = 1))
     intercept[IllegalArgumentException](
       Export.dropSnapshotColumn(t2, "m")) // the layout needs m
   }
@@ -139,8 +140,8 @@ class ExportMappingSpec extends SparkSpec {
       "pruned reads and partition-scoped DML translate, dropping a " +
       "partition column still refuses") {
     val t = tmp()
-    Export.appendSnapshotPartitioned(spark, rows(0, 6), t,
-      partitionCols = Seq("m"), nFiles = 1)
+    Export.appendSnapshot(spark, rows(0, 6), t,
+      Layout.Partitioned(cols = Seq("m"), nFiles = 1))
     Export.renameSnapshotColumn(t, "m", "bucket")
     // pruned read by the NEW name over the OLD epoch's physical specs
     val v = Export.latestSnapshotVersion(t)
@@ -150,10 +151,10 @@ class ExportMappingSpec extends SparkSpec {
       (0L until 6L).filter(_ % 3 == 1))
     // partitioned append under the new name lands in the SAME physical
     // partition key; dynamic overwrite replaces exactly one partition
-    Export.appendSnapshotPartitioned(spark,
+    Export.appendSnapshot(spark,
       (6 until 9).map(i => (i.toLong, s"d$i", i % 3))
         .toDF("id", "s", "bucket"), t,
-      partitionCols = Seq("bucket"), nFiles = 1)
+      Layout.Partitioned(cols = Seq("bucket"), nFiles = 1))
     Export.overwritePartitions(spark,
       Seq((100L, "x", 0)).toDF("id", "s", "bucket"), t,
       partitionCols = Seq("bucket"), nFiles = 1)
@@ -235,8 +236,8 @@ class ExportMappingSpec extends SparkSpec {
     Export.renameSnapshotColumn(t, "n", "chars")
     val more = (4 until 8).map(i => (i.toLong, (i * 10).toLong, i % 3))
       .toDF("id", "chars", "m")
-    val v = Export.appendSnapshotStatted(spark, more, t,
-      statCols = Seq("chars"), nFiles = 2)
+    val v = Export.appendSnapshot(spark, more, t,
+      Layout.Statted(cols = Seq("chars"), nFiles = 2))
     // the tag rides the PHYSICAL name (n) while the query uses the
     // logical one (chars) - and prunes: only the statted epoch's
     // overlapping file plus the unstatted epoch's files get planned
@@ -251,17 +252,17 @@ class ExportMappingSpec extends SparkSpec {
     Export.appendSnapshot(spark,
       (0 until 4).map(i => (i.toLong, s"d$i")).toDF("k", "s"), t2)
     Export.renameSnapshotColumn(t2, "k", "key")
-    val v2 = Export.appendSnapshotBloomed(spark,
+    val v2 = Export.appendSnapshot(spark,
       (4 until 8).map(i => (i.toLong, s"d$i")).toDF("key", "s"), t2,
-      keyCol = "key", nFiles = 2)
+      Layout.Bloomed(key = "key", nFiles = 2))
     assert(Export.readSnapshotPoint(spark, t2, v2, "key", 5L)
       .select("s").as[String].collect().toSeq === Seq("d5"))
     // the other order too: stat FIRST (tags under the original name),
     // THEN rename - the lookup still translates and prunes
     val t3 = tmp()
-    Export.appendSnapshotStatted(spark,
+    Export.appendSnapshot(spark,
       (0 until 8).map(i => (i.toLong, (i * 10).toLong))
-        .toDF("id", "n"), t3, statCols = Seq("n"), nFiles = 4)
+        .toDF("id", "n"), t3, Layout.Statted(cols = Seq("n"), nFiles = 4))
     val v3 = Export.renameSnapshotColumn(t3, "n", "chars")
     assert(Export.readSnapshotRange(spark, t3, v3,
         Map("chars" -> ((60L, 70L))))

@@ -6,6 +6,7 @@ import org.apache.spark.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
+import graft.operators.Export.Layout
 
 /** The manifest codec: every line form the writers produce parses into
   * its typed fields and renders back byte for byte; tag edits replace by
@@ -93,6 +94,16 @@ class ManifestCodecSpec extends SparkSpec {
       case (f, c) => f == "n" || f == "dv" || c.contains("k") } === base)
   }
 
+  test("a legacy positional zone survives a tag edit: the edited line carries it as z=lo:hi") {
+    import Export.Tag
+    val legacy = s"$p\t5\t9"
+    val tagged = Export.withTags(legacy, Tag.len(10))
+    assert(tagged === s"$p\tz=5:9\tlen=10")
+    assert(Export.parseEntry(tagged).zone === Some((5L, 9L)))
+    assert(Export.parseEntry(Export.withoutTags(tagged)(_._1 == "len"))
+      .zone === Some((5L, 9L)))
+  }
+
   private def deleteRec(f: java.io.File): Unit = {
     if (f.isDirectory) f.listFiles().foreach(deleteRec)
     f.delete()
@@ -159,9 +170,9 @@ class ManifestCodecSpec extends SparkSpec {
     ListenerDrain(sc)
     sc.addSparkListener(listener)
     try {
-      Export.appendSnapshotStatted(spark,
+      Export.appendSnapshot(spark,
         spark.range(0, 400, 1, 40).selectExpr("id", "id % 7 AS v"), dir,
-        Seq("id", "v"), nFiles = 40)
+        Layout.Statted(Seq("id", "v"), nFiles = 40))
       ListenerDrain(sc)
     } finally sc.removeSparkListener(listener)
     val jobs = seen.synchronized(seen.toList)

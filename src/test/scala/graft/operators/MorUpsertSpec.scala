@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.operators.Export.Layout
 
 /** Laws of [[Export.upsertSnapshotMoR]] — the merge-on-read UPSERT:
   * deletion-vector the beaten incumbents, append the winners, never
@@ -101,7 +102,7 @@ class MorUpsertSpec extends SparkSpec {
   test("clustered scope: zone-disjoint lines carry byte-verbatim, insert epoch lands zoned for the next batch") {
     val out = tmp("morclust")
     val base = (0L until 400L).map(k => (k, 10L, s"v$k")).toDF("k", "ts", "v")
-    Export.appendSnapshotClustered(spark, base, out, "k", nFiles = 8)
+    Export.appendSnapshot(spark, base, out, Layout.Clustered("k", nFiles = 8))
     val linesBefore = Export.snapshotManifestEntries(out, 1)
     // envelope-local batch: keys 0..40 -> only the low-zone files scan
     val batch = (0L until 40L by 2L).map(k => (k, 20L, s"u$k"))
@@ -157,7 +158,7 @@ class MorUpsertSpec extends SparkSpec {
     val base = spark.sql(
       """SELECT timestamp_seconds(1700000000 + id * 3600) AS ts,
         |  1L AS ord, CAST(id AS STRING) AS v FROM range(100)""".stripMargin)
-    Export.appendSnapshotClustered(spark, base, out, "ts", nFiles = 5)
+    Export.appendSnapshot(spark, base, out, Layout.Clustered("ts", nFiles = 5))
     val linesBefore = Export.snapshotManifestEntries(out, 1)
     assert(linesBefore.forall(_.zone.nonEmpty), "fixture must be zoned")
     // a batch confined to the earliest hours: late files must carry

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.operators.{Export, Merge}
+import graft.operators.Export.Layout
 import graft.sources.GraftLakeCatalog
 
 /** Native MERGE INTO / UPDATE SQL + the deferred-execution contract of
@@ -435,7 +436,8 @@ class GraftLakeDmlSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.cluster.key' = 'k')")
     spark.sql("INSERT INTO gld.ns.mz SELECT id, id FROM range(100)")
     val dir = s"$wh/ns/mz"
-    Export.compactSnapshotClustered(spark, dir, "k", nFiles = 5)
+    Export.compactSnapshot(spark, dir,
+      layout = Some(Layout.Clustered("k", nFiles = 5)))
     val v0 = Export.latestSnapshotVersion(dir)
     val hiBefore = Export.snapshotManifestEntries(dir, v0)
       .filter(_.zone.exists(_._1 > 9L)).map(_.path).toSet
@@ -617,7 +619,8 @@ class GraftLakeDmlSpec extends SparkSpec {
       "TBLPROPERTIES ('graft.cluster.key' = 'k')")
     spark.sql("INSERT INTO gld.ns.zd SELECT id, id FROM range(1000)")
     val dir = s"$wh/ns/zd"
-    Export.compactSnapshotClustered(spark, dir, "k", nFiles = 5)
+    Export.compactSnapshot(spark, dir,
+      layout = Some(Layout.Clustered("k", nFiles = 5)))
     val v0 = Export.latestSnapshotVersion(dir)
     val hiBefore = Export.snapshotManifestEntries(dir, v0)
       .filter(_.zone.exists(_._1 > 400L)).map(_.path).toSet

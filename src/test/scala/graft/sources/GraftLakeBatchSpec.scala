@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.operators.Export
+import graft.operators.Export.Layout
 
 /** Laws of the BATCH `format("graftlake")` relation: read/write through
   * the plain format API, version/timestamp time travel, filter pushdown
@@ -58,8 +59,8 @@ class GraftLakeBatchSpec extends SparkSpec {
   test("pushed filters reach the parquet scan (PushedFilters) and the manifest stats prune FILES at planning time") {
     val t = tmp("glb-prune").getAbsolutePath
     val df = (0 until 400).map(i => (i.toLong, s"v$i")).toDF("id", "s")
-    Export.appendSnapshotStatted(spark, df, t, statCols = Seq("id"),
-      nFiles = 8)
+    Export.appendSnapshot(spark, df, t,
+      Layout.Statted(cols = Seq("id"), nFiles = 8))
     val q = spark.read.format("graftlake").load(t)
       .filter(col("id") >= 300L && col("id") <= 340L)
     // correctness first
@@ -144,8 +145,8 @@ class GraftLakeBatchSpec extends SparkSpec {
   test("column-mapped head serves transparently: logical names, physical bytes, pushdown and file pruning survive the rename") {
     val t = tmp("glb-map").getAbsolutePath
     val df = (0 until 400).map(i => (i.toLong, s"v$i")).toDF("id", "s")
-    Export.appendSnapshotStatted(spark, df, t, statCols = Seq("id"),
-      nFiles = 8)
+    Export.appendSnapshot(spark, df, t,
+      Layout.Statted(cols = Seq("id"), nFiles = 8))
     Export.renameSnapshotColumn(t, "id", "doc_id")
     Export.renameSnapshotColumn(t, "s", "label")
     val q = spark.read.format("graftlake").load(t)

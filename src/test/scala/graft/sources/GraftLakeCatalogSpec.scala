@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import graft.operators.Export
+import graft.operators.Export.Layout
 
 /** The SQL catalog over lake tables: name-addressed CREATE/INSERT/
   * SELECT/OVERWRITE/DROP from plain SQL, resolving through the v1
@@ -429,10 +430,10 @@ class GraftLakeCatalogSpec extends SparkSpec {
       .collect().head.getLong(0) === 3,
       "a mismatched generated value must not land")
     // a frame MISSING the column entirely (Scala-API append) computes
-    Export.appendSnapshotPartitioned(spark,
+    Export.appendSnapshot(spark,
       spark.sql("SELECT CAST(5 AS BIGINT) AS k, " +
         "TIMESTAMP '2026-01-05 12:00:00' AS ts"),
-      dir, Seq("day"))
+      dir, Layout.Partitioned(Seq("day")))
     assert(spark.sql("SELECT CAST(day AS STRING) FROM glc.ns_gen.t " +
         "WHERE k = 5").collect().head.getString(0) === "2026-01-05")
     // renaming/dropping a generation DEPENDENCY refuses first - the

@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException, Trig
 
 import graft.SparkSpec
 import graft.operators.Export
+import graft.operators.Export.Layout
 
 /** Laws of the graftlake STREAMING SOURCE: version-offset batching,
   * admission control, the appends-only refusal/skip contract for change
@@ -426,10 +427,10 @@ class GraftLakeSourceSpec extends SparkSpec {
       "matching files per batch (manifest-tag pruning, not just pushed " +
       "predicates); output unchanged") {
     val table = tmp("glk-streamprune")
-    Export.appendSnapshotPartitioned(spark, rows(0, 12),
-      table.getAbsolutePath, Seq("m"), nFiles = 2)
-    Export.appendSnapshotPartitioned(spark, rows(12, 24),
-      table.getAbsolutePath, Seq("m"), nFiles = 2)
+    Export.appendSnapshot(spark, rows(0, 12),
+      table.getAbsolutePath, Layout.Partitioned(Seq("m"), nFiles = 2))
+    Export.appendSnapshot(spark, rows(12, 24),
+      table.getAbsolutePath, Layout.Partitioned(Seq("m"), nFiles = 2))
     val src = new GraftLakeSource(spark.sqlContext.sparkSession,
       Map("path" -> table.getAbsolutePath, "where" -> "m = 1"))
     // planning proof: every planned file is an m=1 partition file, and
@@ -448,8 +449,8 @@ class GraftLakeSourceSpec extends SparkSpec {
     assert(got.map(_._1).sorted === (0L until 24L).filter(_ % 3 == 1))
     // and a range conjunct on a statted column prunes via s= tags too
     val statted = tmp("glk-streamprune2")
-    Export.appendSnapshotStatted(spark, rows(0, 100),
-      statted.getAbsolutePath, statCols = Seq("id"), nFiles = 5)
+    Export.appendSnapshot(spark, rows(0, 100),
+      statted.getAbsolutePath, Layout.Statted(cols = Seq("id"), nFiles = 5))
     val src2 = new GraftLakeSource(spark.sqlContext.sparkSession,
       Map("path" -> statted.getAbsolutePath, "where" -> "id >= 90"))
     val planned2 = src2.plannedAddedEntries(1L)
