@@ -360,6 +360,24 @@ object GraftExtensions {
         graft.functions.UnigramSegment(args.head, litWeightMap(args(1)),
           litLong(args(2), "unk_weight"))))
 
+  /** The snapshot TVFs' one frame: the manifest-planned
+    * HadoopFsRelation (the batch format's relation), so outer WHERE
+    * conjuncts prune FILES through the manifest tags
+    * ([[graft.sources.GraftLakeBatch.excludes]]) on top of the pushed
+    * parquet filters. Column-mapped heads ride the physical-renaming
+    * format and DV-bearing heads the anti-join rewrite, both keeping
+    * the manifest pruning; only LEGACY pre-header manifests fall back
+    * to [[graft.operators.Export.readSnapshot]]. */
+  private def snapshotFrame(spark: org.apache.spark.sql.SparkSession,
+      path: String, v: Int): org.apache.spark.sql.DataFrame =
+    try spark.baseRelationToDataFrame(
+      graft.sources.GraftLakeBatch.relation(spark, path,
+        Map("versionAsOf" -> v.toString)))
+    catch {
+      case _: IllegalArgumentException | _: IllegalStateException =>
+        graft.operators.Export.readSnapshot(spark, path, v)
+    }
+
   /** Table-valued functions — the LAKE surface from plain SQL: a
     * snapshot table (any version / timestamp) and its DESCRIBE HISTORY
     * as FROM-clause relations, so `spark.sql` users time-travel without
@@ -393,35 +411,20 @@ object GraftExtensions {
         val v =
           if (args.length > 1) litLong(args(1), "version").toInt
           else graft.operators.Export.latestSnapshotVersion(path)
+        val frame = snapshotFrame(spark, path, v)
         if (args.length > 2) {
           val spec = litString(args(2), "partition filter")
-          val filters = spec.split('/').filter(_.nonEmpty).map { kv =>
+          spec.split('/').filter(_.nonEmpty).map { kv =>
             kv.split("=", 2) match {
               case Array(k, value) => k -> value
               case _ => throw new IllegalArgumentException(
                 s"partition filter expects col=val segments, got: $kv")
             }
-          }.toMap
-          graft.operators.Export.readSnapshotPartitioned(spark, path, v,
-            filters).queryExecution.logical
-        } else {
-          // fast path: the manifest-planned HadoopFsRelation (the batch
-          // format's relation) — outer WHERE conjuncts then prune FILES
-          // via the p=/s= manifest tags on top of the pushed parquet
-          // filters. Column-mapped heads ride the physical-renaming
-          // format and DV-bearing heads the anti-join rewrite, both
-          // keeping the manifest pruning; only LEGACY pre-header
-          // manifests fall back to the read funnel.
-          try spark.baseRelationToDataFrame(
-              graft.sources.GraftLakeBatch.relation(spark, path,
-                Map("versionAsOf" -> v.toString)))
-            .queryExecution.logical
-          catch {
-            case _: IllegalArgumentException | _: IllegalStateException =>
-              graft.operators.Export.readSnapshot(spark, path, v)
-                .queryExecution.logical
-          }
-        }
+          }.toMap.foldLeft(frame) { case (d, (k, value)) =>
+            d.filter(org.apache.spark.sql.functions.col(k)
+              .cast("string") === value)
+          }.queryExecution.logical
+        } else frame.queryExecution.logical
       }),
     (FunctionIdentifier("graft_snapshot_at"),
       info("graft_snapshot_at", "graft_snapshot_at(path, ts_millis) - " +
@@ -429,8 +432,9 @@ object GraftExtensions {
         "committed at or before it)"),
       (args: Seq[Expression]) => {
         val spark = org.apache.spark.sql.SparkSession.active
-        graft.operators.Export.readSnapshotAsOf(spark,
-            litPath(args.head, "path"), litLong(args(1), "ts_millis"))
+        val path = litPath(args.head, "path")
+        snapshotFrame(spark, path, graft.operators.Export
+          .resolveAsOfTimestamp(path, litLong(args(1), "ts_millis")))
           .queryExecution.logical
       }),
     (FunctionIdentifier("graft_history"),

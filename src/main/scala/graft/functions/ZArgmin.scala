@@ -44,7 +44,14 @@ import org.apache.spark.sql.types._
   * slice (PQ) shape ignores trailing extra elements. LSH buckets fold
   * NULL/empty/null-element vectors to bucket 0 per table (the
   * `when(null ≥ 0).otherwise(0)` fall-through). All three expressions
-  * are therefore non-nullable. */
+  * are therefore non-nullable.
+  *
+  * Overflow contract: distances and projections are plain `long`
+  * arithmetic, which WRAPS on overflow (Java semantics) — the non-ANSI
+  * assumption. The legacy trees under ANSI mode (Spark 4's default)
+  * would raise an overflow error on the same inputs instead; the gates'
+  * `floor(v*1000)` quantized vectors stay orders of magnitude below
+  * that range. `ZArgminSpec` pins the wrap. */
 object ZOps {
 
   /** argmin codes, one per subspace. `cb` is the flattened codebook

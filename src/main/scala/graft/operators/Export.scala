@@ -466,8 +466,8 @@ object Export {
     /** True when any entry carries a tag the DML excludes kernel prunes
       * with — the guard that keeps subquery expansion off tagless
       * (pre-ANALYZE) tables. */
-    def prunable: Boolean =
-      entries.exists(e => e.partition.nonEmpty || e.stats.nonEmpty)
+    def prunable: Boolean = entries.exists(e =>
+      e.partition.nonEmpty || e.stats.nonEmpty || e.bloom.nonEmpty)
   }
 
   private def readManifestRaw(fs: FileSystem, root: Path,
@@ -1057,23 +1057,33 @@ object Export {
     * A losing/crashed attempt just orphans its unreferenced dir, which
     * the next vacuum reclaims. */
   private def writeEpoch(fs: FileSystem, root: Path, head: Option[Manifest],
-      df0: DataFrame): (Seq[String], StructType) = {
+      df0: DataFrame): (Epoch, StructType) = {
     // bytes always land under PHYSICAL column names (no-op on tables
     // that never renamed/dropped - see the column-mapping section);
-    // generated columns materialize, then CHECK constraints assert
-    // per-row, all inside the same projection, all from `head`
-    val df = toPhysicalDf(head, writeProjection(fs, root, head, df0))
+    // identity and generated columns materialize, then CHECK
+    // constraints assert per-row, all inside the same projection, all
+    // from `head`
+    val (projected, claimed) = writeProjection(fs, root, head, df0)
+    val df = toPhysicalDf(head, projected)
     val epochDir = new Path(root, s"epoch=${head.fold(0)(_.version) + 1}-" +
       java.util.UUID.randomUUID.toString.take(8))
     df.write.mode("overwrite").parquet(epochDir.toString)
     // lines carry the file LENGTH (`len=` tag) from the very listing the
     // commit already paid — so batch planning can build its scan from
     // the manifest alone, zero per-epoch listings at read time
-    (fs.listStatus(epochDir).toSeq
+    (Epoch(fs.listStatus(epochDir).toSeq
       .filter(_.getPath.getName.endsWith(".parquet"))
       .map(st => withTags(st.getPath.toString, Tag.len(st.getLen)))
-      .sorted, df.schema)
+      .sorted, claimed), df.schema)
   }
+
+  /** A written epoch: its manifest data lines, and the identity
+    * watermarks its write projection claimed (encoded column →
+    * consumed ordinal) for the commit that lists the lines to stamp as
+    * `idc_<col>` headers ([[internalMeta]]). */
+  private final case class Epoch(lines: Seq[String],
+      claimed: Map[String, Long])
+  private val NoEpoch = Epoch(Nil, Map.empty)
 
   /** `fresh` epoch lines, each tagged from its own file's bytes read
     * back: `aggs` grouped per file (`__file`) over a scan planned from
@@ -1114,10 +1124,11 @@ object Export {
       * one range exchange into `nFiles` files + local sorts (the
       * writeRangeLayout shape), then the read-back min/max per written
       * file rides the same atomic commit as the file list. This is how a
-      * table format carries column stats in its manifests —
-      * [[readSnapshotPruned]] then answers a range query on ANY version
-      * scanning only overlapping files, with no separate zone-map table
-      * to keep in sync with the snapshot log. */
+      * table format carries column stats in its manifests — a range
+      * filter on [[readSnapshot]] then scans only overlapping files on
+      * ANY version ([[graft.sources.GraftLakeBatch.excludes]] reads the
+      * `s=` copy of the zone), with no separate zone-map table to keep
+      * in sync with the snapshot log. */
     final case class Clustered(key: String, nFiles: Int) extends Layout {
       requireFiles(nFiles)
     }
@@ -1126,8 +1137,8 @@ object Export {
       * (`z2=alo:ahi:blo:bhi`) — the snapshot-log form of
       * [[writeZorderLayout]]: the epoch is range-clustered on the Morton
       * interleave into `nFiles` files, both keys' per-file min/max ride
-      * the atomic commit, and [[readSnapshotBox]] answers a box query on
-      * ANY version planning only intersecting files. Keys must fit 16
+      * the atomic commit, and a box filter on [[readSnapshot]] plans only
+      * intersecting files on ANY version. Keys must fit 16
       * bits (pre-scale wider domains to rank/bucket space), exactly as
       * the layout form. */
     final case class Zordered(a: String, b: String, nFiles: Int)
@@ -1139,9 +1150,10 @@ object Export {
       * point-lookup pruning a range zone can't give (a needle key prunes
       * nothing when every file's [min,max] spans it): each file carries a
       * `b=<key>:hex` tag of a `BloomBits`-bit filter, built from the SAME
-      * `xxhash64(key, seed)` family a reader recomputes, and
-      * [[readSnapshotPoint]] plans only files whose filter claims the
-      * needle — the Delta bloom-index / Iceberg puffin idea carried inside
+      * `xxhash64(key, seed)` family the reader recomputes, and an `=` /
+      * `IN` filter on [[readSnapshot]] plans only files whose filter
+      * claims the needle ([[graft.sources.GraftLakeBatch.excludes]]) —
+      * the Delta bloom-index / Iceberg puffin idea carried inside
       * the snapshot manifest. False positives cost a file read; false
       * negatives are impossible by construction (every row's bits are
       * OR'd in). 100 TB shape: the filter build is one
@@ -1154,10 +1166,11 @@ object Export {
     /** Hive-style PARTITIONED on `cols` — the default shape of a
       * production corpus table (`dt=.../tenant=...`): the epoch is laid
       * out in partition-column directories and every manifest data line
-      * carries the file's partition spec (`p=col=val/...`), so
-      * [[readSnapshotPartitioned]] plans only matching-partition files
-      * from the manifest alone — composing with per-file zones on
-      * `zoneKey` for sub-partition range pruning.
+      * carries the file's partition spec (`p=col=val/...`), so an
+      * equality filter on [[readSnapshot]] (on the column, or on
+      * `CAST(col AS STRING)`, the form the spec stores) plans only
+      * matching-partition files from the manifest alone — composing with
+      * per-file zones on `zoneKey` for sub-partition range pruning.
       *
       * Layout detail: the partition columns are SHADOWED (`_p_<col>`) for
       * the directory layout and kept as real columns in the data files —
@@ -1177,8 +1190,8 @@ object Export {
       * (`s=<col>:<lo>:<hi>`, one tag per stat column, plus the `n=` row
       * count) — the general form of the single-key zone: the
       * Delta/Iceberg column-stats idea where EVERY listed column's
-      * per-file range rides the commit, so [[readSnapshotRange]] prunes
-      * on ANY recorded column (or any conjunction). Rows are
+      * per-file range rides the commit, so a filtered [[readSnapshot]]
+      * prunes on ANY recorded column (or any conjunction). Rows are
       * range-clustered into `nFiles` files on `clusterBy` (default: the
       * first stat column) so at least that column's ranges are tight;
       * the others prune opportunistically — over-wide ranges cost reads,
@@ -1199,17 +1212,18 @@ object Export {
   }
 
   /** Write `df` as ONE epoch laid out by `layout` and return its
-    * manifest data lines — the only layout dispatch: every append,
-    * replace, compaction and row-level rewrite writes through here. */
+    * manifest data lines with the identity watermarks it claimed — the
+    * only layout dispatch: every append, replace, compaction and
+    * row-level rewrite writes through here. */
   private def writeLayout(spark: SparkSession, fs: FileSystem, root: Path,
-      head: Option[Manifest], df: DataFrame, layout: Layout): Seq[String] = {
+      head: Option[Manifest], df: DataFrame, layout: Layout): Epoch = {
     import Layout._
-    // the partitioned write applies the write projection (generated
-    // columns, CHECKs) up front, as its layout columns may be generated
-    // ones; every other layout projects inside writeEpoch
-    val frame = layout match {
+    // the partitioned write applies the write projection (identity and
+    // generated columns, CHECKs) up front, as its layout columns may be
+    // generated ones; every other layout projects inside writeEpoch
+    val (frame, claimed) = layout match {
       case _: Partitioned => writeProjection(fs, root, head, df)
-      case _ => df
+      case _ => (df, Map.empty[String, Long])
     }
     // tags are keyed by the PHYSICAL name the read-back finds in the
     // written bytes (identity on never-renamed tables)
@@ -1219,10 +1233,10 @@ object Export {
     // write `arranged` as a plain epoch, then tag each file from its bytes
     def tagged(arranged: DataFrame, aggs: Seq[Column],
         empty: Seq[(String, String)] = Nil)(
-        tags: org.apache.spark.sql.Row => Seq[(String, String)])
-        : Seq[String] = {
+        tags: org.apache.spark.sql.Row => Seq[(String, String)]): Epoch = {
       val (fresh, written) = writeEpoch(fs, root, head, arranged)
-      tagReadBack(spark, fs, root, fresh, written, aggs, empty)(tags)
+      fresh.copy(lines = tagReadBack(spark, fs, root, fresh.lines, written,
+        aggs, empty)(tags))
     }
     layout match {
       case Plain => writeEpoch(fs, root, head, df)._1
@@ -1230,9 +1244,9 @@ object Export {
       case Clustered(key, nFiles) =>
         // the zone rides as z= (its cast-long encoding pairs with the
         // merge envelope's own cast, for the clustered merge/read paths)
-        // AND as a NAMED s= stat so planners that don't know the cluster
-        // key - the batch format's FileIndex, readSnapshotRange - prune
-        // clustered files too; the stat takes the TYPED encoding/key
+        // AND as a NAMED s= stat, the one the read kernel
+        // (GraftLakeBatch.excludes) prunes clustered files with; the
+        // stat takes the TYPED encoding/key
         // (micros under #us for an event-time key) so a pushed
         // `ts >= TIMESTAMP'...'` range prunes the landing table
         val k = phys(key)
@@ -1248,9 +1262,9 @@ object Export {
         }
 
       case Zordered(a, b, nFiles) =>
-        // both keys' ranges ALSO ride as NAMED s= stats so planners that
-        // don't know the z-order keys prune these files too; z2= stays
-        // the positional 2-D zone readSnapshotBox consumes
+        // both keys' ranges ALSO ride as NAMED s= stats, the form the
+        // read kernel (GraftLakeBatch.excludes) prunes with; z2= stays
+        // recorded as the positional 2-D zone
         val (pa, pb) = (phys(a), phys(b))
         val z = freshName("_z", df.columns.toSeq)
         tagged(df.withColumn(z,
@@ -1326,7 +1340,7 @@ object Export {
             max(statLong(col(phys(k)), dt(k))).as("__zs_hi")))
         val written = StructType(
           withShadow.schema.filterNot(f => shadows.exists(_._2 == f.name)))
-        tagReadBack(spark, fs, root, fresh, written, aggs) { r =>
+        Epoch(tagReadBack(spark, fs, root, fresh, written, aggs) { r =>
           val spec = cols.map { c =>
             val v = r.getAs[String](s"__p_$c")
             require(v != null && !v.exists(ch =>
@@ -1343,7 +1357,7 @@ object Export {
             Tag.zone(r.getAs[Long]("__z_lo"), r.getAs[Long]("__z_hi")),
             Tag.stat(statKeyOf(phys(k), dt(k)),
               r.getAs[Long]("__zs_lo"), r.getAs[Long]("__zs_hi"))))
-        }
+        }, claimed)
     }
   }
 
@@ -1419,7 +1433,7 @@ object Export {
     require(manifestVersions(fs, root).isEmpty,
       s"$outDir already has committed versions")
     commitManifest(fs, root, 1,
-      internalMeta(root, None, meta, schema.json, op = "append"), Nil)
+      internalMeta(None, meta, schema.json, "append", Map.empty), Nil)
     1
   }
 
@@ -1543,10 +1557,9 @@ object Export {
     fs.mkdirs(root)
     val head = headOf(fs, root)
     val version = head.fold(0)(_.version) + 1
-    // the epoch first: its identity claims ride the commit's headers
     val fresh = writeLayout(spark, fs, root, head, df, layout)
-    commitManifest(fs, root, version,
-      internalMeta(root, head, meta, df.schema.json, op = "replace"), fresh)
+    commitManifest(fs, root, version, internalMeta(head, meta,
+      df.schema.json, "replace", fresh.claimed), fresh.lines)
     version
   }
 
@@ -2174,10 +2187,11 @@ object Export {
   private val ReservedMeta = Set("schema", "committed_at", "op", "retired")
 
   /** The headers of a commit on top of `head` (the newest committed
-    * version, None for a table's first commit). */
-  private def internalMeta(root: Path, head: Option[Manifest],
-      meta: Map[String, String], schemaJson: String,
-      op: String, extraRetired: Set[String] = Set.empty)
+    * version, None for a table's first commit). `claimed` is the
+    * identity watermarks the commit's epoch claimed ([[Epoch]]). */
+  private def internalMeta(head: Option[Manifest],
+      meta: Map[String, String], schemaJson: String, op: String,
+      claimed: Map[String, Long], extraRetired: Set[String] = Set.empty)
       : Map[String, String] = {
     ReservedMeta.foreach(k =>
       require(!meta.contains(k), s"'$k' is a reserved meta key"))
@@ -2207,28 +2221,19 @@ object Export {
       else headMeta.collect {
         case (k, v) if k.startsWith("check_") && v.nonEmpty => k -> v }
     // identity consumed-watermarks (`idc_<col>`) inherit the same way:
-    // every commit re-stamps the head's, raised to any watermark this
-    // thread's epoch writer just claimed (monotone max) — the GC floor
-    // for `_idclaim` files
-    val idPending: Map[String, Long] = pendingIdentity.get()
-      .collect { case ((r, c), v) if r == root.toString => (c, v) }
+    // every commit re-stamps the head's, raised to any watermark its
+    // epoch claimed (monotone max) — the GC floor for `_idclaim` files.
+    // A commit that loses its race drops its `claimed` with it; the
+    // claim files still carry the watermark (identityConsumed =
+    // max(claims, header)), so the header merely lags as a GC floor
     val idCarried: Map[String, String] =
       (headMeta.keysIterator.filter(_.startsWith("idc_")).toSet ++
-        idPending.keySet.map("idc_" + _)).map { k =>
+        claimed.keySet.map("idc_" + _)).map { k =>
         val c = k.drop("idc_".length)
         k -> math.max(
           headMeta.get(k).map(_.toLong).getOrElse(0L),
-          idPending.getOrElse(c, 0L)).toString
+          claimed.getOrElse(c, 0L)).toString
       }.toMap
-    // the pending entry is CONSUMED here: clear it so a later DROP +
-    // CREATE at the same path (same thread) cannot inherit the dropped
-    // table's watermark as its first `idc_` header. If this commit
-    // loses its race, the claim files still carry the watermark
-    // (identityConsumed = max(claims, header)) and the header merely
-    // lags as a GC floor — claims above it are never pruned.
-    if (idPending.nonEmpty)
-      pendingIdentity.set(pendingIdentity.get()
-        .filterNot { case ((r, _), _) => r == root.toString })
     // column-mapping bookkeeping rides the same headers: the schema is
     // stamped with the physical names the epoch writer used, and the
     // retired-physical set survives every commit (like #batch=)
@@ -2330,12 +2335,6 @@ object Export {
           "(before the table's first commit, or a pre-timestamp log)"))
   }
 
-  /** Read the table `TIMESTAMP AS OF tsMillis`: [[resolveAsOfTimestamp]]
-    * then the version-exact [[readSnapshot]]. */
-  def readSnapshotAsOf(spark: SparkSession, outDir: String,
-      tsMillis: Long): DataFrame =
-    readSnapshot(spark, outDir, resolveAsOfTimestamp(outDir, tsMillis))
-
   /** Optimistic concurrency for APPEND commits (the Delta-protocol
     * norm): an append's epoch files are fresh and disjoint from every
     * other commit's, so an append commutes with any winner — re-read the
@@ -2355,7 +2354,7 @@ object Export {
     * the head has not moved, so an uncontended append reads it once. */
   private def commitAppend(fs: FileSystem, root: Path,
       known: Option[Manifest], meta: Map[String, String],
-      schemaJson: String, fresh: Seq[String]): Int = {
+      schemaJson: String, fresh: Epoch): Int = {
     var attempt = 0
     while (attempt <= MaxAppendRetries) {
       val head = headOf(fs, root, known)
@@ -2363,8 +2362,8 @@ object Export {
       appendRaceInjector.foreach(_(root, version))
       try {
         commitManifest(fs, root, version,
-          internalMeta(root, head, meta, schemaJson, op = "append"),
-          head.fold(Seq.empty[String])(_.lines) ++ fresh)
+          internalMeta(head, meta, schemaJson, "append", fresh.claimed),
+          head.fold(Seq.empty[String])(_.lines) ++ fresh.lines)
         return version
       } catch {
         case e: IllegalStateException =>
@@ -2407,14 +2406,17 @@ object Export {
 
   /** Commit `lines` as version head+1 under `schemaJson`: the shape of
     * every metadata-only and maintenance commit computed from `head`
-    * (the newest `#batch=` carries). Returns the new version. */
+    * (the newest `#batch=` carries). `claimed` is the identity
+    * watermarks of the epoch among `lines`, if any. Returns the new
+    * version. */
   private def commitMetadata(fs: FileSystem, root: Path, head: Manifest,
       meta: Map[String, String], schemaJson: String, op: String,
-      lines: Seq[String], extraRetired: Set[String] = Set.empty): Int = {
+      lines: Seq[String], extraRetired: Set[String] = Set.empty,
+      claimed: Map[String, Long] = Map.empty): Int = {
     val version = head.version + 1
     commitManifest(fs, root, version,
-      internalMeta(root, Some(head), carryBatch(fs, root, head, meta),
-        schemaJson, op, extraRetired), lines)
+      internalMeta(Some(head), carryBatch(fs, root, head, meta),
+        schemaJson, op, claimed, extraRetired), lines)
     version
   }
 
@@ -2631,7 +2633,7 @@ object Export {
     * positions (committed by [[deleteWhereMoR]]) behind ONE left-anti
     * join on `(_metadata.file_path, _metadata.row_index)`. Sitting under
     * [[readFilesAs]] makes EVERY reader MoR-correct automatically —
-    * time travel, pruned/point/box/partitioned reads, compaction
+    * time travel, filtered reads, compaction
     * (which thereby materializes DVs), CDC diffs, clones. Tables with
     * no `dv=` tags pay nothing: the planned lines' tags short-circuit
     * to the bare scan. At 100 TB the DV side is positions-only (tiny
@@ -2713,33 +2715,6 @@ object Export {
       Seq(DvFileCol), "left_semi"))
   }
 
-  /** Box-pruned read of a snapshot version: plan only files whose 2-D
-    * zone intersects the query box (lines without a `z2=` zone always
-    * read — pruning never proves exclusion it can't), then apply the
-    * exact conjunctive predicate, pushed to the parquet scan. */
-  def readSnapshotBox(spark: SparkSession, outDir: String, version: Int,
-      colA: String, colB: String, aLo: Long, aHi: Long,
-      bLo: Long, bHi: Long): DataFrame = {
-    readPruned(spark, outDir, version)(_ => _.zone2.forall {
-      case (alo, ahi, blo, bhi) =>
-        ahi >= aLo && alo <= aHi && bhi >= bLo && blo <= bHi
-    }).filter(col(colA).between(aLo, aHi) && col(colB).between(bLo, bHi))
-  }
-
-  /** The shared half of the tag-pruned readers: `version`'s entries that
-    * `keep` (given the parsed manifest) admits — or, when none survives,
-    * one file, so the schema survives and the caller's exact predicate
-    * yields the correct empty result (a version with zero data files
-    * reads back typed-empty via its #schema= header). */
-  private def readPruned(spark: SparkSession, outDir: String,
-      version: Int)(keep: Manifest => ManifestEntry => Boolean): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, version)
-    val chosen = m.entries.filter(keep(m))
-    readFilesAs(spark, root, m,
-      if (chosen.nonEmpty) chosen else m.entries.sortBy(_.path).take(1))
-  }
-
   /** The table's ACTIVE CHECK constraints at the HEAD — O(1):
     * constraint headers CARRY FORWARD through every commit
     * ([[internalMeta]] re-stamps the head's active set, collapsing
@@ -2758,17 +2733,20 @@ object Export {
     }
 
   /** The shared WRITE PROJECTION of the epoch writers, from the
-    * `head` they write against: generated columns materialize
+    * `head` they write against: identity ids are assigned
+    * ([[materializeIdentity]]; the watermarks claimed come back beside
+    * the frame), generated columns materialize
     * ([[materializeGenerated]]), then CHECK constraints assert per row
     * ([[enforceChecks]]). Zero cost (and zero extra plan nodes) while
-    * the table has neither. */
+    * the table has none of them. */
   private def writeProjection(fs: FileSystem, root: Path,
-      head: Option[Manifest], df: DataFrame): DataFrame =
-    head.fold(df) { h =>
+      head: Option[Manifest], df: DataFrame)
+      : (DataFrame, Map[String, Long]) =
+    head.fold((df, Map.empty[String, Long])) { h =>
       val headFields = h.schemaOpt.fold(Seq.empty[StructField])(_.fields.toSeq)
-      enforceChecks(storedChecks(h.meta), headFields,
-        materializeGenerated(headFields,
-          materializeIdentity(fs, root, headFields, df)))
+      val (withIds, claimed) = materializeIdentity(fs, root, headFields, df)
+      (enforceChecks(storedChecks(h.meta), headFields,
+        materializeGenerated(headFields, withIds)), claimed)
     }
 
   // ------------------------------------------------------------------
@@ -2812,15 +2790,6 @@ object Export {
     insertSurface.set(true)
     try body finally insertSurface.set(prev)
   }
-
-  /** Per-thread (root, column) → consumed watermark the epoch writer
-    * just claimed; [[internalMeta]] stamps it as the `idc_<col>`
-    * header (monotone max with the head's). Never cleared — stamping
-    * an old watermark again is a harmless no-op under the max. */
-  private val pendingIdentity =
-    new ThreadLocal[Map[(String, String), Long]] {
-      override def initialValue(): Map[(String, String), Long] = Map.empty
-    }
 
   private def idClaimDir(root: Path): Path = new Path(root, "_idclaim")
 
@@ -2922,37 +2891,41 @@ object Export {
 
   private def materializeIdentity(fs: FileSystem, root: Path,
       headFields: Seq[org.apache.spark.sql.types.StructField],
-      df: DataFrame): DataFrame = {
+      df: DataFrame): (DataFrame, Map[String, Long]) = {
     val IC = org.apache.spark.sql.catalyst.util.IdentityColumn
     val ids = headFields.filter(f =>
       f.metadata.contains(IC.IDENTITY_INFO_START))
-    if (ids.isEmpty) df
+    if (ids.isEmpty) (df, Map.empty)
     else {
       // ONE checkpoint for the whole epoch, however many identity
       // columns the table has: the first column that materializes
       // marks the frame stable, and later columns reuse its blocks
       // (their derivation is narrow + deterministic)
       var stable = false
+      var claimed = Map.empty[String, Long]
       val out = ids.foldLeft(df) { case (d, f) =>
-        val (r, materialized) = assignIdentity(fs, root, f, d, stable)
+        val (r, materialized, c) = assignIdentity(fs, root, f, d, stable)
         if (materialized) stable = true
+        claimed ++= c
         r
       }
       // keep the head's column order when a missing column was added
       val headOrder = headFields.map(_.name)
       val order = headOrder.filter(out.columns.contains) ++
         out.columns.filterNot(headOrder.contains)
-      if (order == out.columns.toSeq) out
-      else out.select(order.map(colQ): _*)
+      (if (order == out.columns.toSeq) out
+        else out.select(order.map(colQ): _*), claimed)
     }
   }
 
-  /** Returns (frame, materialized): `materialized` is true when the
-    * output derives from a checkpoint this call paid for — a
-    * multi-identity table's later columns skip theirs. */
+  /** Returns (frame, materialized, claimed): `materialized` is true
+    * when the output derives from a checkpoint this call paid for — a
+    * multi-identity table's later columns skip theirs; `claimed` maps
+    * the column's encoded name to the watermark this call claimed up
+    * to, empty when it claimed nothing. */
   private def assignIdentity(fs: FileSystem, root: Path,
-      f: org.apache.spark.sql.types.StructField,
-      d0: DataFrame, stable: Boolean): (DataFrame, Boolean) = {
+      f: org.apache.spark.sql.types.StructField, d0: DataFrame,
+      stable: Boolean): (DataFrame, Boolean, Map[String, Long]) = {
     val IC = org.apache.spark.sql.catalyst.util.IdentityColumn
     val start = f.metadata.getLong(IC.IDENTITY_INFO_START)
     val step = f.metadata.getLong(IC.IDENTITY_INFO_STEP)
@@ -2979,6 +2952,7 @@ object Export {
     // ALWAYS columns skip entirely (explicit values can't enter);
     // BY-DEFAULT pays ONE combined agg that also answers the
     // null-slot probe — never a second pass over a pure rewrite.
+    var claimed = Map.empty[String, Long]
     val preCounted: Option[Long] =
       if (allowExplicit && d0.columns.contains(name)) {
         val ord = (org.apache.spark.sql.functions.floor(
@@ -2994,11 +2968,7 @@ object Export {
           val cur = identityConsumed(fs, root, colEnc)
           if (maxOrd > cur) {
             val from = claimIdentityRange(fs, root, colEnc, maxOrd - cur)
-            pendingIdentity.set(pendingIdentity.get() +
-              ((root.toString, colEnc) ->
-                math.max(from + (maxOrd - cur),
-                  pendingIdentity.get()
-                    .getOrElse((root.toString, colEnc), 0L))))
+            claimed = Map(colEnc -> (from + (maxOrd - cur)))
           }
         }
         Some(r.getLong(1))
@@ -3006,9 +2976,9 @@ object Export {
     // cheap PROBE before any materialization: a pure rewrite (every id
     // carries — the UPDATE/MERGE/compaction case, possibly a
     // full-table frame) must not pay a checkpoint of the whole slice
-    if (preCounted.contains(0L)) return (d, false)
+    if (preCounted.contains(0L)) return (d, false, claimed)
     if (preCounted.isEmpty && d.filter(colQ(name).isNull).isEmpty)
-      return (d, false)
+      return (d, false, claimed)
     // ONE materialization of the (batch-bounded) epoch frame: the
     // per-partition counts and the id projection must see the SAME
     // partitioning, and the write that follows reuses the blocks
@@ -3035,10 +3005,10 @@ object Export {
     val counts = withPid.groupBy(col(pidCol)).count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
     val n = counts.map(_._2).sum
-    if (n == 0L) return (snap, !stable) // every id carries, no claim
+    if (n == 0L) return (snap, !stable, claimed) // every id carries
+    // a later claim than the explicit-value sync's, so a higher one
     val from = claimIdentityRange(fs, root, colEnc, n)
-    pendingIdentity.set(pendingIdentity.get() +
-      ((root.toString, colEnc) -> (from + n)))
+    claimed = Map(colEnc -> (from + n))
     var acc = 0L
     val bases = counts.map { case (p, c) =>
       val b = acc; acc += c; (p, b) }
@@ -3058,7 +3028,8 @@ object Export {
     val assigned = withPid.join(baseDf, pidCol)
       .withColumn(name, idVal)
       .drop(pidCol, idxCol, baseCol)
-    (assigned.unionByName(snap.filter(colQ(name).isNotNull)), !stable)
+    (assigned.unionByName(snap.filter(colQ(name).isNotNull)), !stable,
+      claimed)
   }
 
   /** ONE-PASS constraint enforcement for the epoch writers: each row
@@ -3279,32 +3250,15 @@ object Export {
   val BloomBits: Int = 1024
   val BloomHashes: Int = 5
 
-  private def bloomMightContain(hex: String, positions: Seq[Long]): Boolean =
+  /** False only when the `b=` filter `hex` provably lacks a needle
+    * whose bit positions are `positions`. */
+  private[graft] def bloomMightContain(hex: String,
+      positions: Seq[Long]): Boolean =
     positions.forall { p =>
       val word = java.lang.Long.parseUnsignedLong(
         hex.substring((p.toInt / 64) * 16, (p.toInt / 64) * 16 + 16), 16)
       (word & (1L << (p.toInt % 64))) != 0
     }
-
-  /** Point lookup through the manifest bloom filters: plan only files
-    * whose `b=<keyCol>:` filter claims `value` (files without a filter
-    * for this key always read — pruning never proves what it can't),
-    * then apply the exact equality, pushed to the scan. The needle's bit
-    * positions come from the same engine hash the build used (a one-row
-    * job — engine-consistent by construction, no hand-rolled xxhash64
-    * to drift). */
-  def readSnapshotPoint(spark: SparkSession, outDir: String,
-      version: Int, keyCol: String, value: Long): DataFrame = {
-    val positions = spark.range(1).select(
-        (1 to BloomHashes).map(i =>
-          pmod(xxhash64(lit(value), lit(i)), lit(BloomBits.toLong))): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Long])
-    readPruned(spark, outDir, version)(m => _.bloom match {
-      case Some((k, hex)) if k == m.physicalIn(keyCol) =>
-        bloomMightContain(hex, positions)
-      case _ => true
-    }).filter(col(keyCol) === value)
-  }
 
   // recursion over plain listStatus, NOT fs.listFiles: the latter
   // materializes LocatedFileStatus (block locations/permissions), which
@@ -3319,26 +3273,6 @@ object Export {
       else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
       else Nil
     }
-  }
-
-  /** Partition-pruned (and optionally zone-pruned) read of a snapshot
-    * version: plan only files whose manifest partition spec matches
-    * every `partFilters` equality AND whose zone overlaps `zone`'s
-    * range; a line lacking a filtered partition column or a zone is
-    * always planned (pruning can't prove exclusion there). The exact
-    * predicates are then applied on top — pushed to the parquet scan —
-    * so pruning is an accelerator, never a correctness gate. */
-  def readSnapshotPartitioned(spark: SparkSession, outDir: String,
-      version: Int, partFilters: Map[String, String],
-      zone: Option[(String, Long, Long)] = None): DataFrame = {
-    val base = readPruned(spark, outDir, version)(m => e =>
-      partFilters.forall { case (c, v) =>
-        e.partition.get(m.physicalIn(c)).forall(_ == v) } &&
-      zone.forall { case (_, lo, hi) => e.zoneOverlaps(lo, hi) })
-    val exact = partFilters.map { case (c, v) =>
-        col(c).cast("string") === v }.toSeq ++
-      zone.map { case (k, lo, hi) => col(k).between(lo, hi) }
-    exact.foldLeft(base)(_ filter _)
   }
 
   /** Every data line must carry a value for every partition column —
@@ -3408,7 +3342,7 @@ object Export {
     // (the general merge's insert leg landing in an untouched
     // partition)
     val freshTuples: Set[Seq[String]] = replaceTuples.getOrElse(
-      fresh.map(l => partTuple(parseEntry(l), physCols)).toSet)
+      fresh.lines.map(l => partTuple(parseEntry(l), physCols)).toSet)
     def replaced(e: ManifestEntry) = freshTuples(partTuple(e, physCols))
     // the base state of OUR partitions, pinned at plan time: the
     // disjointness certificate every retry re-checks against the head
@@ -3454,10 +3388,10 @@ object Export {
       rewriteRaceInjector.foreach(_(root, version))
       try {
         commitManifest(fs, root, version,
-          internalMeta(root, head,
+          internalMeta(head,
             head.fold(stamped)(carryBatch(fs, root, _, stamped)),
-            schema.json, op = "overwrite"),
-          carried ++ fresh)
+            schema.json, "overwrite", fresh.claimed),
+          carried ++ fresh.lines)
         return version
       } catch {
         case e: ConcurrentCommitException =>
@@ -3671,7 +3605,7 @@ object Export {
     // APPENDS (their lines are disjoint from everything this rewrite
     // consumed and carry verbatim — rewrite-first serialization); any
     // interleaved non-append raises the typed conflict
-    commitRewriteThenAppends(fs, root, m, rest.map(_.line) ++ fresh,
+    commitRewriteThenAppends(fs, root, m, rest.map(_.line), fresh,
       meta + ("rewritten_files" -> hit.size.toString),
       result.schema.json, op = "overwrite")
   }
@@ -4082,14 +4016,15 @@ object Export {
       }
     }
     val fresh =
-      if (spanning.isEmpty) Seq.empty[String]
+      if (spanning.isEmpty) NoEpoch
       else writeLayout(spark, fs, root, Some(m),
         readFilesAs(spark, root, m, spanning.toSeq), Layout.Partitioned(cols))
     commitMetadata(fs, root, m, Map(
         "retagged_files" -> stamped.size.toString,
         "relaid_files" -> spanning.size.toString),
       st.json, if (spanning.isEmpty) "rename" else "compact",
-      tagged.map(_.line) ++ stamped ++ fresh)
+      tagged.map(_.line) ++ stamped ++ fresh.lines,
+      claimed = fresh.claimed)
   }
 
   /** ZONE-PRUNED MERGE — the partition-scoped merge generalized to
@@ -4149,7 +4084,7 @@ object Export {
       Layout.Clustered(clusterKey, nFiles))
     commitMetadata(fs, root, m, meta + ("merged_files" -> hit.size.toString),
       m.meta.getOrElse("schema", merged.schema.json), "overwrite",
-      rest.map(_.line) ++ fresh)
+      rest.map(_.line) ++ fresh.lines, claimed = fresh.claimed)
   }
 
   /** RESTORE TABLE TO VERSION (the Delta `RESTORE` shape): commit a NEW
@@ -4213,22 +4148,6 @@ object Export {
     }
   }
 
-  /** Range read pruned by the per-column stats: plan only files whose
-    * recorded [lo, hi] overlaps EVERY predicate's range (a file lacking
-    * a predicate column's stat is always planned — pruning can't prove
-    * exclusion there), then apply the exact conjunctive predicate,
-    * pushed to the scan. */
-  def readSnapshotRange(spark: SparkSession, outDir: String,
-      version: Int, preds: Map[String, (Long, Long)]): DataFrame = {
-    require(preds.nonEmpty, "need at least one range predicate")
-    preds.foldLeft(readPruned(spark, outDir, version)(m => e =>
-        preds.forall { case (c, (lo, hi)) =>
-          e.stats.get(m.physicalIn(c)).forall { case (slo, shi) =>
-            shi >= lo && slo <= hi } })) {
-      case (d, (c, (lo, hi))) => d.filter(col(c).between(lo, hi))
-    }
-  }
-
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` shape):
     * start a NEW table at `dstDir` whose v1 manifest re-points to
     * `srcVersion`'s exact data lines — zero data movement, planning-side
@@ -4254,21 +4173,11 @@ object Export {
       s"clone target $dstDir already has a snapshot log")
     dfs.mkdirs(droot)
     commitManifest(dfs, droot, 1,
-      internalMeta(droot, None,
-        Map("cloned_from" -> s"$srcDir@v$v"), src.schemaJson, op = "clone"),
+      internalMeta(None, Map("cloned_from" -> s"$srcDir@v$v"),
+        src.schemaJson, "clone", Map.empty),
       src.lines)
     1
   }
-
-  /** Zone-pruned read of a snapshot version: plan only the files whose
-    * manifest zone overlaps `[lo, hi]` (zoneless lines always read),
-    * then apply the exact predicate — pushed to the parquet scan, so
-    * surviving files still skip non-matching row groups. Same contract
-    * as the layout zone maps: over-wide zones cost reads, never rows. */
-  def readSnapshotPruned(spark: SparkSession, outDir: String,
-      version: Int, keyCol: String, lo: Long, hi: Long): DataFrame =
-    readPruned(spark, outDir, version)(_ => _.zoneOverlaps(lo, hi))
-      .filter(col(keyCol).between(lo, hi))
 
   /** Compaction (the Delta `OPTIMIZE` shape): rewrite the LATEST
     * version's rows into fresh files laid out by `layout` and commit them
@@ -4317,7 +4226,7 @@ object Export {
     * re-derivation never renumbers silently: every attempt re-checks
     * the full interleaved window from the pinned base. */
   private def commitCompactionFrom(fs: FileSystem, root: Path,
-      base: Manifest, fresh: Seq[String], fallbackSchema: String): Int = {
+      base: Manifest, fresh: Epoch, fallbackSchema: String): Int = {
     val basePaths = base.entries.map(e => qualify(fs, e.path)).toSet
     commitOverAppends(fs, root, base, "compaction (it may have " +
         "rewritten rows the compaction carried)") { head =>
@@ -4325,7 +4234,7 @@ object Export {
       commitMetadata(fs, root, head,
         Map("compacted_from" -> base.version.toString),
         head.meta.getOrElse("schema", fallbackSchema), "compact",
-        carried.map(_.line) ++ fresh)
+        carried.map(_.line) ++ fresh.lines, claimed = fresh.claimed)
     }
   }
 
@@ -4518,9 +4427,11 @@ object Export {
     * under `conjuncts` — the shared half of every DML prune. */
   private def pruneEntries(m: Manifest,
       conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : (Seq[ManifestEntry], Seq[ManifestEntry]) =
-    m.entries.partition(e => conjuncts.forall(c =>
-      !graft.sources.GraftLakeBatch.excludes(c, e, m.physOf)))
+      : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
+    val excluded =
+      conjuncts.map(graft.sources.GraftLakeBatch.excludes(_, m.physOf))
+    m.entries.partition(e => !excluded.exists(_(e)))
+  }
 
   /** Copy-on-write DELETE — the third leg of the lake DML triad
     * (append = INSERT, [[Merge.upsert]] through [[replaceSnapshot]] =
@@ -4560,8 +4471,8 @@ object Export {
       // retries over interleaved APPENDS (delete-first serialization:
       // their rows were never visible to the predicate); anything else
       // raises the typed conflict
-      commitRewriteThenAppends(fs, root, m,
-        rest.map(_.line) ++ writeRewrite(spark, fs, root, m, rows, hit.size),
+      commitRewriteThenAppends(fs, root, m, rest.map(_.line),
+        writeRewrite(spark, fs, root, m, rows, hit.size),
         Map("deleted_from" -> latest.toString,
           "deleted_files" -> hit.size.toString),
         m.schemaOpt.fold(rows.schema.json)(_.json), op = "delete")
@@ -4572,7 +4483,7 @@ object Export {
     * fresh p= specs on a partitioned table (a rewrite must not leave it
     * inconsistently partitioned), one plain epoch otherwise. */
   private def writeRewrite(spark: SparkSession, fs: FileSystem, root: Path,
-      m: Manifest, rows: DataFrame, nFiles: Int): Seq[String] = {
+      m: Manifest, rows: DataFrame, nFiles: Int): Epoch = {
     writeLayout(spark, fs, root, Some(m), rows,
       Layout.partitionedBy(partitionColumnsOf(m), math.max(1, nFiles)))
   }
@@ -4587,18 +4498,20 @@ object Export {
     * were never visible to the rewrite's predicate, exactly as if they
     * committed after it). Any interleaved NON-append (its rewrite
     * overlaps ours) raises the typed [[ConcurrentCommitException]].
-    * `computed` must be the COMPLETE replacement for the base
-    * version's data lines; the committed schema follows the head
-    * (appends may have evolved it — union semantics). */
+    * `kept` plus the `fresh` epoch's lines must be the COMPLETE
+    * replacement for the base version's data lines; the committed
+    * schema follows the head (appends may have evolved it — union
+    * semantics). */
   private def commitRewriteThenAppends(fs: FileSystem, root: Path,
-      base: Manifest, computed: Seq[String], meta: Map[String, String],
-      fallbackSchema: String, op: String): Int = {
+      base: Manifest, kept: Seq[String], fresh: Epoch,
+      meta: Map[String, String], fallbackSchema: String, op: String): Int = {
     val baseSet = base.lines.toSet
     commitOverAppends(fs, root, base,
         s"$op (both rewrote overlapping rows)") { head =>
       commitMetadata(fs, root, head, meta,
         head.meta.getOrElse("schema", fallbackSchema), op,
-        computed ++ head.lines.filterNot(baseSet))
+        kept ++ fresh.lines ++ head.lines.filterNot(baseSet),
+        claimed = fresh.claimed)
     }
   }
 
@@ -4654,8 +4567,8 @@ object Export {
           case None => colQ(f.name)
         }
       }: _*)
-      commitRewriteThenAppends(fs, root, m, rest.map(_.line) ++
-          writeRewrite(spark, fs, root, m, updated, hit.size),
+      commitRewriteThenAppends(fs, root, m, rest.map(_.line),
+        writeRewrite(spark, fs, root, m, updated, hit.size),
         meta ++ Map(
           "updated_from" -> latest.toString,
           "updated_files" -> hit.size.toString),
@@ -4740,8 +4653,8 @@ object Export {
       // merge/overwrite/compact FOREVER (the upsertSnapshotMoR guard's
       // bug class, closed on this path by writing fresh p= specs — the
       // CoW [[updateWhere]] discipline)
-      commitRewriteThenAppends(fs, root, m,
-        retagged ++ writeRewrite(spark, fs, root, m, updated, 1),
+      commitRewriteThenAppends(fs, root, m, retagged,
+        writeRewrite(spark, fs, root, m, updated, 1),
         meta ++ Map(
           "mor_updated_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
@@ -4811,7 +4724,7 @@ object Export {
       }
       val dvUri = fs.makeQualified(dvDir).toString
       commitRewriteThenAppends(fs, root, m,
-        m.entries.map(retagDv(fs, _, dvUri, counts)),
+        m.entries.map(retagDv(fs, _, dvUri, counts)), NoEpoch,
         Map(
           "mor_deleted_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
@@ -4992,13 +4905,13 @@ object Export {
       // insert epoch (zoned when clustered, so the NEXT batch prunes)
       val insertLayout =
         clusterKey.fold[Layout](Layout.Plain)(Layout.Clustered(_, nFiles))
-      val insertLines: Seq[String] =
-        if (!anyInsert) Seq.empty
+      val inserted =
+        if (!anyInsert) NoEpoch
         else writeLayout(spark, fs, root, Some(m),
           sized(toInsert, insertLayout, nFiles), insertLayout)
 
       commitRewriteThenAppends(fs, root, m,
-        untouched.map(_.line) ++ retagged ++ insertLines,
+        untouched.map(_.line) ++ retagged, inserted,
         meta ++ Map(
           "mor_upserted_into" -> latest.toString,
           "dv_positions" -> dvTotal.toString),
@@ -5094,7 +5007,7 @@ object Export {
         "compacted_from" -> latest.toString,
         "compacted_files" -> hit.size.toString),
       m.meta.getOrElse("schema", rows.schema.json), "compact",
-      rest.map(_.line) ++ fresh)
+      rest.map(_.line) ++ fresh.lines, claimed = fresh.claimed)
   }
 
   /** When two versions differ ONLY by renames (same physical column

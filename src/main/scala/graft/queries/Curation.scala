@@ -4360,8 +4360,9 @@ object Curation {
 
   /** Zone-pruned TIME TRAVEL
     * ([[graft.operators.Export.Layout.Clustered]] +
-    * [[graft.operators.Export.readSnapshotPruned]]): two clustered
-    * epochs (evens then odds, 8 range-sorted files each) whose per-file
+    * a range filter on [[graft.operators.Export.readSnapshot]]): two
+    * clustered epochs (evens then odds, 8 range-sorted files each) whose
+    * per-file
     * min/max zones ride the snapshot manifests themselves — the
     * Iceberg-manifest-column-stats idea — so a range query on the
     * LATEST version plans only overlapping files with no separate
@@ -4382,8 +4383,8 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Clustered("doc_id", nFiles = 8))
-    graft.operators.Export.readSnapshotPruned(s, od, v2, "doc_id",
-        lo = 100L, hi = 300L)
+    graft.operators.Export.readSnapshot(s, od, v2)
+      .filter(col("doc_id").between(100L, 300L))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"),
         sum("doc_id").cast("long").as("id_sum"),
@@ -4540,8 +4541,8 @@ object Curation {
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
   /** TIMESTAMP-based time travel
-    * ([[graft.operators.Export.resolveAsOfTimestamp]] /
-    * [[graft.operators.Export.readSnapshotAsOf]] — Delta's
+    * ([[graft.operators.Export.resolveAsOfTimestamp]], then
+    * [[graft.operators.Export.readSnapshot]] — Delta's
     * `TIMESTAMP AS OF`): every commit stamps a monotone
     * `#committed_at=` header; asking for the instant just before v2's
     * commit must resolve to v1 (committed_at is forced ≥ prev+1, so
@@ -4625,8 +4626,9 @@ object Curation {
 
   /** Hive-style PARTITIONED snapshot table
     * ([[graft.operators.Export.Layout.Partitioned]] +
-    * [[graft.operators.Export.readSnapshotPartitioned]]): two epochs
-    * appended partitioned by `lang`, manifest data lines carrying each
+    * an equality filter on [[graft.operators.Export.readSnapshot]]):
+    * two epochs appended partitioned by `lang`, manifest data lines
+    * carrying each
     * file's partition spec, then a partition-filtered read of the
     * latest version plans only `lang=en` files from the manifest alone.
     * DuckDB replays the full-scan predicate — partition elimination
@@ -4645,8 +4647,8 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Partitioned(Seq("lang"), nFiles = 4))
-    graft.operators.Export.readSnapshotPartitioned(s, od, v2,
-        Map("lang" -> "en"))
+    graft.operators.Export.readSnapshot(s, od, v2)
+      .filter(col("lang") === "en")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("doc_id").cast("long").as("id_sum"),
@@ -4678,8 +4680,8 @@ object Curation {
     val od = out.getAbsolutePath
     val v1 = graft.operators.Export.appendSnapshot(s, docs, od,
       Layout.Partitioned(Seq("lang"), nFiles = 10, zoneKey = Some("doc_id")))
-    graft.operators.Export.readSnapshotPartitioned(s, od, v1,
-        Map("lang" -> "en"), zone = Some(("doc_id", 100L, 400L)))
+    graft.operators.Export.readSnapshot(s, od, v1)
+      .filter(col("lang") === "en" && col("doc_id").between(100L, 400L))
       .agg(count(lit(1)).as("n_docs"),
         sum("doc_id").cast("long").as("id_sum"),
         sum("n_chars").cast("long").as("total_chars"))
@@ -4712,8 +4714,8 @@ object Curation {
       Layout.Partitioned(Seq("lang"), nFiles = 4))
     val v2 = graft.operators.Export.deleteWhere(s, od,
       col("lang") === "zh")
-    val zhBefore = graft.operators.Export.readSnapshotPartitioned(s, od,
-        v1, Map("lang" -> "zh"))
+    val zhBefore = graft.operators.Export.readSnapshot(s, od, v1)
+      .filter(col("lang") === "zh")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("doc_id")).cast("long").as("id_sum"),
         sum(col("n_chars")).cast("long").as("total_chars"))
@@ -4936,8 +4938,8 @@ object Curation {
       docs.filter(pmod(col("doc_id"), lit(2)) === 1)
         .withColumnRenamed("lang", "language"), od,
       Layout.Partitioned(cols = Seq("language"), nFiles = 1))
-    graft.operators.Export.readSnapshotPartitioned(s, od, v3,
-        Map("language" -> "en"))
+    graft.operators.Export.readSnapshot(s, od, v3)
+      .filter(col("language") === "en")
       .orderBy("doc_id")
   }
 
@@ -5014,8 +5016,8 @@ object Curation {
     * ([[graft.operators.Export.Layout.Zordered]] — the snapshot-
     * log form of `ZORDER BY (a, b)`): two epochs each range-clustered on
     * the Morton interleave of (doc_id, n_chars) with BOTH keys' per-file
-    * min/max riding the manifests, then a box query answered through
-    * [[graft.operators.Export.readSnapshotBox]] — 2-D file elimination
+    * min/max riding the manifests, then a box filter on
+    * [[graft.operators.Export.readSnapshot]] — 2-D file elimination
     * from the commit log alone, on a multi-epoch table. DuckDB replays
     * the conjunctive box predicate full-scan; the layout spec proves
     * files were actually skipped on both dimensions. */
@@ -5032,8 +5034,9 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Zordered("doc_id", "n_chars", nFiles = 8))
-    graft.operators.Export.readSnapshotBox(s, od, v2,
-        "doc_id", "n_chars", 50L, 220L, 100L, 260L)
+    graft.operators.Export.readSnapshot(s, od, v2)
+      .filter(col("doc_id").between(50L, 220L) &&
+        col("n_chars").between(100L, 260L))
       .agg(count(lit(1)).as("n_docs"),
         sum("doc_id").cast("long").as("id_sum"),
         sum("n_chars").cast("long").as("total_chars"))
@@ -5049,8 +5052,9 @@ object Curation {
 
   /** Bloom-filter manifest point lookups
     * ([[graft.operators.Export.Layout.Bloomed]] /
-    * [[graft.operators.Export.readSnapshotPoint]]): two epochs commit
-    * with per-file `b=doc_id:` bloom tags, then three needle lookups are
+    * an `IN` filter on [[graft.operators.Export.readSnapshot]]): two
+    * epochs commit with per-file `b=doc_id:` bloom tags, then three
+    * needle lookups are
     * answered planning only claimed files — the pruning shape range
     * zones cannot give a needle (every file's [min,max] spans it). The
     * layout spec proves the no-false-negative law and the actual file
@@ -5068,10 +5072,8 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Bloomed("doc_id", nFiles = 8))
-    Seq(5L, 123L, 321L)
-      .map(id => graft.operators.Export.readSnapshotPoint(s, od, v2,
-        "doc_id", id))
-      .reduce(_ unionByName _)
+    graft.operators.Export.readSnapshot(s, od, v2)
+      .filter(col("doc_id").isin(5L, 123L, 321L))
       .orderBy("doc_id")
   }
 
@@ -5243,8 +5245,9 @@ object Curation {
 
   /** Per-column manifest stats
     * ([[graft.operators.Export.Layout.Statted]] /
-    * [[graft.operators.Export.readSnapshotRange]]): two epochs commit
-    * with min/max tags for BOTH doc_id and n_chars on every manifest
+    * a range filter on [[graft.operators.Export.readSnapshot]]): two
+    * epochs commit with min/max tags for BOTH doc_id and n_chars on
+    * every manifest
     * line, then a conjunctive range query is answered pruning on both
     * columns at once — the Delta/Iceberg column-stats shape with no
     * separate stats table. The layout spec proves files are skipped on
@@ -5262,8 +5265,9 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
-    graft.operators.Export.readSnapshotRange(s, od, v2,
-        Map("doc_id" -> ((60L, 240L)), "n_chars" -> ((120L, 300L))))
+    graft.operators.Export.readSnapshot(s, od, v2)
+      .filter(col("doc_id").between(60L, 240L) &&
+        col("n_chars").between(120L, 300L))
       .agg(count(lit(1)).as("n_docs"),
         sum("doc_id").cast("long").as("id_sum"),
         sum("n_chars").cast("long").as("total_chars"))
@@ -5352,15 +5356,15 @@ object Curation {
     val v2 = graft.operators.Export.appendSnapshot(s,
       docs.filter(col("doc_id") % 2 === 1), od,
       Layout.Partitioned(Seq("lang", "source")))
-    def agg(tag: Int, filters: Map[String, String]) =
-      graft.operators.Export.readSnapshotPartitioned(s, od, v2, filters)
+    def agg(tag: Int, filter: Column) =
+      graft.operators.Export.readSnapshot(s, od, v2).filter(filter)
         .agg(count(lit(1)).as("n_docs"),
           sum(col("doc_id")).cast("long").as("id_sum"),
           sum(col("n_chars")).cast("long").as("total_chars"))
         .select(lit(tag).as("read"), col("n_docs"), col("id_sum"),
           col("total_chars"))
-    agg(1, Map("lang" -> "en"))
-      .unionByName(agg(2, Map("source" -> "src7")))
+    agg(1, col("lang") === "en")
+      .unionByName(agg(2, col("source") === "src7"))
       .orderBy("read")
   }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Pmod, XxHash64}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
@@ -23,11 +23,13 @@ import graft.operators.Export
   * `ReadSchema` column pruning, whole-stage codegen. What the manifest
   * adds is FILE elimination at planning time: [[GraftLakeFileIndex]]
   * receives Catalyst's pushed data filters and drops every file whose
-  * `p=` partition spec contradicts an equality conjunct or whose `s=`
-  * per-column range misses a comparison conjunct — the same
-  * tag-pruning contract as `readSnapshotPartitioned`/`readSnapshotRange`
-  * (a file lacking a tag is always planned; pruning accelerates, never
-  * gates), now reached from the plain format API.
+  * `p=` partition spec contradicts an equality conjunct, whose `s=`
+  * per-column range misses a comparison conjunct, or whose `b=` bloom
+  * filter lacks an equality's needle. [[GraftLakeBatch.excludes]] is the
+  * one such kernel: a filtered `Export.readSnapshot`, the catalog read,
+  * the stream `where` option and DML planning prune through it too (a
+  * file lacking a tag is always planned; pruning accelerates, never
+  * gates).
   *
   * Column-mapped heads (rename/drop with no rewrite) are served
   * through [[GraftMappedParquetFormat]] — the plan speaks logical
@@ -130,8 +132,8 @@ object GraftLakeBatch {
       options)(spark)))
   }
 
-  // ---- shared manifest-tag pruning kernel (batch FileIndex + the
-  // streaming source's `where`-option planning both call these)
+  // ---- the manifest-tag pruning kernel (the FileIndex every lake scan
+  // plans through, the stream source's `where` option and DML planning)
 
   private[graft] def splitConjuncts(e: Expression): Seq[Expression] =
     e match {
@@ -195,66 +197,98 @@ object GraftLakeBatch {
     case _ => None
   }
 
-  /** True only when the conjunct PROVABLY excludes every row of the
-    * entry's file: a `p=` spec contradicting an equality, or an `s=`
-    * range missing a comparison. Missing tag / non-literal shape /
-    * unknown type → never excludes. `physOf` translates logical column
+  /** The `b=` bit positions of an integral needle, from the writer's own
+    * expression `pmod(xxhash64(CAST(v AS BIGINT), i), BloomBits)`
+    * evaluated here on the driver; other types never probe a filter. */
+  private def bloomNeedle(l: Literal): Option[Seq[Long]] = l.dataType match {
+    case ByteType | ShortType | IntegerType | LongType =>
+      Option(l.value).map { v =>
+        val key = Literal(v.toString.toLong)
+        (1 to Export.BloomHashes).map(i =>
+          Pmod(new XxHash64(Seq(key, Literal(i))),
+            Literal(Export.BloomBits.toLong)).eval().asInstanceOf[Long])
+      }
+    case _ => None
+  }
+
+  /** The file test of conjunct `c`: true only when `c` PROVABLY excludes
+    * every row of the entry's file — a `p=` spec contradicting an
+    * equality (on the column, or on `CAST(col AS STRING)`, the form the
+    * spec stores), an `s=` range missing a comparison or an equality, or
+    * a `b=` bloom filter lacking every integral `=`/`IN` needle. Missing
+    * tag / non-literal shape / unknown type → never excludes. This is
+    * the only file-skipping predicate of lake reads: the format and
+    * catalog reads, every filtered [[Export.readSnapshot]], the stream
+    * `where` option and DML planning all reach it. Needles hash once
+    * per conjunct, not per file. `physOf` translates logical column
     * names to the physical names the tags are keyed by. Attributes may
     * be resolved (the batch FileIndex's pushed filters) or unresolved
     * (the stream source's parsed `where` option) — both are
     * [[Attribute]]s and only the name is consulted. */
-  private[graft] def excludes(c: Expression, e: Export.ManifestEntry,
-      physOf: Map[String, String]): Boolean = {
+  private[graft] def excludes(c: Expression, physOf: Map[String, String])
+      : Export.ManifestEntry => Boolean = {
+    def phys(a: Attribute): String = physOf.getOrElse(a.name, a.name)
     // timestamp stats live under the `<phys>#us` key (micros); the
     // plain key may hold a pre-r17 seconds-encoded range a micros
     // literal must never compare against (Export.statKeyOf)
-    def statRange(a: Attribute, l: Literal): Option[(Long, Long)] =
-      e.stats.get(Export.statKeyOf(
-        physOf.getOrElse(a.name, a.name), l.dataType))
+    def range(a: Attribute, l: Literal)(miss: (Long, (Long, Long)) => Boolean)
+        : Export.ManifestEntry => Boolean =
+      longOf(l).fold((_: Export.ManifestEntry) => false) { v =>
+        val key = Export.statKeyOf(phys(a), l.dataType)
+        e => e.stats.get(key).exists(miss(v, _))
+      }
     c match {
-      case EqualTo(a: Attribute, l: Literal) => eqExcludes(a, l, e, physOf)
-      case EqualTo(l: Literal, a: Attribute) => eqExcludes(a, l, e, physOf)
+      case EqualTo(a: Attribute, l: Literal) => eqExcludes(phys(a), l)
+      case EqualTo(l: Literal, a: Attribute) => eqExcludes(phys(a), l)
+      case EqualTo(Cast(a: Attribute, StringType, _, _), l: Literal)
+          if l.dataType == StringType => partExcludes(phys(a), l)
+      case EqualTo(l: Literal, Cast(a: Attribute, StringType, _, _))
+          if l.dataType == StringType => partExcludes(phys(a), l)
       case In(a: Attribute, vs)
           if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        vs.map(_.asInstanceOf[Literal])
-          .forall(l => eqExcludes(a, l, e, physOf))
+        val each = vs.map(l => eqExcludes(phys(a), l.asInstanceOf[Literal]))
+        e => each.forall(_(e))
       case GreaterThan(a: Attribute, l: Literal) =>
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (_, hi)) => hi <= v }
+        range(a, l) { case (v, (_, hi)) => hi <= v }
       case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (_, hi)) => hi < v }
+        range(a, l) { case (v, (_, hi)) => hi < v }
       case LessThan(a: Attribute, l: Literal) =>
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (lo, _)) => lo >= v }
+        range(a, l) { case (v, (lo, _)) => lo >= v }
       case LessThanOrEqual(a: Attribute, l: Literal) =>
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (lo, _)) => lo > v }
+        range(a, l) { case (v, (lo, _)) => lo > v }
       case GreaterThan(l: Literal, a: Attribute) => // v > col ≡ col < v
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (lo, _)) => lo >= v }
+        range(a, l) { case (v, (lo, _)) => lo >= v }
       case LessThan(l: Literal, a: Attribute) => // v < col ≡ col > v
-        longOf(l).zip(statRange(a, l))
-          .exists { case (v, (_, hi)) => hi <= v }
-      case _ => false
+        range(a, l) { case (v, (_, hi)) => hi <= v }
+      case _ => _ => false
     }
   }
 
-  private def eqExcludes(a: Attribute, l: Literal,
-      e: Export.ManifestEntry, physOf: Map[String, String]): Boolean = {
-    val p = physOf.getOrElse(a.name, a.name)
-    val partHit = stringOf(l).zip(e.partition.get(p))
-      .exists { case (v, spec) => spec != v }
-    val statHit = longOf(l)
-      .zip(e.stats.get(Export.statKeyOf(p, l.dataType)))
-      .exists { case (v, (lo, hi)) => v < lo || v > hi }
-    partHit || statHit
+  /** `p=` spec of physical column `p` differs from the literal. */
+  private def partExcludes(p: String, l: Literal)
+      : Export.ManifestEntry => Boolean =
+    stringOf(l).fold((_: Export.ManifestEntry) => false)(v =>
+      e => e.partition.get(p).exists(_ != v))
+
+  /** An equality on physical column `p`: its `p=`, `s=` and `b=` tests. */
+  private def eqExcludes(p: String, l: Literal)
+      : Export.ManifestEntry => Boolean = {
+    val part = partExcludes(p, l)
+    val v = longOf(l)
+    val statKey = Export.statKeyOf(p, l.dataType)
+    val needle = bloomNeedle(l)
+    e => part(e) ||
+      v.zip(e.stats.get(statKey)).exists { case (x, (lo, hi)) =>
+        x < lo || x > hi } ||
+      needle.zip(e.bloom).exists { case (bits, (k, hex)) =>
+        k == p && !Export.bloomMightContain(hex, bits) }
   }
 }
 
 /** Manifest-driven [[FileIndex]]: `listFiles` plans exactly the
   * given manifest entries minus those a pushed literal conjunct
-  * provably excludes via the manifest's `p=`/`s=` tags. File statuses
+  * provably excludes via the manifest's `p=`/`s=`/`b=` tags
+  * ([[GraftLakeBatch.excludes]]). File statuses
   * are resolved ONCE at construction from the entries' `len=` tags;
   * legacy lines without one cost one `listStatus` per distinct parent
   * (epoch) directory — bounded by the manifest's directory count,
@@ -383,10 +417,10 @@ final class GraftLakeFileIndex(spark: SparkSession, table: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val conjuncts = dataFilters.flatMap(GraftLakeBatch.splitConjuncts)
-    val chosen = statuses.filter { case (e, _) =>
-      conjuncts.forall(c => !GraftLakeBatch.excludes(c, e, physOf))
-    }
+    val excluded = dataFilters.flatMap(GraftLakeBatch.splitConjuncts)
+      .map(GraftLakeBatch.excludes(_, physOf))
+    val chosen = statuses.filterNot { case (e, _) =>
+      excluded.exists(_(e)) }
     if (partitionSchema.isEmpty)
       Seq(PartitionDirectory(InternalRow.empty,
         chosen.map(_._2).toArray))

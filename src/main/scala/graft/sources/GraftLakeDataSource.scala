@@ -403,8 +403,9 @@ final class GraftLakeSource(spark: SparkSession,
 
   /** Planning-time file pruning for filtered streams: the version's
     * added files minus those a `where` conjunct provably excludes via
-    * the manifest's `p=`/`s=` tags (physical-name-translated; identity
-    * on never-renamed tables). Package-visible so the spec can assert
+    * the manifest's `p=`/`s=`/`b=` tags ([[GraftLakeBatch.excludes]];
+    * physical-name-translated, identity on never-renamed tables).
+    * Package-visible so the spec can assert
     * on exactly what a batch plans. */
   private[sources] def plannedAddedEntries(v: Long)
       : Seq[Export.ManifestEntry] =
@@ -414,9 +415,8 @@ final class GraftLakeSource(spark: SparkSession,
       : Seq[Export.ManifestEntry] = {
     val physOf: Map[String, String] = dataSchema.fields
       .map(f => f.name -> Export.physicalOf(f)).toMap
-    Export.addedEntries(path, m)
-      .filter(e => pruneConjuncts.forall(c =>
-        !GraftLakeBatch.excludes(c, e, physOf)))
+    val excluded = pruneConjuncts.map(GraftLakeBatch.excludes(_, physOf))
+    Export.addedEntries(path, m).filterNot(e => excluded.exists(_(e)))
   }
 
   /** `entries` decoded by PHYSICAL column name (a renamed table's bytes

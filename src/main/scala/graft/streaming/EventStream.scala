@@ -798,9 +798,9 @@ object EventStream {
         .start()
       q.awaitTermination()
     }
-    graft.operators.Export.readSnapshotPartitioned(spark, tableDir,
-      graft.operators.Export.latestSnapshotVersion(tableDir),
-      Map("event_type" -> readType))
+    graft.operators.Export.readSnapshot(spark, tableDir,
+        graft.operators.Export.latestSnapshotVersion(tableDir))
+      .filter(col("event_type").cast("string") === readType)
   }
 
   /** Streaming APPLY CHANGES — the CDC-consumer sink every lakehouse

@@ -201,8 +201,8 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(en === docs.filter(col("lang") === "en").count())
     val prunedScan = spark.sql(
       s"SELECT doc_id FROM graft_snapshot('$pdir', $pv, 'lang=en')")
-    assert(prunedScan.inputFiles.nonEmpty &&
-      prunedScan.inputFiles.forall(_.contains("_p_lang=en")),
+    assert(scannedFiles(prunedScan).nonEmpty &&
+      scannedFiles(prunedScan).forall(_.contains("_p_lang=en")),
       "TVF partition filter planned non-matching files")
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session; suites run
@@ -9,6 +10,19 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def fixture(name: String): String =
     getClass.getClassLoader.getResource(name).getPath
+
+  /** The lake files `df`'s physical plan scans: each manifest-planned
+    * scan's `selectedPartitions`, i.e. what the FileIndex kept after
+    * file pruning. (`inputFiles` lists the whole relation, pruned or
+    * not.) Deletion-vector sidecar scans are not lake files and are
+    * left out. */
+  def scannedFiles(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec
+          if f.relation.location.isInstanceOf[graft.sources.GraftLakeFileIndex] =>
+        f.selectedPartitions.filePartitionIterator
+          .flatMap(_.files.map(_.fileStatus.getPath.toString)).toSeq
+    }.flatten
 }
 
 object SparkSpec {

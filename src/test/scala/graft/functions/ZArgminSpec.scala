@@ -105,6 +105,26 @@ class ZArgminSpec extends SparkSpec {
       ZExpressions.legacyLshBucketCols(col("_q"), 2, 3))
   }
 
+  test("overflow regime: the argmin kernels' long arithmetic wraps, it never throws") {
+    // |q - c| = 3037000500 squares past Long.MaxValue, so the far
+    // candidate's wrapped distance is negative and beats the exact
+    // match (distance 0): code 0, not 1 — the non-ANSI contract ZOps
+    // documents (an ANSI legacy tree would raise instead)
+    val far = 3037000500L
+    assert(far * far < 0L)
+    val q = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array(far))
+    for (exactLen <- Seq(true, false))
+      assert(ZOps.pqCodesZ(q, Array(0L, far), m = 1, k = 2, sub = 1,
+        exactLen).toIntArray().toSeq === Seq(0), s"exactLen=$exactLen")
+    // the same through the expression (codegen path)
+    val one = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(Row(Seq[java.lang.Long](far)))),
+      StructType(Seq(StructField("_q", qType))))
+    assert(one.select(ZExpressions.cellZ(col("_q"), Seq(Seq(0L), Seq(far))))
+      .head().getInt(0) === 0)
+  }
+
   test("lsh_buckets_z refuses planes outside 1..63: a bucket is one BIGINT bitmask") {
     val q = org.apache.spark.sql.catalyst.expressions.Literal.create(null,
       ArrayType(LongType))

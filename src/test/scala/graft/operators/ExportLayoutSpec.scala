@@ -278,20 +278,21 @@ class ExportLayoutSpec extends SparkSpec {
     assert(manifestLines(v2).forall(l =>
       l.split('\t').exists(_.startsWith("z=")) &&
         l.split('\t').exists(_.startsWith("len="))))
-    // pruned read == full read + filter, on BOTH versions
+    // pruned read == full read + filter, on BOTH versions (the full
+    // read filters after the scan, so no file is skipped)
     def full(v: Int, lo: Long, hi: Long) =
       Export.readSnapshot(spark, out, v)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+        .filter(t => t._1 >= lo && t._1 <= hi).sorted.toSeq
+    def prunedRead(v: Int, lo: Long, hi: Long) =
+      Export.readSnapshot(spark, out, v)
         .filter(col("doc_id").between(lo, hi))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    def pruned(v: Int, lo: Long, hi: Long) =
-      Export.readSnapshotPruned(spark, out, v, "doc_id", lo, hi)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    def pruned(v: Int, lo: Long, hi: Long) = prunedRead(v, lo, hi)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(pruned(v1, 50, 150) === full(v1, 50, 150))
     assert(pruned(v2, 50, 150) === full(v2, 50, 150))
-    // the plan really skips files: count input files of the pruned scan
-    val prunedFiles = Export.readSnapshotPruned(spark, out, v2, "doc_id",
-        50, 150)
-      .select(col("_metadata.file_path")).distinct().count()
+    // the plan really skips files: count the files the pruned scan plans
+    val prunedFiles = scannedFiles(prunedRead(v2, 50, 150)).size
     assert(prunedFiles < manifestLines(v2).size,
       s"pruned scan read all ${manifestLines(v2).size} files")
     // a zoneless epoch (plain append) is ALWAYS read — never lost to pruning
@@ -300,8 +301,7 @@ class ExportLayoutSpec extends SparkSpec {
     assert(pruned(v3, 50, 150) === full(v3, 50, 150))
     assert(pruned(v3, 50, 150).map(_._1).contains(77L))
     // empty overlap keeps the schema and returns zero rows
-    assert(Export.readSnapshotPruned(spark, out, v3, "doc_id",
-      -500L, -400L).count() === 0)
+    assert(prunedRead(v3, -500L, -400L).count() === 0)
   }
 
   test("wide shards: conservation, id range, 65536 cap, disjoint from the nibble router") {
@@ -346,12 +346,12 @@ class ExportLayoutSpec extends SparkSpec {
     assert(rows(vc) === before, "clustered compaction changed the rows")
     assert(Export.snapshotMeta(out, vc) === Map("compacted_from" -> v2.toString))
     // the compacted layout prunes: a narrow range touches few of the 8 files
-    val touched = Export.readSnapshotPruned(spark, out, vc, "doc_id", 50, 120)
-      .select(col("_metadata.file_path")).distinct().count()
+    val narrow = Export.readSnapshot(spark, out, vc)
+      .filter(col("doc_id").between(50L, 120L))
+    val touched = scannedFiles(narrow).size
     assert(touched <= 3, s"compacted layout did not prune: $touched of 8 files")
     // and matches the unpruned read
-    assert(Export.readSnapshotPruned(spark, out, vc, "doc_id", 50, 120)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
+    assert(narrow.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ===
       before.filter(t => t._1 >= 50 && t._1 <= 120))
     // pre-compaction versions still read
     assert(rows(v1) === before.filter(_._1 % 2 == 0))
@@ -393,7 +393,7 @@ class ExportLayoutSpec extends SparkSpec {
     val back = Export.readSnapshot(spark, out, v1)
     assert(back.count() === 0)
     assert(back.schema.map(_.name) === Seq("k", "s"))
-    assert(Export.readSnapshotPruned(spark, out, v1, "k", 0, 10).count() === 0)
+    assert(back.filter(col("k").between(0L, 10L)).count() === 0)
     // the log continues normally after an empty version
     val v2 = Export.appendSnapshot(spark, Seq((5L, "y")).toDF("k", "s"), out)
     assert(Export.readSnapshot(spark, out, v2).count() === 1)
@@ -630,8 +630,9 @@ class ExportLayoutSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Export.resolveAsOfTimestamp(out, ts(0) - 1)
     }
-    // readSnapshotAsOf ≡ version-exact read
-    assert(Export.readSnapshotAsOf(spark, out, ts(1) - 1).count() ===
+    // a TIMESTAMP AS OF read ≡ version-exact read
+    assert(Export.readSnapshot(spark, out,
+        Export.resolveAsOfTimestamp(out, ts(1) - 1)).count() ===
       Export.readSnapshot(spark, out, v1).count())
   }
 
@@ -670,29 +671,52 @@ class ExportLayoutSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 1), out,
       Layout.Partitioned(Seq("lang"), nFiles = 4, zoneKey = Some("doc_id")))
     val all = Export.readSnapshot(spark, out, v2)
-    val en = Export.readSnapshotPartitioned(spark, out, v2,
-      Map("lang" -> "en"))
+    val en = all.filter(col("lang") === "en")
+    val enFiles = scannedFiles(en)
     // files of non-matching partitions are never planned: every planned
     // leaf lives in a _p_lang=en directory
-    assert(en.inputFiles.nonEmpty &&
-      en.inputFiles.forall(_.contains("_p_lang=en")),
-      s"non-en files planned: ${en.inputFiles.filterNot(_.contains("_p_lang=en")).take(3).mkString(", ")}")
-    assert(en.inputFiles.length < all.inputFiles.length)
+    assert(enFiles.nonEmpty &&
+      enFiles.forall(_.contains("_p_lang=en")),
+      s"non-en files planned: ${enFiles.filterNot(_.contains("_p_lang=en")).take(3).mkString(", ")}")
+    assert(enFiles.length < all.inputFiles.length)
     // rows ≡ full-scan predicate
-    assert(en.count() === all.filter(col("lang") === "en").count())
+    assert(en.count() === docs.filter(col("lang") === "en").count())
     // partition × zone composition plans a strict subset again (only the
     // second epoch carries zones; its en files outside [0,50] drop)
-    val enZone = Export.readSnapshotPartitioned(spark, out, v2,
-      Map("lang" -> "en"), zone = Some(("doc_id", 0L, 50L)))
-    assert(enZone.inputFiles.length < en.inputFiles.length,
-      s"zone pruned nothing within the partition: ${enZone.inputFiles.length} of ${en.inputFiles.length}")
+    val enZone = all.filter(col("lang") === "en" && col("doc_id").between(0L, 50L))
+    assert(scannedFiles(enZone).length < enFiles.length,
+      s"zone pruned nothing within the partition: ${scannedFiles(enZone).length} of ${enFiles.length}")
     assert(enZone.count() ===
-      all.filter(col("lang") === "en" && col("doc_id").between(0, 50)).count())
+      docs.filter(col("lang") === "en" && col("doc_id").between(0, 50)).count())
     // empty partition value: zero rows, schema intact
-    val none = Export.readSnapshotPartitioned(spark, out, v2,
-      Map("lang" -> "xx"))
+    val none = all.filter(col("lang") === "xx")
     assert(none.count() === 0)
     assert(none.columns.toSeq === all.columns.toSeq)
+    // CAST(col AS STRING) = 'v', the form p= stores, prunes an integral
+    // partition's tagged files, while an untagged plain epoch is still
+    // planned (its rows may hold any value)
+    val ip = tmp("partsnapint")
+    rmDir(ip)
+    val byPart = docs.withColumn("int_part", (col("doc_id") % 4).cast("int"))
+    Export.appendSnapshot(spark, byPart, ip,
+      Layout.Partitioned(Seq("int_part"), nFiles = 4))
+    val vi = Export.appendSnapshot(spark,
+      byPart.filter(col("doc_id") < 10L).withColumn("int_part", lit(3)), ip)
+    val allI = Export.readSnapshot(spark, ip, vi)
+    val three = allI.filter(col("int_part").cast("string") === "3")
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    val threeFiles = scannedFiles(three)
+    val untagged = Export.snapshotFiles(ip, vi)
+      .filterNot(_.contains("_p_int_part="))
+    assert(untagged.nonEmpty &&
+      untagged.map(name).toSet.subsetOf(threeFiles.map(name).toSet),
+      "the untagged plain epoch was pruned")
+    assert(threeFiles.filter(_.contains("_p_int_part="))
+      .forall(_.contains("_p_int_part=3")),
+      s"tagged files of other partitions planned: $threeFiles")
+    assert(threeFiles.length < allI.inputFiles.length)
+    assert(three.count() === byPart.filter(col("int_part") === 3).count() +
+      byPart.filter(col("doc_id") < 10L).count())
     // vacuum recurses into partition dirs: drop v1, reclaim its files
     val (droppedV, deletedF) = Export.vacuumSnapshots(out, keep = 1,
       horizonMs = 0)
@@ -714,28 +738,28 @@ class ExportLayoutSpec extends SparkSpec {
       Layout.Partitioned(Seq("lang", "source"), nFiles = 2))
     val all = Export.readSnapshot(spark, out, v2)
     // a filter on the SHARED column prunes files of both eras
-    val en = Export.readSnapshotPartitioned(spark, out, v2,
-      Map("lang" -> "en"))
-    assert(en.inputFiles.nonEmpty &&
-      en.inputFiles.forall(_.contains("_p_lang=en")))
-    assert(en.inputFiles.exists(_.contains("_p_source=")) &&
-      en.inputFiles.exists(!_.contains("_p_source=")),
+    val en = all.filter(col("lang") === "en")
+    val enFiles = scannedFiles(en)
+    assert(enFiles.nonEmpty &&
+      enFiles.forall(_.contains("_p_lang=en")))
+    assert(enFiles.exists(_.contains("_p_source=")) &&
+      enFiles.exists(!_.contains("_p_source=")),
       "an en read should span both partition-spec eras")
-    assert(en.count() === all.filter(col("lang") === "en").count())
+    assert(en.count() === d.filter(col("lang") === "en").count())
     // a filter on the EVOLVED column: era-1 files (no source in their
     // spec) must all still plan — pruning can't prove exclusion there —
     // while era-2 files of other sources are eliminated from the manifest
-    val src = Export.readSnapshotPartitioned(spark, out, v2,
-      Map("source" -> "src7"))
+    val src = all.filter(col("source") === "src7")
+    val srcFiles = scannedFiles(src)
     val eraOld = all.inputFiles.filterNot(_.contains("_p_source=")).toSet
-    assert(eraOld.subsetOf(src.inputFiles.toSet),
+    assert(eraOld.subsetOf(srcFiles.toSet),
       "evolution dropped old-spec files it cannot prove excluded")
-    assert(src.inputFiles.filter(_.contains("_p_source="))
+    assert(srcFiles.filter(_.contains("_p_source="))
       .forall(_.contains("_p_source=src7")),
       "new-spec files of other sources were planned")
-    assert(src.inputFiles.length < all.inputFiles.length)
+    assert(srcFiles.length < all.inputFiles.length)
     // rows are exact regardless of which era they came from
-    assert(src.count() === all.filter(col("source") === "src7").count())
+    assert(src.count() === d.filter(col("source") === "src7").count())
     // partition-scoped DML on the evolved column refuses the mixed
     // table instead of silently corrupting it
     val ex = intercept[IllegalArgumentException] {
@@ -1080,8 +1104,9 @@ class ExportLayoutSpec extends SparkSpec {
       f.contains("_p_half=")), s"rewritten files lost a layout dim: " +
       rewritten.take(3).mkString(", "))
     // pruning on the UNFILTERED column still works across the rewrite
-    val zeros = Export.readSnapshotPartitioned(spark, out, vC,
-      Map("half" -> "0")).select("doc_id").collect().map(_.getLong(0))
+    val zeros = Export.readSnapshot(spark, out, vC)
+      .filter(col("half") === "0").select("doc_id").collect()
+      .map(_.getLong(0))
     assert(zeros.nonEmpty && zeros.forall(_ % 2 == 0))
     // and partition-scoped DML still accepts the table as consistent
     Export.compactSnapshotPartition(spark, out,
@@ -1099,19 +1124,19 @@ class ExportLayoutSpec extends SparkSpec {
       docs.filter(col("doc_id") % 2 === 1), out,
       Layout.Zordered("doc_id", "n_chars", 8))
     val all = Export.readSnapshot(spark, out, v2)
-    val box = Export.readSnapshotBox(spark, out, v2,
-      "doc_id", "n_chars", 50L, 220L, 100L, 260L)
-    assert(box.inputFiles.length < all.inputFiles.length,
-      s"box pruned nothing: ${box.inputFiles.length} of ${all.inputFiles.length}")
+    val box = all.filter(col("doc_id").between(50L, 220L) &&
+      col("n_chars").between(100L, 260L))
+    assert(scannedFiles(box).length < all.inputFiles.length,
+      s"box pruned nothing: ${scannedFiles(box).length} of ${all.inputFiles.length}")
     val expected = docs.filter(col("doc_id").between(50, 220) &&
       col("n_chars").between(100, 260))
     assert(box.count() === expected.count())
     assert(box.exceptAll(expected).count() === 0 &&
       expected.exceptAll(box).count() === 0)
     // pruning is 2-D: a box narrow in the SECOND key alone still skips
-    val bBox = Export.readSnapshotBox(spark, out, v2,
-      "doc_id", "n_chars", 0L, 10000L, 100L, 130L)
-    assert(bBox.inputFiles.length < all.inputFiles.length,
+    val bBox = all.filter(col("doc_id").between(0L, 10000L) &&
+      col("n_chars").between(100L, 130L))
+    assert(scannedFiles(bBox).length < all.inputFiles.length,
       "second-dimension selectivity pruned nothing")
     // OPTIMIZE ZORDER: one commit, rows identical, box pruning again —
     // asserted with a tight box (8 post-compaction files own coarse
@@ -1122,10 +1147,10 @@ class ExportLayoutSpec extends SparkSpec {
     assert(after.count() === all.count())
     val tight = docs.filter(col("doc_id").between(50, 120) &&
       col("n_chars").between(100, 160))
-    val boxC = Export.readSnapshotBox(spark, out, vC,
-      "doc_id", "n_chars", 50L, 120L, 100L, 160L)
+    val boxC = after.filter(col("doc_id").between(50L, 120L) &&
+      col("n_chars").between(100L, 160L))
     assert(boxC.count() === tight.count())
-    assert(boxC.inputFiles.length < after.inputFiles.length)
+    assert(scannedFiles(boxC).length < after.inputFiles.length)
   }
 
   test("bloom manifests: no false negatives for ANY present key, needles skip files, absent needle reads ~nothing") {
@@ -1144,26 +1169,32 @@ class ExportLayoutSpec extends SparkSpec {
     val keys = docs.select("doc_id").collect().map(_.getLong(0))
       .filter(_ % 7 == 0)
     keys.foreach { id =>
-      val got = Export.readSnapshotPoint(spark, out, v2, "doc_id", id)
+      val got = all.filter(col("doc_id") === id)
       assert(got.count() === 1, s"bloom lost present key $id")
     }
     // needles actually skip files
-    val needle = Export.readSnapshotPoint(spark, out, v2, "doc_id", 123L)
-    assert(needle.inputFiles.length < total,
-      s"bloom pruned nothing: ${needle.inputFiles.length} of $total")
+    val needle = all.filter(col("doc_id") === 123L)
+    assert(scannedFiles(needle).length < total,
+      s"bloom pruned nothing: ${scannedFiles(needle).length} of $total")
     // an absent needle: 0 rows, and (modulo false positives) few files
-    val absent = Export.readSnapshotPoint(spark, out, v2,
-      "doc_id", 987654321L)
+    val absent = all.filter(col("doc_id") === 987654321L)
     assert(absent.count() === 0)
-    assert(absent.inputFiles.length < total,
+    assert(scannedFiles(absent).length < total,
       "absent needle read the whole table")
+    // the format read plans through the same kernel, so it skips too
+    val viaFormat = spark.read.format("graftlake").load(out)
+      .filter(col("doc_id") === 123L)
+    assert(viaFormat.count() === 1)
+    assert(scannedFiles(viaFormat).length < total,
+      s"format read pruned nothing: ${scannedFiles(viaFormat).length} of $total")
     // files without a filter for the queried key are always planned:
     // an unbloomed epoch joins the table and stays visible to lookups
     Export.appendSnapshot(spark,
       docs.filter(col("doc_id") === 123L)
         .withColumn("doc_id", lit(900000L)), out)
     val v3 = Export.latestSnapshotVersion(out)
-    assert(Export.readSnapshotPoint(spark, out, v3, "doc_id", 900000L)
+    assert(Export.readSnapshot(spark, out, v3)
+      .filter(col("doc_id") === 900000L)
       .count() === 1, "unbloomed file was wrongly pruned")
   }
 
@@ -1231,8 +1262,8 @@ class ExportLayoutSpec extends SparkSpec {
       st.isDirectory && st.getPath.getName.startsWith("epoch=")),
       "shallow clone wrote data")
     // stats tags carried: zone-pruned read works on the clone immediately
-    val pruned = Export.readSnapshotPruned(spark, dst, 1, "doc_id", 0, 60)
-    assert(pruned.inputFiles.length < cloned.inputFiles.length)
+    val pruned = cloned.filter(col("doc_id").between(0L, 60L))
+    assert(scannedFiles(pruned).length < cloned.inputFiles.length)
     // divergence: the clone takes DML the source never sees, and vice versa
     Export.deleteWhere(spark, dst, col("lang") === "en")
     assert(Export.readSnapshot(spark, dst,
@@ -1269,14 +1300,13 @@ class ExportLayoutSpec extends SparkSpec {
       Layout.Statted(Seq("doc_id", "n_chars"), nFiles = 8))
     val all = Export.readSnapshot(spark, out, v2)
     // clustered column: a narrow doc_id range skips files
-    val byId = Export.readSnapshotRange(spark, out, v2,
-      Map("doc_id" -> ((0L, 60L))))
-    assert(byId.inputFiles.length < all.inputFiles.length)
+    val byId = all.filter(col("doc_id").between(0L, 60L))
+    assert(scannedFiles(byId).length < all.inputFiles.length)
     assert(byId.count() === docs.filter(col("doc_id").between(0, 60)).count())
     // conjunction: adding the second column can only shrink the plan
-    val both = Export.readSnapshotRange(spark, out, v2,
-      Map("doc_id" -> ((0L, 60L)), "n_chars" -> ((0L, 90L))))
-    assert(both.inputFiles.length <= byId.inputFiles.length)
+    val both = all.filter(col("doc_id").between(0L, 60L) &&
+      col("n_chars").between(0L, 90L))
+    assert(scannedFiles(both).length <= scannedFiles(byId).length)
     val expect = docs.filter(col("doc_id").between(0, 60) &&
       col("n_chars").between(0, 90))
     assert(both.count() === expect.count())
@@ -1287,8 +1317,8 @@ class ExportLayoutSpec extends SparkSpec {
       docs.filter(col("doc_id") === 1L)
         .withColumn("doc_id", lit(500000L)), out)
     val v3 = Export.latestSnapshotVersion(out)
-    assert(Export.readSnapshotRange(spark, out, v3,
-      Map("doc_id" -> ((500000L, 500000L)))).count() === 1,
+    assert(Export.readSnapshot(spark, out, v3)
+      .filter(col("doc_id").between(500000L, 500000L)).count() === 1,
       "unstatted epoch wrongly pruned")
   }
 
@@ -1339,7 +1369,8 @@ class ExportLayoutSpec extends SparkSpec {
     rmDir(out)
     Export.appendSnapshot(spark, docs, out, Layout.Clustered("doc_id", 6))
     val v2 = Export.deleteWhereMoR(spark, out, col("doc_id") % 5 === 0)
-    val pr = Export.readSnapshotPruned(spark, out, v2, "doc_id", 0L, 100L)
+    val pr = Export.readSnapshot(spark, out, v2)
+      .filter(col("doc_id").between(0L, 100L))
     assert(pr.count() === docs.filter(col("doc_id").between(0, 100) &&
       col("doc_id") % 5 =!= 0).count(),
       "zone-pruned read ignored the deletion vector")

@@ -145,8 +145,8 @@ class ExportMappingSpec extends SparkSpec {
     Export.renameSnapshotColumn(t, "m", "bucket")
     // pruned read by the NEW name over the OLD epoch's physical specs
     val v = Export.latestSnapshotVersion(t)
-    assert(Export.readSnapshotPartitioned(spark, t, v,
-        Map("bucket" -> "1"))
+    assert(Export.readSnapshot(spark, t, v)
+      .filter(col("bucket").cast("string") === "1")
       .select("id").as[Long].collect().sorted.toSeq ===
       (0L until 6L).filter(_ % 3 == 1))
     // partitioned append under the new name lands in the SAME physical
@@ -243,8 +243,8 @@ class ExportMappingSpec extends SparkSpec {
     // overlapping file plus the unstatted epoch's files get planned
     val (fs, _) = Export.fsRoot(t)
     assert(Export.snapshotFiles(t, v).nonEmpty)
-    val got = Export.readSnapshotRange(spark, t, v,
-        Map("chars" -> ((60L, 70L))))
+    val got = Export.readSnapshot(spark, t, v)
+      .filter(col("chars").between(60L, 70L))
       .select("id").as[Long].collect().sorted.toSeq
     assert(got === Seq(6L, 7L))
     // bloom on a renamed key: b= tag physical, probe logical
@@ -255,7 +255,7 @@ class ExportMappingSpec extends SparkSpec {
     val v2 = Export.appendSnapshot(spark,
       (4 until 8).map(i => (i.toLong, s"d$i")).toDF("key", "s"), t2,
       Layout.Bloomed(key = "key", nFiles = 2))
-    assert(Export.readSnapshotPoint(spark, t2, v2, "key", 5L)
+    assert(Export.readSnapshot(spark, t2, v2).filter(col("key") === 5L)
       .select("s").as[String].collect().toSeq === Seq("d5"))
     // the other order too: stat FIRST (tags under the original name),
     // THEN rename - the lookup still translates and prunes
@@ -264,8 +264,8 @@ class ExportMappingSpec extends SparkSpec {
       (0 until 8).map(i => (i.toLong, (i * 10).toLong))
         .toDF("id", "n"), t3, Layout.Statted(cols = Seq("n"), nFiles = 4))
     val v3 = Export.renameSnapshotColumn(t3, "n", "chars")
-    assert(Export.readSnapshotRange(spark, t3, v3,
-        Map("chars" -> ((60L, 70L))))
+    assert(Export.readSnapshot(spark, t3, v3)
+      .filter(col("chars").between(60L, 70L))
       .select("id").as[Long].collect().sorted.toSeq === Seq(6L, 7L))
     assert(Export.metadataRange(t3, v3, "chars") === Some((0L, 70L)))
   }

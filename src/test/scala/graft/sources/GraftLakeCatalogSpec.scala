@@ -656,8 +656,8 @@ class GraftLakeCatalogSpec extends SparkSpec {
       s"general-rewrite inserts must draw dense fresh ids, got $ids")
     // DROP + CREATE at the same path on the same thread: the new
     // table's sequence starts at START WITH, not the dropped table's
-    // stale watermark (the pendingIdentity ThreadLocal is cleared on
-    // consumption)
+    // stale watermark (a commit stamps only the watermarks its own
+    // epoch claimed)
     spark.sql("DROP TABLE glc.ns_ide.t")
     spark.sql("CREATE TABLE glc.ns_ide.t (id BIGINT GENERATED ALWAYS " +
       "AS IDENTITY, v BIGINT)")

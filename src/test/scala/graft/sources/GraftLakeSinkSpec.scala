@@ -140,8 +140,8 @@ class GraftLakeSinkSpec extends SparkSpec {
     s.addBatch(0, rows(0, 6))
     s.addBatch(1, rows(6, 9))
     val v = Export.latestSnapshotVersion(t.getAbsolutePath)
-    val pruned = Export.readSnapshotPartitioned(spark,
-      t.getAbsolutePath, v, Map("m" -> "1"))
+    val pruned = Export.readSnapshot(spark, t.getAbsolutePath, v)
+      .filter(col("m").cast("string") === "1")
     assert(pruned.select("id").as[Long].collect().sorted.toSeq ===
       (0L until 9L).filter(_ % 3 == 1))
     // layout proof: manifest lines of matching partitions only
