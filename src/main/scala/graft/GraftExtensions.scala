@@ -632,6 +632,11 @@ object GraftExtensions {
               case None => updates0
             }
           val partCols = E.snapshotPartitionColumns(path, latest)
+          def merged(base: org.apache.spark.sql.DataFrame)
+              : org.apache.spark.sql.DataFrame =
+            if (orderCols.nonEmpty) graft.operators.Merge
+              .upsertLatest(base, updates, keys, orderCols)
+            else graft.operators.Merge.upsert(base, updates, keys)
           val v =
             if (mor)
               // upsertSnapshotMoR itself refuses partitioned tables
@@ -639,25 +644,17 @@ object GraftExtensions {
               // would break partition-scoped DML forever after)
               E.upsertSnapshotMoR(spark, path, updates, keys, orderCols)
             else if (partCols.nonEmpty &&
-                partCols.toSet.subsetOf(keys.toSet)) {
+                partCols.toSet.subsetOf(keys.toSet))
               // layout ⊆ key: the partition-scoped rewrite (cost follows
               // the touched partitions, not the table)
-              if (orderCols.nonEmpty)
-                E.mergeSnapshotPartitionedLatest(spark, path, updates,
-                  keys, partCols, orderCols)
-              else E.mergeSnapshotPartitioned(spark, path, updates, keys,
-                partCols)
-            } else {
-              val base = E.readSnapshot(spark, path, latest)
-              val merged =
-                if (orderCols.nonEmpty) graft.operators.Merge
-                  .upsertLatest(base, updates, keys, orderCols)
-                else graft.operators.Merge.upsert(base, updates, keys)
+              E.rewriteScoped(spark, path, E.keyedScope(
+                  E.readManifest(path, latest), updates, keys, partCols),
+                Layout.Partitioned(partCols), Map.empty, "overwrite")(merged)
+            else
               // keep the declared layout: a partitioned table whose
               // layout exceeds the key set still commits partitioned
-              E.replaceSnapshot(spark, merged, path,
-                Layout.partitionedBy(partCols))
-            }
+              E.replaceSnapshot(spark, merged(E.readSnapshot(spark, path,
+                latest)), path, Layout.partitionedBy(partCols))
           Seq(v.toLong)
         }
       }),

@@ -147,23 +147,6 @@ object Dedup {
         coalesce(col("n_dup"), lit(0L)).as("n_dup"))
   }
 
-  /** Character k-shingles (distinct) of a PRE-MATERIALIZED char-array
-    * column (`split(norm, "")` behind an exchange barrier). `chars` MUST
-    * be an attribute: an expression here would sit inside the transform
-    * lambda and re-evaluate once per shingle — the quadratic trap the
-    * PERF INVARIANT above describes. Array slices are O(k) where
-    * `UTF8String.substr` is O(position). */
-  def shinglesOfChars(chars: Column, k: Int = 5): Column =
-    array_distinct(
-      transform(sequence(lit(0), greatest(size(chars) - k, lit(0))),
-        i => array_join(slice(chars, i + lit(1), lit(k)), "")))
-
-  /** MinHash signature: for each of `numHashes` hash functions h_j, the
-    * minimum over shingles of xxhash64(shingle, j). One narrow pass. */
-  def minhashSignature(shingles: Column, numHashes: Int = 32): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(shingles, s => xxhash64(s, j))))
-
   /** LSH banding: split the signature into `bands` equal bands; emit one
     * (band_idx, band_key) per band. Docs sharing any band key are
     * candidates. */
@@ -794,11 +777,6 @@ object Dedup {
       explode(array((0 until 4).map(b => struct(lit(b).as("band"),
         concat(col(s"sig_${2 * b}"), col(s"sig_${2 * b + 1}")).as("bkey"))): _*))
         .as("_b"): _*)
-
-  /** Signature-agreement count between `sa_j`/`sb_j` column families. */
-  def md5AgreementCount: Column =
-    (0 until 8).map(j =>
-      when(col(s"sa_$j") === col(s"sb_$j"), 1).otherwise(0)).reduce(_ + _)
 
   /** Distributed connected components over an undirected edge list, via
     * alternating LARGE-STAR / SMALL-STAR rounds (Kiveris et al.,

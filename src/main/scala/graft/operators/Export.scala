@@ -238,7 +238,9 @@ object Export {
   // exactly-once batch id); readers skip them.
 
   import org.apache.hadoop.fs.{FileSystem, Path}
-  import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+  import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression, GreaterThanOrEqual, In, LessThanOrEqual, Literal, Or}
+  import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
   /** Hadoop conf of the active session (the one whose fs.* settings the
     * deployment configured), falling back to a default Configuration so
@@ -425,9 +427,6 @@ object Export {
       zone: Option[(Long, Long)], zone2: Option[(Long, Long, Long, Long)],
       bloom: Option[(String, String)], rows: Option[Long], line: String) {
     def hasDv: Boolean = dv.nonEmpty
-    /** False only when the zone provably misses `[lo, hi]`. */
-    def zoneOverlaps(lo: Long, hi: Long): Boolean =
-      zone.forall { case (zlo, zhi) => zhi >= lo && zlo <= hi }
   }
 
   /** One committed version's manifest, parsed once ([[readManifest]]):
@@ -1242,10 +1241,9 @@ object Export {
       case Plain => writeEpoch(fs, root, head, df)._1
 
       case Clustered(key, nFiles) =>
-        // the zone rides as z= (its cast-long encoding pairs with the
-        // merge envelope's own cast, for the clustered merge/read paths)
-        // AND as a NAMED s= stat, the one the read kernel
-        // (GraftLakeBatch.excludes) prunes clustered files with; the
+        // the zone rides as z= (cast-long; DESCRIBE DETAIL and two gates
+        // read it) AND as a NAMED s= stat, the one the excludes kernel
+        // prunes clustered files and scopes rewrites with; the
         // stat takes the TYPED encoding/key
         // (micros under #us for an event-time key) so a pushed
         // `ts >= TIMESTAMP'...'` range prunes the landing table
@@ -1351,8 +1349,8 @@ object Export {
             phys(c) -> v
           }
           // the zone ALSO rides as a NAMED s= stat (the clustered
-          // convention): z= keeps the cast-long pair its merge consumers
-          // use; the named s= takes the TYPED encoding/key (statLong)
+          // convention): z= keeps the cast-long pair; the named s= takes
+          // the TYPED encoding/key (statLong) the excludes kernel reads
           Tag.partition(spec) +: zoneKey.toSeq.flatMap(k => Seq(
             Tag.zone(r.getAs[Long]("__z_lo"), r.getAs[Long]("__z_hi")),
             Tag.stat(statKeyOf(phys(k), dt(k)),
@@ -3295,319 +3293,179 @@ object Export {
       partitionCols: Seq[String]): Seq[String] =
     partitionCols.map(e.partition)
 
-  /** Dynamic partition overwrite — Delta's `replaceWhere` in its
-    * dynamic form / Hive's `INSERT OVERWRITE ... PARTITION`: commit a
-    * new version in which every partition PRESENT IN `df` is replaced
-    * by `df`'s rows and every other partition's files are carried
-    * verbatim. This is the nightly-reload idiom of every
-    * date-partitioned production table — recompute one `dt`, replace
-    * exactly that `dt`, touch nothing else. The committed schema is the
-    * union of the table's and `df`'s, so overwrite composes with
-    * evolution. Race semantics: MAINTENANCE (version pinned to the head
-    * read at entry) — an overwrite does not commute with a concurrent
-    * commit, so a race fails this commit cleanly instead of silently
-    * dropping the winner's rows. Returns the new version. */
-  def overwritePartitions(spark: SparkSession, df: DataFrame,
-      outDir: String, partitionCols: Seq[String], nFiles: Int = 1,
-      zoneKey: Option[String] = None,
-      meta: Map[String, String] = Map.empty): Int = {
-    val (fs, root) = fsRoot(outDir)
-    overwritePartitionsFrom(spark, df, outDir, headOf(fs, root),
-      partitionCols, nFiles, zoneKey, meta)
+  /** The files a row-level rewrite replaces: the entries of `base` (the
+    * version the rewrite reads and is judged against) that
+    * [[graft.sources.GraftLakeBatch.excludes]] cannot rule out under
+    * `predicate`, a Catalyst predicate over the table's columns — the
+    * same kernel every pruned read uses, so a line lacking the tag a
+    * conjunct needs is always in scope. [[partitionScope]],
+    * [[keyedScope]] and [[envelopeScope]] build the layout-shaped ones;
+    * predicate DML scopes by its own pruning conjuncts. */
+  private[graft] final case class Scope(base: Manifest,
+      predicate: Expression) {
+    lazy val files: Seq[ManifestEntry] = {
+      val out = graft.sources.GraftLakeBatch.excludes(predicate, base.physOf)
+      base.entries.filterNot(out)
+    }
   }
 
-  /** [[overwritePartitions]] pinned to an explicit base version — the
-    * shared commit half of overwrite and partition-scoped MERGE (whose
-    * rewrite was computed FROM that base, so committing over any other
-    * head would lose the racing commit's rows). */
-  private def overwritePartitionsFrom(spark: SparkSession, df: DataFrame,
-      outDir: String, base: Option[Manifest], partitionCols: Seq[String],
-      nFiles: Int, zoneKey: Option[String],
-      meta: Map[String, String],
-      replaceTuples: Option[Set[Seq[String]]] = None): Int = {
-    val (fs, root) = fsRoot(outDir)
-    fs.mkdirs(root)
-    // spec matching runs on the PHYSICAL partition-column names the
-    // p= specs carry (identity on never-renamed tables)
-    val pm = physicalRenames(base, df)
-    val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    val fresh = writeLayout(spark, fs, root, base, df,
-      Layout.Partitioned(partitionCols, nFiles, zoneKey))
-    // the replace set defaults to the partitions the fresh epoch
-    // wrote; a row-level rewrite passes it EXPLICITLY: a partition the
-    // rewrite EMPTIED leaves no fresh line yet its base lines must
-    // still drop (deriving the set from the epoch would resurrect
-    // every fully-deleted partition), and a fresh line OUTSIDE the set
-    // is an ADDITIVE append into a partition whose base lines carry
-    // (the general merge's insert leg landing in an untouched
-    // partition)
-    val freshTuples: Set[Seq[String]] = replaceTuples.getOrElse(
-      fresh.lines.map(l => partTuple(parseEntry(l), physCols)).toSet)
-    def replaced(e: ManifestEntry) = freshTuples(partTuple(e, physCols))
-    // the base state of OUR partitions, pinned at plan time: the
-    // disjointness certificate every retry re-checks against the head
-    val baseTouched: Set[String] = base.fold(Set.empty[String]) { b =>
-      requirePartitioned(b.entries, physCols, "overwritePartitions")
-      b.entries.filter(replaced).map(_.line).toSet
+  private[graft] object Scope {
+    /** The scope of the conjunction of `conjuncts` (all files if none). */
+    def of(base: Manifest, conjuncts: Seq[Expression]): Scope =
+      Scope(base, conjuncts.foldLeft[Expression](Literal.TrueLiteral)(And))
+  }
+
+  /** The exact scope of the partition `tuples` (string values in `cols`
+    * order): `CAST(c AS STRING) IN (...)` for one column, else an `Or` of
+    * per-tuple conjunctions — the form the `p=` specs store. Requires a
+    * consistently partitioned `base` ([[requirePartitioned]]), so every
+    * file in scope holds only rows of the tuples. */
+  private[graft] def partitionScope(base: Manifest, cols: Seq[String],
+      tuples: Set[Seq[String]]): Scope = {
+    requirePartitioned(base.entries, cols.map(base.physicalIn),
+      "partition-scoped DML")
+    def asString(c: String) = Cast(UnresolvedAttribute.quoted(c), StringType)
+    val sorted = tuples.toSeq.sortBy(_.mkString("\u0000"))
+    val predicate = cols match {
+      case _ if tuples.isEmpty => Literal.FalseLiteral
+      case Seq(c) => In(asString(c), sorted.map(t => Literal(t.head)))
+      case _ => sorted.map(t => cols.zip(t).map { case (c, v) =>
+          EqualTo(asString(c), Literal(v)): Expression }.reduce(And))
+        .reduce(Or)
     }
-    // OPTIMISTIC RETRY against commuting winners (r12 verdict #3): the
-    // rewrite replaced exactly the partitions in `freshTuples`, so it
-    // commutes with any interleaved commit that (a) kept the table
-    // consistently partitioned and (b) did not touch those partitions
-    // — their lines at the new head must be EXACTLY the pinned base's
-    // (same files, same dv/zone tags). Then the retried commit carries
-    // the head's other-partition lines (keeping the winner's changes)
-    // and still replaces ours. A winner that DID touch our partitions
-    // raises the typed conflict: replaying our rewrite would silently
-    // drop its rows — the one outcome a lake must never allow.
-    val stamped = meta + ("overwrote_partitions" -> freshTuples.size.toString)
+    Scope(base, predicate)
+  }
+
+  /** The distinct partition tuples `rows` land in, as the `p=` specs
+    * spell them (`CAST(c AS STRING)`): one small driver collect. */
+  private[graft] def partitionsOf(rows: DataFrame,
+      cols: Seq[String]): Set[Seq[String]] =
+    rows.select(cols.map(c => col(c).cast("string")): _*).distinct()
+      .collect().map(r => cols.indices.map(r.getString): Seq[String]).toSet
+
+  /** [[partitionScope]] of the partitions the keyed `rows` land in: the
+    * scope of a MERGE, upsert or MERGE-DELETE keyed on `keyCols` into a
+    * table partitioned by `cols`. Requires `cols ⊆ keyCols` — a key
+    * then pins its partition, so the scoped rewrite equals the global
+    * one (the reason production MERGEs carry an `AND t.dt = s.dt`
+    * conjunct). */
+  private[graft] def keyedScope(base: Manifest, rows: DataFrame,
+      keyCols: Seq[String], cols: Seq[String]): Scope = {
+    require(cols.toSet.subsetOf(keyCols.toSet),
+      s"partition columns (${cols.mkString(", ")}) must be part of the " +
+        s"merge key (${keyCols.mkString(", ")}): only then does a key " +
+        "pin its partition and the partition-scoped rewrite equal the " +
+        "global one")
+    partitionScope(base, cols, partitionsOf(rows, cols))
+  }
+
+  /** The scope of the key envelope of `rows` on `key`, one of the
+    * merge keys `keyCols`: `key >= lo AND key <= hi` over literals of
+    * the key's own type, so the `s=` stat prunes (a timestamp compares
+    * in micros under `<key>#us`). A row matched on the keys equals a
+    * batch row on `key`, so a file whose range misses the envelope holds
+    * none. A batch holding a NULL key has no provable envelope (under
+    * `<=>` it matches incumbents anywhere): its scope is the whole
+    * table. None for an empty batch. One small driver agg. */
+  private[graft] def envelopeScope(base: Manifest, rows: DataFrame,
+      keyCols: Seq[String], key: String): Option[Scope] = {
+    require(keyCols.contains(key),
+      s"cluster key '$key' must be one of the merge keys " +
+        s"(${keyCols.mkString(", ")}) - only then does a matched row's " +
+        "file provably overlap the batch envelope")
+    val env = rows.agg(min(col(key)), max(col(key)), count(lit(1)),
+      count(col(key))).collect().head
+    val n = env.getLong(2)
+    if (n == 0L) None
+    else if (env.getLong(3) < n) Some(Scope(base, Literal.TrueLiteral))
+    else Some(Scope(base, within(key, rows.schema(key).dataType,
+      env.get(0), env.get(1))))
+  }
+
+  /** `key >= lo AND key <= hi` over literals of type `dt`. */
+  private def within(key: String, dt: DataType, lo: Any,
+      hi: Any): Expression = {
+    val a = UnresolvedAttribute.quoted(key)
+    And(GreaterThanOrEqual(a, Literal.create(lo, dt)),
+      LessThanOrEqual(a, Literal.create(hi, dt)))
+  }
+
+  /** The one copy-on-write row-level rewrite — DELETE, UPDATE, every
+    * scoped MERGE and MERGE-DELETE, INSERT OVERWRITE: read
+    * `scope.files` (DV-subtracted, decoded through the committed
+    * schema), write `transform` of those rows as one epoch laid out by
+    * `layout`, and commit a version in which that epoch replaces exactly
+    * `scope.files` while every other file carries verbatim
+    * ([[commitScoped]]). Cost follows the files in scope, not the table.
+    * `op` is the commit kind streams see. Returns the new version. */
+  private[graft] def rewriteScoped(spark: SparkSession, outDir: String,
+      scope: Scope, layout: Layout, meta: Map[String, String], op: String)(
+      transform: DataFrame => DataFrame): Int = {
+    val (fs, root) = fsRoot(outDir)
+    val result = transform(readFilesAs(spark, root, scope.base, scope.files))
+    commitScoped(fs, root, scope, scope.files.map(_.line -> None).toMap,
+      writeLayout(spark, fs, root, Some(scope.base), result, layout), meta,
+      result.schema, op)
+  }
+
+  /** The one commit rule of every rewrite computed FROM `scope.base` —
+    * copy-on-write and deletion-vector DML, and compaction: the new
+    * version is the head's lines with each `replace` key dropped (None)
+    * or re-tagged in place (Some), plus the `fresh` epoch. A racing
+    * commit is judged by what it did. An interleaved APPEND always
+    * commutes: its lines carry, and "this rewrite, then the append" is a
+    * valid serial order (its rows were never visible to the rewrite).
+    * Any other interleaved commit commutes only if it left the `#schema=`
+    * header, the `check_*` headers and every in-scope line unchanged:
+    * every line this commit consumes or re-tags is still there, and no
+    * line it added falls in `scope` — then "it, then this rewrite" is the
+    * serial order. A `check_*` change by any commit, an append included,
+    * conflicts too: the fresh epoch was never validated against it.
+    * Anything else raises the typed [[ConcurrentCommitException]] naming
+    * the winning version, because committing would drop or un-check the
+    * winner's rows. The committed schema is the head's, plus any column
+    * only `written` (the fresh epoch's frame) carries. */
+  private def commitScoped(fs: FileSystem, root: Path, scope: Scope,
+      replace: Map[String, Option[String]], fresh: Epoch,
+      meta: Map[String, String], written: StructType, op: String): Int = {
+    val base = scope.base
+    lazy val outOfScope =
+      graft.sources.GraftLakeBatch.excludes(scope.predicate, base.physOf)
+    def conflict(v: Int, why: String) = new ConcurrentCommitException(
+      s"concurrent commit _v$v under $root $why - this '$op' would drop " +
+        "or un-check its rows; re-plan against the new head", v)
     var attempt = 0
     while (attempt <= MaxAppendRetries) {
-      val head = headOf(fs, root, base)
-      val (carried, schema) = head match {
-        case None => (Seq.empty[String], df.schema)
-        case Some(h) =>
-          if (!base.exists(_.version == h.version)) {
-            val consistent = h.entries.forall(e =>
-              physCols.forall(e.partition.contains))
-            val headTouched =
-              if (consistent) h.entries.filter(replaced).map(_.line).toSet
-              else Set.empty[String]
-            if (!consistent || headTouched != baseTouched)
-              throw new ConcurrentCommitException(
-                s"concurrent commit(s) up to _v${h.version} under $root " +
-                  "touched the partition(s) this rewrite replaces " +
-                  "(or broke the partition layout) - committing would " +
-                  "drop the winner's rows; re-plan against the new " +
-                  "head", h.version)
-          }
-          (h.entries.filterNot(replaced).map(_.line),
-            unionSchema(h.schemaOpt.getOrElse(df.schema), df.schema))
+      val head = headOf(fs, root, Some(base)).get
+      ((base.version + 1) to head.version).foldLeft(base) { (prev, v) =>
+        val cur = if (v == head.version) head else readManifest(fs, root, v)
+        if (storedChecks(cur.meta) != storedChecks(prev.meta))
+          throw conflict(v, "changed the CHECK constraints")
+        if (!cur.op.contains("append")) {
+          val had = prev.lines.toSet
+          val has = cur.lines.toSet
+          if (cur.schemaOpt != prev.schemaOpt)
+            throw conflict(v, "changed the schema")
+          if (!replace.keys.forall(has) ||
+              cur.entries.exists(e => !had(e.line) && !outOfScope(e)))
+            throw conflict(v, "rewrote files in this commit's scope")
+        }
+        cur
       }
-      val version = head.fold(0)(_.version) + 1
-      rewriteRaceInjector.foreach(_(root, version))
-      try {
-        commitManifest(fs, root, version,
-          internalMeta(head,
-            head.fold(stamped)(carryBatch(fs, root, _, stamped)),
-            schema.json, "overwrite", fresh.claimed),
-          carried ++ fresh.lines)
-        return version
-      } catch {
+      rewriteRaceInjector.foreach(_(root, head.version + 1))
+      val schema = head.schemaOpt.fold(written)(h => StructType(h.fields ++
+        written.fields.filterNot(f => h.fieldNames.contains(f.name))
+          .map(_.copy(nullable = true))))
+      try return commitMetadata(fs, root, head, meta, schema.json, op,
+        head.lines.flatMap(l => replace.getOrElse(l, Some(l))) ++ fresh.lines,
+        claimed = fresh.claimed)
+      catch {
         case e: ConcurrentCommitException =>
           attempt += 1
           if (attempt > MaxAppendRetries) throw e
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** MERGE INTO a partitioned snapshot table with PARTITION-SCOPED
-    * rewrite: upsert `updates` (full-row MERGE semantics of
-    * [[Merge.upsert]] — matched keys take the update's every column,
-    * unmatched updates insert, unmatched base rows persist) while
-    * rewriting ONLY the partitions present in `updates`; every other
-    * partition's files are carried verbatim into the new version.
-    *
-    * Requires `partitionCols ⊆ keyCols`: a key then pins its partition,
-    * so the per-partition merge provably equals the global one — the
-    * same reason production MERGEs carry an `AND t.dt = s.dt` pruning
-    * conjunct. 100 TB shape: cost scales with the TOUCHED partitions
-    * (one key-shuffle join over their rows plus one partitioned write),
-    * not with the table — the difference between rewriting one day and
-    * rewriting three years. The touched-partition list is planning
-    * metadata (one tuple per touched partition, not per row) — bounded
-    * exactly like the manifest itself. Race semantics: maintenance
-    * (version pinned to the head the merge read). Returns the new
-    * version. */
-  def mergeSnapshotPartitioned(spark: SparkSession, outDir: String,
-      updates: DataFrame, keyCols: Seq[String],
-      partitionCols: Seq[String], nFiles: Int = 1,
-      zoneKey: Option[String] = None,
-      meta: Map[String, String] = Map.empty): Int =
-    mergePartitionedWith(spark, outDir, updates, keyCols, partitionCols,
-      nFiles, zoneKey, meta)(Merge.upsert(_, _, keyCols))
-
-  /** [[mergeSnapshotPartitioned]] with ORDER-RESOLVED conflict handling
-    * ([[Merge.upsertLatest]]): per key the surviving row is the maximum
-    * by `orderCols` across the table and the updates — associative and
-    * commutative in the update batches, so an out-of-order CDC feed
-    * applied micro-batch-at-a-time settles to exactly the global
-    * resolution. The streaming apply-changes sink
-    * (`EventStream.streamingCdcApply`) is this call in a loop. */
-  def mergeSnapshotPartitionedLatest(spark: SparkSession, outDir: String,
-      updates: DataFrame, keyCols: Seq[String],
-      partitionCols: Seq[String], orderCols: Seq[String],
-      nFiles: Int = 1, zoneKey: Option[String] = None,
-      meta: Map[String, String] = Map.empty): Int =
-    mergePartitionedWith(spark, outDir, updates, keyCols, partitionCols,
-      nFiles, zoneKey, meta)(Merge.upsertLatest(_, _, keyCols, orderCols))
-
-  private def mergePartitionedWith(spark: SparkSession, outDir: String,
-      updates: DataFrame, keyCols: Seq[String],
-      partitionCols: Seq[String], nFiles: Int,
-      zoneKey: Option[String], meta: Map[String, String])
-      (resolve: (DataFrame, DataFrame) => DataFrame): Int = {
-    require(partitionCols.toSet.subsetOf(keyCols.toSet),
-      s"partition columns (${partitionCols.mkString(", ")}) must be " +
-        s"part of the merge key (${keyCols.mkString(", ")}): only then " +
-        "does a key pin its partition and the partition-scoped merge " +
-        "equal the global one")
-    val latest = latestSnapshotVersion(outDir)
-    require(latest > 0, s"nothing to merge into under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
-    val pm = physicalRenames(Some(m), updates)
-    val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    requirePartitioned(m.entries, physCols, "mergeSnapshotPartitioned")
-    val touched: Set[Seq[String]] = updates
-      .select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => partitionCols.indices.map(i => r.getString(i)): Seq[String])
-      .toSet
-    val hit = m.entries.filter(e => touched(partTuple(e, physCols)))
-    val merged = resolve(readFilesAs(spark, root, m, hit), updates)
-    overwritePartitionsFrom(spark, merged, outDir, Some(m), partitionCols,
-      nFiles, zoneKey,
-      meta + ("merged_partitions" -> touched.size.toString))
-  }
-
-  /** PARTITION-SCOPED MERGE-DELETE — [[mergeSnapshotPartitioned]]'s
-    * discipline applied to the delete leg: drop every row whose key
-    * tuple appears in `keys` (anti-join on `keyCols`) while rewriting
-    * ONLY the partitions PRESENT IN `keys`; every other partition's
-    * files carry verbatim. Requires `partitionCols ⊆ keyCols` — a key
-    * then pins its partition, so the per-partition anti-join provably
-    * equals the global one. A partition the delete EMPTIES is dropped
-    * from the new version outright (its tuple rides the explicit
-    * replace set — no fresh file needed to evict its old lines).
-    * 100 TB shape: a MERGE-DELETE keyed on the layout costs the
-    * touched partitions, not a full-table rewrite. Race semantics:
-    * maintenance (pinned to the head read at entry), identical to the
-    * partition-scoped merge. Returns the new version. */
-  def deleteSnapshotPartitioned(spark: SparkSession, outDir: String,
-      keys: DataFrame, keyCols: Seq[String],
-      partitionCols: Seq[String], nFiles: Int = 1,
-      meta: Map[String, String] = Map.empty): Int = {
-    require(keyCols.nonEmpty, "deleteSnapshotPartitioned needs keys")
-    require(partitionCols.toSet.subsetOf(keyCols.toSet),
-      s"partition columns (${partitionCols.mkString(", ")}) must be " +
-        s"part of the delete key (${keyCols.mkString(", ")}): only " +
-        "then does a key pin its partition and the partition-scoped " +
-        "anti-join equal the global one")
-    require(keys.columns.toSet == keyCols.toSet,
-      s"keys frame must carry exactly the key columns " +
-        s"(${keyCols.mkString(", ")}), got ${keys.columns.mkString(", ")}")
-    val latest = latestSnapshotVersion(outDir)
-    require(latest > 0, s"nothing to delete from under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
-    val pm = physicalRenames(Some(m), keys)
-    val physCols = partitionCols.map(c => pm.getOrElse(c, c))
-    requirePartitioned(m.entries, physCols, "deleteSnapshotPartitioned")
-    val touched: Set[Seq[String]] = keys
-      .select(partitionCols.map(c => col(c).cast("string")): _*)
-      .distinct().collect()
-      .map(r => partitionCols.indices.map(i => r.getString(i)): Seq[String])
-      .toSet
-    if (touched.isEmpty) return latest // empty key batch: no-op
-    val hit = m.entries.filter(e => touched(partTuple(e, physCols)))
-    val remaining = readFilesAs(spark, root, m, hit)
-      .join(keys, keyCols.toSeq, "left_anti")
-    overwritePartitionsFrom(spark, remaining, outDir, Some(m),
-      partitionCols, nFiles, None,
-      meta + ("deleted_partitions" -> touched.size.toString),
-      replaceTuples = Some(touched))
-  }
-
-  /** The rows of EXACTLY the given partition tuples (stringified
-    * values in `partitionCols` order), DV-subtracted and decoded
-    * through the committed schema — the read half of a
-    * partition-scoped row-level rewrite. Requires a consistently
-    * partitioned table. */
-  def readSnapshotPartitionTuples(spark: SparkSession, outDir: String,
-      version: Int, partitionCols: Seq[String],
-      tuples: Set[Seq[String]]): DataFrame = {
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, version)
-    val physCols = partitionCols.map(m.physicalIn)
-    requirePartitioned(m.entries, physCols, "readSnapshotPartitionTuples")
-    readFilesAs(spark, root, m,
-      m.entries.filter(e => tuples(partTuple(e, physCols))))
-  }
-
-  /** Commit `df` as the COMPLETE new content of exactly the partitions
-    * in `touched` (carrying every other partition's files verbatim) —
-    * the commit half of a partition-scoped row-level rewrite whose
-    * replace set cannot be derived from the fresh epoch: a touched
-    * partition the rewrite EMPTIED drops outright, and a `df` row
-    * landing OUTSIDE `touched` (the general merge's insert leg)
-    * appends into its partition without disturbing the carried lines.
-    * Race semantics: maintenance, pinned to the current head. */
-  def replaceSnapshotPartitionsScoped(spark: SparkSession,
-      df: DataFrame, outDir: String, partitionCols: Seq[String],
-      touched: Set[Seq[String]], nFiles: Int = 1,
-      meta: Map[String, String] = Map.empty): Int = {
-    val (fs, root) = fsRoot(outDir)
-    overwritePartitionsFrom(spark, df, outDir, headOf(fs, root),
-      partitionCols, nFiles, None, meta, replaceTuples = Some(touched))
-  }
-
-  /** `(rows, envelope)` of a batch on `key`, cast to the zone domain
-    * (long): the envelope is `None` when it cannot be PROVEN — null
-    * keys present (they can match incumbents anywhere under `<=>`),
-    * or a type whose cast nulls — in which case zone scoping must
-    * degrade to the full set (correctness over pruning, the
-    * [[mergeSnapshotClusteredLatest]] law). One tiny driver agg. */
-  def batchEnvelope(df: DataFrame, key: String)
-      : (Long, Option[(Long, Long)]) = {
-    val env = df.agg(min(col(key)).cast("long"),
-      max(col(key)).cast("long"), count(lit(1)), count(col(key)))
-      .collect().head
-    val n = env.getLong(2)
-    if (n == 0L) (0L, None)
-    else if (env.isNullAt(0) || env.getLong(3) < n) (n, None)
-    else (n, Some((env.getLong(0), env.getLong(1))))
-  }
-
-  /** ZONE-SCOPED row-level rewrite — the clustered-table twin of
-    * [[replaceSnapshotPartitionsScoped]]: `transform` receives ONLY
-    * the rows of the files whose `z=` key zone overlaps `envelope`
-    * (zoneless lines always included — exclusion can't be proven; a
-    * `None` envelope degrades to every file), and its result replaces
-    * exactly those files in the new version — every zone-disjoint
-    * file carries verbatim, and the fresh epoch lands RE-CLUSTERED on
-    * `clusterKey` with fresh zones so pruning never erodes. This is
-    * what lets ANY merge shape (the conditioned CDC statement
-    * included) cost O(overlapping files) on an unpartitioned table
-    * kept clustered on its merge key. Race semantics: maintenance
-    * (pinned to the head read at entry; a racing commit raises the
-    * typed conflict). Returns the new version. */
-  def rewriteSnapshotZoneScoped(spark: SparkSession, outDir: String,
-      clusterKey: String, envelope: Option[(Long, Long)],
-      nFiles: Int = 0, meta: Map[String, String] = Map.empty)(
-      transform: DataFrame => DataFrame): Int = {
-    val latest = latestSnapshotVersion(outDir)
-    require(latest > 0, s"nothing to rewrite under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
-    // zoneless lines must rewrite: exclusion can't be proven
-    val (hit, rest) = envelope.fold((m.entries, Seq.empty[ManifestEntry])) {
-      case (lo, hi) => m.entries.partition(_.zoneOverlaps(lo, hi)) }
-    val result = transform(readFilesAs(spark, root, m, hit))
-    // nFiles=0 (default) preserves the rewritten slice's file count,
-    // so the zoned layout's granularity — what pruning lives on —
-    // never collapses through a merge
-    val fresh = writeLayout(spark, fs, root, Some(m), result,
-      Layout.Clustered(clusterKey,
-        if (nFiles > 0) nFiles else math.max(1, hit.size)))
-    // row-level rewrite commit discipline: retry over interleaved
-    // APPENDS (their lines are disjoint from everything this rewrite
-    // consumed and carry verbatim — rewrite-first serialization); any
-    // interleaved non-append raises the typed conflict
-    commitRewriteThenAppends(fs, root, m, rest.map(_.line), fresh,
-      meta + ("rewritten_files" -> hit.size.toString),
-      result.schema.json, op = "overwrite")
   }
 
   /** ENVELOPE-PRUNED key-column scan — the insert-if-absent MERGE's
@@ -3632,22 +3490,15 @@ object Export {
     val (fs, root) = fsRoot(outDir)
     val m = readManifest(fs, root, version)
     // one driver-side agg over the (small) batch: per key column its
-    // long-cast envelope; a null min (empty batch, all-null keys, or a
-    // type whose cast nulls) yields no conjunct for that column
-    val aggs = keyCols.flatMap(k => Seq(
-      min(col(k)).cast("long").as(s"__lo_$k"),
-      max(col(k)).cast("long").as(s"__hi_$k")))
+    // envelope in the column's own type; a null min (empty batch or
+    // all-null keys) yields no conjunct for that column
+    val aggs = keyCols.flatMap(k => Seq(min(col(k)), max(col(k))))
     val env = batch.agg(aggs.head, aggs.tail: _*).collect().head
-    val envConjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
+    val envConjuncts: Seq[Expression] =
       keyCols.zipWithIndex.flatMap { case (k, i) =>
-        if (env.isNullAt(2 * i) || env.isNullAt(2 * i + 1)) Nil
-        else {
-          import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
-          val a = org.apache.spark.sql.catalyst.analysis
-            .UnresolvedAttribute.quoted(k)
-          Seq(GreaterThanOrEqual(a, Literal(env.getLong(2 * i))),
-            LessThanOrEqual(a, Literal(env.getLong(2 * i + 1))))
-        }
+        if (env.isNullAt(2 * i)) Nil
+        else Seq(within(k, batch.schema(k).dataType, env.get(2 * i),
+          env.get(2 * i + 1)))
       }
     // a caller-supplied TARGET-side residual (the MERGE ON filter
     // conjuncts) prunes files through the SAME excludes kernel, then
@@ -3657,12 +3508,10 @@ object Export {
       try graft.sources.GraftLakeBatch.splitConjuncts(
         graft.sources.GraftLakeBatch.normalizeOps(
           org.apache.spark.sql.GraftColumnBridge.catalystExpression(c)))
-      catch { case scala.util.control.NonFatal(_) =>
-        Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression] }
+      catch { case scala.util.control.NonFatal(_) => Seq.empty[Expression] }
     }
-    val conjuncts = envConjuncts ++ resConjuncts
     val rows = readFilesAs(spark, root, m,
-      pruneEntries(m, conjuncts)._1)
+      Scope.of(m, envConjuncts ++ resConjuncts).files)
     residual.fold(rows)(rows.filter)
       .select(keyCols.map(col): _*).distinct()
   }
@@ -4027,66 +3876,6 @@ object Export {
       claimed = fresh.claimed)
   }
 
-  /** ZONE-PRUNED MERGE — the partition-scoped merge generalized to
-    * FILE granularity for tables kept CLUSTERED on an integral merge
-    * key ([[Layout.Clustered]] appends and compactions, whose manifest
-    * lines carry per-file `z=` key zones):
-    * upsert `updates` with ORDER-RESOLVED conflicts
-    * ([[Merge.upsertLatest]]) while rewriting ONLY the files whose key
-    * zone overlaps the batch's key envelope `[min, max]`; every other
-    * file is carried verbatim into the new version.
-    *
-    * Soundness: `clusterKey ∈ keyCols`, so a base row matched by any
-    * update shares its clusterKey value, which lies inside the batch
-    * envelope — its file's zone therefore overlaps and the row is in
-    * the merged set. Zoneless lines are always merged (exclusion can't
-    * be proven). Unmatched base rows in merged files persist through
-    * the merge; unmatched update keys insert.
-    *
-    * 100 TB shape: THE answer to the unpartitioned streaming-Update
-    * full-rewrite — a CDC batch whose keys are range-local (the normal
-    * shape: recent ids, today's sessions) rewrites the files it
-    * touches, not the table, and the merged output is re-clustered
-    * with fresh zones so pruning never erodes. A batch spanning the
-    * whole key domain degrades gracefully to the full merge. Race
-    * semantics: maintenance (version pinned to the head the merge
-    * read). Returns the new version. */
-  def mergeSnapshotClusteredLatest(spark: SparkSession, outDir: String,
-      updates: DataFrame, keyCols: Seq[String], clusterKey: String,
-      orderCols: Seq[String], nFiles: Int = 1,
-      meta: Map[String, String] = Map.empty): Int = {
-    require(keyCols.contains(clusterKey),
-      s"clusterKey '$clusterKey' must be one of the merge keys " +
-        s"(${keyCols.mkString(", ")}) - only then does a matched row's " +
-        "file provably overlap the batch envelope")
-    val latest = latestSnapshotVersion(outDir)
-    require(latest > 0, s"nothing to merge into under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
-    val env = updates.agg(
-        min(col(clusterKey)).cast("long"),
-        max(col(clusterKey)).cast("long"),
-        count(lit(1)), count(col(clusterKey)))
-      .collect().head
-    if (env.getLong(2) == 0L) return latest // empty batch
-    // a batch holding NULL cluster keys (or a key whose cast nulls) has
-    // no sound envelope — merge every file rather than silently missing
-    // the null-keyed incumbents (the upsertSnapshotMoR null-envelope law)
-    val noEnvelope = env.isNullAt(0) || env.getLong(3) < env.getLong(2)
-    val (bmin, bmax) =
-      if (noEnvelope) (Long.MinValue, Long.MaxValue)
-      else (env.getLong(0), env.getLong(1))
-    // zoneless lines must merge: exclusion can't be proven
-    val (hit, rest) = m.entries.partition(_.zoneOverlaps(bmin, bmax))
-    val merged = Merge.upsertLatest(readFilesAs(spark, root, m, hit),
-      updates, keyCols, orderCols)
-    val fresh = writeLayout(spark, fs, root, Some(m), merged,
-      Layout.Clustered(clusterKey, nFiles))
-    commitMetadata(fs, root, m, meta + ("merged_files" -> hit.size.toString),
-      m.meta.getOrElse("schema", merged.schema.json), "overwrite",
-      rest.map(_.line) ++ fresh.lines, claimed = fresh.claimed)
-  }
-
   /** RESTORE TABLE TO VERSION (the Delta `RESTORE` shape): commit a NEW
     * version whose manifest re-points to `toVersion`'s exact data lines
     * (zones and partition specs carried verbatim). The head rolls back
@@ -4197,8 +3986,9 @@ object Export {
     * file count. Old versions keep reading their original epochs
     * (immutability is never violated); the superseded small files
     * become unreferenced once retention drops the pre-compaction
-    * versions, and [[vacuumSnapshots]] then reclaims them. Commutes
-    * with racing appends ([[commitCompactionFrom]]). Returns the new
+    * versions, and [[vacuumSnapshots]] then reclaims them. Its scope is
+    * every file: a racing append commutes, a racing commit that adds or
+    * changes a file conflicts ([[commitScoped]]). Returns the new
     * version. */
   def compactSnapshot(spark: SparkSession, outDir: String,
       nFiles: Int = 1, layout: Option[Layout] = None): Int = {
@@ -4209,62 +3999,11 @@ object Export {
     val base = readManifest(fs, root, latest)
     val rows = readFilesAs(spark, root, base, base.entries)
     val l = layout.getOrElse(declaredLayout(fs, root, base, nFiles))
-    commitCompactionFrom(fs, root, base, writeLayout(spark, fs, root,
-      Some(base), sized(rows, l, nFiles), l), rows.schema.json)
-  }
-
-  /** Commit half of the whole-table compactions, with OPTIMISTIC RETRY
-    * against commuting winners (r12 verdict #3): the compaction
-    * rewrote `baseVersion`'s rows into `fresh` files, so it COMMUTES
-    * with any interleaved APPEND — the appended epochs' lines are
-    * disjoint from the compacted set and simply CARRY into the retried
-    * commit (compaction of the old state + the new appends ≡ the
-    * serial order). An interleaved NON-append (delete/merge/overwrite:
-    * its rewrite overlaps the rows we compacted) raises the typed
-    * [[ConcurrentCommitException]] naming the winning version — the
-    * correct outcome for maintenance racing real DML. Version
-    * re-derivation never renumbers silently: every attempt re-checks
-    * the full interleaved window from the pinned base. */
-  private def commitCompactionFrom(fs: FileSystem, root: Path,
-      base: Manifest, fresh: Epoch, fallbackSchema: String): Int = {
-    val basePaths = base.entries.map(e => qualify(fs, e.path)).toSet
-    commitOverAppends(fs, root, base, "compaction (it may have " +
-        "rewritten rows the compaction carried)") { head =>
-      val carried = head.entries.filterNot(e => basePaths(qualify(fs, e.path)))
-      commitMetadata(fs, root, head,
-        Map("compacted_from" -> base.version.toString),
-        head.meta.getOrElse("schema", fallbackSchema), "compact",
-        carried.map(_.line) ++ fresh.lines, claimed = fresh.claimed)
-    }
-  }
-
-  /** The retry loop shared by commits computed FROM `base` that commute
-    * with interleaved APPENDS only: each attempt takes the current head
-    * (`base` itself while no commit interleaved), refuses any
-    * interleaved non-append with the typed conflict (`what` names the
-    * loser), and lets `commit` publish on top of it. */
-  private def commitOverAppends(fs: FileSystem, root: Path, base: Manifest,
-      what: String)(commit: Manifest => Int): Int = {
-    var attempt = 0
-    while (attempt <= MaxAppendRetries) {
-      val head = headOf(fs, root, Some(base)).get
-      ((base.version + 1) to head.version).foreach { v =>
-        val op = (if (v == head.version) head else readManifest(fs, root, v)).op
-        if (!op.contains("append"))
-          throw new ConcurrentCommitException(
-            s"concurrent '${op.getOrElse("?")}' commit _v$v under $root " +
-              s"does not commute with this $what - re-plan against the " +
-              "new head", v)
-      }
-      rewriteRaceInjector.foreach(_(root, head.version + 1))
-      try return commit(head)
-      catch {
-        case e: ConcurrentCommitException =>
-          attempt += 1
-          if (attempt > MaxAppendRetries) throw e
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    commitScoped(fs, root, Scope(base, Literal.TrueLiteral),
+      base.lines.map(_ -> None).toMap, writeLayout(spark, fs, root,
+        Some(base), sized(rows, l, nFiles), l),
+      Map("compacted_from" -> base.version.toString), rows.schema,
+      "compact")
   }
 
   /** Planning-only EXPANSION of subquery conjuncts (r16): a DML
@@ -4352,6 +4091,8 @@ object Export {
       pinned: Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]) {
     def release(): Unit = pinned.foreach(
       org.apache.spark.sql.GraftPlanBridge.unpersistLocalCheckpoint)
+    /** The files of `m` the predicate's conjuncts cannot rule out. */
+    def scope(m: Manifest): Scope = Scope.of(m, conjuncts)
   }
 
   /** The shared predicate planner for every predicate-driven DML path
@@ -4423,16 +4164,6 @@ object Export {
     } catch { case scala.util.control.NonFatal(_) =>
       DmlPlanned(cond, Seq.empty, Seq.empty) }
 
-  /** Split `m`'s entries into (possibly-matching, provably-excluded)
-    * under `conjuncts` — the shared half of every DML prune. */
-  private def pruneEntries(m: Manifest,
-      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : (Seq[ManifestEntry], Seq[ManifestEntry]) = {
-    val excluded =
-      conjuncts.map(graft.sources.GraftLakeBatch.excludes(_, m.physOf))
-    m.entries.partition(e => !excluded.exists(_(e)))
-  }
-
   /** Copy-on-write DELETE — the third leg of the lake DML triad
     * (append = INSERT, [[Merge.upsert]] through [[replaceSnapshot]] =
     * UPDATE): commit a version holding every latest-version row NOT
@@ -4453,68 +4184,28 @@ object Export {
       cond: Column): Int = {
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to delete under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
+    val m = readManifest(outDir, latest)
     if (m.entries.isEmpty) return latest
     val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
-      val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val (hit, rest) = pruneEntries(m, conjuncts)
-      if (hit.isEmpty) return latest // every file provably misses: no-op
+      val scope = dml.scope(m)
+      if (scope.files.isEmpty) return latest // every file provably misses
       // SQL DELETE semantics: remove rows where the predicate is TRUE —
       // a NULL-evaluating predicate KEEPS the row. A plain filter(!cond)
       // would drop NULL rows too (filter discards NULL), silently purging
       // every row with a NULL in the predicate's columns.
-      val keep = !coalesce(pcond, lit(false))
-      val rows = readFilesAs(spark, root, m, hit)
-        .alias(DmlOuterAlias).filter(keep)
-      // retries over interleaved APPENDS (delete-first serialization:
-      // their rows were never visible to the predicate); anything else
-      // raises the typed conflict
-      commitRewriteThenAppends(fs, root, m, rest.map(_.line),
-        writeRewrite(spark, fs, root, m, rows, hit.size),
+      rewriteScoped(spark, outDir, scope, rewriteLayout(m, scope),
         Map("deleted_from" -> latest.toString,
-          "deleted_files" -> hit.size.toString),
-        m.schemaOpt.fold(rows.schema.json)(_.json), op = "delete")
+          "deleted_files" -> scope.files.size.toString), "delete")(
+        _.alias(DmlOuterAlias).filter(!coalesce(dml.cond, lit(false))))
     } finally dml.release()
   }
 
-  /** The fresh files of a row-level rewrite of `m`: re-laid-out with
+  /** The fresh files of a predicate rewrite of `m`: re-laid-out with
     * fresh p= specs on a partitioned table (a rewrite must not leave it
     * inconsistently partitioned), one plain epoch otherwise. */
-  private def writeRewrite(spark: SparkSession, fs: FileSystem, root: Path,
-      m: Manifest, rows: DataFrame, nFiles: Int): Epoch = {
-    writeLayout(spark, fs, root, Some(m), rows,
-      Layout.partitionedBy(partitionColumnsOf(m), math.max(1, nFiles)))
-  }
-
-  /** Commit a ROW-LEVEL rewrite (delete/update/merge — CoW or MoR)
-    * computed FROM `baseVersion`, retrying over interleaved APPENDS
-    * (r13, extends the commute taxonomy beyond compaction): the
-    * serialization "this rewrite at base, THEN the appends" is always
-    * a valid serial order for concurrent unordered commits — the
-    * appended epochs' lines are disjoint from everything the rewrite
-    * consumed and CARRY verbatim into the retried commit (their rows
-    * were never visible to the rewrite's predicate, exactly as if they
-    * committed after it). Any interleaved NON-append (its rewrite
-    * overlaps ours) raises the typed [[ConcurrentCommitException]].
-    * `kept` plus the `fresh` epoch's lines must be the COMPLETE
-    * replacement for the base version's data lines; the committed
-    * schema follows the head (appends may have evolved it — union
-    * semantics). */
-  private def commitRewriteThenAppends(fs: FileSystem, root: Path,
-      base: Manifest, kept: Seq[String], fresh: Epoch,
-      meta: Map[String, String], fallbackSchema: String, op: String): Int = {
-    val baseSet = base.lines.toSet
-    commitOverAppends(fs, root, base,
-        s"$op (both rewrote overlapping rows)") { head =>
-      commitMetadata(fs, root, head, meta,
-        head.meta.getOrElse("schema", fallbackSchema), op,
-        kept ++ fresh.lines ++ head.lines.filterNot(baseSet),
-        claimed = fresh.claimed)
-    }
-  }
-
+  private def rewriteLayout(m: Manifest, scope: Scope): Layout =
+    Layout.partitionedBy(partitionColumnsOf(m), math.max(1, scope.files.size))
 
   /** Copy-on-write UPDATE — the `UPDATE t SET c = expr WHERE pred` leg
     * of the DML triad, FILE-SCOPED: every latest-version row matching
@@ -4538,8 +4229,7 @@ object Export {
     require(sets.nonEmpty, "UPDATE needs at least one assignment")
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to update under $outDir")
-    val (fs, root) = fsRoot(outDir)
-    val m = readManifest(fs, root, latest)
+    val m = readManifest(outDir, latest)
     val st = m.schema
     sets.foreach { case (n, _) =>
       require(st.fieldNames.contains(n),
@@ -4551,28 +4241,23 @@ object Export {
     // non-analyzable predicate simply prunes nothing
     val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
-      val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val (hit, rest) = pruneEntries(m, conjuncts)
-      if (hit.isEmpty) return latest // every file provably misses: no-op
-      // DV-aware, physical-decoded, logical-projected — the standard funnel
-      val rows = readFilesAs(spark, root, m, hit).alias(DmlOuterAlias)
-      val hitCond = coalesce(pcond, lit(false))
+      val scope = dml.scope(m)
+      if (scope.files.isEmpty) return latest // every file provably misses
+      val hitCond = coalesce(dml.cond, lit(false))
       val setMap = sets.toMap
-      val updated = rows.select(st.fields.toSeq.map { f =>
-        setMap.get(f.name) match {
-          case Some(v) =>
-            when(hitCond, v.cast(nullableType(f.dataType)))
-              .otherwise(colQ(f.name))
-              .as(f.name, f.metadata)
-          case None => colQ(f.name)
-        }
-      }: _*)
-      commitRewriteThenAppends(fs, root, m, rest.map(_.line),
-        writeRewrite(spark, fs, root, m, updated, hit.size),
+      rewriteScoped(spark, outDir, scope, rewriteLayout(m, scope),
         meta ++ Map(
           "updated_from" -> latest.toString,
-          "updated_files" -> hit.size.toString),
-        st.json, op = "update")
+          "updated_files" -> scope.files.size.toString), "update")(
+        _.alias(DmlOuterAlias).select(st.fields.toSeq.map { f =>
+          setMap.get(f.name) match {
+            case Some(v) =>
+              when(hitCond, v.cast(nullableType(f.dataType)))
+                .otherwise(colQ(f.name))
+                .as(f.name, f.metadata)
+            case None => colQ(f.name)
+          }
+        }: _*))
     } finally dml.release()
   }
 
@@ -4613,8 +4298,9 @@ object Export {
     // block must not leak the checkpointed subquery blocks until RDD GC
     var matchedOpt: Option[DataFrame] = None
     try {
-      val (pcond, conjuncts) = (dml.cond, dml.conjuncts)
-      val candidate = pruneEntries(m, conjuncts)._1
+      val pcond = dml.cond
+      val scope = dml.scope(m)
+      val candidate = scope.files
       if (candidate.isEmpty) return latest
       val cols = st.fieldNames.toSeq
       val fcol = freshName("__upd_file", cols)
@@ -4634,10 +4320,6 @@ object Export {
       val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
         carriedDvs(spark, fs, candidate).fold(toDv)(toDv.unionByName))
       val dvUri = fs.makeQualified(dvDir).toString
-      val candSet = candidate.toSet
-      // untouched lines: dv tag (if any) carries
-      val retagged = m.entries.map(e =>
-        if (candSet(e)) retagDv(fs, e, dvUri, counts) else e.line)
       // (b) append the UPDATED copies as a fresh epoch
       val setMap = sets.toMap
       val updated = matched.select(st.fields.toSeq.map { f =>
@@ -4653,12 +4335,14 @@ object Export {
       // merge/overwrite/compact FOREVER (the upsertSnapshotMoR guard's
       // bug class, closed on this path by writing fresh p= specs — the
       // CoW [[updateWhere]] discipline)
-      commitRewriteThenAppends(fs, root, m, retagged,
-        writeRewrite(spark, fs, root, m, updated, 1),
+      commitScoped(fs, root, scope, candidate.map(e =>
+          e.line -> Some(retagDv(fs, e, dvUri, counts))).toMap,
+        writeLayout(spark, fs, root, Some(m), updated,
+          Layout.partitionedBy(partitionColumnsOf(m))),
         meta ++ Map(
           "mor_updated_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
-        st.json, op = "merge")
+        st, op = "merge")
     } finally { matchedOpt.foreach(_.unpersist()); dml.release() }
   }
 
@@ -4698,7 +4382,8 @@ object Export {
     // (its existing dv= tags still carry through the manifest line)
     val dml = dmlPlan(spark, cond, canExpand = m.prunable)
     try {
-      val scanLines = pruneEntries(m, dml.conjuncts)._1
+      val scope = dml.scope(m)
+      val scanLines = scope.files
       if (scanLines.isEmpty) return latest
       val fcol = freshName("__dvp_file", st.fieldNames.toSeq)
       val pcol = freshName("__dvp_pos", st.fieldNames.toSeq)
@@ -4723,12 +4408,13 @@ object Export {
         return latest
       }
       val dvUri = fs.makeQualified(dvDir).toString
-      commitRewriteThenAppends(fs, root, m,
-        m.entries.map(retagDv(fs, _, dvUri, counts)), NoEpoch,
+      commitScoped(fs, root, scope, m.entries.map(e =>
+          e.line -> Some(retagDv(fs, e, dvUri, counts)))
+          .filter { case (l, r) => r.get != l }.toMap, NoEpoch,
         Map(
           "mor_deleted_from" -> latest.toString,
           "dv_positions" -> counts.values.sum.toString),
-        st.json, op = "delete")
+        st, op = "delete")
     } finally dml.release()
   }
 
@@ -4740,7 +4426,7 @@ object Export {
     * a CDC micro-batch touching 1k keys of a 1 TB table costs a
     * positions write + a 1k-row epoch, where the copy-on-write path
     * rewrites the table (unpartitioned), the touched partitions
-    * (partitioned), or the zone-overlapping files (clustered).
+    * (partitioned), or the envelope-overlapping files (clustered).
     *
     * Resolution is EXACTLY [[Merge.upsertLatest]]'s total order — per
     * key the maximum of `struct(orderCols ++ remaining payload)` across
@@ -4751,11 +4437,11 @@ object Export {
     *
     * Scan shape: the base is read ONCE, filtered to matched keys by a
     * semi-join against the batch's (small, AQE-broadcast) key set —
-    * the table never shuffles. With `clusterKey` on a zoned table the
-    * scan itself is FILE-SCOPED: only files whose key zone overlaps
-    * the batch envelope are planned (the [[mergeSnapshotClusteredLatest]]
-    * pruning), and the insert epoch lands re-clustered + zoned so the
-    * next batch prunes too. Rows already in a DV are subtracted BEFORE
+    * the table never shuffles. With `clusterKey` on a clustered table
+    * the scan itself is FILE-SCOPED: only files the batch's key
+    * envelope cannot rule out are planned ([[envelopeScope]]), and the
+    * insert epoch lands re-clustered with fresh stats so the next batch
+    * prunes too. Rows already in a DV are subtracted BEFORE
     * resolution — a deleted incumbent must not outrank a live update.
     *
     * The commit is `op=merge`: streams refuse it by default
@@ -4769,9 +4455,6 @@ object Export {
       meta: Map[String, String] = Map.empty): Int = {
     require(keyCols.nonEmpty, "upsertSnapshotMoR needs key columns")
     require(orderCols.nonEmpty, "upsertSnapshotMoR needs order columns")
-    clusterKey.foreach(k => require(keyCols.contains(k),
-      s"clusterKey '$k' must be one of the merge keys - only then does " +
-        "a matched row's file provably overlap the batch envelope"))
     val latest = latestSnapshotVersion(outDir)
     require(latest > 0, s"nothing to upsert into under $outDir")
     val (fs, root) = fsRoot(outDir)
@@ -4794,46 +4477,20 @@ object Export {
       s"upsertSnapshotMoR into $outDir: the table is hive-partitioned " +
         "(by its data lines or its declared layout) and the MoR " +
         "insert epoch would carry no partition specs, breaking every " +
-        "later partition-scoped merge. Use " +
-        "mergeSnapshotPartitioned(Latest) - partition-scoped rewrites " +
-        "- for partitioned tables")
-    // zone arithmetic casts the key to long: accept exactly the types
-    // whose cast is TOTAL (integrals, and TimestampType's epoch-second
-    // cast — timestamp-clustered tables zone-prune like integral ones);
-    // a type whose cast nulls would silently skip matched incumbents
-    clusterKey.foreach { k =>
-      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, TimestampType}
-      val t = st.fields.find(_.name == k).map(_.dataType).getOrElse(
-        throw new IllegalArgumentException(s"clusterKey '$k' is not a " +
-          s"table column (${cols.mkString(", ")})"))
-      require(Set[org.apache.spark.sql.types.DataType](ByteType,
-          ShortType, IntegerType, LongType, TimestampType).contains(t),
-        s"clusterKey '$k' must be an integral or timestamp column " +
-          s"for zone arithmetic, got $t")
-    }
-
+        "later partition-scoped merge. Use a partition-scoped " +
+        "copy-on-write merge for partitioned tables")
     // one winner per key WITHIN the batch (upsertLatest's own law)
     val u = Merge.upsertLatest(updates.limit(0), updates,
       keyCols, orderCols)
 
-    // zone-pruned candidates: only files whose key zone overlaps the
-    // batch envelope can hold a matched row (zoneless lines must scan).
-    // A batch containing NULL cluster keys gets no envelope guarantee —
-    // its null-key rows can match incumbents in ANY file, so candidacy
-    // degrades to every line (correctness over pruning; the old
-    // behavior treated a null envelope as "touch nothing" and could
-    // commit duplicate keys).
-    val (candidate, untouched) = clusterKey match {
-      case Some(k) =>
-        val env = u.agg(min(col(k)).cast("long"),
-          max(col(k)).cast("long"), count(lit(1)), count(col(k)))
-          .collect().head
-        if (env.getLong(2) == 0L) (Nil, m.entries) // empty batch
-        else if (env.isNullAt(0) || env.getLong(3) < env.getLong(2))
-          (m.entries, Nil) // null keys: can't prove exclusion
-        else m.entries.partition(_.zoneOverlaps(env.getLong(0), env.getLong(1)))
-      case None => (m.entries, Nil)
-    }
+    // envelope-scoped candidates: only files the batch's key envelope
+    // cannot rule out can hold a matched row (envelopeScope — a batch
+    // holding NULL cluster keys scopes the whole table, an empty one
+    // nothing)
+    val scope = clusterKey.fold[Option[Scope]](
+      Some(Scope(m, Literal.TrueLiteral)))(envelopeScope(m, u, keyCols, _))
+      .getOrElse(Scope(m, Literal.FalseLiteral))
+    val candidate = scope.files
     val fcol = freshName("__mor_file", cols)
     val pcol = freshName("__mor_pos", cols)
     val prefC = freshName("__mor_pref", cols)
@@ -4894,12 +4551,15 @@ object Export {
       // the sidecar entirely.
       val (retagged, dvTotal) =
         if (!anyBeaten)
-          (candidate.map(_.line), candidate.flatMap(_.dv).map(_._2).sum)
+          (Map.empty[String, Option[String]],
+            candidate.flatMap(_.dv).map(_._2).sum)
         else {
           val (dvDir, counts) = writeDvSidecar(spark, fs, root, version,
             carriedDvs(spark, fs, candidate).fold(toDv)(toDv.unionByName))
           val dvUri = fs.makeQualified(dvDir).toString
-          (candidate.map(retagDv(fs, _, dvUri, counts)), counts.values.sum)
+          (candidate.map(e =>
+            e.line -> Some(retagDv(fs, e, dvUri, counts))).toMap,
+            counts.values.sum)
         }
 
       // insert epoch (zoned when clustered, so the NEXT batch prunes)
@@ -4910,12 +4570,11 @@ object Export {
         else writeLayout(spark, fs, root, Some(m),
           sized(toInsert, insertLayout, nFiles), insertLayout)
 
-      commitRewriteThenAppends(fs, root, m,
-        untouched.map(_.line) ++ retagged, inserted,
+      commitScoped(fs, root, scope, retagged, inserted,
         meta ++ Map(
           "mor_upserted_into" -> latest.toString,
           "dv_positions" -> dvTotal.toString),
-        m.schemaJson, op = "merge")
+        st, op = "merge")
     } finally ranked.unpersist()
   }
 

@@ -151,11 +151,6 @@ object Similarity {
       .limit(k)
   }
 
-  def ivfTopK(df: DataFrame, vecCol: String, idCol: String,
-      query: Seq[Double], k: Int, nlist: Int = 16,
-      nprobe: Int = 4): DataFrame =
-    ivfProbe(ivfIndex(df, vecCol, nlist), vecCol, idCol, query, k, nprobe)
-
   /** Brute-force cosine top-k against a literal query vector (packed
     * kernel scan + TakeOrderedAndProject — no shuffle of vectors). */
   def bruteForceTopK(df: DataFrame, vecCol: String, idCol: String,

@@ -19,17 +19,19 @@ import graft.sources.GraftLakeTable
   * [[MergeIntoTable]]/[[UpdateTable]] whose target is a
   * [[GraftLakeTable]] is rewritten (at analysis, like every DSv2
   * row-level rewrite) into a deferred [[GraftDmlStatement]] whose thunk
-  * routes to the AUDITED commit paths. Fast paths keep their scoped
-  * commits; everything else takes the GENERAL merge:
+  * routes to the AUDITED commit paths. Every copy-on-write row-level
+  * statement commits through [[Export.rewriteScoped]]; a MERGE chooses
+  * its scope in one place ([[mergeScope]]): the touched partitions when
+  * `layout ⊆ merge keys`, else the source's key envelope on a
+  * `graft.cluster.key` that is a merge key, else the whole table
+  * (committed as a replace). Fast paths keep their scoped commits;
+  * everything else takes the GENERAL merge:
   *
   *  - canonical upsert (`WHEN MATCHED THEN UPDATE SET * WHEN NOT
-  *    MATCHED THEN INSERT *` shapes) with `layout ⊆ merge keys` →
-  *    [[Export.mergeSnapshotPartitioned]] (cost follows the touched
-  *    partitions), otherwise [[Merge.upsert]] + full-replace;
-  *  - `WHEN MATCHED THEN DELETE` → anti-join delete, PARTITION-SCOPED
-  *    ([[Export.deleteSnapshotPartitioned]]) when `layout ⊆ keys`, or
-  *    ZONE-SCOPED ([[Export.rewriteSnapshotZoneScoped]]) on an
-  *    unpartitioned table clustered on a merge key;
+  *    MATCHED THEN INSERT *` shapes) → [[Merge.upsert]] over the
+  *    scoped files (cost follows the touched partitions or files);
+  *  - `WHEN MATCHED THEN DELETE` → anti-join delete over the scoped
+  *    files;
   *  - `INSERT OVERWRITE` under dynamic partition-overwrite mode →
   *    [[rewriteDynamicOverwrite]]: replace exactly the touched
   *    partitions, carry the rest verbatim;
@@ -410,10 +412,10 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
     * exec for this plan requires a true BatchWrite, which the lake's
     * deliberate V1 write seam doesn't build, so the statement routes
     * here instead: a deferred [[GraftDmlStatement]] committing
-    * [[Export.replaceSnapshotPartitionsScoped]] over the touched
-    * tuples (one tiny driver distinct over the batch's partition
-    * columns). An unpartitioned table degrades to the full replace —
-    * the SQL semantics when there is no partitioning to scope by. */
+    * [[Export.rewriteScoped]] over the touched tuples' partition scope
+    * (one tiny driver distinct over the batch's partition columns). An
+    * unpartitioned table degrades to the full replace — the SQL
+    * semantics when there is no partitioning to scope by. */
   private def rewriteDynamicOverwrite(o: OverwritePartitionsDynamic,
       t: GraftLakeTable): LogicalPlan = {
     require(t.versionAsOf.isEmpty,
@@ -433,21 +435,78 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       val df = GraftPlanBridge.ofRows(s, projected)
       val partCols = Export.declaredPartitionColumns(dir)
       if (partCols.isEmpty) Export.replaceSnapshot(s, df, dir)
-      else {
-        val touched: Set[Seq[String]] =
-          df.select(partCols.map(c => col(c).cast("string")): _*)
-            .distinct().collect()
-            .map(r => partCols.indices.map(i => r.getString(i))
-              : Seq[String]).toSet
-        // empty source: dynamic overwrite touches nothing (the SQL
-        // law), so nothing commits
-        if (touched.nonEmpty)
-          Export.replaceSnapshotPartitionsScoped(s, df, dir, partCols,
-            touched, meta = Map(
-              "overwritten_partitions" -> touched.size.toString))
-      }
+      // empty source: dynamic overwrite touches nothing (the SQL law),
+      // so nothing commits
+      else overwrite(s, dir, df, partCols, Export.partitionsOf(df, partCols))
       ()
     })
+  }
+
+  /** Replace exactly the partitions `touched` of `dir` by `df`'s rows —
+    * a touched partition `df` holds nothing for is cleared — carrying
+    * every other partition's files verbatim. Nothing commits when
+    * `touched` is empty. */
+  private def overwrite(s: SparkSession, dir: String, df: DataFrame,
+      partCols: Seq[String], touched: Set[Seq[String]]): Unit =
+    if (touched.nonEmpty) {
+      val m = Export.readManifest(dir, Export.latestSnapshotVersion(dir))
+      Export.rewriteScoped(s, dir, Export.partitionScope(m, partCols, touched),
+        Layout.Partitioned(partCols),
+        Map("overwritten_partitions" -> touched.size.toString),
+        "overwrite")(_ => df)
+    }
+
+  /** The one MERGE scope choice, shared by the MERGE-DELETE, upsert and
+    * general rewrites: on a partitioned table whose partition columns
+    * are all merge keys, the partitions `keyRows` (the source's key
+    * columns under their target names) land in, shrunk by `narrow`; on
+    * any other partitioned table the `unkeyed` tuples, if the caller can
+    * bound them; on an unpartitioned table whose `graft.cluster.key` is
+    * a merge key, the envelope of `keyRows` on it; else None — the whole
+    * table, committed as a replace ([[mergeRewrite]]). Returns the scope
+    * with the fresh epoch's layout and the header naming the scope
+    * (`<verb>_partitions`, or `<verb>_envelope`). */
+  private def mergeScope(dir: String, m: => Export.Manifest,
+      partCols: Seq[String], keys: Seq[String], keyRows: => DataFrame,
+      verb: String,
+      narrow: Set[Seq[String]] => Set[Seq[String]] = identity,
+      unkeyed: => Option[Set[Seq[String]]] = None)
+      : Option[(Export.Scope, Layout, Map[String, String])] =
+    if (partCols.nonEmpty) {
+      val touched =
+        if (partCols.toSet.subsetOf(keys.toSet))
+          Some(narrow(Export.partitionsOf(keyRows, partCols)))
+        else unkeyed
+      touched.map(t => (Export.partitionScope(m, partCols, t),
+        Layout.Partitioned(partCols),
+        Map(s"${verb}_partitions" -> t.size.toString)))
+    } else Export.snapshotProperties(dir).get("graft.cluster.key")
+      .filter(keys.contains).map { ck =>
+        // a row matched on `ck` equals a source key, so files the
+        // envelope rules out cannot hold one; an empty batch scopes
+        // nothing
+        val scope = Export.envelopeScope(m, keyRows, keys, ck)
+          .getOrElse(Export.Scope(m,
+            org.apache.spark.sql.catalyst.expressions.Literal.FalseLiteral))
+        (scope, Layout.Clustered(ck, math.max(1, scope.files.size)),
+          Map(s"${verb}_envelope" -> scope.predicate.sql))
+      }
+
+  /** Commit a MERGE's `transform` of the rows it may touch: a scoped
+    * copy-on-write rewrite when [[mergeScope]] found a scope, else the
+    * whole table through [[Export.replaceSnapshot]] in its declared
+    * layout. */
+  private def mergeRewrite(s: SparkSession, dir: String, latest: Int,
+      partCols: Seq[String],
+      scoped: Option[(Export.Scope, Layout, Map[String, String])])(
+      transform: DataFrame => DataFrame): Unit = scoped match {
+    case Some((scope, layout, meta)) =>
+      Export.rewriteScoped(s, dir, scope, layout, meta, "overwrite")(
+        transform)
+    case None =>
+      Export.replaceSnapshot(s,
+        transform(Export.readSnapshot(s, dir, latest)), dir,
+        Layout.partitionedBy(partCols))
   }
 
   /** Evaluate predicate Columns (target-name bound, referencing only
@@ -544,16 +603,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
           val existing = filterTuplesBy(s,
             Export.snapshotPartitionTuples(dir, latest, partCols),
             partCols, st, Seq(cond), keepUnprovable = false)
-          val fromBatch: Set[Seq[String]] =
-            df.select(partCols.map(c => col(c).cast("string")): _*)
-              .distinct().collect()
-              .map(r => partCols.indices.map(i => r.getString(i))
-                : Seq[String]).toSet
-          val touched = existing ++ fromBatch
-          if (touched.nonEmpty)
-            Export.replaceSnapshotPartitionsScoped(s, df, dir,
-              partCols, touched, meta = Map(
-                "overwritten_partitions" -> touched.size.toString))
+          overwrite(s, dir, df, partCols,
+            existing ++ Export.partitionsOf(df, partCols))
       }
       ()
     })
@@ -670,12 +721,11 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
   }
 
   /** `WHEN MATCHED THEN DELETE` (alone, unconditioned): an anti-join
-    * delete — rows whose key appears in the source vanish. With
-    * `layout ⊆ keys` the rewrite is PARTITION-SCOPED
-    * ([[Export.deleteSnapshotPartitioned]]): only partitions present in
-    * the source keys rewrite, the rest carry verbatim — a MERGE-DELETE
-    * keyed on the layout costs the touched partitions at 100 TB, not
-    * the table. */
+    * delete — rows whose key appears in the source vanish. Scoped by
+    * [[mergeScope]]: only the partitions present in the source keys
+    * (or the files their key envelope cannot rule out) rewrite, the
+    * rest carry verbatim — a MERGE-DELETE keyed on the layout costs the
+    * touched partitions at 100 TB, not the table. */
   private def rewriteMergeDelete(m: MergeIntoTable, t: GraftLakeTable,
       keyConds: Seq[(AttributeReference, AttributeReference, Boolean)],
       refuse: String => Nothing): LogicalPlan = {
@@ -695,36 +745,13 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       val sourceKeys = GraftPlanBridge.ofRows(s, keysPlan).distinct()
       val latest = Export.latestSnapshotVersion(dir)
       require(latest > 0, s"nothing to merge into under $dir")
+      lazy val m = Export.readManifest(dir, latest)
       val partCols = Export.snapshotPartitionColumns(dir, latest)
-      val clusterKey =
-        if (partCols.isEmpty)
-          Export.snapshotProperties(dir).get("graft.cluster.key")
-            .filter(keys.contains)
-        else None
-      if (partCols.nonEmpty && partCols.toSet.subsetOf(keys.toSet))
-        Export.deleteSnapshotPartitioned(s, dir, sourceKeys, keys,
-          partCols)
-      else if (clusterKey.nonEmpty) {
-        // unpartitioned but clustered on a merge key: a deleted row's
-        // key EQUALS a source key, so files zone-disjoint from the
-        // batch envelope cannot hold one — anti-join only the
-        // overlapping files, carry the rest verbatim (a null-bearing
-        // batch gets no provable envelope and degrades to the full
-        // anti-join, never a silent miss)
-        val ck = clusterKey.get
-        val (n, env) = Export.batchEnvelope(sourceKeys.select(col(ck)),
-          ck)
-        if (n > 0)
-          Export.rewriteSnapshotZoneScoped(s, dir, ck, env,
-            meta = Map("deleted_envelope" ->
-              env.map { case (lo, hi) => s"$lo:$hi" }.getOrElse("full")))(
-            base => base.join(sourceKeys, keys, "left_anti"))
-      } else {
-        val remaining = Export.readSnapshot(s, dir, latest)
-          .join(sourceKeys, keys, "left_anti")
-        Export.replaceSnapshot(s, remaining, dir,
-          Layout.partitionedBy(partCols))
-      }
+      val scoped = mergeScope(dir, m, partCols, keys, sourceKeys, "deleted")
+      // a scope holding no file holds nothing to delete
+      if (!scoped.exists(_._1.files.isEmpty))
+        mergeRewrite(s, dir, latest, partCols, scoped)(
+          _.join(sourceKeys, keys, "left_anti"))
       ()
     })
   }
@@ -784,11 +811,11 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
 
   /** The canonical upsert — one unconditioned `UPDATE SET` + one
     * unconditioned `INSERT` assigning identical, source-only values
-    * (what `SET * / INSERT *` expand to): routed to
-    * [[Export.mergeSnapshotPartitioned]] when `layout ⊆ keys` (cost
-    * follows the touched partitions), else [[Merge.upsert]] +
-    * full-replace. Shapes that assign different or target-referencing
-    * values fall through to the general rewrite instead. */
+    * (what `SET * / INSERT *` expand to): [[Merge.upsert]] over the
+    * files [[mergeScope]] chooses (cost follows the touched partitions
+    * or files), else over the whole table + full-replace. Shapes that
+    * assign different or target-referencing values fall through to the
+    * general rewrite instead. */
   private def rewriteMergeUpsert(m: MergeIntoTable, t: GraftLakeTable,
       keyConds: Seq[(AttributeReference, AttributeReference, Boolean)],
       refuse: String => Nothing): LogicalPlan = {
@@ -833,28 +860,11 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
       val updates = GraftPlanBridge.ofRows(s, updatesPlan)
       val latest = Export.latestSnapshotVersion(dir)
       require(latest > 0, s"nothing to merge into under $dir")
+      lazy val m = Export.readManifest(dir, latest)
       val partCols = Export.snapshotPartitionColumns(dir, latest)
-      val clusterKey =
-        if (partCols.isEmpty)
-          Export.snapshotProperties(dir).get("graft.cluster.key")
-            .filter(keys.contains)
-        else None
-      if (partCols.nonEmpty && partCols.toSet.subsetOf(keys.toSet))
-        Export.mergeSnapshotPartitioned(s, dir, updates, keys, partCols)
-      else if (clusterKey.nonEmpty) {
-        // unpartitioned but clustered on a merge key: rewrite only the
-        // envelope-overlapping files (zone-disjoint files carry)
-        val ck = clusterKey.get
-        val (n, env) = Export.batchEnvelope(updates.select(col(ck)), ck)
-        if (n > 0)
-          Export.rewriteSnapshotZoneScoped(s, dir, ck, env)(base =>
-            Merge.upsert(base, updates, keys))
-      } else {
-        val merged = Merge.upsert(
-          Export.readSnapshot(s, dir, latest), updates, keys)
-        Export.replaceSnapshot(s, merged, dir,
-          Layout.partitionedBy(partCols))
-      }
+      mergeRewrite(s, dir, latest, partCols,
+        mergeScope(dir, m, partCols, keys, updates, "merged"))(
+        Merge.upsert(_, updates, keys))
       ()
     })
   }
@@ -1158,7 +1168,7 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
 
         // first-true clause resolution against a base slice: ONE outer
         // join, per-clause CASE towers, inserts anti-joined — shared
-        // by the full, partition-scoped and zone-scoped commits
+        // by the full and the scoped commits
         def resolveAgainst(base: DataFrame): DataFrame = {
           val joined = base.join(src.withColumn(marker, lit(true)),
             matchCond, "left_outer")
@@ -1191,8 +1201,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
             insertRows(resFilter.fold(base)(base.filter)))
         }
 
-        // PARTITION-SCOPED general merge, two ways in (by-source
-        // clauses break both — they fire on unmatched rows anywhere):
+        // SCOPED general merge ([[mergeScope]]; by-source clauses break
+        // every scope — they fire on unmatched rows anywhere):
         //  - `layout ⊆ keys`: every matched row lives in a partition
         //    named by the source keys (a key pins its partition), so
         //    touched = the source's distinct key tuples — further
@@ -1203,13 +1213,17 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
         //    idiom `ON t.k = s.k AND t.dt = '...'` on a dt-partitioned
         //    table): candidates = the MANIFEST's partition tuples,
         //    minus tuples a layout-column residual proves false, minus
-        //    tuples whose key-covered columns match no source value.
+        //    tuples whose key-covered columns match no source value;
+        //  - unpartitioned, clustered on a merge key
+        //    (`graft.cluster.key`): the files the source's key envelope
+        //    cannot rule out.
         // Either way the outer join, clause resolution and rewrite run
-        // over the candidate partitions only — the rest carry
-        // verbatim, and an insert landing outside them appends
-        // additively. Unprovable tuples are KEPT (a NULL residual or
-        // an uncastable value never excludes — correctness over
-        // pruning).
+        // over the scoped files only — the rest carry verbatim, and an
+        // insert landing outside them appends additively. Unprovable
+        // tuples are KEPT (a NULL residual or an uncastable value never
+        // excludes — correctness over pruning). Source-only-residual-
+        // false rows host no MATCHES, so they widen no scope (their
+        // inserts still land).
         val partSet = partCols.toSet
         val partRes = resByRefs.collect {
           case (refs, c) if refs.nonEmpty && refs.subsetOf(partSet) => c }
@@ -1219,21 +1233,8 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
           // EXCLUDE a partition (correctness over pruning)
           filterTuplesBy(s, tuples, partCols, st, partRes,
             keepUnprovable = true)
-        val touchedOpt: Option[Set[Seq[String]]] =
-          if (partCols.isEmpty || bySourceActs.nonEmpty) None
-          else if (partSet.subsetOf(keys.toSet)) {
-            val tupleCols = partCols.map(pc =>
-              keyCaptured.find(_._1 == pc).get._2)
-            // source-only-residual-false rows host no MATCHES: their
-            // partitions need no rewrite (their inserts still land,
-            // appended additively outside the touched set)
-            val srcT = srcOnlyRes.fold(src)(src.filter)
-            Some(residualTrueTuples(
-              srcT.select(tupleCols.map(c => col(c).cast("string")): _*)
-                .distinct().collect()
-                .map(r => partCols.indices.map(i => r.getString(i))
-                  : Seq[String]).toSet))
-          } else if (partRes.nonEmpty ||
+        def unkeyed: Option[Set[Seq[String]]] =
+          if (partRes.nonEmpty ||
               partCols.exists(pc => keyCaptured.exists(k =>
                 k._1 == pc && !k._3))) {
             val all = Export.snapshotPartitionTuples(dir, latest,
@@ -1257,51 +1258,24 @@ final case class RewriteGraftLakeDml(spark: SparkSession)
             Some(residualTrueTuples(all.filter(tp =>
               keyVals.forall { case (i, vs) => vs.contains(tp(i)) })))
           } else None
-        touchedOpt match {
-          case Some(touched) =>
-            val base = Export.readSnapshotPartitionTuples(s, dir,
-              latest, partCols, touched)
-            val out = resolveAgainst(base)
-            if (touched.nonEmpty)
-              Export.replaceSnapshotPartitionsScoped(s, out, dir,
-                partCols, touched,
-                meta = Map(
-                  "merged_partitions" -> touched.size.toString))
-            else if (insertActs.nonEmpty && !out.isEmpty)
-              // no candidate partition holds a matchable row, but the
-              // insert legs may still fire — append-only commit
-              Export.appendSnapshot(s, out, dir,
-                Layout.Partitioned(partCols))
-            // else: nothing can change
-          case None =>
-          // ZONE-SCOPED general merge: an unpartitioned table kept
-          // CLUSTERED on a merge key (declared via the
-          // `graft.cluster.key` table property) rewrites only the
-          // files whose z= zone overlaps the batch's key envelope —
-          // the conditioned-CDC answer where there is no layout. A
-          // null-key batch gets no provable envelope and degrades to
-          // the full rewrite (never silently misses an incumbent).
-          val ckOpt =
-            if (partCols.isEmpty && bySourceActs.isEmpty)
-              Export.snapshotProperties(dir).get("graft.cluster.key")
-                .filter(keys.contains)
-            else None
-          ckOpt match {
-            case Some(ck) =>
-              val sn = keyCaptured.find(_._1 == ck).get._2
-              val (n, env) = Export.batchEnvelope(
-                src.select(col(sn).as(ck)), ck)
-              if (n > 0)
-                Export.rewriteSnapshotZoneScoped(s, dir, ck, env,
-                  meta = Map("merged_envelope" ->
-                    env.map { case (lo, hi) => s"$lo:$hi" }
-                      .getOrElse("full")))(resolveAgainst)
-            case None =>
-              val result = resolveAgainst(
-                Export.readSnapshot(s, dir, latest))
-              Export.replaceSnapshot(s, result, dir,
-                Layout.partitionedBy(partCols))
-          }
+        lazy val m = Export.readManifest(dir, latest)
+        val scoped =
+          if (bySourceActs.nonEmpty) None
+          else mergeScope(dir, m, partCols, keys,
+            srcOnlyRes.fold(src)(src.filter).select(keyCaptured.map {
+              case (tn, sn, _) => col(sn).as(tn) }: _*),
+            "merged", residualTrueTuples, unkeyed)
+        scoped match {
+          case Some((scope, layout, _)) if scope.files.isEmpty =>
+            // no file can hold a matchable row, but the insert legs may
+            // still fire — an append-only commit
+            if (insertActs.nonEmpty) {
+              val out = resolveAgainst(
+                Export.readSnapshot(s, dir, latest).limit(0))
+              if (!out.isEmpty) Export.appendSnapshot(s, out, dir, layout)
+            }
+          case _ =>
+            mergeRewrite(s, dir, latest, partCols, scoped)(resolveAgainst)
         }
       }
       ()

@@ -26,10 +26,6 @@ object Ingest {
 
   private val OrdersKeyCap = 2000 // ~500 rows at any sf (keys are dense-ish)
 
-  private def fmtTs(us: Long): String =
-    java.time.LocalDateTime.ofEpochSecond(us / 1000000, ((us % 1000000) * 1000).toInt,
-      java.time.ZoneOffset.UTC).toString.replace("T", " ")
-
   /** S5+P1+P3+P4: orders sample → 4-shard INSERT dump → parse → align →
     * row-id. Oracle reproduces with ROW_NUMBER() in key order. */
   def sqldump_roundtrip(s: SparkSession, dir: String): DataFrame = {

@@ -145,17 +145,6 @@ final class ParquetSink(rootDir: String,
     WriteResult(s"$db.$table", -1L, Some(path))
   }
 
-  /** Chunk-granular write: append into the table directory (part-file
-    * names are job-unique, so chunks never collide). Caller owns clearing
-    * the directory on a fresh import. */
-  def writeAppend(df: DataFrame, db: String, table: String): WriteResult = {
-    val path = s"$rootDir/$db/$table"
-    df.write.mode("append")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .parquet(path)
-    WriteResult(s"$db.$table", -1L, Some(path))
-  }
-
   /** Staged chunk write for crash-consistent resume: the chunk's job writes
     * into a hidden `_staging_<tag>` subdir (invisible to parquet readers),
     * then the driver moves each part file into the table dir and returns

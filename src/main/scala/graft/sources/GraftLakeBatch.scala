@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Or, Pmod, XxHash64}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType}
 import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SQLContext, SparkSession}
 
 import graft.operators.Export
@@ -211,20 +211,25 @@ object GraftLakeBatch {
     case _ => None
   }
 
-  /** The file test of conjunct `c`: true only when `c` PROVABLY excludes
-    * every row of the entry's file — a `p=` spec contradicting an
-    * equality (on the column, or on `CAST(col AS STRING)`, the form the
-    * spec stores), an `s=` range missing a comparison or an equality, or
-    * a `b=` bloom filter lacking every integral `=`/`IN` needle. Missing
-    * tag / non-literal shape / unknown type → never excludes. This is
-    * the only file-skipping predicate of lake reads: the format and
-    * catalog reads, every filtered [[Export.readSnapshot]], the stream
-    * `where` option and DML planning all reach it. Needles hash once
-    * per conjunct, not per file. `physOf` translates logical column
-    * names to the physical names the tags are keyed by. Attributes may
-    * be resolved (the batch FileIndex's pushed filters) or unresolved
-    * (the stream source's parsed `where` option) — both are
-    * [[Attribute]]s and only the name is consulted. */
+  /** The file test of predicate `c`: true only when `c` PROVABLY
+    * excludes every row of the entry's file — a `p=` spec contradicting
+    * an equality or `IN` (on the column, or on `CAST(col AS STRING)`,
+    * the form the spec stores), an `s=` range missing a comparison or an
+    * equality, or a `b=` bloom filter lacking every integral `=`/`IN`
+    * needle; an `And` excludes when either side does, an `Or` when both
+    * do, and a `FALSE` literal always. `InSet` (what the optimizer makes
+    * of an `IN` list past `spark.sql.optimizer.inSetConversionThreshold`)
+    * lifts each value to a literal of the attribute's type. Missing tag
+    * / non-literal shape / unknown type → never excludes. This is the
+    * only file-skipping predicate of the lake: the format and catalog
+    * reads, every filtered [[Export.readSnapshot]], the stream `where`
+    * option and the file choice of every row-level rewrite
+    * ([[Export.Scope]]) all reach it. Needles hash once per conjunct,
+    * not per file. `physOf`
+    * translates logical column names to the physical names the tags are
+    * keyed by. Attributes may be resolved (the batch FileIndex's pushed
+    * filters) or unresolved (the stream source's parsed `where` option)
+    * — both are [[Attribute]]s and only the name is consulted. */
   private[graft] def excludes(c: Expression, physOf: Map[String, String])
       : Export.ManifestEntry => Boolean = {
     def phys(a: Attribute): String = physOf.getOrElse(a.name, a.name)
@@ -237,17 +242,31 @@ object GraftLakeBatch {
         val key = Export.statKeyOf(phys(a), l.dataType)
         e => e.stats.get(key).exists(miss(v, _))
       }
+    def all(each: Seq[Export.ManifestEntry => Boolean])
+        : Export.ManifestEntry => Boolean =
+      e => each.nonEmpty && each.forall(_(e))
     c match {
+      case Literal(false, BooleanType) => _ => true
+      case And(l, r) =>
+        val (a, b) = (excludes(l, physOf), excludes(r, physOf))
+        e => a(e) || b(e)
+      case Or(l, r) => all(Seq(excludes(l, physOf), excludes(r, physOf)))
       case EqualTo(a: Attribute, l: Literal) => eqExcludes(phys(a), l)
       case EqualTo(l: Literal, a: Attribute) => eqExcludes(phys(a), l)
       case EqualTo(Cast(a: Attribute, StringType, _, _), l: Literal)
           if l.dataType == StringType => partExcludes(phys(a), l)
       case EqualTo(l: Literal, Cast(a: Attribute, StringType, _, _))
           if l.dataType == StringType => partExcludes(phys(a), l)
-      case In(a: Attribute, vs)
-          if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val each = vs.map(l => eqExcludes(phys(a), l.asInstanceOf[Literal]))
-        e => each.forall(_(e))
+      case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        all(vs.map(l => eqExcludes(phys(a), l.asInstanceOf[Literal])))
+      case In(Cast(a: Attribute, StringType, _, _), vs)
+          if vs.forall(v => v.isInstanceOf[Literal] &&
+            v.dataType == StringType) =>
+        all(vs.map(l => partExcludes(phys(a), l.asInstanceOf[Literal])))
+      case InSet(a: Attribute, vs) =>
+        all(vs.toSeq.map(v => eqExcludes(phys(a), Literal(v, a.dataType))))
+      case InSet(Cast(a: Attribute, StringType, _, _), vs) =>
+        all(vs.toSeq.map(v => partExcludes(phys(a), Literal(v, StringType))))
       case GreaterThan(a: Attribute, l: Literal) =>
         range(a, l) { case (v, (_, hi)) => hi <= v }
       case GreaterThanOrEqual(a: Attribute, l: Literal) =>

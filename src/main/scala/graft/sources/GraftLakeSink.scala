@@ -33,11 +33,11 @@ import graft.operators.Export.Layout
   *    ([[Merge.upsertLatest]] semantics — per key the max-by-(orderBy,
   *    full row) record survives, so out-of-order feeds settle to the
   *    global resolution). With `.partitionBy(cols ⊆ mergeKeys)` the
-  *    rewrite is partition-scoped ([[Export.mergeSnapshotPartitionedLatest]]);
+  *    rewrite is partition-scoped ([[Export.keyedScope]]);
   *    with `.option("clusterBy", "<integral merge key>")` the table is
   *    kept key-clustered and the rewrite is FILE-scoped — only files
-  *    whose manifest key zone overlaps the batch's envelope are
-  *    touched ([[Export.mergeSnapshotClusteredLatest]]); with
+  *    the batch's key envelope cannot rule out are touched
+  *    ([[Export.envelopeScope]]); with
   *    `.option("morUpsert", "true")` the batch commits MERGE-ON-READ
   *    ([[Export.upsertSnapshotMoR]]) — beaten incumbents become
   *    deletion-vector positions and only the winners are appended, so
@@ -129,10 +129,9 @@ final class GraftLakeSink(spark: SparkSession,
       "partitioned table already merges partition-scoped - drop " +
       ".partitionBy or morUpsert")
   /** Update mode without a partition layout: keep the table CLUSTERED
-    * on this integral merge key and rewrite only the files whose key
-    * zone overlaps each batch's envelope
-    * ([[Export.mergeSnapshotClusteredLatest]]) — the file-granular
-    * answer where partitioning is too coarse. */
+    * on this integral merge key and rewrite only the files each batch's
+    * key envelope cannot rule out ([[Export.envelopeScope]]) — the
+    * file-granular answer where partitioning is too coarse. */
   private val clusterBy = opt("clusterBy").map(_.trim).filter(_.nonEmpty)
 
   /** The layout of every Append-mode micro-batch: the `.partitionBy`
@@ -213,12 +212,17 @@ final class GraftLakeSink(spark: SparkSession,
       if (mode == OutputMode.Complete())
         Export.replaceSnapshot(spark, batch, path, meta = meta)
       else if (mode == OutputMode.Update()) {
+        lazy val latest = Export.latestSnapshotVersion(path)
+        def merged(base: DataFrame) =
+          Merge.upsertLatest(base, batch, mergeKeys, orderCols)
         if (partitionCols.nonEmpty)
-          Export.mergeSnapshotPartitionedLatest(spark, path, batch,
-            mergeKeys, partitionCols, orderCols,
-            nFiles = filesPerCommit, meta = meta)
+          Export.rewriteScoped(spark, path,
+            Export.keyedScope(Export.readManifest(path, latest), batch,
+              mergeKeys, partitionCols),
+            Layout.Partitioned(partitionCols, filesPerCommit), meta,
+            "overwrite")(merged)
         else if (morUpsert) {
-          if (Export.latestSnapshotVersion(path) > 0)
+          if (latest > 0)
             // MoR commit: O(batch) writes; scan zone-scoped when
             // clustered (clusterBy doubles as the MoR cluster key)
             Export.upsertSnapshotMoR(spark, path, batch, mergeKeys,
@@ -227,32 +231,30 @@ final class GraftLakeSink(spark: SparkSession,
           else {
             // bootstrap: first batch resolves within itself; clustered
             // + zoned when a cluster key is declared, so batch 2 prunes
-            append(Merge.upsertLatest(batch.limit(0), batch, mergeKeys,
-                orderCols),
+            append(merged(batch.limit(0)),
               clusterBy.fold[Layout](Layout.Plain)(
                 Layout.Clustered(_, filesPerCommit)), meta)
           }
         } else clusterBy match {
-          case Some(k) if Export.latestSnapshotVersion(path) > 0 =>
-            // zone-pruned file-scoped merge: only files whose key zone
-            // overlaps the batch's envelope are rewritten
-            Export.mergeSnapshotClusteredLatest(spark, path, batch,
-              mergeKeys, k, orderCols, nFiles = filesPerCommit,
-              meta = meta)
+          case Some(k) if latest > 0 =>
+            // file-scoped merge: only the files the batch's key
+            // envelope cannot rule out are rewritten (an empty batch
+            // commits nothing)
+            Export.envelopeScope(Export.readManifest(path, latest), batch,
+              mergeKeys, k).foreach(Export.rewriteScoped(spark, path, _,
+                Layout.Clustered(k, filesPerCommit), meta, "overwrite")(
+                merged))
           case Some(k) =>
             // bootstrap: first batch resolves within itself and lands
             // clustered + zoned so the next batch can prune
-            append(Merge.upsertLatest(batch.limit(0), batch, mergeKeys,
-              orderCols), Layout.Clustered(k, filesPerCommit), meta)
+            append(merged(batch.limit(0)),
+              Layout.Clustered(k, filesPerCommit), meta)
           case None =>
-            val latest = Export.latestSnapshotVersion(path)
             val base =
               if (latest == 0) batch.limit(0)
               else Export.readSnapshot(spark, path, latest)
             Export.replaceSnapshot(spark,
-              Merge.upsertLatest(base, batch, mergeKeys, orderCols)
-                .coalesce(filesPerCommit),
-              path, meta = meta)
+              merged(base).coalesce(filesPerCommit), path, meta = meta)
         }
       } else append(batch, appendLayout, meta)
       // a bare compaction keeps the table's declared layout

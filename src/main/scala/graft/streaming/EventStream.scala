@@ -806,8 +806,8 @@ object EventStream {
   /** Streaming APPLY CHANGES — the CDC-consumer sink every lakehouse
     * ships (Delta's apply-changes-into shape): each micro-batch of keyed
     * change records is merged into a PARTITIONED snapshot table with
-    * ORDER-RESOLVED conflicts ([[graft.operators.Export.mergeSnapshotPartitionedLatest]]
-    * — per key the max-by-(ts_us, value) row survives). Because that
+    * ORDER-RESOLVED conflicts ([[applyChanges]] — per key the
+    * max-by-(ts_us, value) row survives). Because that
     * resolution is associative and commutative, the settled table equals
     * the GLOBAL per-key resolution no matter how the feed was batched or
     * ordered — the law that makes an out-of-order CDC feed safe to apply
@@ -858,23 +858,35 @@ object EventStream {
               .agg(max(struct(col("ts_us"), col("value"))).as("_m"))
               .select(col("event_type"), col("user_id"),
                 col("_m.ts_us").as("ts_us"), col("_m.value").as("value"))
-            if (graft.operators.Export.latestSnapshotVersion(tableDir) == 0)
-              graft.operators.Export.appendSnapshot(spark,
-                reduced, tableDir,
-                Layout.Partitioned(Seq("event_type"), nFiles = 1),
-                meta = Map("batch" -> batchId.toString))
-            else
-              graft.operators.Export.mergeSnapshotPartitionedLatest(spark,
-                tableDir, reduced, keyCols = keys,
-                partitionCols = Seq("event_type"),
-                orderCols = Seq("ts_us"), nFiles = 1,
-                meta = Map("batch" -> batchId.toString))
+            applyChanges(spark, tableDir, reduced, keys, Seq("event_type"),
+              batchId)
           }
           ()
         }
         .start()
       q.awaitTermination()
     }
+  }
+
+  /** One CDC micro-batch `rows` (key-unique) applied to `tableDir`
+    * under the exactly-once `#batch=` stamp: the first lands as a
+    * partitioned append; every later one is an order-resolved
+    * ([[graft.operators.Merge.upsertLatest]] by `ts_us`) rewrite of just
+    * the partitions it touches ([[graft.operators.Export.keyedScope]]). */
+  private def applyChanges(spark: SparkSession, tableDir: String,
+      rows: DataFrame, keys: Seq[String], partCols: Seq[String],
+      batchId: Long): Unit = {
+    val E = graft.operators.Export
+    val latest = E.latestSnapshotVersion(tableDir)
+    val meta = Map("batch" -> batchId.toString)
+    if (latest == 0)
+      E.appendSnapshot(spark, rows, tableDir, Layout.Partitioned(partCols),
+        meta = meta)
+    else
+      E.rewriteScoped(spark, tableDir,
+        E.keyedScope(E.readManifest(tableDir, latest), rows, keys, partCols),
+        Layout.Partitioned(partCols), meta, "overwrite")(
+        graft.operators.Merge.upsertLatest(_, rows, keys, Seq("ts_us")))
   }
 
   /** [[streamingCdcApply]] with DELETE records — the full change-record
@@ -928,17 +940,8 @@ object EventStream {
               .select(col("user_id"), col("shard"),
                 col("_m.ts_us").as("ts_us"), col("_m.value").as("value"),
                 col("_m.is_del").as("is_del"))
-            if (graft.operators.Export.latestSnapshotVersion(tableDir) == 0)
-              graft.operators.Export.appendSnapshot(spark,
-                reduced, tableDir,
-                Layout.Partitioned(Seq("shard"), nFiles = 1),
-                meta = Map("batch" -> batchId.toString))
-            else
-              graft.operators.Export.mergeSnapshotPartitionedLatest(spark,
-                tableDir, reduced, keyCols = keys,
-                partitionCols = Seq("shard"),
-                orderCols = Seq("ts_us"), nFiles = 1,
-                meta = Map("batch" -> batchId.toString))
+            applyChanges(spark, tableDir, reduced, keys, Seq("shard"),
+              batchId)
           }
           ()
         }

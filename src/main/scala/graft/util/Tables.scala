@@ -9,10 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * caller are pushed to the parquet scan by Catalyst — never pre-collect.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -47,8 +43,4 @@ object Tables {
       .withColumn("ts", tsMicros(raw.schema("ts").dataType))
       .withColumn("ts_ts", timestamp_micros(col("ts")))
   }
-
-  /** Register all tables as temp views so `spark.sql` mirrors the oracle. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    all.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

@@ -24,6 +24,27 @@ class ConcurrentCommitSpec extends SparkSpec {
   private def rows(lo: Int, hi: Int): DataFrame =
     (lo until hi).map(i => (i.toLong, s"d$i", i % 3)).toDF("id", "s", "m")
 
+  /** MERGE `upd` into the `m`-partitioned `dir`, rewriting only the
+    * partitions it touches. */
+  private def mergeByPartition(dir: String, upd: DataFrame): Int =
+    Export.rewriteScoped(spark, dir, Export.keyedScope(
+        Export.readManifest(dir, Export.latestSnapshotVersion(dir)), upd,
+        Seq("id", "m"), Seq("m")),
+      Layout.Partitioned(Seq("m")), Map.empty, "overwrite")(
+      Merge.upsert(_, upd, Seq("id", "m")))
+
+  /** Rewrite the files of the clustered `dir` that the key range
+    * `[lo, hi]` of `id` cannot rule out through `transform`. */
+  private def rewriteIdRange(dir: String, lo: Long, hi: Long)(
+      transform: DataFrame => DataFrame): Int = {
+    val m = Export.readManifest(dir, Export.latestSnapshotVersion(dir))
+    val scope = Export.envelopeScope(m,
+      Seq(lo, hi).toDF("id"), Seq("id"), "id").get
+    Export.rewriteScoped(spark, dir, scope,
+      Layout.Clustered("id", math.max(1, scope.files.size)), Map.empty,
+      "overwrite")(transform)
+  }
+
   private def ids(dir: String): Seq[Long] =
     Export.readSnapshot(spark, dir, Export.latestSnapshotVersion(dir))
       .select("id").collect().map(_.getLong(0)).sorted.toSeq
@@ -112,12 +133,10 @@ class ConcurrentCommitSpec extends SparkSpec {
     Export.rewriteRaceInjector = Some((_, _) =>
       if (!injected) {
         injected = true
-        Export.mergeSnapshotPartitioned(spark, dir, updB,
-          keyCols = Seq("id", "m"), partitionCols = Seq("m"))
+        mergeByPartition(dir, updB)
       })
     try {
-      val v = Export.mergeSnapshotPartitioned(spark, dir, updA,
-        keyCols = Seq("id", "m"), partitionCols = Seq("m"))
+      val v = mergeByPartition(dir, updA)
       assert(injected)
       assert(v === 3) // B landed v2, A retried onto v3
       val got = Export.readSnapshot(spark, dir, v)
@@ -140,13 +159,11 @@ class ConcurrentCommitSpec extends SparkSpec {
     Export.rewriteRaceInjector = Some((_, _) =>
       if (!injected) {
         injected = true
-        Export.mergeSnapshotPartitioned(spark, dir, updB,
-          keyCols = Seq("id", "m"), partitionCols = Seq("m"))
+        mergeByPartition(dir, updB)
       })
     try {
       val e = intercept[Export.ConcurrentCommitException] {
-        Export.mergeSnapshotPartitioned(spark, dir, updA,
-          keyCols = Seq("id", "m"), partitionCols = Seq("m"))
+        mergeByPartition(dir, updA)
       }
       assert(e.winning === 2)
       // B's merge is the settled state — replaying A would have
@@ -155,6 +172,57 @@ class ConcurrentCommitSpec extends SparkSpec {
         .filter(col("m") === 1).select("s").collect()
         .map(_.getString(0)).toSeq
       assert(got.nonEmpty && got.forall(_.startsWith("B")))
+    } finally Export.rewriteRaceInjector = None
+  }
+
+  test("a CoW DELETE scoped to one partition commutes with a racing merge on another: it retries and settles to the serial result") {
+    val dir = tmp("ccs-delmerge")
+    Export.appendSnapshot(spark, rows(0, 12), dir, Layout.Partitioned(Seq("m")))
+    val base = Export.readSnapshot(spark, dir, 1)
+    val updB = rows(0, 12).filter(col("m") === 2)
+      .withColumn("s", concat(lit("B"), col("s")))
+    var injected = false
+    Export.rewriteRaceInjector = Some((_, _) =>
+      if (!injected) {
+        injected = true
+        mergeByPartition(dir, updB)
+      })
+    try {
+      val v = Export.deleteWhere(spark, dir, col("m") === 1)
+      assert(injected)
+      assert(v === 3) // the merge landed v2, the delete retried onto v3
+      val got = Export.readSnapshot(spark, dir, v)
+      val serial = Merge.upsert(base, updB, Seq("id", "m"))
+        .filter(col("m") =!= 1)
+      assert(got.exceptAll(serial).isEmpty &&
+        serial.exceptAll(got).isEmpty,
+        "settled table diverged from the serial merge-then-delete result")
+    } finally Export.rewriteRaceInjector = None
+  }
+
+  test("a partition-scoped merge racing an ADD CONSTRAINT its rows violate raises the typed conflict: no unvalidated row commits") {
+    val dir = tmp("ccs-mergecheck")
+    Export.appendSnapshot(spark, rows(0, 12), dir, Layout.Partitioned(Seq("m")))
+    // the merge writes s = 'Xd..' into m = 1; the racing constraint
+    // (valid for every committed row) forbids exactly that
+    val upd = rows(0, 12).filter(col("m") === 1)
+      .withColumn("s", concat(lit("X"), col("s")))
+    var injected = false
+    Export.rewriteRaceInjector = Some((_, _) =>
+      if (!injected) {
+        injected = true
+        Export.setSnapshotCheck(spark, dir, "no_x",
+          Some("s NOT LIKE 'X%'"))
+      })
+    try {
+      val e = intercept[Export.ConcurrentCommitException] {
+        mergeByPartition(dir, upd)
+      }
+      assert(e.winning === 2)
+      assert(Export.latestSnapshotVersion(dir) === 2)
+      assert(Export.readSnapshot(spark, dir, 2)
+        .filter(col("s").startsWith("X")).isEmpty,
+        "a row the constraint forbids reached the table")
     } finally Export.rewriteRaceInjector = None
   }
 
@@ -279,8 +347,8 @@ class ConcurrentCommitSpec extends SparkSpec {
         Export.appendSnapshot(spark, rows(100, 105), d1) })
     try {
       val upd = rows(0, 5).withColumn("s", concat(lit("Z"), col("s")))
-      val v = Export.rewriteSnapshotZoneScoped(spark, d1, "id",
-        Some((0L, 4L)))(base => Merge.upsert(base, upd, Seq("id")))
+      val v = rewriteIdRange(d1, 0L, 4L)(base =>
+        Merge.upsert(base, upd, Seq("id")))
       assert(injected && v === 3)
       // serial rewrite-then-append: low keys updated, appended rows
       // present, zone-disjoint files untouched
@@ -300,8 +368,7 @@ class ConcurrentCommitSpec extends SparkSpec {
         Export.deleteWhere(spark, d2, col("id") === 19L) })
     try {
       val e = intercept[Export.ConcurrentCommitException] {
-        Export.rewriteSnapshotZoneScoped(spark, d2, "id",
-          Some((0L, 3L)))(base =>
+        rewriteIdRange(d2, 0L, 3L)(base =>
           Merge.upsert(base,
             rows(0, 2).withColumn("s", lit("x")), Seq("id")))
       }

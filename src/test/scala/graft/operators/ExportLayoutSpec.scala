@@ -934,8 +934,11 @@ class ExportLayoutSpec extends SparkSpec {
     // exactly that partition
     val enReload = docs.filter(col("lang") === "en" &&
       col("doc_id") % 2 === 0)
-    val v2 = Export.overwritePartitions(spark, enReload, out, Seq("lang"),
-      nFiles = 2)
+    val v2 = Export.rewriteScoped(spark, out, Export.partitionScope(
+        Export.readManifest(out, v1), Seq("lang"),
+        Export.partitionsOf(enReload, Seq("lang"))),
+      Layout.Partitioned(Seq("lang"), nFiles = 2), Map.empty,
+      "overwrite")(_ => enReload)
     val after = Export.readSnapshot(spark, out, v2)
     // replaced partition holds exactly the reload's rows
     assert(after.filter(col("lang") === "en").count() === enReload.count())
@@ -957,7 +960,11 @@ class ExportLayoutSpec extends SparkSpec {
     rmDir(mixed)
     Export.appendSnapshot(spark, docs, mixed)
     intercept[IllegalArgumentException] {
-      Export.overwritePartitions(spark, enReload, mixed, Seq("lang"))
+      Export.rewriteScoped(spark, mixed, Export.partitionScope(
+          Export.readManifest(mixed, 1), Seq("lang"),
+          Export.partitionsOf(enReload, Seq("lang"))),
+        Layout.Partitioned(Seq("lang")), Map.empty, "overwrite")(
+        _ => enReload)
     }
   }
 
@@ -973,8 +980,11 @@ class ExportLayoutSpec extends SparkSpec {
       .unionByName(spark.range(1).select(
         lit(999999L).as("doc_id"), lit("en").as("lang"),
         lit(42L).as("n_chars")))
-    val v2 = Export.mergeSnapshotPartitioned(spark, out, updates,
-      keyCols = Seq("lang", "doc_id"), partitionCols = Seq("lang"))
+    val v2 = Export.rewriteScoped(spark, out, Export.keyedScope(
+        Export.readManifest(out, v1), updates, Seq("lang", "doc_id"),
+        Seq("lang")),
+      Layout.Partitioned(Seq("lang")), Map.empty, "overwrite")(
+      Merge.upsert(_, updates, Seq("lang", "doc_id")))
     val after = Export.readSnapshot(spark, out, v2)
     // per-partition merge ≡ global upsert
     val expected = Merge.upsert(docs, updates, Seq("lang", "doc_id"))
@@ -988,8 +998,11 @@ class ExportLayoutSpec extends SparkSpec {
       "merge rewrote partitions its updates never touched")
     // the precondition that makes partition-scoping sound is enforced
     intercept[IllegalArgumentException] {
-      Export.mergeSnapshotPartitioned(spark, out, updates,
-        keyCols = Seq("doc_id"), partitionCols = Seq("lang"))
+      Export.rewriteScoped(spark, out, Export.keyedScope(
+          Export.readManifest(out, v2), updates, Seq("doc_id"),
+          Seq("lang")),
+        Layout.Partitioned(Seq("lang")), Map.empty, "overwrite")(
+        Merge.upsert(_, updates, Seq("doc_id")))
     }
   }
 
@@ -1043,8 +1056,10 @@ class ExportLayoutSpec extends SparkSpec {
     val updates = ((380L to 400L).map(i => (i, i * 100, 5L)) ++
       (401L to 405L).map(i => (i, i * 100, 5L)) :+ ((390L, -1L, 1L)))
       .toDF("k", "v", "seq")
-    val v2 = Export.mergeSnapshotClusteredLatest(spark, out, updates,
-      Seq("k"), "k", Seq("seq"), nFiles = 2)
+    val v2 = Export.rewriteScoped(spark, out, Export.envelopeScope(
+        Export.readManifest(out, v1), updates, Seq("k"), "k").get,
+      Layout.Clustered("k", 2), Map.empty, "overwrite")(
+      Merge.upsertLatest(_, updates, Seq("k"), Seq("seq")))
     val after = Export.snapshotFiles(out, v2)
     // most files carried VERBATIM (path identity), only the tail zone
     // (+ the fresh merged epoch) changed
@@ -1065,8 +1080,10 @@ class ExportLayoutSpec extends SparkSpec {
       "stale update won against the order resolution")
     // a second range-local batch prunes against the REBUILT zones too
     val updates2 = Seq((1L, 999L, 9L)).toDF("k", "v", "seq")
-    val v3 = Export.mergeSnapshotClusteredLatest(spark, out, updates2,
-      Seq("k"), "k", Seq("seq"), nFiles = 1)
+    val v3 = Export.rewriteScoped(spark, out, Export.envelopeScope(
+        Export.readManifest(out, v2), updates2, Seq("k"), "k").get,
+      Layout.Clustered("k", 1), Map.empty, "overwrite")(
+      Merge.upsertLatest(_, updates2, Seq("k"), Seq("seq")))
     val carried2 = Export.snapshotFiles(out, v3).toSet
       .intersect(Export.snapshotFiles(out, v2).toSet)
     assert(carried2.size >= 6)
@@ -1074,12 +1091,43 @@ class ExportLayoutSpec extends SparkSpec {
       .filter(col("k") === 1L).select("v").collect().head.getLong(0)
       === 999L)
     // empty batch: no commit, head unchanged
-    assert(Export.mergeSnapshotClusteredLatest(spark, out,
-      updates2.limit(0), Seq("k"), "k", Seq("seq")) === v3)
+    assert(Export.envelopeScope(Export.readManifest(out, v3),
+        updates2.limit(0), Seq("k"), "k")
+      .fold(v3)(Export.rewriteScoped(spark, out, _,
+        Layout.Clustered("k", 1), Map.empty, "overwrite")(
+        Merge.upsertLatest(_, updates2.limit(0), Seq("k"), Seq("seq"))))
+      === v3)
     // clusterKey must be part of the merge key (soundness precondition)
     intercept[IllegalArgumentException](
-      Export.mergeSnapshotClusteredLatest(spark, out, updates2,
-        Seq("k"), "v", Seq("seq")))
+      Export.envelopeScope(Export.readManifest(out, v3), updates2,
+        Seq("k"), "v"))
+  }
+
+  test("a legacy clustered line with a z= zone but no s= stat is always in a rewrite's scope: the kernel scans it and the merge stays right") {
+    import spark.implicits._
+    val out = tmp("legacyzone")
+    rmDir(out)
+    val base = (1L to 400L).map(i => (i, i * 10, 0L)).toDF("k", "v", "seq")
+    val v1 = Export.appendSnapshot(spark, base, out,
+      Layout.Clustered("k", nFiles = 4))
+    // the pre-stats manifest shape: zones only
+    val (fs, root) = Export.fsRoot(out)
+    val head = Export.readManifest(out, v1)
+    Export.commitManifest(fs, root, v1 + 1, head.meta,
+      head.lines.map(Export.withoutTags(_)(_._1 == "s")))
+    val legacy = Export.readManifest(out, v1 + 1)
+    assert(legacy.entries.forall(e => e.zone.nonEmpty && e.stats.isEmpty))
+    val updates = Seq((2L, -2L, 5L), (401L, 4010L, 5L)).toDF("k", "v", "seq")
+    val scope = Export.envelopeScope(legacy, updates, Seq("k"), "k").get
+    assert(scope.files.size === 4, "a zone-only line was ruled out")
+    val v3 = Export.rewriteScoped(spark, out, scope, Layout.Clustered("k", 1),
+      Map.empty, "overwrite")(Merge.upsertLatest(_, updates, Seq("k"),
+      Seq("seq")))
+    val got = Export.readSnapshot(spark, out, v3)
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    val want = Merge.upsertLatest(base, updates, Seq("k"), Seq("seq"))
+      .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(got === want)
   }
 
   test("partition-scoped compaction on a MULTI-column layout keeps every partition column's spec (ADVICE r11: filtered subset must not narrow the layout)") {
@@ -1196,6 +1244,33 @@ class ExportLayoutSpec extends SparkSpec {
     assert(Export.readSnapshot(spark, out, v3)
       .filter(col("doc_id") === 900000L)
       .count() === 1, "unbloomed file was wrongly pruned")
+  }
+
+  test("an IN list past the InSet threshold prunes on p=, s= and b= tags alike") {
+    import spark.implicits._
+    // 11 literals: the optimizer plans InSet, not In
+    val needles = (1L to 11L).map(Long.box)
+    val rows = (0L until 800L).map(k => (k, k % 8 * 4 + 1)).toDF("k", "pk")
+    def check(name: String, layout: Layout, src: org.apache.spark.sql.DataFrame,
+        col0: String): Unit = {
+      val out = tmp(s"inset_$name")
+      rmDir(out)
+      val v = Export.appendSnapshot(spark, src, out, layout)
+      assert(Export.snapshotFiles(out, v).size === 8, s"$name fixture")
+      val read = Export.readSnapshot(spark, out, v)
+        .filter(col(col0).isin(needles: _*))
+      assert(scannedFiles(read).size < 8,
+        s"$name: an 11-literal IN planned ${scannedFiles(read).size} of 8")
+      assert(read.count() ===
+        src.filter(col(col0).isin(needles: _*)).count())
+    }
+    // p=: pk takes 1, 5, 9, ... 29; the list holds 1, 5 and 9
+    check("part", Layout.Partitioned(Seq("pk")), rows, "pk")
+    // s=: k ranges, one file per 100 keys
+    check("stat", Layout.Statted(Seq("k"), nFiles = 8), rows, "k")
+    // b=: keys 100..899 hold no needle; only a false positive plans
+    check("bloom", Layout.Bloomed("k", nFiles = 8),
+      rows.withColumn("k", col("k") + 100L), "k")
   }
 
   test("CHECK constraints: violations abort pre-write with counts, NULL passes, constraints inherit") {

@@ -155,9 +155,12 @@ class ExportMappingSpec extends SparkSpec {
       (6 until 9).map(i => (i.toLong, s"d$i", i % 3))
         .toDF("id", "s", "bucket"), t,
       Layout.Partitioned(cols = Seq("bucket"), nFiles = 1))
-    Export.overwritePartitions(spark,
-      Seq((100L, "x", 0)).toDF("id", "s", "bucket"), t,
-      partitionCols = Seq("bucket"), nFiles = 1)
+    val reload = Seq((100L, "x", 0)).toDF("id", "s", "bucket")
+    Export.rewriteScoped(spark, t, Export.partitionScope(
+        Export.readManifest(t, Export.latestSnapshotVersion(t)),
+        Seq("bucket"), Export.partitionsOf(reload, Seq("bucket"))),
+      Layout.Partitioned(Seq("bucket")), Map.empty, "overwrite")(
+      _ => reload)
     val got = Export.readSnapshot(spark, t,
         Export.latestSnapshotVersion(t))
       .select("id", "bucket").as[(Long, Int)].collect().sortBy(_._1)

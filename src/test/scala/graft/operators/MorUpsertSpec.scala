@@ -185,4 +185,39 @@ class MorUpsertSpec extends SparkSpec {
       assert(got(1700000000L + id * 3600) === expected)
     }
   }
+
+  test("TIMESTAMP cluster key scopes by the micros envelope: a DV-bearing file sharing only the batch's second keeps its line byte for byte") {
+    def at(us: String, n: Int) = spark.sql(
+      s"SELECT timestamp_micros($us + id * 100000) AS ts, 1L AS ord, " +
+        s"CAST(id AS STRING) AS v FROM range($n)")
+    val out = tmp("morts_us")
+    // two clustered files inside the same seconds: 10.0-10.4 s, 10.6-11.0 s
+    Export.appendSnapshot(spark, at("1700000010000000", 5), out,
+      Layout.Clustered("ts", nFiles = 1))
+    Export.appendSnapshot(spark, at("1700000010600000", 5), out,
+      Layout.Clustered("ts", nFiles = 1))
+    // a deletion vector on the late file (10.8 s deleted)
+    Export.deleteWhereMoR(spark, out, col("ts") ===
+      lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(
+        1700000010L, 800000000L))))
+    val v = Export.latestSnapshotVersion(out)
+    val late = Export.snapshotManifestEntries(out, v).filter(_.hasDv)
+    assert(late.size === 1, "fixture: one DV-bearing late file")
+    // a beaten incumbent at 10.2 s: the early file takes a new sidecar,
+    // the late one must keep its own
+    val batch = spark.sql("SELECT timestamp_micros(1700000010200000) AS ts, " +
+      "2L AS ord, 'u' AS v")
+    val v2 = Export.upsertSnapshotMoR(spark, out, batch,
+      Seq("ts"), Seq("ord"), clusterKey = Some("ts"))
+    assert(v2 === v + 1)
+    assert(Export.snapshotManifestEntries(out, v2).map(_.line)
+      .contains(late.head.line),
+      "a file the micros envelope rules out was re-tagged")
+    val got = Export.readSnapshot(spark, out, v2)
+      .selectExpr("unix_micros(ts) - 1700000010000000 AS t", "v")
+      .as[(Long, String)].collect().toMap
+    assert(got === Map(0L -> "0", 100000L -> "1", 200000L -> "u",
+      300000L -> "3", 400000L -> "4", 600000L -> "0", 700000L -> "1",
+      900000L -> "3", 1000000L -> "4"))
+  }
 }

@@ -640,6 +640,37 @@ class GraftLakeDmlSpec extends SparkSpec {
       .collect().head.toSeq === Seq(900L, 100L))
   }
 
+  test("MERGE on a TIMESTAMP graft.cluster.key scopes by the micros envelope: files sharing only the batch's second carry verbatim, the replayed rows land") {
+    val wh = warehouse
+    spark.sql("CREATE TABLE gld.ns.tsz (ts TIMESTAMP, v BIGINT) " +
+      "TBLPROPERTIES ('graft.cluster.key' = 'ts')")
+    // two epochs inside the same seconds: 10.0-10.4 s and 10.6-11.0 s
+    spark.sql("INSERT INTO gld.ns.tsz SELECT timestamp_micros(" +
+      "1700000010000000 + id * 100000), id FROM range(5)")
+    spark.sql("INSERT INTO gld.ns.tsz SELECT timestamp_micros(" +
+      "1700000010600000 + id * 100000), 10 + id FROM range(5)")
+    val dir = s"$wh/ns/tsz"
+    val v0 = Export.latestSnapshotVersion(dir)
+    val late = Export.snapshotAddedFiles(dir, v0).toSet
+    // update 10.2 s, insert 10.25 s: the envelope misses every late file
+    spark.sql("SELECT timestamp_micros(1700000010200000) AS ts, 99L AS v " +
+      "UNION ALL SELECT timestamp_micros(1700000010250000), 98L")
+      .createOrReplaceTempView("tsz_src")
+    spark.sql("MERGE INTO gld.ns.tsz t USING tsz_src s ON t.ts = s.ts " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    val v1 = Export.latestSnapshotVersion(dir)
+    assert(v1 === v0 + 1)
+    assert(late.subsetOf(Export.snapshotFiles(dir, v1).toSet),
+      "a file the micros envelope rules out was rewritten")
+    val got = spark.sql("SELECT unix_micros(ts) - 1700000010000000, v " +
+      "FROM gld.ns.tsz").collect().map(r => (r.getLong(0), r.getLong(1)))
+      .sortBy(_._1).toSeq
+    val want = ((0L until 5L).map(i => (i * 100000, if (i == 2) 99L else i)) ++
+      Seq((250000L, 98L)) ++
+      (0L until 5L).map(i => (600000 + i * 100000, 10 + i))).sortBy(_._1)
+    assert(got === want)
+  }
+
   test("struct-field UPDATE: SET meta.score folds into one withField rebuild - values row-exact, NULL struct stays NULL, overlapping assignments refuse without a commit") {
     val wh = warehouse
     spark.sql("CREATE TABLE gld.ns.nup (k BIGINT, lang STRING, " +
