@@ -102,9 +102,66 @@ object VecOps {
     out
   }
 
-  /** Random-hyperplane sketch over a packed vector — the static-call twin
-    * of Similarity.hyperplaneSketch's interpreted aggregate/zip_with form
-    * (the last interpreted per-row kernel on the embedding hot path).
+  /** L2-normalise an array<double> and pack the result: the squares are
+    * summed left to right from 0.0, the norm is `sqrt` of that sum, and
+    * each element is divided by the norm — the IEEE operations, in the
+    * order, of `transform(v, x -> x / sqrt(aggregate(transform(v, x ->
+    * x * x), 0.0, +)))`, so the bytes equal `pack` of that lambda form.
+    * Returns null for a null element and for a norm that is not finite
+    * and positive (zero, NaN or ±Inf elements): no direction, no vector. */
+  def normalize(arr: ArrayData): Array[Byte] = {
+    val n = arr.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      if (arr.isNullAt(i)) return null
+      val x = arr.getDouble(i)
+      s += x * x
+      i += 1
+    }
+    val norm = math.sqrt(s)
+    if (!(norm > 0.0 && norm < Double.PositiveInfinity)) return null
+    val out = new Array[Byte](n * 8)
+    i = 0
+    while (i < n) {
+      org.apache.spark.unsafe.Platform.putLong(out,
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + 8L * i,
+        java.lang.Double.doubleToLongBits(arr.getDouble(i) / norm))
+      i += 1
+    }
+    out
+  }
+
+  /** Whether [[arrayDot]] is defined: equal lengths, no null element —
+    * the rows on which `aggregate(zip_with(a, b, *), 0.0, +)` is not NULL
+    * (zip_with pads the shorter side with nulls). */
+  def dotDefined(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    if (b.numElements() != n) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
+  /** Dot product of two array<double> values, accumulated left to right
+    * from 0.0. Callers check [[dotDefined]] first. */
+  def arrayDot(a: ArrayData, b: ArrayData): Double = {
+    val n = a.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) {
+      s += a.getDouble(i) * b.getDouble(i)
+      i += 1
+    }
+    s
+  }
+
+  /** Random-hyperplane sketch over a packed vector. It reproduces an
+    * `aggregate`/`zip_with` Column form (kept in the tests as the oracle)
+    * with one static call per row.
     * BIT-IDENTICAL by construction: plane p's component for dimension i is
     * ±1 from the same xxhash64 the Column form evaluates — Spark's
     * XxHash64 over two INT inputs folds XXH64.hashInt(i, hashInt(p +
@@ -210,6 +267,58 @@ case class PackedSketch(child: Expression, planes: Int, seed: Int)
   override def prettyName: String = "packed_sketch"
 }
 
+/** `normalize_vec(array<double>) -> binary`: the packed L2-normalised
+  * vector, or NULL — see VecOps.normalize. */
+case class NormalizeVec(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = BinaryType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"normalize_vec requires ARRAY<DOUBLE>, got ${t.catalogString}")
+  }
+  override def nullSafeEval(input: Any): Any =
+    VecOps.normalize(input.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      |${ev.value} = graft.functions.VecOps.normalize($c);
+      |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): NormalizeVec =
+    copy(child = newChild)
+  override def prettyName: String = "normalize_vec"
+}
+
+/** `vec_dot(array<double>, array<double>) -> double`, NULL on a null
+  * element or unequal lengths — see VecOps.arrayDot. */
+case class ArrayDot(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"vec_dot requires (ARRAY<DOUBLE>, ARRAY<DOUBLE>), got " +
+          s"(${l.catalogString}, ${r.catalogString})")
+    }
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    if (VecOps.dotDefined(x, y)) VecOps.arrayDot(x, y) else null
+  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"""
+      |if (graft.functions.VecOps.dotDefined($a, $b)) {
+      |  ${ev.value} = graft.functions.VecOps.arrayDot($a, $b);
+      |} else {
+      |  ${ev.isNull} = true;
+      |}""".stripMargin)
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): ArrayDot = copy(left = newLeft, right = newRight)
+  override def prettyName: String = "vec_dot"
+}
+
 object VecExpressions {
   import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 
@@ -223,6 +332,14 @@ object VecExpressions {
   /** Element-wise difference (a − b) of two packed-binary vector columns. */
   def packedSub(a: Column, b: Column): Column =
     column(PackedSub(expression(a), expression(b)))
+
+  /** The packed L2-normalised vector of an array<double> column, NULL
+    * where it has no direction (see VecOps.normalize). */
+  def normalizeVec(c: Column): Column = column(NormalizeVec(expression(c)))
+
+  /** Dot product of two array<double> columns (see VecOps.arrayDot). */
+  def arrayDot(a: Column, b: Column): Column =
+    column(ArrayDot(expression(a), expression(b)))
 
   /** Hyperplane sketch of a packed-binary vector column. */
   def packedSketch(c: Column, planes: Int, seed: Int = 0): Column =

@@ -21,19 +21,20 @@ import org.apache.spark.sql.types._
   *    (a−b)²), 0, +)) …)` over k candidates — m×k lambda subtrees whose
   *    janino compile alone costs ~seconds per plan, plus one allocated
   *    zipped array per candidate per row;
-  *  - `dedup_embed_md5`'s LSH buckets: per (table, plane) a projection
-  *    whose SIGN was recomputed per element per row as
-  *    `conv(substring(md5('t_p_' || i), 1, 1), 16, 10) % 2` — six md5
-  *    invocations per vector element per row for a value that depends
-  *    only on (t, p, i).
+  *  - `dedup_embed_md5`'s and `ann_lsh_md5`'s LSH buckets: per (table,
+  *    plane) a projection whose SIGN was recomputed per element per row
+  *    as `conv(substring(md5('t_p_' || i), 1, 1), 16, 10) % 2` (or
+  *    `md5('p_' || i)` for ann_lsh_md5's single table) — one md5
+  *    invocation per plane per vector element per row for a value that
+  *    depends only on (t, p, i).
   *
   * These expressions compute the IDENTICAL values in one kernel call:
   * straight long arithmetic over the codebook / a memoized sign table
   * (the md5 is evaluated once per (t, p, i) per JVM, not per row). The
   * DuckDB oracle SQL is untouched — it replays the original formulas —
-  * and the legacy Column trees remain below as the in-tree spec
-  * reference; `ZArgminSpec` locks bit-equivalence on the fixture corpus
-  * plus adversarial vectors.
+  * and the legacy Column trees remain below (ann_lsh_md5's in
+  * `ZArgminSpec`) as the in-tree spec reference; `ZArgminSpec` locks
+  * bit-equivalence on the fixture corpus plus adversarial vectors.
   *
   * NULL/shape contract (matches the legacy trees exactly, pinned by the
   * spec): a NULL vector, a NULL element, or a window the input cannot
@@ -100,7 +101,8 @@ object ZOps {
   /** Memoized hyperplane sign tables: sign(t, p, i) = +1 iff the first
     * hex digit of md5("t_p_i") is even — exactly the legacy
     * `conv(substring(md5(concat('t_p_', i)), 1, 1), 16, 10) % 2 = 0`.
-    * The first hex digit is the high nibble of digest byte 0. */
+    * `t = -1` is the table-less family md5("p_i") of ann_lsh_md5. The
+    * first hex digit is the high nibble of digest byte 0. */
   private val signTables =
     new java.util.concurrent.ConcurrentHashMap[Long, Array[Byte]]()
 
@@ -119,8 +121,8 @@ object ZOps {
         var i = 0
         while (i < size) {
           md.reset()
-          val d = md.digest(s"${t}_${p}_$i"
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val text = if (t < 0) s"${p}_$i" else s"${t}_${p}_$i"
+          val d = md.digest(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           out(i) = if (((d(0) >> 4) & 1) == 0) 1 else -1
           i += 1
         }
@@ -131,11 +133,13 @@ object ZOps {
   }
 
   /** All `tables` LSH buckets of a quantized vector in one pass:
-    * bucket_t = Σ_p (1<<p)·[Σ_i q_i·sign(t,p,i) ≥ 0]. NULL vector,
-    * empty vector (the legacy sequence(0, −1) descends and zip_with
-    * nulls out) or any NULL element → every projection NULL → all
-    * buckets 0. */
-  def lshBucketsZ(q: ArrayData, tables: Int, planes: Int): ArrayData = {
+    * bucket_t = Σ_p (1<<p)·[Σ_i q_i·sign(t,p,i) ≥ 0] (plane 0 = LSB).
+    * With `tablePrefix = false` the single table signs by md5("p_i").
+    * NULL vector, empty vector (the legacy sequence(0, −1) descends and
+    * zip_with nulls out) or any NULL element → every projection NULL →
+    * all buckets 0. */
+  def lshBucketsZ(q: ArrayData, tables: Int, planes: Int,
+      tablePrefix: Boolean): ArrayData = {
     val buckets = new Array[Long](tables)
     var degenerate = q == null || q.numElements() == 0
     val n = if (q == null) 0 else q.numElements()
@@ -148,7 +152,8 @@ object ZOps {
     }
     if (!degenerate) {
       val proj = new Array[Long](tables * planes)
-      val sgn = Array.tabulate(tables, planes)((t, p) => signs(t, p, n))
+      val sgn = Array.tabulate(tables, planes)((t, p) =>
+        signs(if (tablePrefix) t else -1, p, n))
       var i = 0
       while (i < n) {
         val x = q.getLong(i)
@@ -217,12 +222,15 @@ case class PqCodesZExpr(child: Expression, cb: Array[Long], m: Int,
 
 /** `lsh_buckets_z(q) -> array<bigint>` of the per-table LSH buckets —
   * see [[ZOps.lshBucketsZ]]. Non-nullable (degenerate → bucket 0). */
-case class LshBucketsZExpr(child: Expression, tables: Int, planes: Int)
-    extends UnaryExpression {
+case class LshBucketsZExpr(child: Expression, tables: Int, planes: Int,
+    tablePrefix: Boolean = true) extends UnaryExpression {
   // a bucket is a Long bitmask over the planes: `1L << p` wraps at 64
   if (planes < 1 || planes > 63) throw new IllegalArgumentException(
     s"lsh_buckets_z planes must be in 1..63 (one bit each of a BIGINT " +
       s"bucket), got $planes")
+  // without the table prefix every table would sign identically
+  if (!tablePrefix && tables != 1) throw new IllegalArgumentException(
+    s"lsh_buckets_z without a table prefix has one table, got $tables")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
 
@@ -233,7 +241,8 @@ case class LshBucketsZExpr(child: Expression, tables: Int, planes: Int)
   }
 
   override def eval(input: InternalRow): Any =
-    ZOps.lshBucketsZ(child.eval(input).asInstanceOf[ArrayData], tables, planes)
+    ZOps.lshBucketsZ(child.eval(input).asInstanceOf[ArrayData], tables, planes,
+      tablePrefix)
 
   override protected def doGenCode(ctx: CodegenContext,
       ev: ExprCode): ExprCode = {
@@ -242,7 +251,7 @@ case class LshBucketsZExpr(child: Expression, tables: Int, planes: Int)
       ${c.code}
       org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
         graft.functions.ZOps.lshBucketsZ(
-          ${c.isNull} ? null : ${c.value}, $tables, $planes);""",
+          ${c.isNull} ? null : ${c.value}, $tables, $planes, $tablePrefix);""",
       isNull = FalseLiteral)
   }
 
@@ -272,6 +281,11 @@ object ZExpressions {
   /** All LSH table buckets in one pass. */
   def lshBucketsZ(q: Column, tables: Int, planes: Int): Column =
     column(LshBucketsZExpr(expression(q), tables, planes))
+
+  /** The one bucket of ann_lsh_md5's table-less md5("p_i") sign family. */
+  def lshBucketZ(q: Column, planes: Int): Column =
+    column(LshBucketsZExpr(expression(q), 1, planes, tablePrefix = false))
+      .getItem(0)
 
   // ------------------------------------------------------------------
   // Legacy Column trees — the exact formulas the kernels replace and

@@ -11,60 +11,30 @@ import org.apache.spark.sql.functions._
   * touches only its bucket, so a 1000-executor cluster scans 1/2^planes of
   * the corpus per query (plus multi-probe neighbors for recall).
   *
-  * All math is `functions._` over array columns (zip_with/aggregate) —
-  * codegen'd, no UDFs, order of float accumulation fixed left-to-right so
-  * results are deterministic and engine-comparable.
+  * Per-row vector math runs on the native kernels of
+  * `graft.functions.VecExpressions` (codegen'd static calls, no UDFs and
+  * no interpreted `aggregate`/`transform` lambdas), accumulating floats
+  * left to right, so results are deterministic and engine-comparable.
   */
 object Similarity {
 
-  /** Dot product of two float-array columns, accumulated in double. */
+  /** Dot product of two numeric-array columns, each element cast to
+    * double and accumulated left to right on the native `vec_dot` kernel.
+    * NULL for a null array, a null element or unequal lengths. */
   def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+    graft.functions.VecExpressions.arrayDot(
+      a.cast("array<double>"), b.cast("array<double>"))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
-  /** Fixed-dimension dot product as an unrolled 64-term expression —
-    * higher-order functions (`aggregate`/`zip_with`) are interpreted
-    * per-element, which dominates when evaluated per candidate *pair*;
-    * the unrolled form stays inside whole-stage codegen (~100× cheaper on
-    * the pair-verification hot path). Left-to-right summation order is
-    * preserved, so results equal `dot`. */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i =>
-      element_at(a, i).cast("double") * element_at(b, i).cast("double"))
-      .reduce(_ + _)
-
-  def cosineUnrolled(a: Column, b: Column, dim: Int): Column =
-    dotUnrolled(a, b, dim) /
-      (sqrt(dotUnrolled(a, a, dim)) * sqrt(dotUnrolled(b, b, dim)))
-
-  /** Random-hyperplane sketch: `planes` sign bits packed into a long.
-    * Hyperplane p's component for dimension i is a deterministic pseudo-
-    * random ±1 derived from xxhash64(p, i) — reproducible on any cluster,
-    * no broadcast of plane matrices needed. `seed` selects an independent
-    * plane family (for OR-amplified multi-table LSH). */
-  def hyperplaneSketch(vec: Column, planes: Int = 8, seed: Int = 0): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(planes - 1)), p => {
-        val proj = aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1), (x, i) =>
-            x.cast("double") *
-              when(pmod(xxhash64(p + lit(seed * planes), i), lit(2)) === 0,
-                lit(1.0)).otherwise(lit(-1.0))),
-          lit(0.0), (acc, v) => acc + v)
-        when(proj >= 0, lit(1L)).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, bit) => acc * 2 + bit)
 
   /** Corpus-scan cosine against a literal query vector, on the packed
     * kernel (graft.functions.VecOps): one codegen'd static call per row
     * instead of an interpreted per-element aggregate — the difference
     * between a scan-bound and an interpreter-bound probe at corpus scale.
     * Accumulation order matches `cosine` (left-to-right), so scores are
-    * bit-identical to the interpreted form and the DuckDB oracle. */
+    * bit-identical to it and to the DuckDB oracle. */
   private def packedScore(vecCol: Column, query: Seq[Double]): Column = {
     import graft.functions.VecExpressions.{packVec, packedDot}
     val qb = lit(graft.functions.VecOps.pack(
@@ -189,9 +159,9 @@ object Similarity {
     * (rows in = queries × poolK), so the greedy loop is O(poolK²·dim)
     * LOCAL work per query group and the operator distributes by query —
     * rerank never touches the corpus. Pairwise sims are computed
-    * declaratively (one self-equi-join on the query key, codegen'd
-    * cosine) and only the (id, rel) / (a, b, sim) tuples enter the
-    * per-group fold.
+    * declaratively (one self-equi-join on the query key, `cosine` on the
+    * native dot kernel) and only the (id, rel) / (a, b, sim) tuples enter
+    * the per-group fold.
     *
     * Determinism contract (the oracle replays the selection exactly —
     * this repo's integer-exact discipline): the RAW relevance and
@@ -262,23 +232,25 @@ object Similarity {
   final case class PqIndex(codebook: Array[Byte], m: Int, k: Int,
       encoded: DataFrame)
 
-  /** (idCol, _nv): L2-normalized array<double> vectors with zero/NaN-norm
-    * rows DROPPED before the division (ANSI divide raises on 0, and a
-    * direction-less vector has no nearest neighbor anyway). The norm is
-    * materialized as an attribute between two projections so the divide
-    * lambda references a scalar attribute, not the aggregate tree (the
-    * lambda-inlining trap the PERF INVARIANT in Dedup.scala describes). */
+  /** (idCol, _p): the L2-normalized vectors, packed, from one
+    * `normalize_vec` kernel call per row. Rows without a direction — a
+    * null vector or element, a zero, NaN or infinite norm (an Inf element
+    * would yield NaN components that poison the codebook) — come out NULL
+    * and are dropped. The optimizer pushes the null filter below the
+    * projection, so the kernel runs twice per row: two passes over one
+    * vector, small next to the cell argmin and the pair work. */
   private def normalizedFrame(df: DataFrame, vecCol: String,
       idCol: String): DataFrame =
-    df.select(col(idCol), col(vecCol).cast("array<double>").as("_v0"))
-      .withColumn("_n",
-        sqrt(aggregate(transform(col("_v0"), x => x * x), lit(0.0), _ + _)))
-      // finite positive norm only: NaN elements → NaN norm; an Inf
-      // element → Inf norm, whose division would yield NaN components
-      // (Inf/Inf) that poison the codebook and sort first under desc
-      .filter(col("_n") > 0 && !isnan(col("_n")) &&
-        col("_n") < Double.PositiveInfinity)
-      .select(col(idCol), transform(col("_v0"), x => x / col("_n")).as("_nv"))
+    df.select(col(idCol), graft.functions.VecExpressions.normalizeVec(
+        col(vecCol).cast("array<double>")).as("_p"))
+      .filter(col("_p").isNotNull)
+
+  /** The driver-side training sample: the first `cap` normalized vectors
+    * in `order`, unpacked. */
+  private def trainingSample(nv: DataFrame, cap: Int,
+      order: Column*): Array[Array[Double]] =
+    nv.orderBy(order: _*).limit(cap).select("_p").collect()
+      .map(r => graft.functions.VecOps.unpackDoubles(r.getAs[Array[Byte]](0)))
 
   /** Train the codebooks on a driver-side sample (the faiss shape: PQ
     * training input is CAPPED by construction — `trainSampleCap` vectors,
@@ -291,16 +263,14 @@ object Similarity {
   def pqIndex(df: DataFrame, vecCol: String, idCol: String, m: Int = 8,
       k: Int = 16, trainOn: Option[DataFrame] = None,
       trainSampleCap: Int = 4096): PqIndex = {
-    import graft.functions.{PqExpressions, VecExpressions, VecOps}
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    import graft.functions.{PqExpressions, VecOps}
     require(k <= 256, s"one-byte codes cap k at 256, got $k")
-    val sub = dim / m
-    val sample = normalizedFrame(trainOn.getOrElse(df), vecCol, idCol)
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(trainSampleCap)
-      .select("_nv").collect().map(_.getSeq[Double](0).toArray)
+    val sample = trainingSample(normalizedFrame(trainOn.getOrElse(df),
+      vecCol, idCol), trainSampleCap, xxhash64(col(idCol)), col(idCol))
     require(sample.nonEmpty, "PQ training sample is empty")
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    val sub = dim / m
     val centroids = new Array[Double](m * k * sub)
     for (j <- 0 until m) {
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, j * sub, (j + 1) * sub))
@@ -311,8 +281,7 @@ object Similarity {
     val cb = VecOps.packDoubles(centroids)
     val encoded = normalizedFrame(df, vecCol, idCol)
       .select(col(idCol),
-        PqExpressions.pqEncode(VecExpressions.packVec(col("_nv")), lit(cb), m, k)
-          .as("_codes"))
+        PqExpressions.pqEncode(col("_p"), lit(cb), m, k).as("_codes"))
     PqIndex(cb, m, k, encoded)
   }
 
@@ -463,15 +432,13 @@ object Similarity {
       trainSampleCap: Int = 4096): IvfPqIndex = {
     import graft.functions.{PqExpressions, VecExpressions, VecOps}
     import org.apache.spark.sql.catalyst.util.ArrayData
-    val dim = df.select(size(col(vecCol))).first().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     require(k <= 256, s"one-byte codes cap k at 256, got $k")
-    val sub = dim / m
-    val sample = normalizedFrame(trainOn.getOrElse(df), vecCol, idCol)
-      .orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(trainSampleCap)
-      .select("_nv").collect().map(_.getSeq[Double](0).toArray)
+    val sample = trainingSample(normalizedFrame(trainOn.getOrElse(df),
+      vecCol, idCol), trainSampleCap, xxhash64(col(idCol)), col(idCol))
     require(sample.nonEmpty, "IVF-PQ training sample is empty")
+    val dim = sample.head.length
+    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+    val sub = dim / m
     val coarse = lloyd(sample, nlist, iters = 10, seed = 7L)
     // residuals to the assigned coarse cell (driver-side argmin over the
     // SAME sample): the PQ codebook is trained on what it will encode
@@ -501,7 +468,6 @@ object Similarity {
     val centBins = coarse.map(c => lit(VecOps.pack(ArrayData.toArrayData(c))))
     val cNorm2 = coarse.map(_.foldLeft(0.0)((a, x) => a + x * x))
     val packed = normalizedFrame(df, vecCol, idCol)
-      .withColumn("_p", VecExpressions.packVec(col("_nv")))
     // argmin over nlist struct candidates — least() is one expression node
     // (a when() fold would duplicate the accumulator subtree; see ivfIndex)
     val candidates = centBins.zip(cNorm2).zipWithIndex.map { case ((cl, n2), j) =>
@@ -582,15 +548,12 @@ object Similarity {
       bucketCap: Int = Dedup.DefaultBucketCap): DataFrame = {
     import graft.functions.{VecExpressions, VecOps}
     import org.apache.spark.sql.catalyst.util.ArrayData
-    val nv = normalizedFrame(df, vecCol, idCol)
-    val sample = nv.orderBy(xxhash64(VecExpressions.packVec(col("_nv"))))
-      .limit(trainSampleCap)
-      .select("_nv").collect().map(_.getSeq[Double](0).toArray)
+    val packed = normalizedFrame(df, vecCol, idCol)
+    val sample = trainingSample(packed, trainSampleCap, xxhash64(col("_p")))
     require(sample.nonEmpty, "SemDeDup training sample is empty")
     val coarse = lloyd(sample, nlist, iters = 10, seed = 11L)
     val cLits = coarse.map(c => lit(VecOps.pack(ArrayData.toArrayData(c))))
     val cNorm2 = coarse.map(_.foldLeft(0.0)((a, x) => a + x * x))
-    val packed = nv.withColumn("_p", VecExpressions.packVec(col("_nv")))
     val candidates = cLits.zip(cNorm2).zipWithIndex.map { case ((cl, n2), j) =>
       struct((lit(n2) - lit(2.0) * VecExpressions.packedDot(col("_p"), cl))
         .as("d"), lit(j).as("j"))
@@ -627,10 +590,11 @@ object Similarity {
       query: Seq[Double], k: Int, planes: Int = 6,
       probeHamming: Int = 1): DataFrame = {
     import graft.functions.VecExpressions.{packVec, packedSketch}
-    // packed-kernel sketch (bit-identical to the interpreted form — see
-    // VecOps.hyperplaneSketch): the corpus scan's per-row bucket is one
-    // static call over the packed vector; the query's bucket is the SAME
-    // static function evaluated directly on the driver — no 1-row job
+    // packed-kernel sketch (bit-identical to the aggregate/zip_with form
+    // the tests keep — see VecOps.hyperplaneSketch): the corpus scan's
+    // per-row bucket is one static call over the packed vector; the
+    // query's bucket is the SAME static function evaluated directly on
+    // the driver — no 1-row job
     val withBucket = df.withColumn("_bucket",
       packedSketch(packVec(col(vecCol).cast("array<double>")), planes))
     val queryBucket = graft.functions.VecOps.hyperplaneSketch(

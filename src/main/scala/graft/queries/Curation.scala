@@ -2343,33 +2343,23 @@ object Curation {
     * parity of md5("p_d")'s first hex digit, and projections run in
     * INTEGER arithmetic over floor(v_d·1000)-quantized components —
     * order-independent and exact, so both engines derive bit-identical
-    * bucket ids with their own machinery (Spark `conv`/`zip_with`, DuckDB
-    * `strpos`/`list_transform` with its 1-based lambda index). The probe
-    * scans the query's exact bucket (hamming-0, deterministic) and ranks
-    * by cosine rounded to 9 dp — the portability ann_topk already pins.
+    * bucket ids with their own machinery (Spark the memoised-sign
+    * `lsh_buckets_z` kernel, DuckDB `strpos`/`list_transform` with its
+    * 1-based lambda index). The probe scans the query's exact bucket
+    * (hamming-0, deterministic) and ranks by cosine rounded to 9 dp —
+    * the portability ann_topk already pins.
     * This proves the whole quantize→hash→sign→bucket→scan→rank pipeline
     * cross-engine, not just an invariant of it. */
   def ann_lsh_md5(s: SparkSession, dir: String): DataFrame = {
     val planes = 4
     val emb = Tables.load(s, dir, "embeddings")
-    // _q materialized as an attribute before the projection lambdas (the
-    // PERF INVARIANT in Dedup.scala: a lambda over an inline tree would
-    // re-run the quantization once per element per plane)
-    val withQ = emb.select(col("vec_id"), col("embedding"),
-      transform(col("embedding").cast("array<double>"),
-        x => floor(x * 1000).cast("long")).as("_q"))
-    def sgn(p: Int)(i: Column): Column =
-      when(conv(substring(md5(concat(lit(s"${p}_"), i.cast("string"))), 1, 1),
-        16, 10).cast("int") % 2 === 0, lit(1L)).otherwise(lit(-1L))
-    val projs = (0 until planes).map { p =>
-      aggregate(zip_with(col("_q"), sequence(lit(0), size(col("_q")) - 1),
-        (x, i) => x * sgn(p)(i)), lit(0L), _ + _).as(s"_proj$p")
-    }
-    val bucketed = withQ
-      .select(col("vec_id") +: col("embedding") +: projs: _*)
-      .withColumn("_bucket", (0 until planes).map(p =>
-        when(col(s"_proj$p") >= 0, lit(1L << p)).otherwise(lit(0L)))
-        .reduce(_ + _))
+    // the md5("p_i") signs are memoised per JVM (ZOps.signs) and all
+    // planes project in one pass of the quantized vector; bit-equal to
+    // the inline md5-sign tree by ZArgminSpec, which keeps that tree
+    val bucketed = emb.select(col("vec_id"), col("embedding"),
+      graft.functions.ZExpressions.lshBucketZ(
+        transform(col("embedding").cast("array<double>"),
+          x => floor(x * 1000).cast("long")), planes).as("_bucket"))
     val qRow = bucketed.filter(col("vec_id") === 0)
       .select(col("embedding"), col("_bucket")).collect()(0)
     val q = qRow.getSeq[Float](0).map(_.toDouble)

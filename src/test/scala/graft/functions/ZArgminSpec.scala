@@ -105,6 +105,34 @@ class ZArgminSpec extends SparkSpec {
       ZExpressions.legacyLshBucketCols(col("_q"), 2, 3))
   }
 
+  /** ann_lsh_md5's inline bucket tree before the kernel: plane p signs
+    * dimension i by the parity of md5("p_i")'s first hex digit, and the
+    * bucket packs plane p at bit p. The oracle of `lshBucketZ`. */
+  private def annLshMd5Bucket(q: org.apache.spark.sql.Column,
+      planes: Int): org.apache.spark.sql.Column = {
+    def sgn(p: Int)(i: org.apache.spark.sql.Column) =
+      when(conv(substring(md5(concat(lit(s"${p}_"), i.cast("string"))), 1, 1),
+        16, 10).cast("int") % 2 === 0, lit(1L)).otherwise(lit(-1L))
+    (0 until planes).map { p =>
+      when(aggregate(zip_with(q, sequence(lit(0), size(q) - 1),
+          (x, i) => x * sgn(p)(i)), lit(0L), _ + _) >= 0,
+        lit(1L << p)).otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
+
+  test("ann_lsh_md5's table-less bucket kernel is bit-identical to its md5-sign tree") {
+    for (planes <- Seq(1, 4, 7)) {
+      val neo = Seq(ZExpressions.lshBucketZ(col("_q"), planes))
+      val legacy = Seq(annLshMd5Bucket(col("_q"), planes))
+      assertColsEqual(adversarialFrame, neo, legacy)
+      assertColsEqual(fixtureFrame, neo, legacy)
+    }
+    // without the table prefix there is one sign family, so one table
+    intercept[IllegalArgumentException](LshBucketsZExpr(
+      org.apache.spark.sql.catalyst.expressions.Literal.create(null,
+        ArrayType(LongType)), 2, 4, tablePrefix = false))
+  }
+
   test("overflow regime: the argmin kernels' long arithmetic wraps, it never throws") {
     // |q - c| = 3037000500 squares past Long.MaxValue, so the far
     // candidate's wrapped distance is negative and beats the exact

@@ -153,6 +153,29 @@ class PlanSpec extends SparkSpec {
       s"pairing not keyed on the cell id:\n${joinLine.getOrElse(p.take(1500))}")
   }
 
+  test("vector operators: no interpreted higher-order function in the plan") {
+    // a lambda (aggregate/transform/zip_with) is evaluated per element,
+    // every double boxed — the per-row vector math of these operators
+    // must stay on the VecOps kernels
+    import graft.operators.Similarity
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.functions.col
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val frames = Seq(
+      "semDedupPairs" -> Similarity.semDedupPairs(emb, "embedding", "vec_id",
+        tau = 0.95, nlist = 8),
+      "ivfPqIndex" -> Similarity.ivfPqIndex(emb, "embedding", "vec_id",
+        nlist = 8).coded,
+      "pqIndex" -> Similarity.pqIndex(emb, "embedding", "vec_id").encoded,
+      "cosine" -> emb.select(Similarity.cosine(col("embedding"), col("embedding"))))
+    for ((name, df) <- frames) {
+      val hofs = df.queryExecution.analyzed.collect { case n => n }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case h: HigherOrderFunction => h.prettyName }))
+      assert(hofs.isEmpty, s"$name evaluates lambdas: ${hofs.mkString(", ")}")
+    }
+  }
+
   test("dedup_semantic_md5: within-cell pairing stays a cell-keyed equi-join") {
     // the cross-engine twin must keep the SemDeDup scale shape: pair work
     // bounded by the cell equi-join, never a nested-loop pair scan
